@@ -591,10 +591,12 @@ class JaViterbiAnalyzer(JaLatticeAnalyzer):
         CTE definitions ``dp0..dp{max_len}, vit`` where ``vit`` has
         (doc_col, run_col, toks VARCHAR[]). Shares cost constants with
         the Python engine via entry_cost/unk_char_cost — one source of
-        truth, same comparisons, so the engines cannot drift."""
+        truth, same comparisons, so the engines cannot drift. Entry
+        text is emitted as quoted SQL literals (``'`` doubled), so no
+        surface or segment can end its literal early."""
         ent_vals = ", ".join(
-            f"('{e.surface}', {len(e.surface)}, {self.entry_cost(e)}, "
-            f"'{' '.join(e.segments)}')"
+            f"({_sql_str(e.surface)}, {len(e.surface)}, {self.entry_cost(e)}, "
+            f"{_sql_str(' '.join(e.segments))})"
             for e in self.entries
         )
         unk = self.unk_char_cost
@@ -662,6 +664,11 @@ class JaViterbiAnalyzer(JaLatticeAnalyzer):
             f"FROM dp{max_len})"
         )
         return ",\n".join(parts)
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal: single-quoted, inner quotes doubled."""
+    return "'" + s.replace("'", "''") + "'"
 
 
 def load_dict_csv(path: str) -> tuple[JaUserDictEntry, ...]:

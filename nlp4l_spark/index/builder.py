@@ -58,11 +58,9 @@ from pyspark.sql import types as T
 
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
+from nlp4l_spark.index.bm25 import bm25_impact
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.index.docids import assign_doc_ids
-
-K1 = 1.2
-B = 0.75
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -672,7 +670,7 @@ def _segment_merger(avgdl: float):
     into one globally doc_id-sorted posting row with exact per-block BM25
     max impacts.
 
-    impact(tf, dl) = tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)) — score =
+    impact = bm25_impact(tf, dl, avgdl) (index/bm25.py) — score =
     idf * impact, so block upper bound = idf * max_impact is tight.
 
     All numeric work is BULK per Arrow batch (one concat varbyte decode,
@@ -714,7 +712,7 @@ def _segment_merger(avgdl: float):
             ([0], 1 + np.flatnonzero(np.diff(run_of_val) != 0))
         )
         vends = np.concatenate((vstarts[1:], [d.size]))
-        impact = f * (K1 + 1.0) / (f + K1 * (1.0 - B + B * l / (avgdl or 1.0)))
+        impact = bm25_impact(f, l, avgdl)
         # bulk re-encode with per-run gap resets
         gaps = np.empty(d.size, dtype=np.uint64)
         gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)

@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from nlp4l_spark.index import codec
+from nlp4l_spark.index.bm25 import bm25_impact
 from nlp4l_spark.index.catalog import IndexCatalog
-
-K1, B = 1.2, 0.75
 
 _DEEP_SCHEMA = T.StructType(
     [
@@ -63,11 +62,15 @@ def _deep_decoder(avgdl: float):
             bad = {k: 0 for k in ("sort", "bounds", "df", "cf", "tf", "blocks")}
             pair_doc: list[np.ndarray] = []
             pair_dl: list[np.ndarray] = []
-            for _, row in pdf.iterrows():
+            for df, cf, min_doc, max_doc, d_enc, f_enc, l_enc, blocks in zip(
+                pdf["df"], pdf["cf"], pdf["min_doc"], pdf["max_doc"],
+                pdf["doc_ids_enc"], pdf["tfs_enc"], pdf["dls_enc"],
+                pdf["block_max"],
+            ):
                 try:
-                    d = codec.decode_doc_ids(row["doc_ids_enc"])
-                    f = codec.decode_tfs(row["tfs_enc"])
-                    l = codec.decode_tfs(row["dls_enc"])
+                    d = codec.decode_doc_ids(d_enc)
+                    f = codec.decode_tfs(f_enc)
+                    l = codec.decode_tfs(l_enc)
                 except Exception:
                     # undecodable blob: count one violation per category
                     # it blocks (sort/bounds/df unverifiable) and skip
@@ -78,22 +81,17 @@ def _deep_decoder(avgdl: float):
                 if d.size > 1 and not (np.diff(d) > 0).all():
                     bad["sort"] += 1
                 if d.size and (
-                    int(d[0]) != int(row["min_doc"])
-                    or int(d[-1]) != int(row["max_doc"])
+                    int(d[0]) != int(min_doc) or int(d[-1]) != int(max_doc)
                 ):
                     bad["bounds"] += 1
-                if d.size != int(row["df"]):
+                if d.size != int(df):
                     bad["df"] += 1
-                if int(f.sum()) != int(row["cf"]):
+                if int(f.sum()) != int(cf):
                     bad["cf"] += 1
                 if f.size and int(f.min()) < 1:
                     bad["tf"] += 1
-                blocks = row["block_max"]
                 if blocks is not None and d.size:
-                    impact = (
-                        f * (K1 + 1.0)
-                        / (f + K1 * (1.0 - B + B * l / (avgdl or 1.0)))
-                    )
+                    impact = bm25_impact(f, l, avgdl)
                     starts = np.arange(0, d.size, codec.BLOCK_SIZE)
                     ends = np.concatenate((starts[1:], [d.size]))
                     if len(blocks) != starts.size:
@@ -280,21 +278,19 @@ def check_index(
             def pos_check(batches: Iterator[pd.DataFrame]):
                 for pdf in batches:
                     terms_o, cfs_o, bads_o = [], [], []
-                    for _, row in pdf.iterrows():
+                    for term, df, d_enc, pl_enc, p_enc in zip(
+                        pdf["term"], pdf["df"], pdf["doc_ids_enc"],
+                        pdf["pos_lens_enc"], pdf["pos_enc"],
+                    ):
                         bad, cf_row = 0, 0
                         # an undecodable / inconsistent blob IS the
                         # violation being hunted — count it, don't crash
                         try:
-                            dd = codec.decode_doc_ids(row["doc_ids_enc"])
-                            lens = codec.decode_tfs(row["pos_lens_enc"])
-                            pos = codec.decode_positions(
-                                row["pos_enc"], lens
-                            )
+                            dd = codec.decode_doc_ids(d_enc)
+                            lens = codec.decode_tfs(pl_enc)
+                            pos = codec.decode_positions(p_enc, lens)
                             cf_row = int(lens.sum())
-                            if (
-                                dd.size != int(row["df"])
-                                or lens.size != dd.size
-                            ):
+                            if dd.size != int(df) or lens.size != dd.size:
                                 bad = 1
                             elif dd.size > 1 and not (np.diff(dd) > 0).all():
                                 bad = 1
@@ -313,7 +309,7 @@ def check_index(
                                         break
                         except Exception:
                             bad = 1
-                        terms_o.append(row["term"])
+                        terms_o.append(term)
                         cfs_o.append(cf_row)
                         bads_o.append(bad)
                     yield pd.DataFrame(

@@ -36,12 +36,8 @@ from pyspark.sql import DataFrame, types as T
 
 from nlp4l_spark.analysis import STANDARD_ANALYZER, Analyzer
 from nlp4l_spark.index import codec
-from nlp4l_spark.index.builder import (
-    B,
-    K1,
-    POSTINGS_SCHEMA,
-    SEGMENT_SCHEMA,
-)
+from nlp4l_spark.index.bm25 import bm25_impact
+from nlp4l_spark.index.builder import POSTINGS_SCHEMA, SEGMENT_SCHEMA
 from nlp4l_spark.index.catalog import MANIFEST, IndexCatalog
 
 _PA_BLOCK_MAX = pa.list_(
@@ -275,8 +271,8 @@ def _encode_micro(
             )},
         }
     )
-    # block-max metadata (the merger's impact formula, K1/B from builder)
-    impact = f * (K1 + 1.0) / (f + K1 * (1.0 - B + B * l / (avgdl or 1.0)))
+    # block-max metadata (the merger's impact formula)
+    impact = bm25_impact(f, l, avgdl)
     bsz = codec.BLOCK_SIZE
     blk_starts = np.concatenate(
         [np.arange(s, e, bsz) for s, e in zip(s_l, e_l)]

@@ -36,9 +36,9 @@ import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from nlp4l_spark.index import codec
+from nlp4l_spark.index.bm25 import bm25_impact
 from nlp4l_spark.index.builder import POSTINGS_SCHEMA
 from nlp4l_spark.index.catalog import IndexCatalog
-from nlp4l_spark.search.wand import bm25_impact
 
 _CAND_SCHEMA = (
     "term string, shard long, doc_ids array<long>, tfs array<long>, "

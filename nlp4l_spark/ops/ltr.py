@@ -26,11 +26,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from nlp4l_spark.analysis import STANDARD_ANALYZER
-from nlp4l_spark.search.engine import idf as bm25_idf
+from nlp4l_spark.index.bm25 import bm25_impact, idf as bm25_idf
 from nlp4l_spark.stats import Corpus
-
-K1 = 1.2
-B = 0.75
 
 
 def extract_features(
@@ -67,16 +64,10 @@ def extract_features(
                 "sum_idf double, dl int, n_matched int",
         )
     qdf = F.broadcast(spark.createDataFrame(rows, "qid int, term string, idf double"))
-    score = (
-        F.col("idf")
-        * F.col("tf")
-        * F.lit(K1 + 1.0)
-        / (F.col("tf") + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl)))
-    )
     return (
         dt.join(qdf, "term")
         .join(dl, "doc_id")
-        .withColumn("_s", score)
+        .withColumn("_s", F.col("idf") * bm25_impact(F.col("tf"), F.col("dl"), avgdl))
         .groupBy("qid", "doc_id")
         .agg(
             F.sum("_s").alias("bm25"),

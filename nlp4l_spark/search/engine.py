@@ -18,26 +18,33 @@ strategies, both returning identical results (tested):
 Query-side joins are all broadcast (queries are tiny); the postings scan is
 term-pruned via an ``isin`` filter that parquet row-group stats can skip on
 (postings are written term-sorted).
+
+Every BM25 score in this module — both strategies, the phrase, span and
+boolean families, ``MultiSearcher`` — is ``idf * bm25_impact(tf, dl,
+avgdl)`` from ``nlp4l_spark.index.bm25``, the package's one formula
+module (``K1``/``B``/``idf`` are re-exported here for existing imports).
+The dataframe path builds that expression as a Spark Column and the WAND
+kernel evaluates it over NumPy arrays, so a term's contribution is
+bit-identical on both paths.
 """
 
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
+from nlp4l_spark.index.bm25 import B, K1, bm25_impact, idf
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search import wand as wand_mod
-
-K1 = 1.2
-B = 0.75
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -107,8 +114,26 @@ def _damerau_udf(q: str):
     return _dl
 
 
-def idf(num_docs: int, df: int) -> float:
-    return math.log(1.0 + (num_docs - df + 0.5) / (df + 0.5))
+def _bm25(weight, avgdl: float) -> Column:
+    """Per-posting BM25 score over the frame's (tf, dl) columns:
+    ``weight`` (a per-term Column such as ``F.col("idf")``, or a float)
+    times ``bm25_impact`` — the kernel's expression tree, as a Column."""
+    return weight * bm25_impact(F.col("tf"), F.col("dl"), avgdl)
+
+
+def _top(frame: DataFrame, k: int) -> DataFrame:
+    """The engine's result order — score DESC, doc_id ASC — cut to k."""
+    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def _round6(x: float) -> float:
+    """Round a score to 6 dp, HALF_UP on its shortest decimal form — the
+    rule Spark's ``F.round(col, 6)`` applies, and DuckDB's ``round(s, 6)``
+    apart from some values whose decimal form ends exactly in 5 — so a
+    window cut taken in Python agrees with the SQL oracle's cut (Python's
+    ``round`` rounds the binary value half-to-even and disagrees far
+    more often)."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
 
 class Searcher:
@@ -205,6 +230,12 @@ class Searcher:
             .collect()
         )
         return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+
+    def _idf_rows(self, terms: list[str]) -> list[tuple[str, float]]:
+        """(term, idf) for those of ``terms`` present in the index — one
+        term-dictionary lookup."""
+        dfs = self._term_stats(terms)
+        return [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
 
     def browse_terms(self, seek: str = "", n: int = 20) -> DataFrame:
         """Lucene TermsEnum.seekCeil + next() — the term-dictionary walk
@@ -374,13 +405,10 @@ class Searcher:
             .filter(F.col("doc_id") == int(doc_id))
             .collect()
         )
-        avgdl = self.avgdl or 1.0
         for r in sorted(rows, key=lambda r: r["term"]):
             w = idf(self.num_docs, dfs[r["term"]])
             tf, dl = float(r["tf"]), float(r["dl"])
-            tf_norm = (
-                tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            )
+            tf_norm = bm25_impact(tf, dl, self.avgdl)
             s = w * tf_norm
             out["details"].append(
                 {
@@ -424,26 +452,8 @@ class Searcher:
                 [], "doc_id long, score double, rank int"
             )
         rows = [(t, idf(self.num_docs, dfs[t])) for t in terms]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings(terms))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
         out = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
+            self._term_scores(rows)
             .groupBy("doc_id")
             .agg(
                 F.sum("_s").alias("score"),
@@ -486,38 +496,15 @@ class Searcher:
         score_max desc / parent asc, limit k."""
         if (parent_col is None) == (parent_expr is None):
             raise ValueError("pass exactly one of parent_col / parent_expr")
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        present = [t for t in terms if t in dfs]
-        if not present:
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
+        if not rows:
             return self.spark.createDataFrame(
                 [],
                 "parent long, score_max double, score_total double,"
                 " n_child long, best_child long",
             )
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in present]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings(present))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        child = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.round(F.sum("_s"), 6).alias("s"))
+        child = self._weighted_or_frame(rows).select(
+            "doc_id", F.round("score", 6).alias("s")
         )
         if parent_col is not None:
             stored = self.cat.read(self.spark, "stored").select(
@@ -591,18 +578,42 @@ class Searcher:
             return self.spark.createDataFrame([], "doc_id long, score double")
         return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _weighted_or_frame(self, rows: list[tuple]) -> DataFrame | None:
-        """(term, idf*boost) rows -> unlimited (doc_id, score) OR frame."""
+    def _term_scores(
+        self,
+        rows: list[tuple[str, float]],
+        col: str = "idf",
+        score: Column | None = None,
+    ) -> DataFrame:
+        """Per-posting scores of the rows' terms: the broadcast
+        (term, <col>) frame ⋈ the decoded postings, with ``_s`` =
+        ``score`` over the joined columns — BM25 ``idf * bm25_impact``
+        (the weight may fold in a boost) unless another similarity's
+        expression is given. Callers fold ``_s`` per doc."""
+        qterms = F.broadcast(
+            self.spark.createDataFrame(rows, f"term string, {col} double")
+        )
+        if score is None:
+            score = _bm25(F.col("idf"), self.avgdl)
+        return (
+            self._decoded(self._matching_postings([t for t, _ in rows]))
+            .join(qterms, "term")
+            .withColumn("_s", score)
+        )
+
+    def _weighted_or_frame(
+        self,
+        rows: list[tuple[str, float]],
+        col: str = "idf",
+        score: Column | None = None,
+    ) -> DataFrame | None:
+        """(term, weight) rows -> unlimited (doc_id, score) OR frame, the
+        sum per doc of ``_term_scores``; None when no term is present."""
         if not rows:
             return None
-        qterms = F.broadcast(
-            self.spark.createDataFrame(
-                [(0, t, w) for t, w in rows], "qid int, term string, idf double"
-            )
-        )
-        postings = self._matching_postings([t for t, _ in rows])
-        return self._score_dataframe(postings, qterms).select(
-            "doc_id", "score"
+        return (
+            self._term_scores(rows, col, score)
+            .groupBy("doc_id")
+            .agg(F.sum("_s").alias("score"))
         )
 
     def _const_frame(self, postings: DataFrame, boost: float) -> DataFrame:
@@ -649,16 +660,7 @@ class Searcher:
         )
         idf_sum = sum(idf(self.num_docs, dfs[t]) for t in terms)
         dl = self.cat.read(self.spark, "doc_lens")
-        score = (
-            F.lit(idf_sum * float(boost))
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(self.avgdl))
-            )
-        )
+        score = _bm25(idf_sum * float(boost), self.avgdl)
         return cand.join(dl, "doc_id").select("doc_id", score.alias("score"))
 
     def _qnode_frame(self, node: dict, boost: float) -> DataFrame | None:
@@ -826,29 +828,12 @@ class Searcher:
         if any(t not in dfs for t in must_present):
             return self.spark.createDataFrame([], "doc_id long, score double")
         rows = [
-            (0, t, idf(self.num_docs, dfs[t]) * float(boosts.get(t, 1.0)))
+            (t, idf(self.num_docs, dfs[t]) * float(boosts.get(t, 1.0)))
             for t in scoring
             if t in dfs
         ]
         if not rows:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[1] for r in rows]))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
         n_must = F.sum(
             F.when(F.col("term").isin(must_present), 1).otherwise(0)
         )
@@ -859,8 +844,7 @@ class Searcher:
             F.when(F.col("term").isin(should_present), 1).otherwise(0)
         )
         scored = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
+            self._term_scores(rows)
             .groupBy("doc_id")
             .agg(
                 F.sum("_s").alias("score"),
@@ -910,35 +894,16 @@ class Searcher:
         ]
         if not rows:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
+        return _top(
+            self._term_scores(rows)
             .groupBy("doc_id")
             .agg(
                 (
                     F.max("_s")
                     + F.lit(float(tie_breaker)) * (F.sum("_s") - F.max("_s"))
                 ).alias("score")
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            ),
+            k,
         )
 
     def search_rm3(
@@ -1028,19 +993,12 @@ class Searcher:
         conversations. Returns (conv_id, score, n_turns_matched). The
         turn->conv join is on doc_id against the doc_id-sorted stored
         table; only matching turns join, never the corpus."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
             return self.spark.createDataFrame(
                 [], "conv_id string, score double, n_turns_matched long"
             )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        scored = self._score_dataframe(
-            self._matching_postings([r[1] for r in rows]), qterms
-        )
+        scored = self._weighted_or_frame(rows)
         conv = self.cat.read(self.spark, "stored").select("doc_id", "conv_id")
         agg_fn = F.max("score") if agg == "max" else F.sum("score")
         return (
@@ -1290,34 +1248,9 @@ class Searcher:
             return self.spark.createDataFrame([], "doc_id long, score double")
         prefix, rest = toks[-1], sorted(set(toks[:-1]))
         parts = []
-        if rest:
-            dfs = self._term_stats(rest)
-            present = [t for t in rest if t in dfs]
-            if present:
-                rows = [(t, idf(self.num_docs, dfs[t])) for t in present]
-                qterms = F.broadcast(
-                    self.spark.createDataFrame(rows, "term string, idf double")
-                )
-                score_expr = (
-                    F.col("idf")
-                    * F.col("tf")
-                    * F.lit(K1 + 1.0)
-                    / (
-                        F.col("tf")
-                        + F.lit(K1)
-                        * (
-                            F.lit(1.0 - B)
-                            + F.lit(B)
-                            * F.col("dl")
-                            / F.lit(self.avgdl or 1.0)
-                        )
-                    )
-                )
-                parts.append(
-                    self._decoded(self._matching_postings(present))
-                    .join(qterms, "term")
-                    .select("doc_id", score_expr.alias("_s"))
-                )
+        rows = self._idf_rows(rest) if rest else []
+        if rows:
+            parts.append(self._term_scores(rows).select("doc_id", "_s"))
         pdocs = (
             self._decoded(
                 self.cat.read(self.spark, "postings").filter(
@@ -1510,19 +1443,10 @@ class Searcher:
             return self.spark.createDataFrame([], "doc_id long, score double")
         # fold the boost into the idf column and reuse the OR scorer
         rows = [
-            (0, r["term"], idf(self.num_docs, int(r["df"])) * float(r["boost"]))
+            (r["term"], idf(self.num_docs, int(r["df"])) * float(r["boost"]))
             for r in expanded
         ]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        postings = self._matching_postings([r["term"] for r in expanded])
-        scored = self._score_dataframe(postings, qterms)
-        return (
-            scored.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _top(self._weighted_or_frame(rows), k)
 
     def _fuzzy_expansion(
         self, q: str, max_edits: int, prefix_length: int = 0
@@ -1582,19 +1506,12 @@ class Searcher:
         discard filtered-in docs. The allowed-docs side is a pushed-down
         equality scan of the ``stored`` table semi-joined to the scored
         candidates — work ∝ query postings + filter selectivity."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
             return self.spark.createDataFrame(
                 [], "doc_id long, score double, rank int"
             )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        scored = self._score_dataframe(
-            self._matching_postings([r[1] for r in rows]), qterms
-        )
+        scored = self._weighted_or_frame(rows)
         allowed = self.cat.read(self.spark, "stored")
         for c, v in sorted(where.items()):
             allowed = allowed.filter(F.col(c) == F.lit(v))
@@ -1632,19 +1549,12 @@ class Searcher:
             .filter(F.col("_nf") == len(fv))
             .select("doc_id")
         )
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
             return self.spark.createDataFrame(
                 [], "doc_id long, score double, rank int"
             )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "qid int, term string, idf double")
-        )
-        scored = self._score_dataframe(
-            self._matching_postings([r[1] for r in rows]), qterms
-        )
+        scored = self._weighted_or_frame(rows)
         out = (
             scored.join(allowed, "doc_id", "left_semi")
             .select("doc_id", "score")
@@ -2105,31 +2015,10 @@ class Searcher:
         never corpus-sized)."""
         pterms = sorted(set(self.analyzer.tokenize(positive)))
         nterms = sorted(set(self.analyzer.tokenize(negative)))
-        dfs = self._term_stats(pterms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in pterms if t in dfs]
+        rows = self._idf_rows(pterms)
         if not rows:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        avgdl = self.avgdl or 1.0
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        pos = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("_pos"))
-        )
+        pos = self._weighted_or_frame(rows).withColumnRenamed("score", "_pos")
         neg_present = [t for t in nterms if t in self._term_stats(nterms)]
         if neg_present:
             neg = (
@@ -2175,15 +2064,7 @@ class Searcher:
         if variant not in ("plus", "l"):
             raise ValueError(f"unknown BM25 variant: {variant}")
         d = (1.0 if variant == "plus" else 0.5) if delta is None else float(delta)
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         tf = F.col("tf").cast("double")
         norm = (
             F.lit(1.0 - B)
@@ -2201,14 +2082,7 @@ class Searcher:
                 * (cp + F.lit(d))
                 / (F.lit(K1) + cp + F.lit(d))
             )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "idf", s, k)
 
     def significant_text(self, query: str, k: int = 15) -> DataFrame:
         """Elasticsearch significant_text aggregation over a query's
@@ -2329,7 +2203,6 @@ class Searcher:
             self.spark.createDataFrame(rows, "gid int, term string, idf double")
         )
         decoded = self._decoded(self._matching_postings([r[1] for r in rows]))
-        avgdl = self.avgdl or 1.0
         blended = (
             decoded.join(qterms, "term")
             .groupBy("doc_id", "gid")
@@ -2339,22 +2212,11 @@ class Searcher:
                 F.first("idf").alias("idf"),
             )
         )
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return (
-            blended.withColumn("_s", score_expr)
+        return _top(
+            blended.withColumn("_s", _bm25(F.col("idf"), self.avgdl))
             .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+            .agg(F.sum("_s").alias("score")),
+            k,
         )
 
     def search_lm(
@@ -2391,12 +2253,6 @@ class Searcher:
             for t in terms
             if t in stats
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, p double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         dl = F.col("dl").cast("double")
         if similarity == "dirichlet":
@@ -2410,14 +2266,7 @@ class Searcher:
                 F.lit(1.0)
                 + (F.lit(1.0 - lam) * tf / dl) / (F.lit(lam) * F.col("p"))
             )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "p", s, k)
 
     def search_classic(self, query: str, k: int = 10) -> DataFrame:
         """Lucene ClassicSimilarity (the pre-6.x TFIDFSimilarity default):
@@ -2435,25 +2284,12 @@ class Searcher:
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf2 double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         s = (
             F.sqrt(F.col("tf").cast("double"))
             * F.col("idf2")
             / F.sqrt(F.col("dl").cast("double"))
         )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "idf2", s, k)
 
     def search_dfr(self, query: str, k: int = 10, c: float = 1.0) -> DataFrame:
         """Divergence-from-randomness ranking, the Lucene
@@ -2477,24 +2313,11 @@ class Searcher:
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, log2in double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tfn = F.col("tf").cast("double") * F.log2(
             F.lit(1.0) + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
         )
         s = tfn * F.col("log2in") / (tfn + F.lit(1.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "log2in", s, k)
 
     def search_axiomatic(
         self, query: str, k: int = 10, s: float = 0.5, kidf: float = 0.35
@@ -2515,26 +2338,13 @@ class Searcher:
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idfk double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         expr = (
             F.col("idfk")
             * tf
             / (tf + F.lit(s) + F.lit(s) * F.col("dl").cast("double") / F.lit(self.avgdl or 1.0))
         )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "idfk", expr, k)
 
     def search_ib(self, query: str, k: int = 10, c: float = 1.0) -> DataFrame:
         """Information-based ranking, the Lucene
@@ -2557,24 +2367,11 @@ class Searcher:
             for t in terms
             if t in dfs
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, lam double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tfn = F.col("tf").cast("double") * F.log2(
             F.lit(1.0) + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
         )
         s = F.log(F.lit(1.0) + tfn / F.col("lam"))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "lam", s, k)
 
     def search_dfi(self, query: str, k: int = 10) -> DataFrame:
         """Divergence-from-independence ranking, the Lucene
@@ -2597,12 +2394,6 @@ class Searcher:
         stats = self._term_stats_full(terms)
         total = float(self.sum_dl)
         rows = [(t, float(stats[t][1])) for t in terms if t in stats]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, cf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         expected = (
             (F.col("cf") + F.lit(1.0))
@@ -2613,14 +2404,7 @@ class Searcher:
             tf > expected,
             F.log2((tf - expected) * (tf - expected) / expected + F.lit(1.0)),
         ).otherwise(F.lit(0.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "cf", s, k)
 
     def search_pl2(self, query: str, k: int = 10, c: float = 1.0) -> DataFrame:
         """PL2 ranking — the DFR composition BasicModelP (Poisson) +
@@ -2645,12 +2429,6 @@ class Searcher:
             for t in terms
             if t in stats and stats[t][1] > 0
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, lam double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         log2e = 1.0 / math.log(2.0)
         tfn = F.col("tf").cast("double") * F.log2(
             F.lit(1.0) + F.lit(c * (self.avgdl or 1.0)) / F.col("dl").cast("double")
@@ -2660,14 +2438,7 @@ class Searcher:
             + (F.col("lam") - tfn) * F.lit(log2e)
             + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tfn)
         ) / (tfn + F.lit(1.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "lam", s, k)
 
     def search_dph(self, query: str, k: int = 10) -> DataFrame:
         """DPH ranking — the parameter-free hypergeometric DFR model
@@ -2692,12 +2463,6 @@ class Searcher:
             for t in terms
             if t in stats and stats[t][1] > 0
         ]
-        if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, cf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
         tf = F.col("tf").cast("double")
         dl = F.col("dl").cast("double")
         f = tf / dl
@@ -2717,14 +2482,7 @@ class Searcher:
                 + F.lit(0.5) * F.log2(F.lit(2.0 * math.pi) * tf * (F.lit(1.0) - f))
             ),
         ).otherwise(F.lit(0.0))
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", s)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._similarity_topk(rows, "cf", s, k)
 
     def search_function_score(
         self,
@@ -2745,34 +2503,10 @@ class Searcher:
         reads ONLY (doc_id, ts) from stored (column-pruned) and joins on
         doc_id BEFORE top-k — the decay must reorder candidates, so it
         cannot be applied after the limit."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        bm25 = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        cand = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", bm25)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("_bm25"))
-        )
+        cand = self._weighted_or_frame(rows).withColumnRenamed("score", "_bm25")
         if not half_life_days > 0:
             raise ValueError(
                 f"half_life_days must be > 0, got {half_life_days}"
@@ -2852,20 +2586,7 @@ class Searcher:
                 return None
             w = idf(self.num_docs, dfs[t]) * float(node.get("boost", 1.0))
             decoded = self._decoded(self._matching_postings([t]))
-            score = (
-                F.lit(w)
-                * F.col("tf")
-                * F.lit(K1 + 1.0)
-                / (
-                    F.col("tf")
-                    + F.lit(K1)
-                    * (
-                        F.lit(1.0 - B)
-                        + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                    )
-                )
-            )
-            return decoded.select("doc_id", score.alias("score"))
+            return decoded.select("doc_id", _bm25(w, self.avgdl).alias("score"))
         if "and" in node:
             out = None
             for c in node["and"]:
@@ -2920,8 +2641,9 @@ class Searcher:
         (window-sized TakeOrdered); phase 2's positions work — the
         expensive part — reads ONLY the window docs' term_vectors rows
         (pushed In(doc_id) on the window-sized candidate list), never
-        the full phrase-match set. First-pass scores are rounded to 6 dp
-        before the window cut so the candidate set is deterministic.
+        the full phrase-match set. The window is cut on first-pass scores
+        rounded to 6 dp (``_rounded_window``) so the candidate set is
+        deterministic.
         The two-term ``phrase`` is scored with exact-adjacency PhraseQuery
         BM25 (tf = phrase freq, idf = Σ per-term idf)."""
         terms = self.analyzer.tokenize(phrase)
@@ -2932,12 +2654,13 @@ class Searcher:
                 "rescore needs term_vectors "
                 "(IndexBuilder(store_term_vectors=True))"
             )
-        first = self.search(query, k=window, method="dataframe").select(
-            "doc_id", F.round("score", 6).alias("_s1")
-        )
-        cand = [r["doc_id"] for r in first.collect()]  # window-bounded
-        if not cand:
+        win = self._rounded_window(query, window, "dataframe")
+        if not win:
             return self.spark.createDataFrame([], "doc_id long, score double")
+        first = self.spark.createDataFrame(
+            [(d, s1) for s1, d in win], "doc_id long, _s1 double"
+        )
+        cand = [d for _, d in win]  # window-bounded
         dfs = self._term_stats(terms)
         ph = None
         if terms[0] in dfs and terms[1] in dfs:
@@ -2967,24 +2690,7 @@ class Searcher:
                 .withColumn("tf", tf_col)
                 .filter(F.col("tf") > 0)
                 .join(dl_tbl, "doc_id")
-                .select(
-                    "doc_id",
-                    (
-                        F.lit(idf_total)
-                        * F.col("tf")
-                        * F.lit(K1 + 1.0)
-                        / (
-                            F.col("tf")
-                            + F.lit(K1)
-                            * (
-                                F.lit(1.0 - B)
-                                + F.lit(B)
-                                * F.col("dl")
-                                / F.lit(self.avgdl or 1.0)
-                            )
-                        )
-                    ).alias("_s2"),
-                )
+                .select("doc_id", _bm25(idf_total, self.avgdl).alias("_s2"))
             )
         out = first
         if ph is not None:
@@ -3002,6 +2708,37 @@ class Searcher:
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
+
+    def _rounded_window(
+        self, query: str, window: int, method: str
+    ) -> list[tuple[float, int]]:
+        """The first ``window`` (_round6(score), doc_id) pairs of the
+        query's matches in (rounded score DESC, doc_id ASC) order — the
+        oracle's ``ORDER BY round(s, 6) DESC, doc_id LIMIT window``.
+
+        Fetches the exact top-k2 (k2 = 2 * window, doubling) until the
+        cut is provably complete: every unfetched doc scores <= the last
+        fetched exact score and rounding is monotone, so once that score
+        rounds strictly below the boundary value at position ``window``
+        no unfetched doc can tie into the window. A fetch shorter than
+        k2 is the whole match set. Growth happens only on ties at the
+        boundary; the first pass almost always suffices."""
+        k2 = 2 * window
+        while True:
+            fetched = (
+                self.search(query, k=k2, method=method)
+                .select("doc_id", "score")
+                .collect()
+            )
+            ranked = sorted(
+                ((_round6(r["score"]), r["doc_id"]) for r in fetched),
+                key=lambda t: (-t[0], t[1]),
+            )
+            if len(fetched) < k2 or (
+                _round6(min(r["score"] for r in fetched)) < ranked[window - 1][0]
+            ):
+                return ranked[:window]
+            k2 *= 2
 
     def count(self, query: str) -> int:
         """Lucene IndexSearcher.count: how many docs match >= 1 query term
@@ -3035,14 +2772,10 @@ class Searcher:
         In(doc_id) on the window-sized list), so the returned top-k
         scores are bit-identical to the unpruned engine's for every doc
         that survives the window. The window cut itself is taken in
-        (round(score, 6) DESC, doc_id ASC) order over the WHOLE tier —
-        the first pass over-fetches (doubling) until every doc whose
-        rounded score could reach the window boundary is in hand, then
-        re-ranks on the rounded key and cuts — so the candidate set is
-        deterministic across engines even when a 6 dp near-tie straddles
-        the boundary (the search_rescore convention, extended to the
-        cut; matches the oracle's LIMIT-over-rounded window exactly
-        instead of only generically). At 10^12 turns
+        (_round6(score) DESC, doc_id ASC) order over the WHOLE tier
+        (``_rounded_window``, shared with search_rescore), so the
+        candidate set matches the oracle's LIMIT-over-rounded window even
+        when a 6 dp tie straddles the boundary. At 10^12 turns
         the first pass reads ~|q|·P postings instead of the full lists
         and the exact pass is window-bounded — query cost is corpus-size
         independent end to end."""
@@ -3052,72 +2785,19 @@ class Searcher:
             analyzer=self.analyzer,
             postings_table=tier_table,
         )
-        # Over-fetch on exact scores until the rounded-score window cut
-        # is provably complete: every unfetched doc has exact score <=
-        # the last fetched exact score, and rounding is monotone, so once
-        # round(last_exact, 6) < the rounded boundary value at position
-        # `window`, no unfetched doc can tie into the window. Doubling
-        # terminates in O(log(ties)) passes; the first pass almost always
-        # suffices.
-        k2 = window
-        while True:
-            fetched = (
-                tier.search(query, k=k2, method=method)
-                .select("doc_id", "score")
-                .collect()
-            )  # window-bounded (k2 = window * 2^j, ties-only growth)
-            ranked = sorted(
-                ((round(r["score"], 6), r["doc_id"]) for r in fetched),
-                key=lambda t: (-t[0], t[1]),
-            )
-            if len(fetched) < k2 or len(ranked) <= window:
-                break  # tier exhausted — the fetch IS the whole matchset
-            boundary = ranked[window - 1][0]
-            last_exact_rounded = round(
-                min(r["score"] for r in fetched), 6
-            )
-            if last_exact_rounded < boundary:
-                break
-            k2 *= 2
-        cand = [d for _, d in ranked[:window]]
+        cand = [d for _, d in tier._rounded_window(query, window, method)]
         if not cand:
             return self.spark.createDataFrame(
                 [], "doc_id long, score double, rank int"
             )
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        # `t in dfs`, not dfs[t] > 0: _term_stats omits absent terms, so
-        # a mixed query (one indexed + one OOV term) must drop the OOV
-        # term here rather than KeyError (dfs entries are always > 0).
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(
-            self._matching_postings([t for t, _ in rows])
-        ).filter(
-            F.col("doc_id").isin(cand)  # pushed In(doc_id), window-sized
-        )
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        out = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", score_expr)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        # _idf_rows drops terms absent from the index, so a mixed query
+        # (indexed + OOV terms) rescores on the indexed ones only
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
+        out = _top(
+            self._weighted_or_frame(rows).filter(
+                F.col("doc_id").isin(cand)  # window-sized
+            ),
+            k,
         )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
         return out.withColumn("rank", F.row_number().over(w))
@@ -3135,41 +2815,15 @@ class Searcher:
         OFFSET anti-pattern — page N never recomputes or transfers pages
         1..N-1; the cursor predicate is one comparison folded into the
         same scored scan, so every page costs the same as page one."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
             return self.spark.createDataFrame([], "doc_id long, score double")
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        bm25 = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
         cursor = (F.col("score") < F.lit(after_score)) | (
             (F.col("score") == F.lit(after_score))
             & (F.col("doc_id") > F.lit(after_doc_id))
         )
-        return (
-            decoded.join(qterms, "term")
-            .withColumn("_s", bm25)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .filter(cursor)  # prunes BEFORE the ordered top-k heap
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        # the cursor prunes BEFORE the ordered top-k heap
+        return _top(self._weighted_or_frame(rows).filter(cursor), k)
 
     def search_sorted(
         self,
@@ -3301,24 +2955,14 @@ class Searcher:
             ),
         )
         dl_tbl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
-        avgdl = self.avgdl or 1.0
         scored = (
             self._not_deleted(pa.join(pb, "doc_id"))
             .withColumn("tf", tf_col)
             .filter(F.col("tf") > 0)
             .join(dl_tbl, "doc_id")
         )
-        score_expr = (
-            F.lit(idf_total * float(boost))
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return scored.select("doc_id", score_expr.alias("score"))
+        score = _bm25(idf_total * float(boost), self.avgdl)
+        return scored.select("doc_id", score.alias("score"))
 
     def search_sloppy_phrase_multi(
         self, query: str, slop: int = 2, k: int = 10
@@ -3400,24 +3044,14 @@ class Searcher:
             lambda acc, p0: acc + fold(1, p0, p0),
         )
         dl_tbl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
-        avgdl = self.avgdl or 1.0
         scored = (
             self._not_deleted(cand)
             .withColumn("tf", tf_col)
             .filter(F.col("tf") > 0)
             .join(dl_tbl, "doc_id")
         )
-        score_expr = (
-            F.lit(idf_total * float(boost))
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return scored.select("doc_id", score_expr.alias("score"))
+        score = _bm25(idf_total * float(boost), self.avgdl)
+        return scored.select("doc_id", score.alias("score"))
 
     def search_collapse(
         self, query: str, k: int = 10, collapse_col: str = "conv_id"
@@ -3433,36 +3067,12 @@ class Searcher:
         to (doc_id, collapse_col); the per-group head is a window over the
         candidate set partitioned by the group key, then global top-k —
         never a corpus-wide window."""
-        terms = sorted(set(self.analyzer.tokenize(query)))
-        dfs = self._term_stats(terms)
-        rows = [(t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs]
+        rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
             return self.spark.createDataFrame(
                 [], f"doc_id long, {collapse_col} string, score double"
             )
-        qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
-        )
-        decoded = self._decoded(self._matching_postings([r[0] for r in rows]))
-        bm25 = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (
-                    F.lit(1.0 - B)
-                    + F.lit(B) * F.col("dl") / F.lit(self.avgdl or 1.0)
-                )
-            )
-        )
-        cand = (
-            decoded.join(qterms, "term")
-            .withColumn("_s", bm25)
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-        )
+        cand = self._weighted_or_frame(rows)
         stored = self.cat.read(self.spark, "stored").select(
             "doc_id", collapse_col
         )
@@ -3595,28 +3205,14 @@ class Searcher:
 
         tf_col = F.size(F.filter(F.col("_p0"), slot_match)).cast("double")
         dl_tbl = self.cat.read(self.spark, "doc_lens").select("doc_id", "dl")
-        avgdl = self.avgdl or 1.0
         scored = (
             self._not_deleted(merged)
             .withColumn("tf", tf_col)
             .filter(F.col("tf") > 0)
             .join(dl_tbl, "doc_id")
         )
-        score_expr = (
-            F.lit(idf_total)
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
-        return (
-            scored.select("doc_id", score_expr.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        score = _bm25(idf_total, self.avgdl)
+        return _top(scored.select("doc_id", score.alias("score")), k)
 
     def search_phrase_prefix(
         self, query: str, k: int = 10, max_expansions: int = 50
@@ -3767,21 +3363,11 @@ class Searcher:
         dfs = self._term_stats(terms)
         idf_sum = sum(idf(self.num_docs, dfs.get(t, 0)) for t in terms)
         dl = self.cat.read(self.spark, "doc_lens")
-        score = (
-            F.lit(idf_sum)
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(self.avgdl))
-            )
-        )
-        return (
-            cand.join(dl, "doc_id")
-            .select("doc_id", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return _top(
+            cand.join(dl, "doc_id").select(
+                "doc_id", _bm25(idf_sum, self.avgdl).alias("score")
+            ),
+            k,
         )
 
     def _phrase_postings(self, terms: list[str], k: int) -> DataFrame:
@@ -3799,7 +3385,6 @@ class Searcher:
         if any(t not in dfs for t in terms):
             return self.spark.createDataFrame([], "doc_id long, score double")
         idf_sum = float(sum(idf(self.num_docs, dfs[t]) for t in terms))
-        avgdl = self.avgdl or 1.0
         pp = self.cat.read(self.spark, "pos_postings").filter(
             F.col("term").isin(list(set(terms)))
         )
@@ -3812,8 +3397,12 @@ class Searcher:
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             # stack segments per term (disjoint doc ranges, min_doc order)
             per_term: dict[str, list] = {}
-            for _, row in pdf.sort_values("min_doc").iterrows():
-                per_term.setdefault(row["term"], []).append(row)
+            segs = pdf.sort_values("min_doc")
+            for t, *encs in zip(
+                segs["term"], segs["doc_ids_enc"], segs["dls_enc"],
+                segs["pos_lens_enc"], segs["pos_enc"],
+            ):
+                per_term.setdefault(t, []).append(encs)
             if len(per_term) < len(set(terms)):
                 return pd.DataFrame(
                     {"doc_id": pd.Series([], dtype="int64"),
@@ -3822,18 +3411,15 @@ class Searcher:
                 )
             decoded: dict[str, tuple] = {}
             for t, rows in per_term.items():
-                d = np.concatenate(
-                    [codec.decode_doc_ids(r["doc_ids_enc"]) for r in rows]
-                )
-                dl = np.concatenate(
-                    [codec.decode_tfs(r["dls_enc"]) for r in rows]
-                )
-                row_pls = [codec.decode_tfs(r["pos_lens_enc"]) for r in rows]
+                d_encs, dl_encs, pl_encs, p_encs = zip(*rows)
+                d = np.concatenate([codec.decode_doc_ids(x) for x in d_encs])
+                dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
+                row_pls = [codec.decode_tfs(x) for x in pl_encs]
                 pl = np.concatenate(row_pls)
                 flat = np.concatenate(
                     [
-                        codec.decode_positions(r["pos_enc"], rpl)
-                        for r, rpl in zip(rows, row_pls)
+                        codec.decode_positions(x, rpl)
+                        for x, rpl in zip(p_encs, row_pls)
                     ]
                 )
                 pstarts = np.zeros(pl.size + 1, dtype=np.int64)
@@ -3875,18 +3461,8 @@ class Searcher:
         cand = pp.groupBy("shard").applyInPandas(
             run, "doc_id long, tf long, dl long"
         )
-        score = (
-            F.lit(idf_sum)
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
         return (
-            cand.select("doc_id", score.alias("score"))
+            cand.select("doc_id", _bm25(idf_sum, self.avgdl).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
@@ -3901,24 +3477,25 @@ class Searcher:
         return self._not_deleted(out)
 
     def _score_dataframe(self, postings: DataFrame, qterms: DataFrame) -> DataFrame:
-        decoded = self._decoded(postings)
-        avgdl = self.avgdl
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl or 1.0))
-            )
-        )
         return (
-            decoded.join(qterms, "term")  # broadcast: qterms is hinted
-            .withColumn("_s", score_expr)
+            self._decoded(postings)
+            .join(qterms, "term")  # broadcast: qterms is hinted
+            .withColumn("_s", _bm25(F.col("idf"), self.avgdl))
             .groupBy("qid", "doc_id")
             .agg(F.sum("_s").alias("score"))
         )
+
+    def _similarity_topk(
+        self, rows: list[tuple[str, float]], col: str, score: Column, k: int
+    ) -> DataFrame:
+        """Top-k of Σ per-term ``score`` over docs matching >= 1 term —
+        the broadcast-join + partial-agg plan every non-BM25 similarity
+        shares. ``rows`` are (term, value) pairs for present terms; the
+        value is exposed to ``score`` as column ``col``."""
+        frame = self._weighted_or_frame(rows, col, score)
+        if frame is None:
+            return self.spark.createDataFrame([], "doc_id long, score double")
+        return _top(frame, k)
 
     def _score_wand(
         self,
@@ -3950,22 +3527,21 @@ class Searcher:
             out_qid, out_doc, out_score = [], [], []
             for qid, g in pdf.groupby("qid", sort=False):
                 tps = []
-                for _, row in g.iterrows():
-                    d = codec.decode_doc_ids(row["doc_ids_enc"])
-                    tf = codec.decode_tfs(row["tfs_enc"])
-                    dl = codec.decode_tfs(row["dls_enc"])
-                    bm = (
-                        list(row["block_max"])
-                        if row["block_max"] is not None
-                        else []
-                    )
+                for w, d_enc, tf_enc, dl_enc, blocks in zip(
+                    g["idf"], g["doc_ids_enc"], g["tfs_enc"], g["dls_enc"],
+                    g["block_max"],
+                ):
+                    d = codec.decode_doc_ids(d_enc)
+                    tf = codec.decode_tfs(tf_enc)
+                    dl = codec.decode_tfs(dl_enc)
+                    bm = list(blocks) if blocks is not None else []
                     if dels is not None:
                         live = ~np.isin(d, dels)
                         if not live.all():
                             d, tf, dl, bm = d[live], tf[live], dl[live], []
                         if d.size == 0:
                             continue
-                    tps.append((float(row["idf"]), d, tf, dl, bm))
+                    tps.append((float(w), d, tf, dl, bm))
                 for doc, sc in topk_fn(tps, max_k, avgdl):
                     out_qid.append(int(qid))
                     out_doc.append(doc)
@@ -3987,12 +3563,14 @@ def _decode_postings(batches):
         if pdf.empty:
             continue
         terms, docs, tfs, dls = [], [], [], []
-        for _, row in pdf.iterrows():
-            d = codec.decode_doc_ids(row["doc_ids_enc"])
-            terms.append(np.full(d.size, row["term"], dtype=object))
+        for term, d_enc, tf_enc, dl_enc in zip(
+            pdf["term"], pdf["doc_ids_enc"], pdf["tfs_enc"], pdf["dls_enc"]
+        ):
+            d = codec.decode_doc_ids(d_enc)
+            terms.append(np.full(d.size, term, dtype=object))
             docs.append(d)
-            tfs.append(codec.decode_tfs(row["tfs_enc"]))
-            dls.append(codec.decode_tfs(row["dls_enc"]))
+            tfs.append(codec.decode_tfs(tf_enc))
+            dls.append(codec.decode_tfs(dl_enc))
         if not docs:
             continue
         yield pd.DataFrame(
@@ -4095,15 +3673,9 @@ def phrase_bm25_topk(
     ).filter(F.col("term").isin(terms))
     dfs = {r["term"]: r["cnt"] for r in dt.groupBy("term").agg(F.count("*").alias("cnt")).collect()}
     idf_sum = sum(idf(n, dfs.get(t, 0)) for t in terms)
-    score = (
-        F.lit(idf_sum)
-        * F.col("tf")
-        * F.lit(K1 + 1.0)
-        / (F.col("tf") + F.lit(K1) * (F.lit(1 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl)))
-    )
     return (
         base.filter(F.col("tf") > 0)
-        .select("doc_id", F.round(score, 6).alias("score"))
+        .select("doc_id", F.round(_bm25(idf_sum, avgdl), 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -4169,11 +3741,7 @@ def bm25f_topk(
             w = boost * idf(n, dfv)
             tf = F.col(f"_m{i}")[t].cast("double")
             s_t = F.when(
-                tf.isNotNull(),
-                F.lit(w) * tf * F.lit(K1 + 1.0)
-                / (tf + F.lit(K1)
-                   * (F.lit(1.0 - B)
-                      + F.lit(B) * F.col(f"_dl{i}") / F.lit(avgdl))),
+                tf.isNotNull(), w * bm25_impact(tf, F.col(f"_dl{i}"), avgdl)
             ).otherwise(F.lit(0.0))
             f_score = s_t if f_score is None else f_score + s_t
             m_t = F.col(f"_m{i}")[t]
@@ -4311,17 +3879,6 @@ class MultiSearcher:
         qterms = F.broadcast(
             self.spark.createDataFrame(rows, "term string, idf double")
         )
-        avgdl = self.avgdl or 1.0
-        score_expr = (
-            F.col("idf")
-            * F.col("tf")
-            * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            )
-        )
         parts = []
         present = [r[0] for r in rows]
         for s, dbase in zip(self.searchers, self.doc_bases):
@@ -4339,7 +3896,7 @@ class MultiSearcher:
             un = un.unionByName(p)
         return (
             un.join(qterms, "term")
-            .withColumn("_s", score_expr)
+            .withColumn("_s", _bm25(F.col("idf"), self.avgdl))
             .groupBy("doc_id")
             .agg(F.sum("_s").alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id"))

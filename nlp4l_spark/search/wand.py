@@ -21,12 +21,7 @@ import heapq
 
 import numpy as np
 
-K1 = 1.2
-B = 0.75
-
-
-def bm25_impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
-    return tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / (avgdl or 1.0)))
+from nlp4l_spark.index.bm25 import K1, bm25_impact
 
 
 def wand_topk(

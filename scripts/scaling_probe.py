@@ -14,6 +14,9 @@ Usage:
 
 Prints one JSON line per attempted pair (probe-only lines carry
 "skipped": true), suitable for appending to BASELINE.md evidence.
+The probe size grows with the width, so ``probe_*_sec`` are wall
+seconds divided by the core count (per fixed work); ``probe_*_wall_sec``
+are the wall seconds actually measured.
 """
 
 from __future__ import annotations
@@ -28,11 +31,13 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 import bench  # noqa: E402
 
 
-def probe_pair(base: int, wide: int) -> tuple[float, float]:
+def probe_pair(base: int, wide: int) -> tuple[float, float, float, float]:
+    """(base, wide) per-core-normalised probe seconds, then the (base,
+    wide) wall seconds they were derived from."""
     # one SparkContext per JVM: the session MUST be stopped before the
     # next width can really exist (getOrCreate() silently reuses the
     # running session otherwise — see bench._scaling_leg)
-    out = []
+    out, wall = [], []
     for cores in (base, wide):
         s = bench.make_session(cores)
         assert s.sparkContext.master == f"local[{cores}]"
@@ -44,9 +49,10 @@ def probe_pair(base: int, wide: int) -> tuple[float, float]:
         # 0.62 s wide leg). Per-core work keeps each leg multi-second,
         # and the reported ratio is corrected for the size difference.
         t = bench.host_probe(s, rows=500_000_000 * cores)
+        wall.append(t)
         out.append(t / cores)  # normalize to per-fixed-work seconds
         s.stop()
-    return out[0], out[1]
+    return out[0], out[1], wall[0], wall[1]
 
 
 def main() -> None:
@@ -65,12 +71,14 @@ def main() -> None:
     ]
     for attempt in range(args.attempts):
         for base, wide, turns in pairs:
-            pb, pw = probe_pair(base, wide)
+            pb, pw, wb, ww = probe_pair(base, wide)
             speedup = pb / pw if pw else 0.0
             line = {
                 "pair": f"{base}->{wide}",
                 "probe_base_sec": round(pb, 2),
                 "probe_wide_sec": round(pw, 2),
+                "probe_base_wall_sec": round(wb, 2),
+                "probe_wide_wall_sec": round(ww, 2),
                 "probe_speedup": round(speedup, 2),
                 "gate": args.gate,
             }

@@ -450,3 +450,29 @@ def test_viterbi_sql_twin_matches_python():
     got = dict(duckdb.sql(sql).fetchall())
     for i, s in enumerate(snips):
         assert got[i] == " ".join(A.tokenize(s)), s
+
+
+def test_viterbi_sql_quotes_apostrophes():
+    """viterbi_sql emits entry text as quoted SQL literals: a user entry
+    whose surface and segments carry an apostrophe still yields valid
+    SQL, and the DuckDB twin segments runs exactly like the Python DP.
+    The analyzer's constructor admits CJK-only surfaces; the SQL
+    generator must stay well-formed without leaning on that check, so
+    the entry is attached after construction."""
+    from nlp4l_spark.analysis.jadict import JaViterbiAnalyzer
+
+    A = JaViterbiAnalyzer(stopwords=frozenset(), entries=FIXTURE_ENTRIES)
+    odd = JaUserDictEntry("ロック'ン", ("ロック'", "ン"), cost=100)
+    object.__setattr__(A, "entries", A.entries + (odd,))
+    runs = ["ロック'ン", "全文検索ロック'ンロール", "東京'大学", "'ロック'ン'"]
+    quoted = ["'" + r.replace("'", "''") + "'" for r in runs]
+    vals = ", ".join(f"({i}, {q})" for i, q in enumerate(quoted))
+    sql = (
+        f"WITH src(doc_id, run) AS (VALUES {vals}),\n"
+        + A.viterbi_sql("src", max(len(r) for r in runs))
+        + "\nSELECT doc_id, toks FROM vit ORDER BY doc_id"
+    )
+    got = dict(duckdb.sql(sql).fetchall())
+    for i, run in enumerate(runs):
+        assert got[i] == A._lattice_tokens(run), run
+    assert "ロック'" in got[1]

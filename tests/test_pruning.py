@@ -174,3 +174,51 @@ def test_resume_returns_committed(spark, pruned_idx):
     t1 = prune_postings(spark, pruned_idx, 64)
     t2 = prune_postings(spark, pruned_idx, 64)  # no rebuild
     assert t1 == t2 == "postings_pruned64"
+
+
+def _straddle_docs() -> list[tuple[str, str]]:
+    """29 docs, 114 tokens (avgdl = 114/29), hand-searched so the two
+    best matches of "zqx zqy" score 1.62836943 (doc 1: zqx, dl 12, df 1)
+    and 1.62836915 (doc 0: zqy, dl 7, df 3): different exact scores, the
+    same 6 dp rounded score, and the higher exact score on the higher
+    doc id."""
+    pad = lambda n: " zpad" * n  # noqa: E731
+    docs = ["zqy" + pad(6), "zqx" + pad(11), "zqy" + pad(29), "zqy" + pad(29)]
+    docs += ["zpad"] * 15 + ["zpad zpad"] * 10
+    return [(f"c{i:02d}", text) for i, text in enumerate(docs)]
+
+
+def test_rounded_window_cut_straddling_tie(spark, tmp_path):
+    """A 6 dp rounded tie straddling the window boundary: the window is
+    the first ``window`` docs in (round(score, 6) DESC, doc_id ASC)
+    order — the oracle's cut — so with window=1 the lower doc id wins
+    the tie even though its exact score is lower. Both search_tiered and
+    search_rescore cut the window this way."""
+    from nlp4l_spark.index import IndexBuilder
+    from nlp4l_spark.search.engine import _round6
+
+    path = str(tmp_path / "idx")
+    docs = spark.createDataFrame(_straddle_docs(), "conv_id string, text string")
+    IndexBuilder(sort_cols=("conv_id", "turn_idx"), store_term_vectors=True).build(
+        docs.select(
+            "conv_id",
+            F.lit(0).alias("turn_idx"),
+            F.lit("u").alias("role"),
+            "text",
+            F.lit(None).cast("string").alias("tool"),
+            F.lit(None).cast("timestamp").alias("ts"),
+        ),
+        path,
+    )
+    s = Searcher(spark, path)
+    q = "zqx zqy"
+    full = [(r["doc_id"], r["score"]) for r in s.search(q, k=5).orderBy("rank").collect()]
+    # the premise: exact order puts doc 1 first, rounding ties the pair
+    (d1, s1), (d0, s0) = full[:2]
+    assert (d1, d0) == (1, 0) and s1 > s0 and _round6(s1) == _round6(s0), full
+    assert full[2][1] < s0
+
+    tiered = s.search_tiered(q, k=1, window=1, tier_table="postings").collect()
+    assert [(r["doc_id"], r["score"]) for r in tiered] == [(0, s0)]
+    res = s.search_rescore(q, "zqx zqy", k=1, window=1, weight=1.0).collect()
+    assert [(r["doc_id"], r["score"]) for r in res] == [(0, _round6(s0))]
