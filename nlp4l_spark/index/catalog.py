@@ -97,12 +97,30 @@ class IndexCatalog:
                 total += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
         return total
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def _require_committed(self, name: str) -> None:
         if not self.is_committed(name):
             raise FileNotFoundError(
                 f"table '{name}' has no committed snapshot under {self.root}"
             )
+
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
+        self._require_committed(name)
         return spark.read.parquet(self.table_path(name))
+
+    def dataset(self, name: str):
+        """pyarrow dataset over a committed table — the driver-side twin
+        of ``read``, with the same snapshot check. ``_``/``.``-prefixed
+        files (manifest, ``_SUCCESS``, checksums) are skipped."""
+        import pyarrow.dataset as ds
+
+        self._require_committed(name)
+        return ds.dataset(self.table_path(name), format="parquet")
+
+    def read_arrow(self, name: str, columns: list[str] | None = None, filter=None):
+        """A committed table (or its ``filter``-ed rows: a pyarrow
+        expression, pushed to parquet row-group statistics) as a pyarrow
+        Table, read on the driver without a Spark job."""
+        return self.dataset(name).to_table(columns=columns, filter=filter)
 
     def drop(self, name: str) -> None:
         import shutil

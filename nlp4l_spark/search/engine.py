@@ -2,8 +2,8 @@
 
 Reference semantics: ISearcher.search(query, rows, sort) -> top-k ScoreDocs
 under default BM25(k1=1.2, b=0.75), OR over query terms, ties by docID asc
-(/root/reference/app/org/nlp4l/lucene/ISearcher.scala:31-49). Two physical
-strategies, both returning identical results (tested):
+(NLP4L's app/org/nlp4l/lucene/ISearcher.scala:31-49). Three physical
+strategies, all returning identical results (tested):
 
 * ``dataframe`` — decode matching postings to (doc_id, tf, dl) rows and let
   Catalyst do the scoring: broadcast (term, idf) join, SQL BM25 expression,
@@ -14,6 +14,20 @@ strategies, both returning identical results (tested):
   score upper bound, emits its local top-k; a global top-k merge finishes.
   This is the 10^12-doc path: work is proportional to the query's posting
   shards, never to the corpus.
+* ``driver`` — the same WAND kernel (``reader.shard_topk``; the phrase
+  path's ``reader.phrase_matches`` likewise) run in-process by the
+  driver-resident ``IndexReader`` (search/reader.py) over posting rows
+  read with pyarrow; the top-k comes back as a pyarrow table, i.e. a
+  ``LocalRelation`` that collects without a Spark job.
+
+``method="auto"`` (the default of ``search``, ``search_batch`` and
+``search_phrase``) takes ``driver`` when the reader's size gate admits
+the call — the posting row-group bytes its term filter selects stay
+under ``reader.MAX_POSTING_BYTES`` — and otherwise runs the Spark plan
+(``wand``; the conjunctive plan for ``operator="and"``; phrase
+``postings``). A named method always runs its Spark plan. Term-dictionary
+lookups (``_term_stats``) are a pushed pyarrow read of ``term_stats`` on
+the driver, so no path pays a Spark job for them.
 
 Query-side joins are all broadcast (queries are tiny); the postings scan is
 term-pruned via an ``isin`` filter that parquet row-group stats can skip on
@@ -32,19 +46,23 @@ from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
+from functools import lru_cache
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import B, K1, bm25_impact, idf
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search import wand as wand_mod
+from nlp4l_spark.search.reader import IndexReader, phrase_matches, shard_topk
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -121,6 +139,18 @@ def _bm25(weight, avgdl: float) -> Column:
     return weight * bm25_impact(F.col("tf"), F.col("dl"), avgdl)
 
 
+@lru_cache(maxsize=256)
+def _arrow_schema(ddl: str):
+    return to_arrow_schema(T._parse_datatype_string(ddl))
+
+
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty result with the DDL ``schema``. Built from an empty
+    pyarrow table it is a ``LocalRelation``, so collecting it runs no
+    Spark job (``createDataFrame([], schema)`` runs one)."""
+    return spark.createDataFrame(_arrow_schema(schema).empty_table())
+
+
 def _top(frame: DataFrame, k: int) -> DataFrame:
     """The engine's result order — score DESC, doc_id ASC — cut to k."""
     return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -159,11 +189,14 @@ class Searcher:
         self.cat = IndexCatalog(index_dir)
         self.analyzer = analyzer or STANDARD_ANALYZER
         self.postings_table = postings_table
-        row = self.cat.read(spark, "field_stats").collect()[0]
+        row = self.cat.read_arrow(
+            "field_stats", ["num_docs", "avgdl", "sum_dl"]
+        ).to_pylist()[0]
         self.num_docs = int(row["num_docs"])
         self.avgdl = float(row["avgdl"])
         self.sum_dl = int(row["sum_dl"])
         self._deleted_cache: frozenset[int] | None = None
+        self._reader_cache: IndexReader | None = None
 
     # ---- live docs (Lucene deletes model) ----------------------------- #
     @property
@@ -177,12 +210,8 @@ class Searcher:
         same information as per-segment bitsets)."""
         if self._deleted_cache is None:
             if self.cat.is_committed("tombstones"):
-                rows = (
-                    self.cat.read(self.spark, "tombstones")
-                    .select("doc_id")
-                    .collect()
-                )
-                self._deleted_cache = frozenset(int(r[0]) for r in rows)
+                ids = self.cat.read_arrow("tombstones", ["doc_id"])["doc_id"]
+                self._deleted_cache = frozenset(ids.to_pylist())
             else:
                 self._deleted_cache = frozenset()
         return self._deleted_cache
@@ -202,16 +231,20 @@ class Searcher:
         return df.join(tomb, col, "left_anti")
 
     # ------------------------------------------------------------------ #
+    @property
+    def _reader(self) -> IndexReader:
+        """The driver-resident reader, opened on the first routed call
+        (``method="auto"``) so searchers that never route never pay for
+        it, and reopened when a table it opened got a new snapshot."""
+        if self._reader_cache is None or not self._reader_cache.is_current():
+            self._reader_cache = IndexReader(
+                self.cat, self.postings_table, self.avgdl, self.deleted_ids
+            )
+        return self._reader_cache
+
     def _term_stats(self, terms: list[str]) -> dict[str, int]:
-        """df per term — a point lookup on the sorted term dictionary."""
-        if not terms:
-            return {}
-        rows = (
-            self.cat.read(self.spark, "term_stats")
-            .filter(F.col("term").isin(terms))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        """df per term — a point lookup on the term dictionary."""
+        return {t: df for t, (df, _cf) in self._term_stats_full(terms).items()}
 
     def _matching_postings(self, terms: list[str]) -> DataFrame:
         return self.cat.read(self.spark, self.postings_table).filter(
@@ -219,17 +252,23 @@ class Searcher:
         )
 
     def _term_stats_full(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        """(df, cf) per term — same pushed-In(term) dictionary point lookup
-        as _term_stats, for similarities that need collection term
+        """(df, cf) per term, without a Spark job: a pushed term-in read
+        of ``term_stats`` on the driver (parquet row-group statistics
+        prune it). cf serves the similarities that need collection term
         frequency (LM Dirichlet / Jelinek-Mercer)."""
         if not terms:
             return {}
-        rows = (
-            self.cat.read(self.spark, "term_stats")
-            .filter(F.col("term").isin(terms))
-            .collect()
+        ts = self.cat.read_arrow(
+            "term_stats",
+            ["term", "df", "cf"],
+            filter=pc.field("term").isin(list(terms)),
         )
-        return {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+        return {
+            t: (int(d), int(c))
+            for t, d, c in zip(
+                ts["term"].to_pylist(), ts["df"].to_pylist(), ts["cf"].to_pylist()
+            )
+        }
 
     def _idf_rows(self, terms: list[str]) -> list[tuple[str, float]]:
         """(term, idf) for those of ``terms`` present in the index — one
@@ -304,8 +343,8 @@ class Searcher:
         qterms = sorted(set(self.analyzer.tokenize(query)))
         top = self.search(query, k=k, method="dataframe").collect()
         if not top:
-            return self.spark.createDataFrame(
-                [],
+            return _empty(
+                self.spark,
                 "doc_id long, score double, start_pos long, "
                 "n_hits long, snippet string",
             )
@@ -429,7 +468,7 @@ class Searcher:
         self,
         query: str,
         k: int = 10,
-        method: str = "wand",
+        method: str = "auto",
         operator: str = "or",
     ) -> DataFrame:
         """Top-k for one query -> DataFrame(doc_id, score, rank).
@@ -437,21 +476,29 @@ class Searcher:
         operator: "or" = Lucene BooleanQuery SHOULD (default), "and" =
         MUST — the doc must contain EVERY analyzed query term; scores are
         the same BM25 sum over matching terms either way (Lucene
-        semantics: MUST only changes the candidate set)."""
-        if operator == "and":
-            return self._search_conjunctive(query, k)
-        res = self.search_batch([(0, query, k)], method=method)
-        return res.select("doc_id", "score", "rank")
+        semantics: MUST only changes the candidate set).
 
-    def _search_conjunctive(self, query: str, k: int) -> DataFrame:
+        method: "auto" answers from the driver-resident reader when its
+        size gate admits the query, else runs the Spark plan (WAND for
+        OR, the conjunctive plan for AND); a named method ("wand",
+        "maxscore", "dataframe") always runs its Spark plan."""
+        if operator == "and":
+            return self._search_conjunctive(query, k, method)
+        return self._search_batch(
+            [(0, query, k)], method, ["doc_id", "score", "rank"]
+        )
+
+    def _search_conjunctive(self, query: str, k: int, method: str) -> DataFrame:
         terms = sorted(set(self.analyzer.tokenize(query)))
         dfs = self._term_stats(terms)
         if len(dfs) < len(terms) or not terms:
             # a MUST term missing from the index -> no results
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
-            )
+            return _empty(self.spark, "doc_id long, score double, rank int")
         rows = [(t, idf(self.num_docs, dfs[t])) for t in terms]
+        if method == "auto" and self._reader.admits(terms):
+            return self.spark.createDataFrame(
+                self._reader.search_conjunctive(rows, k)
+            )
         out = (
             self._term_scores(rows)
             .groupBy("doc_id")
@@ -498,8 +545,8 @@ class Searcher:
             raise ValueError("pass exactly one of parent_col / parent_expr")
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame(
-                [],
+            return _empty(
+                self.spark,
                 "parent long, score_max double, score_total double,"
                 " n_child long, best_child long",
             )
@@ -553,7 +600,7 @@ class Searcher:
 
         frame = self._qnode_frame(parse(query), 1.0)
         if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return (
             frame.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -575,7 +622,7 @@ class Searcher:
         node = parse_simple(query)
         frame = self._qnode_frame(node, 1.0) if node is not None else None
         if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _term_scores(
@@ -826,20 +873,20 @@ class Searcher:
         dfs = self._term_stats(scoring)
         must_present = [t for t in set(must)]
         if any(t not in dfs for t in must_present):
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         rows = [
             (t, idf(self.num_docs, dfs[t]) * float(boosts.get(t, 1.0)))
             for t in scoring
             if t in dfs
         ]
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         n_must = F.sum(
             F.when(F.col("term").isin(must_present), 1).otherwise(0)
         )
         should_present = sorted(set(should) & set(dfs))
         if min_should_match > 0 and len(should_present) < min_should_match:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         n_should = F.sum(
             F.when(F.col("term").isin(should_present), 1).otherwise(0)
         )
@@ -893,7 +940,7 @@ class Searcher:
             if t in dfs
         ]
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return _top(
             self._term_scores(rows)
             .groupBy("doc_id")
@@ -930,10 +977,10 @@ class Searcher:
         normal weighted search over |query| + fb_terms terms."""
         terms = sorted(set(self.analyzer.tokenize(query)))
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         initial = self.search(query, k=fb_docs, method="dataframe").collect()
         if not initial:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         total = sum(r["score"] for r in initial) or 1.0
         p_dq = {r["doc_id"]: r["score"] / total for r in initial}
         if self.cat.is_committed("doc_terms_fwd"):
@@ -995,8 +1042,8 @@ class Searcher:
         table; only matching turns join, never the corpus."""
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame(
-                [], "conv_id string, score double, n_turns_matched long"
+            return _empty(
+                self.spark, "conv_id string, score double, n_turns_matched long"
             )
         scored = self._weighted_or_frame(rows)
         conv = self.cat.read(self.spark, "stored").select("doc_id", "conv_id")
@@ -1056,8 +1103,8 @@ class Searcher:
             ),
         )[:max_query_terms]
         if not ranked:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
+            return _empty(
+                self.spark, "doc_id long, score double, rank int"
             )
         query = " ".join(t for _, t in ranked)
         res = self.search(query, k=k + 1, method="dataframe")
@@ -1092,8 +1139,8 @@ class Searcher:
                 fixed.append(cand[0]["term"])
         if not fixed:
             return (
-                self.spark.createDataFrame(
-                    [], "doc_id long, score double, rank int"
+                _empty(
+                    self.spark, "doc_id long, score double, rank int"
                 ),
                 corrections,
             )
@@ -1109,9 +1156,7 @@ class Searcher:
         stats = self._term_stats(terms)  # one collect job for all terms
         present = [t for t in terms if t in stats]
         if not present:
-            return self.spark.createDataFrame(
-                [], f"{facet_col} string, cnt long"
-            )
+            return _empty(self.spark, f"{facet_col} string, cnt long")
         docs = (
             self._decoded(self._matching_postings(present))
             .select("doc_id")
@@ -1245,7 +1290,7 @@ class Searcher:
         groupBy(doc_id) — no join between the clause sides."""
         toks = self.analyzer.tokenize(query)
         if not toks:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         prefix, rest = toks[-1], sorted(set(toks[:-1]))
         parts = []
         rows = self._idf_rows(rest) if rest else []
@@ -1311,7 +1356,7 @@ class Searcher:
                 "max_expansions"
             )
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         matching = self.cat.read(self.spark, "postings").filter(
             F.col("term").isin(terms)
         )
@@ -1362,7 +1407,7 @@ class Searcher:
                 "max_expansions"
             )
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         matching = self.cat.read(self.spark, "postings").filter(
             F.col("term").isin(terms)
         )
@@ -1440,7 +1485,7 @@ class Searcher:
         q = term.lower()
         expanded = self._fuzzy_expansion(q, max_edits, prefix_length).collect()
         if not expanded:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         # fold the boost into the idf column and reuse the OR scorer
         rows = [
             (r["term"], idf(self.num_docs, int(r["df"])) * float(r["boost"]))
@@ -1508,8 +1553,8 @@ class Searcher:
         candidates — work ∝ query postings + filter selectivity."""
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
+            return _empty(
+                self.spark, "doc_id long, score double, rank int"
             )
         scored = self._weighted_or_frame(rows)
         allowed = self.cat.read(self.spark, "stored")
@@ -1551,8 +1596,8 @@ class Searcher:
         )
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
+            return _empty(
+                self.spark, "doc_id long, score double, rank int"
             )
         scored = self._weighted_or_frame(rows)
         out = (
@@ -2017,7 +2062,7 @@ class Searcher:
         nterms = sorted(set(self.analyzer.tokenize(negative)))
         rows = self._idf_rows(pterms)
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         pos = self._weighted_or_frame(rows).withColumnRenamed("score", "_pos")
         neg_present = [t for t in nterms if t in self._term_stats(nterms)]
         if neg_present:
@@ -2106,8 +2151,9 @@ class Searcher:
         qterms = sorted(set(self.analyzer.tokenize(query)))
         present = [t for t in qterms if t in self._term_stats(qterms)]
         if not present:
-            return self.spark.createDataFrame(
-                [], "term string, fg_count long, bg_count long, g2 double"
+            return _empty(
+                self.spark,
+                "term string, fg_count long, bg_count long, g2 double",
             )
         if not self.cat.is_committed("term_vectors"):
             raise ValueError(
@@ -2198,7 +2244,7 @@ class Searcher:
             g_idf = idf(self.num_docs, max(dfs[t] for t in present))
             rows.extend((gid, t, g_idf) for t in present)
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         qterms = F.broadcast(
             self.spark.createDataFrame(rows, "gid int, term string, idf double")
         )
@@ -2505,7 +2551,7 @@ class Searcher:
         cannot be applied after the limit."""
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         cand = self._weighted_or_frame(rows).withColumnRenamed("score", "_bm25")
         if not half_life_days > 0:
             raise ValueError(
@@ -2554,7 +2600,7 @@ class Searcher:
         dfs = self._term_stats(terms)
         frame = self._tree_frame(node, dfs)
         if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return (
             frame.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -2656,7 +2702,7 @@ class Searcher:
             )
         win = self._rounded_window(query, window, "dataframe")
         if not win:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         first = self.spark.createDataFrame(
             [(d, s1) for s1, d in win], "doc_id long, _s1 double"
         )
@@ -2787,8 +2833,8 @@ class Searcher:
         )
         cand = [d for _, d in tier._rounded_window(query, window, method)]
         if not cand:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, rank int"
+            return _empty(
+                self.spark, "doc_id long, score double, rank int"
             )
         # _idf_rows drops terms absent from the index, so a mixed query
         # (indexed + OOV terms) rescores on the indexed ones only
@@ -2817,7 +2863,7 @@ class Searcher:
         same scored scan, so every page costs the same as page one."""
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         cursor = (F.col("score") < F.lit(after_score)) | (
             (F.col("score") == F.lit(after_score))
             & (F.col("doc_id") > F.lit(after_doc_id))
@@ -2854,9 +2900,7 @@ class Searcher:
         stats = self._term_stats(terms)
         present = [t for t in terms if t in stats]
         if not present:
-            return self.spark.createDataFrame(
-                [], f"doc_id long, {sort_col} string"
-            )
+            return _empty(self.spark, f"doc_id long, {sort_col} string")
         matching = (
             self._decoded(self._matching_postings(present))
             .select("doc_id")
@@ -2916,7 +2960,7 @@ class Searcher:
             )
         frame = self._sloppy_phrase_frame(a[0], b[0], int(slop), 1.0)
         if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _sloppy_phrase_frame(
@@ -2992,7 +3036,7 @@ class Searcher:
         else:
             frame = self._sloppy_phrase_frame_multi(toks, int(slop), 1.0)
         if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def _sloppy_phrase_frame_multi(
@@ -3069,8 +3113,8 @@ class Searcher:
         never a corpus-wide window."""
         rows = self._idf_rows(sorted(set(self.analyzer.tokenize(query))))
         if not rows:
-            return self.spark.createDataFrame(
-                [], f"doc_id long, {collapse_col} string, score double"
+            return _empty(
+                self.spark, f"doc_id long, {collapse_col} string, score double"
             )
         cand = self._weighted_or_frame(rows)
         stored = self.cat.read(self.spark, "stored").select(
@@ -3107,7 +3151,7 @@ class Searcher:
         stats = self._term_stats(terms)
         present = [t for t in terms if t in stats]
         if not present:
-            return self.spark.createDataFrame([], "bucket double, cnt long")
+            return _empty(self.spark, "bucket double, cnt long")
         matching = (
             self._decoded(self._matching_postings(present))
             .select("doc_id")
@@ -3246,19 +3290,38 @@ class Searcher:
             )
         ]
         if not lead or not exp:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return self.search_multi_phrase([[t] for t in lead] + [exp], k=k)
 
     def search_batch(
         self,
         queries: Iterable[tuple[int, str, int]],
-        method: str = "wand",
+        method: str = "auto",
     ) -> DataFrame:
         """Batch top-k -> DataFrame(qid, rank, doc_id, score).
 
         queries: (qid, query_text, k) triples. The per-query analyzed term
         sets + idf weights form a tiny broadcast frame.
+
+        method: "auto" runs block-max WAND in the driver-resident reader
+        when its size gate admits the batch's terms, else the Spark
+        ``wand`` plan; "wand", "maxscore" and "dataframe" name a Spark
+        plan.
         """
+        return self._search_batch(
+            queries, method, ["qid", "rank", "doc_id", "score"]
+        )
+
+    def _search_batch(
+        self,
+        queries: Iterable[tuple[int, str, int]],
+        method: str,
+        columns: list[str],
+    ) -> DataFrame:
+        """search_batch projected to ``columns``. A job-free result is
+        projected in pyarrow before it becomes a DataFrame: a Spark
+        ``select`` on top of it costs more in py4j round trips than the
+        query itself (about 14 ms against 10 ms on a 4-core VM)."""
         queries = list(queries)
         per_q_terms: dict[int, list[str]] = {
             qid: sorted(set(self.analyzer.tokenize(q))) for qid, q, _ in queries
@@ -3274,9 +3337,14 @@ class Searcher:
             if t in dfs
         ]
         if not rows:
-            return self.spark.createDataFrame(
-                [], "qid int, rank int, doc_id long, score double"
-            )
+            empty = _arrow_schema("qid int, rank int, doc_id long, score double")
+            return self.spark.createDataFrame(empty.empty_table().select(columns))
+        if method == "auto":
+            if self._reader.admits(dfs):
+                return self.spark.createDataFrame(
+                    self._reader.search_batch(rows, ks).select(columns)
+                )
+            method = "wand"
         qterms = F.broadcast(
             self.spark.createDataFrame(rows, "qid int, term string, idf double")
         )
@@ -3296,7 +3364,7 @@ class Searcher:
             scored.withColumn("rank", F.row_number().over(w))
             .join(k_df, "qid")
             .filter(F.col("rank") <= F.col("k"))
-            .select("qid", "rank", "doc_id", "score")
+            .select(*columns)
         )
 
     # ------------------------------------------------------------------ #
@@ -3310,27 +3378,31 @@ class Searcher:
 
         Two paths (identity-tested in tests/test_phrase.py):
 
-        * ``postings`` (the scale path, default when the index has a
-          ``pos_postings`` table — ``IndexBuilder(store_positions=True)``):
-          positions ride inside (term, shard) posting segments, the
-          adjacency check runs INSIDE a per-shard Arrow task. Plan =
-          pushed-In(term) scan -> grouped task -> TakeOrdered; no
-          corpus-sized join anywhere (plan-guarded in tests/test_plans.py).
+        * ``postings`` (the scale path, chosen by ``auto`` when the index
+          has a ``pos_postings`` table —
+          ``IndexBuilder(store_positions=True)``): positions ride inside
+          (term, shard) posting segments, the adjacency check runs INSIDE
+          a per-shard Arrow task. Plan = pushed-In(term) scan -> grouped
+          task -> TakeOrdered; no corpus-sized join anywhere
+          (plan-guarded in tests/test_plans.py). Under ``auto`` the
+          driver-resident reader runs the same kernel without a Spark
+          job when its size gate admits the phrase.
         * ``term_vectors``: n-way doc_id join of per-term position lists
           from the opt-in term_vectors table; fine while per-term df is
           modest, but the join sides are df-sized — the reason the
           postings path exists."""
         terms = self.analyzer.tokenize(phrase)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        if method == "auto":
+            return _empty(self.spark, "doc_id long, score double")
+        routed = method == "auto"
+        if routed:
             method = (
                 "postings"
                 if self.cat.is_committed("pos_postings")
                 else "term_vectors"
             )
         if method == "postings":
-            return self._phrase_postings(terms, k)
+            return self._phrase_postings(terms, k, routed)
         if not self.cat.is_committed("term_vectors"):
             raise ValueError(
                 "phrase search needs term_vectors "
@@ -3370,21 +3442,29 @@ class Searcher:
             k,
         )
 
-    def _phrase_postings(self, terms: list[str], k: int) -> DataFrame:
+    def _phrase_postings(
+        self, terms: list[str], k: int, routed: bool = False
+    ) -> DataFrame:
         """Phrase scoring over position-carrying posting shards: per
         (shard) task decodes each query term's (doc_ids, dls, positions)
         segments (concatenable by construction), intersects candidate
         docs, counts adjacent-position runs (p0, p0+1, ...) and emits the
         shard-local BM25 top-k; the global merge is TakeOrderedAndProject.
-        Work ∝ query-term postings, never corpus size."""
+        Work ∝ query-term postings, never corpus size. A ``routed`` call
+        runs the same kernel (``reader.phrase_matches``) in the
+        driver-resident reader when its size gate admits the phrase."""
         if not self.cat.is_committed("pos_postings"):
             raise ValueError(
                 "phrase postings path needs IndexBuilder(store_positions=True)"
             )
         dfs = self._term_stats(terms)
         if any(t not in dfs for t in terms):
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         idf_sum = float(sum(idf(self.num_docs, dfs[t]) for t in terms))
+        if routed and self._reader.admits(terms, positions=True):
+            return self.spark.createDataFrame(
+                self._reader.search_phrase(terms, idf_sum, k)
+            )
         pp = self.cat.read(self.spark, "pos_postings").filter(
             F.col("term").isin(list(set(terms)))
         )
@@ -3395,68 +3475,7 @@ class Searcher:
         )
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            # stack segments per term (disjoint doc ranges, min_doc order)
-            per_term: dict[str, list] = {}
-            segs = pdf.sort_values("min_doc")
-            for t, *encs in zip(
-                segs["term"], segs["doc_ids_enc"], segs["dls_enc"],
-                segs["pos_lens_enc"], segs["pos_enc"],
-            ):
-                per_term.setdefault(t, []).append(encs)
-            if len(per_term) < len(set(terms)):
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"),
-                     "tf": pd.Series([], dtype="int64"),
-                     "dl": pd.Series([], dtype="int64")}
-                )
-            decoded: dict[str, tuple] = {}
-            for t, rows in per_term.items():
-                d_encs, dl_encs, pl_encs, p_encs = zip(*rows)
-                d = np.concatenate([codec.decode_doc_ids(x) for x in d_encs])
-                dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
-                row_pls = [codec.decode_tfs(x) for x in pl_encs]
-                pl = np.concatenate(row_pls)
-                flat = np.concatenate(
-                    [
-                        codec.decode_positions(x, rpl)
-                        for x, rpl in zip(p_encs, row_pls)
-                    ]
-                )
-                pstarts = np.zeros(pl.size + 1, dtype=np.int64)
-                np.cumsum(pl, out=pstarts[1:])
-                decoded[t] = (d, dl, pl, flat, pstarts)
-            # candidate docs: docs containing ALL distinct terms
-            cand = None
-            for t in set(terms):
-                cand = decoded[t][0] if cand is None else np.intersect1d(
-                    cand, decoded[t][0], assume_unique=True
-                )
-            if dels is not None and cand.size:
-                cand = cand[~np.isin(cand, dels)]  # live-docs mask
-            out_doc, out_tf, out_dl = [], [], []
-            for doc in cand.tolist():
-                plist = []
-                for i, t in enumerate(terms):
-                    d, dl, pl, flat, pstarts = decoded[t]
-                    j = int(np.searchsorted(d, doc))
-                    ps = flat[pstarts[j] : pstarts[j + 1]] - i
-                    plist.append(ps)
-                inter = plist[0]
-                for ps in plist[1:]:
-                    inter = np.intersect1d(inter, ps, assume_unique=True)
-                    if inter.size == 0:
-                        break
-                if inter.size:
-                    d0, dl0, _, _, ps0 = decoded[terms[0]]
-                    j = int(np.searchsorted(d0, doc))
-                    out_doc.append(doc)
-                    out_tf.append(int(inter.size))
-                    out_dl.append(int(dl0[j]))
-            return pd.DataFrame(
-                {"doc_id": pd.Series(out_doc, dtype="int64"),
-                 "tf": pd.Series(out_tf, dtype="int64"),
-                 "dl": pd.Series(out_dl, dtype="int64")}
-            )
+            return phrase_matches(pdf, terms, dels)
 
         cand = pp.groupBy("shard").applyInPandas(
             run, "doc_id long, tf long, dl long"
@@ -3494,7 +3513,7 @@ class Searcher:
         value is exposed to ``score`` as column ``col``."""
         frame = self._weighted_or_frame(rows, col, score)
         if frame is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         return _top(frame, k)
 
     def _score_wand(
@@ -3512,11 +3531,6 @@ class Searcher:
         topk_fn = (
             wand_mod.maxscore_topk if algo == "maxscore" else wand_mod.wand_topk
         )
-        # live-docs mask for the WAND task: deleted docs are dropped from
-        # the decoded arrays before scoring; block-max metadata is then
-        # stale-aligned, so it is dropped (upper-bound pruning degrades,
-        # correctness does not — same trade Lucene makes consulting
-        # liveDocs inside its scorers). No deletes -> untouched hot path.
         dels = (
             np.fromiter(self.deleted_ids, dtype=np.int64)
             if self.deleted_ids
@@ -3524,34 +3538,11 @@ class Searcher:
         )
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            out_qid, out_doc, out_score = [], [], []
-            for qid, g in pdf.groupby("qid", sort=False):
-                tps = []
-                for w, d_enc, tf_enc, dl_enc, blocks in zip(
-                    g["idf"], g["doc_ids_enc"], g["tfs_enc"], g["dls_enc"],
-                    g["block_max"],
-                ):
-                    d = codec.decode_doc_ids(d_enc)
-                    tf = codec.decode_tfs(tf_enc)
-                    dl = codec.decode_tfs(dl_enc)
-                    bm = list(blocks) if blocks is not None else []
-                    if dels is not None:
-                        live = ~np.isin(d, dels)
-                        if not live.all():
-                            d, tf, dl, bm = d[live], tf[live], dl[live], []
-                        if d.size == 0:
-                            continue
-                    tps.append((float(w), d, tf, dl, bm))
-                for doc, sc in topk_fn(tps, max_k, avgdl):
-                    out_qid.append(int(qid))
-                    out_doc.append(doc)
-                    out_score.append(sc)
-            return pd.DataFrame(
-                {"qid": out_qid, "doc_id": out_doc, "score": out_score}
-            )
+            return shard_topk(pdf, max_k, avgdl, dels, topk_fn)
 
         joined = postings.join(qterms, "term").select(
-            "qid", "idf", "shard", "doc_ids_enc", "tfs_enc", "dls_enc", "block_max"
+            "qid", "term", "idf", "shard", "doc_ids_enc", "tfs_enc", "dls_enc",
+            "block_max",
         )
         # one WAND task per (query, doc-range shard); local top-k per task,
         # global merge is the tiny window in search_batch
@@ -3651,7 +3642,7 @@ def phrase_bm25_topk(
     analyzer = analyzer or STANDARD_ANALYZER
     terms = analyzer.tokenize(phrase)
     if not terms:
-        return docs_df.sparkSession.createDataFrame([], "doc_id long, score double")
+        return _empty(docs_df.sparkSession, "doc_id long, score double")
     full = Analyzer(
         lowercase=analyzer.lowercase,
         token_pattern=analyzer.token_pattern,
@@ -3704,9 +3695,7 @@ def bm25f_topk(
     fields = fields or {"text": 1.0}
     fkeys = sorted(fields)
     terms = sorted(set(analyzer.tokenize(query)))
-    empty = docs_df.sparkSession.createDataFrame(
-        [], "doc_id long, score double"
-    )
+    empty = _empty(docs_df.sparkSession, "doc_id long, score double")
     if not terms:
         return empty
     tc = analyzer.term_counts_udf()
@@ -3875,7 +3864,7 @@ class MultiSearcher:
             (t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs
         ]
         if not rows:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _empty(self.spark, "doc_id long, score double")
         qterms = F.broadcast(
             self.spark.createDataFrame(rows, "term string, idf double")
         )

@@ -1,0 +1,348 @@
+"""The driver-resident IndexReader behind ``method="auto"``.
+
+Every routed entry point — OR ``search``, ``operator="and"``,
+``search_batch`` and ``search_phrase`` — must answer exactly what the
+explicitly named Spark plan and the OracleIndex answer (doc ids exactly,
+scores within 1e-9; WAND-routed OR scores ``==``), on a plain index, with
+tombstones, on a pruned postings tier, on a microbuild-written
+generation and after an in-place append under a live searcher. The gate
+constant set below a query's size must send ``auto`` to the Spark plan
+with identical results, and an admitted routed call must run no Spark
+job at all.
+"""
+
+from __future__ import annotations
+
+import heapq
+import re
+import shutil
+
+import pytest
+
+from nlp4l_spark.analysis.analyzer import TOKEN_PATTERN
+from nlp4l_spark.data import LONDON_BRIDGE_VERSES
+from nlp4l_spark.data.fixtures import transcripts_df
+from nlp4l_spark.data.transcripts import synth_queries, synth_transcripts
+from nlp4l_spark.index import GenerationLog, IndexBuilder, build_index
+from nlp4l_spark.index.deletes import delete_docs
+from nlp4l_spark.index.pruning import prune_postings
+from nlp4l_spark.oracle import B, K1, OracleIndex
+from nlp4l_spark.search import Searcher
+from nlp4l_spark.search import reader as reader_mod
+from nlp4l_spark.streaming import append_to_index
+
+K = 10
+STOP = "the and of"
+UNKNOWN = "zzqqxxnotaterm"
+OR_QUERIES = [q for _, q, _ in synth_queries(7)] + [
+    STOP,
+    UNKNOWN,
+    "w00001 w00454 needle00",
+]
+AND_QUERIES = ["w00001 w00002", "w00003 w00010 w00017", "w00001 needle00",
+               STOP, UNKNOWN, "w00001 zzqqxxnotaterm"]
+DELETED = [0, 3, 5, 8, 13, 21, 34, 55, 89, 144, 233, 377]
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    return synth_transcripts(spark, 600, num_partitions=4)
+
+
+@pytest.fixture(scope="module")
+def idx(spark, corpus, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("reader") / "idx")
+    IndexBuilder(store_positions=True).build(corpus, d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def deleted_idx(spark, idx, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("reader_del") / "idx")
+    shutil.copytree(idx, d)
+    delete_docs(spark, d, DELETED)
+    return d
+
+
+@pytest.fixture(scope="module")
+def micro_dir(spark, corpus, tmp_path_factory):
+    log = GenerationLog(str(tmp_path_factory.mktemp("reader_gens") / "log"))
+    return log.ingest(corpus)
+
+
+def _docs(spark, d):
+    s = Searcher(spark, d)
+    rows = s.cat.read(spark, "stored").select("doc_id", "text").collect()
+    return [(int(r["doc_id"]), r["text"]) for r in rows]
+
+
+@pytest.fixture(scope="module")
+def oracle(spark, idx):
+    return OracleIndex.build(_docs(spark, idx))
+
+
+def _rows(df):
+    return sorted(
+        ((int(r["doc_id"]), float(r["score"])) for r in df.collect()),
+        key=lambda x: (-x[1], x[0]),
+    )
+
+
+def _same(got, want):
+    assert [d for d, _ in got] == [d for d, _ in want]
+    assert all(abs(a - b) <= 1e-9 for (_, a), (_, b) in zip(got, want))
+
+
+def _live(hits, dead, k):
+    return [h for h in hits if h[0] not in dead][:k]
+
+
+def _oracle_and(ix: OracleIndex, q: str, k: int, dead=frozenset()):
+    terms = sorted(set(ix.analyzer.tokenize(q)))
+    lists = [dict(ix.postings.get(t, [])) for t in terms]
+    if not terms or any(not pl for pl in lists):
+        return []
+    docs = set(lists[0]).intersection(*lists[1:]) - set(dead)
+    scores = {
+        d: sum(ix.bm25_score(pl[d], ix.doc_lens[d], ix.idf(t))
+               for t, pl in zip(terms, lists))
+        for d in docs
+    }
+    return heapq.nsmallest(k, scores.items(), key=lambda kv: (-kv[1], kv[0]))
+
+
+def _oracle_phrase(ix: OracleIndex, texts: dict, q: str, k: int,
+                   dead=frozenset()):
+    """Exact phrase over the full token stream (stopwords keep their
+    positions); score = Σ idf · BM25 tf-norm of the phrase frequency."""
+    terms = ix.analyzer.tokenize(q)
+    if not terms or any(t not in ix.postings for t in terms):
+        return []
+    idf_sum = sum(ix.idf(t) for t in terms)
+    n = len(terms)
+    tok = re.compile(TOKEN_PATTERN)
+    scores = {}
+    for d, _ in ix.postings[terms[0]]:
+        if d in dead:
+            continue
+        toks = tok.findall(texts[d].lower())
+        tf = sum(1 for i in range(len(toks) - n + 1) if toks[i : i + n] == terms)
+        if tf:
+            dl = ix.doc_lens[d]
+            scores[d] = idf_sum * tf * (K1 + 1.0) / (
+                tf + K1 * (1.0 - B + B * dl / ix.avgdl)
+            )
+    return heapq.nsmallest(k, scores.items(), key=lambda kv: (-kv[1], kv[0]))
+
+
+def _phrases(docs, n=6):
+    """Two- and three-word phrases cut from stored texts."""
+    out = []
+    for i, (_, text) in enumerate(docs[: n * 7 : 7]):
+        words = text.split()
+        if len(words) >= 3:
+            out.append(" ".join(words[1 : 3 + i % 2]))
+    return out
+
+
+def _check_or(s, q, k, want=None, dataframe=False):
+    auto = _rows(s.search(q, k=k))
+    wand = _rows(s.search(q, k=k, method="wand"))
+    assert auto == wand, q  # same kernel, same summation order
+    if dataframe:
+        _same(auto, _rows(s.search(q, k=k, method="dataframe")))
+    if want is not None:
+        _same(auto, want)
+    return auto
+
+
+def _check_and(s, q, k, want=None):
+    auto = _rows(s.search(q, k=k, operator="and"))
+    _same(auto, _rows(s.search(q, k=k, operator="and", method="wand")))
+    if want is not None:
+        _same(auto, want)
+
+
+def _check_batch(s, queries, want=None):
+    def per_q(df):
+        out = {}
+        for r in sorted(df.collect(), key=lambda r: (r["qid"], r["rank"])):
+            out.setdefault(int(r["qid"]), []).append(
+                (int(r["rank"]), int(r["doc_id"]), float(r["score"]))
+            )
+        return out
+
+    auto = per_q(s.search_batch(queries))
+    assert auto == per_q(s.search_batch(queries, method="wand"))
+    if want is not None:
+        for qid, q, k in queries:
+            _same([(d, sc) for _, d, sc in auto.get(qid, [])], want(q, k))
+
+
+def _check_phrase(s, q, k, want=None):
+    auto = _rows(s.search_phrase(q, k=k))
+    _same(auto, _rows(s.search_phrase(q, k=k, method="postings")))
+    if want is not None:
+        _same(auto, want)
+    return len(auto)
+
+
+# --------------------------------------------------------------------- #
+def test_auto_matches_spark_and_oracle(spark, idx, oracle):
+    s = Searcher(spark, idx)
+    for q in OR_QUERIES:
+        _check_or(s, q, K, oracle.search(q, K), dataframe=True)
+    for q in AND_QUERIES:
+        _check_and(s, q, K, _oracle_and(oracle, q, K))
+    batch = [(i, q, K) for i, q in enumerate(OR_QUERIES)]
+    _check_batch(s, batch, lambda q, k: oracle.search(q, k))
+    docs = _docs(spark, idx)
+    texts = dict(docs)
+    hits = 0
+    for q in _phrases(docs) + [STOP, UNKNOWN]:
+        hits += _check_phrase(s, q, K, _oracle_phrase(oracle, texts, q, K))
+    assert hits > 0
+    assert s._reader_cache is not None  # the routed calls took the reader
+
+
+def test_k_larger_than_hit_count(spark, idx, oracle):
+    s = Searcher(spark, idx)
+    q = "needle00"
+    hits = _check_or(s, q, 500, oracle.search(q, 500))
+    assert 0 < len(hits) < 500
+    q_and = "w00001 needle00"
+    _check_and(s, q_and, 500, _oracle_and(oracle, q_and, 500))
+    _check_batch(
+        s, [(0, q, 500), (1, "w00454", 3)], lambda q, k: oracle.search(q, k)
+    )
+    docs = _docs(spark, idx)
+    ph = _phrases(docs)[0]
+    _check_phrase(s, ph, 500, _oracle_phrase(oracle, dict(docs), ph, 500))
+
+
+def test_tombstoned_docs(spark, deleted_idx, oracle):
+    """Deletes keep collection stats frozen, so the oracle over every doc
+    with the deleted ids filtered out is the reference."""
+    s = Searcher(spark, deleted_idx)
+    dead = frozenset(DELETED)
+    assert s.deleted_ids == dead
+    for q in OR_QUERIES:
+        _check_or(s, q, K, _live(oracle.search(q, K + len(dead)), dead, K))
+    for q in AND_QUERIES:
+        _check_and(s, q, K, _oracle_and(oracle, q, K, dead))
+    batch = [(i, q, K) for i, q in enumerate(OR_QUERIES)]
+    _check_batch(
+        s, batch, lambda q, k: _live(oracle.search(q, k + len(dead)), dead, k)
+    )
+    docs = _docs(spark, deleted_idx)
+    for q in _phrases(docs):
+        _check_phrase(s, q, K, _oracle_phrase(oracle, dict(docs), q, K, dead))
+
+
+def test_pruned_tier(spark, idx):
+    table = prune_postings(spark, idx, keep_per_term=5)
+    s = Searcher(spark, idx, postings_table=table)
+    for q in OR_QUERIES:
+        _check_or(s, q, K)
+    for q in AND_QUERIES:
+        _check_and(s, q, K)
+    _check_batch(s, [(i, q, K) for i, q in enumerate(OR_QUERIES)])
+    # the tier really answers: fewer candidates than the full index
+    full = Searcher(spark, idx)
+    assert len(_rows(s.search("w00001", k=500))) < len(
+        _rows(full.search("w00001", k=500))
+    )
+
+
+def test_microbuild_generation(spark, micro_dir):
+    s = Searcher(spark, micro_dir)
+    ix = OracleIndex.build(_docs(spark, micro_dir))
+    for q in OR_QUERIES:
+        _check_or(s, q, K, ix.search(q, K))
+    for q in AND_QUERIES:
+        _check_and(s, q, K, _oracle_and(ix, q, K))
+    _check_batch(
+        s, [(i, q, K) for i, q in enumerate(OR_QUERIES)],
+        lambda q, k: ix.search(q, k),
+    )
+
+
+def test_reader_follows_in_place_append(spark, tmp_path):
+    """``append_to_index`` rewrites ``postings`` and ``term_stats`` in
+    place under a live searcher: its next routed call reopens the reader
+    on the new snapshot instead of reading deleted part files, and still
+    answers as the Spark plan does."""
+    first, rest = LONDON_BRIDGE_VERSES[:6], LONDON_BRIDGE_VERSES[6:]
+    path = str(tmp_path / "idx")
+    build_index(transcripts_df(spark, verses=first), path)
+    s = Searcher(spark, path)
+    queries = ["build", "silver gold", "wood clay needles pins"]
+    for q in queries:
+        _check_or(s, q, K)
+    opened = s._reader_cache
+    append_to_index(
+        transcripts_df(spark, verses=rest, conv_id="conv-00000001"), path
+    )
+    for q in queries:
+        _check_or(s, q, K)
+        _check_and(s, q, K)
+    _check_batch(s, [(i, q, K) for i, q in enumerate(queries)])
+    assert s._reader_cache is not opened
+    oracle = OracleIndex.build(list(enumerate(LONDON_BRIDGE_VERSES)))
+    fresh = Searcher(spark, path)
+    for q in queries:
+        _check_or(fresh, q, K, oracle.search(q, K))
+        _check_and(fresh, q, K, _oracle_and(oracle, q, K))
+
+
+# --------------------------------------------------------------------- #
+def _routed_calls(s, phrase):
+    """Every routed entry point, each as (name, thunk returning rows)."""
+    batch = [(i, q, K) for i, q in enumerate(OR_QUERIES[:8])]
+    return [
+        ("or", lambda: s.search("w00001 w00454 needle00", k=K).collect()),
+        ("or_stop", lambda: s.search(STOP, k=K).collect()),
+        ("or_unknown", lambda: s.search(UNKNOWN, k=K).collect()),
+        ("and", lambda: s.search("w00001 w00002", k=K, operator="and").collect()),
+        ("and_unknown", lambda: s.search(UNKNOWN, k=K, operator="and").collect()),
+        ("batch", lambda: s.search_batch(batch).collect()),
+        ("phrase", lambda: s.search_phrase(phrase, k=K).collect()),
+        ("phrase_unknown", lambda: s.search_phrase(UNKNOWN, k=K).collect()),
+    ]
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_routed_calls_run_no_spark_job(spark, idx, deleted_idx):
+    """The guard on the hot path: constructing a Searcher and answering
+    every admitted routed call (reader open included) runs zero jobs."""
+    phrase = _phrases(_docs(spark, idx))[0]
+    for n, d in enumerate((idx, deleted_idx)):
+        s, jobs = _jobs(spark, f"reader-open-{n}", lambda: Searcher(spark, d))
+        assert jobs == [], "Searcher construction ran a Spark job"
+        for name, call in _routed_calls(s, phrase):
+            _, jobs = _jobs(spark, f"reader-{n}-{name}", call)
+            assert jobs == [], f"routed call {name!r} ran Spark jobs {jobs}"
+
+
+def test_gate_falls_back_to_spark(spark, idx, monkeypatch):
+    """A posting list too big for the driver: with the gate constant below
+    the query's size, ``auto`` runs the Spark plan (it now runs jobs) and
+    answers exactly as the reader did."""
+    phrase = _phrases(_docs(spark, idx))[0]
+    admitted = [call() for _, call in _routed_calls(Searcher(spark, idx), phrase)]
+    monkeypatch.setattr(reader_mod, "MAX_POSTING_BYTES", 0)
+    s = Searcher(spark, idx)
+    for (name, call), want in zip(_routed_calls(s, phrase), admitted):
+        got, jobs = _jobs(spark, f"gate-{name}", call)
+        if name in ("or", "and", "batch", "phrase"):
+            assert jobs, f"{name!r} stayed on the driver past the gate"
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), name
