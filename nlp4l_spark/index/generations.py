@@ -15,6 +15,22 @@ Reference semantics: Lucene's IndexWriter commit model
 background merge policy keeps the segment count logarithmic; readers
 open a point-in-time view of the committed segment list.
 
+That view stays readable because readers hold leases, after Lucene's
+``IndexDeletionPolicy`` and ``SearcherManager`` reference counts:
+``searcher()`` leases every directory of the list it opens and releases
+the leases when the searcher is garbage-collected. ``maintain()`` and
+``retention_sweep()`` adopt the new manifest first, then delete a
+consumed directory at once only if no lease holds it; a held one is
+recorded in the manifest's ``pending_delete`` list and deleted when its
+last lease is released, or by the next ``ingest``/``maintain`` after
+that. Because that release can rewrite the manifest from whichever
+thread drops the searcher, every manifest write is a read-modify-write
+under one process-wide lock. Leases cover searchers in this process
+only (Lucene's default policy makes the same assumption): a reader in
+another process gets no protection, and a crash leaves
+``pending_delete`` entries that the next ``ingest``/``maintain``
+reclaims.
+
 Crash safety is the Lucene two-phase pattern: generation directories
 are built first, then *adopted* by atomically replacing the manifest
 (``GENERATIONS.json``, temp-file + ``os.replace``); consumed inputs are
@@ -34,6 +50,9 @@ import json
 import os
 import shutil
 import tempfile
+import threading
+import weakref
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,12 +66,23 @@ from nlp4l_spark.index.mergepolicy import (
 
 _MANIFEST = "GENERATIONS.json"
 
+# In-process reader leases: absolute generation directory -> number of
+# open searchers that read it. The lock also serializes every manifest
+# read-modify-write: the last lease's release reclaims (and rewrites the
+# manifest) from whichever thread drops the searcher, so a writer that
+# adopted a manifest loaded outside the lock could undo an ingest.
+# Reentrant because a lease is released from a weakref finalizer, which
+# can run inside any call that holds the lock.
+_LEASES: Counter[str] = Counter()
+_LEASE_LOCK = threading.RLock()
+
 
 class GenerationLog:
     """A directory of index generations with an atomic live-list manifest."""
 
     def __init__(self, root: str):
         self.root = root
+        self._abs_root = os.path.abspath(root)  # lease keys
         os.makedirs(root, exist_ok=True)
 
     # ----------------------------------------------------------- manifest
@@ -79,6 +109,52 @@ class GenerationLog:
         return [
             os.path.join(self.root, g) for g in self._load()["generations"]
         ]
+
+    # ------------------------------------------------------------- leases
+
+    def _lease_key(self, name: str) -> str:
+        return os.path.join(self._abs_root, name)
+
+    def _retire(self, live: list[str], next_id: int, consumed: list[str]) -> None:
+        """Adopt the new ``live`` list and ``next_id`` with ``consumed``
+        added to ``pending_delete``, then delete whatever no lease holds."""
+        with _LEASE_LOCK:
+            man = self._load()
+            man["generations"] = live
+            man["next_id"] = next_id
+            man["pending_delete"] = sorted(
+                set(man.get("pending_delete", [])) | set(consumed)
+            )
+            self._adopt(man)
+            self._reclaim()
+
+    def _reclaim(self) -> None:
+        """Delete every ``pending_delete`` directory that no lease holds,
+        then adopt the manifest without them (deleting first, so a crash
+        in between leaves a stale entry rather than an orphan)."""
+        with _LEASE_LOCK:
+            man = self._load()
+            pending = man.get("pending_delete", [])
+            held = [n for n in pending if _LEASES[self._lease_key(n)]]
+            if len(held) == len(pending):
+                return
+            for n in pending:
+                if n not in held:
+                    shutil.rmtree(os.path.join(self.root, n), ignore_errors=True)
+            if held:
+                man["pending_delete"] = held
+            else:
+                del man["pending_delete"]
+            self._adopt(man)
+
+    def _release(self, keys: list[str]) -> None:
+        with _LEASE_LOCK:
+            _LEASES.subtract(keys)
+            freed = [key for key in keys if _LEASES[key] <= 0]
+            for key in freed:
+                del _LEASES[key]
+            if freed:
+                self._reclaim()
 
     # ------------------------------------------------------------- ingest
 
@@ -110,6 +186,7 @@ class GenerationLog:
         append throughput); bigger batches, or builds with options the
         micro path doesn't carry, use the distributed builder. Set
         ``micro=False`` to force the distributed path."""
+        self._reclaim()
         man = self._load()
         name = f"gen_{man['next_id']:06d}"
         gen_dir = os.path.join(self.root, name)
@@ -130,9 +207,11 @@ class GenerationLog:
                 shutil.rmtree(gen_dir)  # partial micro attempt: rebuild
         if built is None:
             build_index(df, gen_dir, analyzer, **build_kwargs)
-        man["generations"].append(name)
-        man["next_id"] += 1
-        self._adopt(man)
+        with _LEASE_LOCK:  # reload: a lease release may have reclaimed
+            man = self._load()
+            man["generations"].append(name)
+            man["next_id"] += 1
+            self._adopt(man)
         return gen_dir
 
     # -------------------------------------------------------- maintenance
@@ -146,11 +225,13 @@ class GenerationLog:
     ) -> list[list[str]]:
         """One maintenance round: compact the policy's selected groups
         into fresh generations, adopt the new live list atomically, THEN
-        delete the consumed inputs. Returns the executed merge specs
+        delete the consumed inputs that no searcher lease holds (held
+        ones wait in ``pending_delete``). Returns the executed merge specs
         (generation names). Survivors keep their list position; each
         merged generation takes the position of its first input, so
         federation docID order stays stable for untouched generations."""
         policy = policy or TieredMergePolicy()
+        self._reclaim()
         man = self._load()
         names = list(man["generations"])
         sizes = {
@@ -181,9 +262,7 @@ class GenerationLog:
             for n in members[1:]:
                 new_list.remove(n)
             consumed.extend(members)
-        self._adopt({"generations": new_list, "next_id": next_id})
-        for n in consumed:  # only after the new manifest is durable
-            shutil.rmtree(os.path.join(self.root, n), ignore_errors=True)
+        self._retire(new_list, next_id, consumed)
         return merges
 
     # ------------------------------------------------------------ deletes
@@ -231,9 +310,9 @@ class GenerationLog:
         wall clock, so sweeps are deterministic and replayable. Publish
         order is the same two-phase rule as maintain(): the shrunken
         manifest is adopted atomically FIRST, directories are deleted
-        only after it is durable — a crash between the two leaves
-        unreferenced orphans, not missing live data. Returns the
-        dropped generation names."""
+        only after it is durable and no searcher lease holds them — a
+        crash between the two leaves unreferenced orphans, not missing
+        live data. Returns the dropped generation names."""
         from nlp4l_spark.index.catalog import IndexCatalog
 
         from pyspark.sql import functions as F
@@ -253,18 +332,29 @@ class GenerationLog:
             else:
                 keep.append(name)
         if drop:
-            self._adopt({"generations": keep, "next_id": man["next_id"]})
-            for n in drop:  # only after the new manifest is durable
-                shutil.rmtree(os.path.join(self.root, n), ignore_errors=True)
+            self._retire(keep, man["next_id"], drop)
         return drop
 
     # -------------------------------------------------------------- query
 
     def searcher(self, spark: SparkSession):
-        """Point-in-time federated view of the committed generation list."""
+        """Point-in-time federated view of the committed generation list.
+        It leases every directory it reads, so a later ``maintain()`` or
+        ``retention_sweep()`` defers deleting them; the leases are
+        released when the searcher is garbage-collected."""
         from nlp4l_spark.search import MultiSearcher
 
-        return MultiSearcher(spark, self.live_dirs)
+        with _LEASE_LOCK:
+            names = self._load()["generations"]
+            keys = [self._lease_key(n) for n in names]
+            _LEASES.update(keys)
+        try:
+            ms = MultiSearcher(spark, [os.path.join(self.root, n) for n in names])
+        except BaseException:
+            self._release(keys)
+            raise
+        weakref.finalize(ms, self._release, keys)
+        return ms
 
 
 def stream_into_generations(

@@ -27,7 +27,9 @@ under ``reader.MAX_POSTING_BYTES`` — and otherwise runs the Spark plan
 (``wand``; the conjunctive plan for ``operator="and"``; phrase
 ``postings``). A named method always runs its Spark plan. Term-dictionary
 lookups (``_term_stats``) are a pushed pyarrow read of ``term_stats`` on
-the driver, so no path pays a Spark job for them.
+the driver, so no path pays a Spark job for them. ``MultiSearcher.search``
+routes the same way: one ``IndexReader`` per member under global stats,
+gated on the bytes selected across all members.
 
 Query-side joins are all broadcast (queries are tiny); the postings scan is
 term-pruned via an ``isin`` filter that parquet row-group stats can skip on
@@ -51,6 +53,7 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
@@ -61,6 +64,7 @@ from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import B, K1, bm25_impact, idf
 from nlp4l_spark.index.catalog import IndexCatalog
+from nlp4l_spark.search import reader as reader_mod
 from nlp4l_spark.search import wand as wand_mod
 from nlp4l_spark.search.reader import IndexReader, phrase_matches, shard_topk
 
@@ -3802,10 +3806,26 @@ class MultiSearcher:
     built over the whole corpus, because BM25 depends on the corpus only
     through (N, df_t, avgdl, tf, dl) — all blended exactly.
 
-    Plan: per index the same pushed-In(term) postings scan + broadcast
-    qterms join as Searcher's dataframe scoring; the union is K
-    postings-sized frames, one final partial-agg + TakeOrdered. No
-    cross-index shuffle beyond the final top-k."""
+    Plan: global df is the sum of each member's pushed ``term_stats``
+    read (no Spark job), and idf and avgdl come from the union. Each
+    member then answers with its own driver-resident ``IndexReader``,
+    scoring under the union's avgdl: the same ``shard_topk`` WAND kernel
+    as ``Searcher``, run on the query's (term, global idf) rows over that
+    member's postings, with its own tombstones as live docs. Block maxima
+    stored under a smaller member avgdl are scaled up by the ratio, so
+    WAND skips only blocks that cannot reach the top-k. The K local
+    top-k lists, offset by their docBase, are merged on (score DESC,
+    doc_id ASC) in NumPy and returned as a job-free ``LocalRelation``.
+    Every doc lives in exactly one member, so the union of the members'
+    exact top-k holds the global top-k: the merge is exact.
+
+    Gate and fallback: the driver path runs when the posting row-group
+    bytes the query selects, summed over all members, stay under
+    ``reader.MAX_POSTING_BYTES``. Otherwise the call runs the Spark plan,
+    also the oracle twin in the tests: per member the same pushed-In(term)
+    postings scan as Searcher's dataframe scoring, offset by docBase;
+    the union of K postings-sized frames joins the broadcast (term, idf)
+    rows, then one partial-agg + TakeOrdered."""
 
     def __init__(
         self,
@@ -3828,6 +3848,7 @@ class MultiSearcher:
         self.num_docs = base
         self.sum_dl = sum(s.sum_dl for s in self.searchers)
         self.avgdl = self.sum_dl / self.num_docs if self.num_docs else 1.0
+
 
     def _global_dfs(self, terms: list[str]) -> dict[str, int]:
         dfs: dict[str, int] = {}
@@ -3857,7 +3878,9 @@ class MultiSearcher:
     def search(self, query: str, k: int = 10) -> DataFrame:
         """Global BM25 top-k. Returns (doc_id, score) with doc_id in the
         union's docBase-offset space (Lucene MultiReader numbering);
-        ties break on that global docID ascending."""
+        ties break on that global docID ascending. Answered on the
+        driver when the size gate admits the query, else by the Spark
+        plan (class docstring)."""
         terms = sorted(set(self.analyzer.tokenize(query)))
         dfs = self._global_dfs(terms)
         rows = [
@@ -3865,11 +3888,15 @@ class MultiSearcher:
         ]
         if not rows:
             return _empty(self.spark, "doc_id long, score double")
+        present = [r[0] for r in rows]
+        readers = [s._reader for s in self.searchers]
+        sizes = [r.postings.selected_bytes(present) for r in readers]
+        if sum(sizes) <= reader_mod.MAX_POSTING_BYTES:
+            return self._search_driver(readers, sizes, rows, k)
         qterms = F.broadcast(
             self.spark.createDataFrame(rows, "term string, idf double")
         )
         parts = []
-        present = [r[0] for r in rows]
         for s, dbase in zip(self.searchers, self.doc_bases):
             decoded = s._decoded(s._matching_postings(present))
             parts.append(
@@ -3890,4 +3917,30 @@ class MultiSearcher:
             .agg(F.sum("_s").alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
+        )
+
+    def _search_driver(
+        self,
+        readers: list[IndexReader],
+        sizes: list[int],
+        rows: list[tuple[str, float]],
+        k: int,
+    ) -> DataFrame:
+        """Each member's WAND top-k under the global idf rows, offset by
+        its docBase, merged on (score DESC, doc_id ASC). A member whose
+        row groups hold none of the terms is skipped unread."""
+        qrows = [(0, t, w) for t, w in rows]
+        docs, scores = [np.empty(0, np.int64)], [np.empty(0)]
+        for r, dbase, size in zip(readers, self.doc_bases, sizes):
+            if size:
+                hits = r.search_batch(qrows, {0: k}, self.avgdl)
+                docs.append(hits["doc_id"].to_numpy() + dbase)
+                scores.append(hits["score"].to_numpy())
+        doc, score = np.concatenate(docs), np.concatenate(scores)
+        top = np.lexsort((doc, -score))[:k]
+        return self.spark.createDataFrame(
+            pa.table(
+                {"doc_id": doc[top], "score": score[top]},
+                schema=_arrow_schema("doc_id long, score double"),
+            )
         )

@@ -92,6 +92,7 @@ def shard_topk(
     avgdl: float,
     dels: np.ndarray | None = None,
     topk_fn=wand_topk,
+    bound_scale: float = 1.0,
 ) -> pd.DataFrame:
     """Per (qid, shard) group of posting rows (qid, term, idf, shard,
     doc_ids_enc, tfs_enc, dls_enc, block_max): decode, drop tombstoned
@@ -103,7 +104,12 @@ def shard_topk(
     are dropped from the decoded arrays before scoring; block-max metadata
     is then stale-aligned, so it is dropped (upper-bound pruning degrades,
     correctness does not — the trade Lucene makes consulting liveDocs
-    inside its scorers)."""
+    inside its scorers).
+
+    ``bound_scale`` multiplies the stored block maxima: scoring under an
+    avgdl larger than the one the index was built with raises every
+    impact by at most that ratio, so the scaled maxima stay upper
+    bounds."""
     pdf = pdf.sort_values(["qid", "shard", "term"], kind="stable")
     groups: dict[tuple[int, int], list] = {}
     for qid, shard, w, d_enc, tf_enc, dl_enc, blocks in zip(
@@ -115,6 +121,12 @@ def shard_topk(
         tf = codec.decode_tfs(tf_enc)
         dl = codec.decode_tfs(dl_enc)
         bm = list(blocks) if blocks is not None else []
+        if bound_scale != 1.0:
+            bm = [
+                {"last_doc": b["last_doc"],
+                 "max_impact": b["max_impact"] * bound_scale}
+                for b in bm
+            ]
         if dels is not None:
             live = ~np.isin(d, dels)
             if not live.all():
@@ -296,14 +308,25 @@ class IndexReader:
 
     # ---- queries ----------------------------------------------------- #
     def search_batch(
-        self, rows: list[tuple[int, str, float]], ks: dict[int, int]
+        self,
+        rows: list[tuple[int, str, float]],
+        ks: dict[int, int],
+        avgdl: float | None = None,
     ) -> pa.Table:
         """OR top-k per query by block-max WAND: (qid, term, idf) rows of
-        present terms -> (qid, rank, doc_id, score)."""
+        present terms -> (qid, rank, doc_id, score). ``avgdl`` overrides
+        the reader's own (a federation scores under the union's); the
+        block maxima, stored under the reader's own, are scaled to
+        stay upper bounds."""
+        avgdl = self.avgdl if avgdl is None else avgdl
         q = pd.DataFrame(rows, columns=["qid", "term", "idf"])
         post = self.postings.read(q["term"].tolist(), _OR_COLUMNS)
         hits = shard_topk(
-            q.merge(post, on="term"), max(ks.values()), self.avgdl, self.dels
+            q.merge(post, on="term"),
+            max(ks.values()),
+            avgdl,
+            self.dels,
+            bound_scale=avgdl / self.avgdl if avgdl > self.avgdl else 1.0,
         )
         qid, doc = hits["qid"].to_numpy(), hits["doc_id"].to_numpy()
         score = hits["score"].to_numpy()
