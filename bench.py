@@ -552,21 +552,13 @@ def timed_build(spark, n_turns: int, out_dir: str) -> float:
 
 
 def timed_ingest(spark) -> dict:
-    """Incremental-ingest economics: the same K micro-batches through
-    (a) GenerationLog — O(batch) per append, one tiered maintenance
-    round at the end — and (b) append_to_index — full postings re-merge
-    per append. At bench scale the re-merge tax is modest; the numbers
-    pin the direction (genlog per-batch cost is flat in corpus size,
-    append's grows linearly — the 100-TB argument, PLANS.md)."""
+    """Incremental-ingest economics: K micro-batches through
+    GenerationLog — O(batch) per ingest — then one tiered maintenance
+    round that compacts them."""
     from pyspark.sql import functions as F
 
     from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import (
-        GenerationLog,
-        TieredMergePolicy,
-        build_index,
-    )
-    from nlp4l_spark.streaming import append_to_index
+    from nlp4l_spark.index import GenerationLog, TieredMergePolicy
 
     n_batches, per = 4, 8000
     total = n_batches * per
@@ -603,16 +595,7 @@ def timed_ingest(spark) -> dict:
     )
     maintain_sec = time.time() - t0
     n_live = len(log.live_dirs)
-
-    adir = "/tmp/nlp4l_bench_append"
-    shutil.rmtree(adir, ignore_errors=True)
-    t0 = time.time()
-    build_index(batches[0], adir)
-    for b in batches[1:]:
-        append_to_index(b, adir)
-    append_sec = time.time() - t0
     shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(adir, ignore_errors=True)
     out = {
         "turns": total,
         "batches": n_batches,
@@ -620,8 +603,6 @@ def timed_ingest(spark) -> dict:
         "genlog_turns_per_sec": round(total / genlog_sec, 1),
         "maintain_sec": round(maintain_sec, 2),
         "live_gens_after_maintain": n_live,
-        "append_sec": round(append_sec, 2),
-        "append_turns_per_sec": round(total / append_sec, 1),
     }
     print(f"  ingest: {out}", file=sys.stderr)
     return out

@@ -192,7 +192,7 @@ class PorterAnalyzer(Analyzer):
     def tokens_expr(self, col_sql: str):
         raise NotImplementedError(
             "PorterAnalyzer has no SQL engine (stemming needs the Arrow "
-            "path); build with materialize_forward=True (the default)"
+            "path, which every index build tokenizes through)"
         )
 
     def duckdb_tokens_sql(self, col_sql: str) -> str:

@@ -13,7 +13,7 @@ from nlp4l_spark.index.deletes import (
 )
 from nlp4l_spark.index.docids import assign_doc_ids
 from nlp4l_spark.index.generations import GenerationLog, stream_into_generations
-from nlp4l_spark.index.mergepolicy import TieredMergePolicy, compact, maintain
+from nlp4l_spark.index.mergepolicy import TieredMergePolicy, compact
 from nlp4l_spark.index.reindex import reindex
 from nlp4l_spark.index.snapshot import restore, snapshot, verify_snapshot
 
@@ -33,5 +33,4 @@ __all__ = [
     "stream_into_generations",
     "TieredMergePolicy",
     "compact",
-    "maintain",
 ]

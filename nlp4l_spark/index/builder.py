@@ -14,12 +14,11 @@ Stages (each a snapshot-committed table; resume skips committed stages):
   stored         doc_id + original transcript columns ("stored fields";
                  per-turn text round-trip invariant is tested on this)
   doc_terms_fwd  (doc_id, terms[], tfs[], dl) — forward index / term
-                 vectors analogue; checkpointed by DEFAULT
-                 (materialize_forward=True, measured ~2x faster than
-                 fusing tokenize into the segment stage — see the field
-                 comment); materialize_forward=False fuses instead
-  doc_lens       (doc_id, dl) — computed by the pure-JVM tokenizer
-                 (identical contract to the Arrow UDF, tested)
+                 vectors analogue, written by the Arrow tokenize UDF; a
+                 checkpoint between tokenize and segment building
+                 (measured ~2x faster than fusing the two python stages)
+                 and the input compaction rebuilds from
+  doc_lens       (doc_id, dl) — a projection of the forward index
   segments       per-input-partition, per-doc_id-shard encoded posting
                  segments — this IS the salted two-phase aggregation: the
                  per-posting explosion never crosses the network; only
@@ -30,6 +29,10 @@ Stages (each a snapshot-committed table; resume skips committed stages):
   field_stats    (field, num_docs, sum_dl, avgdl, uniq_terms)
   _lineage       per-stage / per-partition counters (turns tokenized,
                  postings emitted, bytes compressed)
+
+doc_lens through field_stats are ``write_searchable``: the one Spark path
+from a committed forward index to the searchable tables, which
+``mergepolicy.compact`` runs as well.
 
 Scale notes (10^12 turns):
 * The only wide shuffles are the docID range partition and the
@@ -47,6 +50,8 @@ Scale notes (10^12 turns):
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field, fields
 from typing import Iterator
 
@@ -131,16 +136,6 @@ class IndexBuilder:
     # grouped Arrow task -> TakeOrdered. Lucene stores positions in the
     # postings the same way (FieldType.termPositions).
     store_positions: bool = False
-    # parquet checkpoint of the (doc_id, terms[], tfs[], dl) forward index
-    # between tokenize and segment building. Default ON: fusing the two
-    # python stages into one (pandas UDF piped straight into mapInPandas)
-    # measured ~2x SLOWER end-to-end — the JVM relays Arrow batches
-    # between two python workers through one task pipeline and the
-    # accumulate-then-emit segment builder turns that into a stop-and-go
-    # pipe, leaving cores idle. Two separate stages each stream at full
-    # parallelism, and the fwd table doubles as the tokenize resume
-    # checkpoint.
-    materialize_forward: bool = True
     # Lucene keyword fields (StringField / ES `keyword` type): each named
     # stored column is ALSO indexed as untokenized terms namespaced
     # "<field>:<lowercased value>" — ':' cannot appear in analyzed text
@@ -165,7 +160,6 @@ class IndexBuilder:
     ) -> IndexCatalog:
         spark = df.sparkSession
         cat = IndexCatalog(index_dir)
-        lineage: list[tuple] = []
 
         def done(stage: str) -> bool:
             return resume and cat.is_committed(stage)
@@ -198,114 +192,39 @@ class IndexBuilder:
         self._check_fail(fail_after_stage, "stored")
         stored = cat.read(spark, "stored")
 
-        # -- stage 2 (default): tokenize -> materialized forward index ------
-        # See the materialize_forward field note: two streaming python
-        # stages with a columnar checkpoint between them beat one fused
-        # stage that relays Arrow batches between two python workers.
-        # materialize_forward=False fuses tokenize into stage 4 instead.
-        if self.materialize_forward:
-            if not done("doc_terms_fwd"):
-                with self._clamped_splits(spark, cat, "stored"):
-                    fwd = self._tokenized(cat.read(spark, "stored"))
-                    cat.write(fwd, "doc_terms_fwd", sort_by=["doc_id"])
-            self._check_fail(fail_after_stage, "doc_terms_fwd")
+        # -- stage 2: tokenize -> materialized forward index ----------------
+        # A checkpoint between the two python stages (tokenize, segment
+        # build): measured ~2x faster than one fused stage relaying Arrow
+        # batches between two python workers; compaction rebuilds from it.
+        if not done("doc_terms_fwd"):
+            with _clamped_splits(spark, cat, "stored"):
+                fwd = self._tokenized(cat.read(spark, "stored"))
+                cat.write(fwd, "doc_terms_fwd", sort_by=["doc_id"])
+        self._check_fail(fail_after_stage, "doc_terms_fwd")
 
-        # -- stage 3: doc_lens + collection stats ---------------------------
-        # With a materialized forward index this is a pruned scan of its dl
-        # column; otherwise dl comes from the pure-JVM tokenizer
-        # (regexp_extract_all inside codegen; identical contract to the
-        # Arrow UDF — tests pin the equivalence).
-        if not done("doc_lens"):
-            if self.materialize_forward:
-                lens = cat.read(spark, "doc_terms_fwd").select("doc_id", "dl")
-            else:
-                lens = stored.select(
-                    "doc_id",
-                    F.size(self.analyzer.tokens_expr(self.text_col))
-                    .cast("int")
-                    .alias("dl"),
-                )
-            stats = lens.agg(
-                F.count("*").alias("num_docs"), F.sum("dl").alias("sum_dl")
-            ).collect()[0]
+        # -- stages 3-7: doc_lens -> field_stats (shared with compaction) ----
+        # collection stats: an agg over the forward index's dl column, or
+        # the committed doc_lens counters when resuming past that stage
+        if done("doc_lens"):
+            lens_man = cat.manifest("doc_lens")["counters"]
+            num_docs, sum_dl = int(lens_man["num_docs"]), int(lens_man["sum_dl"])
+        else:
+            stats = (
+                cat.read(spark, "doc_terms_fwd")
+                .agg(F.count("*").alias("num_docs"), F.sum("dl").alias("sum_dl"))
+                .collect()[0]
+            )
             num_docs, sum_dl = stats["num_docs"], int(stats["sum_dl"] or 0)
-            cat.write(
-                lens,
-                "doc_lens",
-                sort_by=["doc_id"],
-                counters={"num_docs": num_docs, "sum_dl": sum_dl},
-            )
-        self._check_fail(fail_after_stage, "doc_lens")
-        lens_man = cat.manifest("doc_lens")["counters"]
-        num_docs = int(lens_man["num_docs"])
-        sum_dl = int(lens_man["sum_dl"])
-        avgdl = (sum_dl / num_docs) if num_docs else 0.0
-
-        # -- stage 4: tokenize + per-partition posting segments -------------
-        # At small corpus sizes the input parquet is only a few hundred MB,
-        # and the default 128 MB maxPartitionBytes packs it into a handful
-        # of read splits — this python-heavy stage would run at parallelism
-        # ~5 on a 32-core cluster. Size splits to the cluster instead
-        # (files are doc_id-ranged, so packing stays doc-contiguous and
-        # delta gaps stay small). At real scale the clamp is a no-op.
-        if not done("segments"):
-            src_table = "doc_terms_fwd" if self.materialize_forward else "stored"
-            with self._clamped_splits(spark, cat, src_table):
-                src = cat.read(spark, src_table)
-                if not self.materialize_forward:
-                    src = self._tokenized(src)  # fused: no parquet round-trip
-                segs = src.sortWithinPartitions("doc_id").mapInPandas(
-                    _segment_builder(self.docs_per_shard), SEGMENT_SCHEMA
-                )
-                cat.write(segs, "segments")
-        self._check_fail(fail_after_stage, "segments")
-        segs = cat.read(spark, "segments")
-
-        # -- stage 5: segment merge -> postings ------------------------------
-        # One hash shuffle keyed (term, shard) moves only compressed
-        # segments; the merge itself is a run-scan over the sorted
-        # partition (mapInPandas), NOT per-group applyInPandas — per-term
-        # Python call overhead would dominate at vocab sizes of 10^4-10^6.
-        if not done("postings"):
-            # explicit numPartitions: AQE would coalesce this exchange by
-            # BYTE size (segments are compressed, ~2 B/posting) down to a
-            # couple of partitions, serializing the python-heavy merge
-            n_merge = spark.sparkContext.defaultParallelism
-            merged = (
-                segs.repartition(n_merge, "term", "shard")
-                .sortWithinPartitions("term", "shard", "min_doc")
-                .mapInPandas(_segment_merger(avgdl), POSTINGS_SCHEMA)
-            )
-            cat.write(merged, "postings", sort_by=["term"])
-        self._check_fail(fail_after_stage, "postings")
-        postings = cat.read(spark, "postings")
-
-        # -- stage 6: term dictionary ----------------------------------------
-        if not done("term_stats"):
-            cat.write(
-                postings.groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-                # materialized term length: fuzzy expansion pushes the exact
-                # Levenshtein length bound |len - |q|| <= max_edits down to
-                # the parquet scan instead of levenshtein()-scanning the
-                # whole dictionary (search/engine.py::search_fuzzy)
-                .withColumn("tlen", F.length("term").cast("int")),
-                "term_stats",
-                sort_by=["term"],
-            )
-        self._check_fail(fail_after_stage, "term_stats")
-
-        # -- stage 7: field stats ---------------------------------------------
-        if not done("field_stats"):
-            uniq = cat.row_count("term_stats")  # parquet footers, no job
-            cat.write(
-                spark.createDataFrame(
-                    [(self.text_col, num_docs, sum_dl, avgdl, uniq)],
-                    "field string, num_docs long, sum_dl long, avgdl double, uniq_terms long",
-                ),
-                "field_stats",
-            )
-        self._check_fail(fail_after_stage, "field_stats")
+        segs = write_searchable(
+            spark,
+            cat,
+            num_docs,
+            sum_dl,
+            text_col=self.text_col,
+            docs_per_shard=self.docs_per_shard,
+            done=done,
+            after=lambda stage: self._check_fail(fail_after_stage, stage),
+        )
 
         # -- optional stage: term vectors (positions + offsets) --------------
         if self.store_term_vectors and not done("term_vectors"):
@@ -325,7 +244,7 @@ class IndexBuilder:
         # shuffle is needed at all — the phrase task just stacks the
         # pushed-In(term) rows it receives per shard.
         if self.store_positions and not done("pos_postings"):
-            with self._clamped_splits(spark, cat, "stored"):
+            with _clamped_splits(spark, cat, "stored"):
                 src = cat.read(spark, "stored").select(
                     "doc_id", F.col(self.text_col).alias("_text")
                 )
@@ -333,7 +252,7 @@ class IndexBuilder:
                 # segment builder (a tokenize-UDF -> mapInPandas chain
                 # relays Arrow batches between two python workers in one
                 # task pipeline — measured ~2x slower on the main build,
-                # see materialize_forward)
+                # see stage 2)
                 segs_p = src.sortWithinPartitions("doc_id").mapInPandas(
                     _pos_segment_builder(self.docs_per_shard, self.analyzer),
                     POS_POSTINGS_SCHEMA,
@@ -413,40 +332,133 @@ class IndexBuilder:
         if fail_after_stage == stage:
             raise RuntimeError(f"injected failure after stage '{stage}'")
 
-    @staticmethod
-    def _clamped_splits(spark, cat: IndexCatalog, name: str):
-        """Context manager: lower spark.sql.files.maxPartitionBytes so a
-        scan of table `name` yields >= ~defaultParallelism splits; restore
-        on exit. Must stay OPEN across the action that scans the table —
-        split planning reads the conf lazily at execution time."""
-        import os as _os
-        from contextlib import contextmanager
 
-        @contextmanager
-        def _cm():
-            path = cat.table_path(name)
-            total = sum(
-                _os.path.getsize(_os.path.join(path, f))
-                for f in _os.listdir(path)
-                if f.endswith(".parquet")
-            )
-            par = max(spark.sparkContext.defaultParallelism, 1)
-            key = "spark.sql.files.maxPartitionBytes"
-            default = spark.conf.get(key)
-            default_bytes = (
-                int(default[:-1]) if default.endswith("b") else int(default)
-            )
-            target = max(min(total // par or 1, default_bytes), 1 << 22)
-            if target >= default_bytes:
-                yield
-                return
-            spark.conf.set(key, str(target))
-            try:
-                yield
-            finally:
-                spark.conf.set(key, default)
+def write_searchable(
+    spark,
+    cat: IndexCatalog,
+    num_docs: int,
+    sum_dl: int,
+    *,
+    text_col: str,
+    docs_per_shard: int,
+    done=lambda stage: False,
+    after=lambda stage: None,
+) -> DataFrame:
+    """The Spark stages from a committed ``doc_terms_fwd`` to the
+    searchable tables: doc_lens -> segments -> postings -> term_stats ->
+    field_stats. ``IndexBuilder.build`` and ``mergepolicy.compact`` both
+    run them (Lucene's IndexWriter likewise writes flushed and merged
+    segments through one path). The caller supplies the collection stats
+    (``num_docs``, ``sum_dl``): the builder aggregates them from the
+    forward index, compaction sums its inputs' manifests minus the
+    tombstoned lengths. ``done(stage)`` skips a committed stage on
+    resume; ``after(stage)`` runs once each stage is committed. Returns
+    the committed ``segments`` table, which the builder's ``_lineage``
+    stage reads too (each read infers the parquet schema with a Spark
+    job)."""
+    avgdl = (sum_dl / num_docs) if num_docs else 0.0
+    if not (done("doc_lens") and done("segments")):
+        # one read for both stages: each read infers the parquet schema
+        # with a Spark job
+        fwd = cat.read(spark, "doc_terms_fwd")
 
-        return _cm()
+    if not done("doc_lens"):
+        cat.write(
+            fwd.select("doc_id", "dl"),
+            "doc_lens",
+            sort_by=["doc_id"],
+            counters={"num_docs": num_docs, "sum_dl": sum_dl},
+        )
+    after("doc_lens")
+
+    # per-partition posting segments. At small corpus sizes the forward
+    # index is only a few hundred MB, and the default 128 MB
+    # maxPartitionBytes packs it into a handful of read splits — this
+    # python-heavy stage would run at parallelism ~5 on a 32-core
+    # cluster. Size splits to the cluster instead (files are
+    # doc_id-ranged, so packing stays doc-contiguous and delta gaps stay
+    # small). At real scale the clamp is a no-op.
+    if not done("segments"):
+        with _clamped_splits(spark, cat, "doc_terms_fwd"):
+            segs = (
+                fwd.sortWithinPartitions("doc_id")
+                .mapInPandas(_segment_builder(docs_per_shard), SEGMENT_SCHEMA)
+            )
+            cat.write(segs, "segments")
+    after("segments")
+    segs = cat.read(spark, "segments")
+
+    # segment merge -> postings. One hash shuffle keyed (term, shard)
+    # moves only compressed segments; the merge itself is a run-scan over
+    # the sorted partition (mapInPandas), NOT per-group applyInPandas —
+    # per-term Python call overhead would dominate at vocab sizes of
+    # 10^4-10^6.
+    if not done("postings"):
+        # explicit numPartitions: AQE would coalesce this exchange by
+        # BYTE size (segments are compressed, ~2 B/posting) down to a
+        # couple of partitions, serializing the python-heavy merge
+        merged = (
+            segs.repartition(spark.sparkContext.defaultParallelism, "term", "shard")
+            .sortWithinPartitions("term", "shard", "min_doc")
+            .mapInPandas(_segment_merger(avgdl), POSTINGS_SCHEMA)
+        )
+        cat.write(merged, "postings", sort_by=["term"])
+    after("postings")
+
+    # term dictionary
+    if not done("term_stats"):
+        cat.write(
+            cat.read(spark, "postings")
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            # materialized term length: fuzzy expansion pushes the exact
+            # Levenshtein length bound |len - |q|| <= max_edits down to
+            # the parquet scan instead of levenshtein()-scanning the
+            # whole dictionary (search/engine.py::search_fuzzy)
+            .withColumn("tlen", F.length("term").cast("int")),
+            "term_stats",
+            sort_by=["term"],
+        )
+    after("term_stats")
+
+    if not done("field_stats"):
+        uniq = cat.row_count("term_stats")  # parquet footers, no job
+        cat.write(
+            spark.createDataFrame(
+                [(text_col, num_docs, sum_dl, avgdl, uniq)],
+                "field string, num_docs long, sum_dl long, avgdl double, uniq_terms long",
+            ),
+            "field_stats",
+        )
+    after("field_stats")
+    return segs
+
+
+@contextmanager
+def _clamped_splits(spark, cat: IndexCatalog, name: str):
+    """Lower spark.sql.files.maxPartitionBytes so a scan of table `name`
+    yields >= ~defaultParallelism splits; restore on exit. Must stay OPEN
+    across the action that scans the table — split planning reads the
+    conf lazily at execution time."""
+    path = cat.table_path(name)
+    total = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    key = "spark.sql.files.maxPartitionBytes"
+    default = spark.conf.get(key)
+    default_bytes = int(default[:-1]) if default.endswith("b") else int(default)
+    target = max(min(total // par or 1, default_bytes), 1 << 22)
+    if target >= default_bytes:
+        yield
+        return
+    spark.conf.set(key, str(target))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, default)
 
 
 # ---------------------------------------------------------------------- #
@@ -834,7 +846,6 @@ def build_index(
     index_dir: str,
     analyzer: Analyzer | None = None,
     *,
-    materialize_forward: bool = True,
     store_term_vectors: bool = False,
     **kwargs,
 ) -> IndexCatalog:
@@ -848,7 +859,6 @@ def build_index(
     build_kwargs = {k: v for k, v in kwargs.items() if k not in field_names}
     return IndexBuilder(
         analyzer=analyzer or STANDARD_ANALYZER,
-        materialize_forward=materialize_forward,
         store_term_vectors=store_term_vectors,
         **builder_kwargs,
     ).build(spark_df, index_dir, **build_kwargs)

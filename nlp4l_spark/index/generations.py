@@ -1,8 +1,9 @@
 """GenerationLog: log-structured incremental ingestion at scale.
 
-The scale-correct alternative to ``append_to_index`` (which re-merges
-the FULL postings table every micro-batch — amortized O(corpus) per
-append, Lucene's forceMerge(1)-per-commit anti-pattern): each ingested
+The one incremental ingest path. Rewriting one index in place per
+micro-batch would re-merge the FULL postings table every time —
+amortized O(corpus) per batch, Lucene's forceMerge(1)-per-commit
+anti-pattern. Instead each ingested
 micro-batch becomes a whole new index *generation* (its own directory,
 docIDs local from 0), queries federate over the live generations with
 exact blended stats (``MultiSearcher`` — rank+score identical to one
@@ -170,8 +171,6 @@ class GenerationLog:
         df: DataFrame,
         *,
         analyzer: Analyzer | None = None,
-        micro: bool = True,
-        micro_max_rows: int = 64_000,
         **build_kwargs,
     ) -> str:
         """Build one new generation from a micro-batch and adopt it.
@@ -180,12 +179,11 @@ class GenerationLog:
         Overwrites an orphan directory left by a crash mid-ingest (it
         was never adopted, so its contents are garbage).
 
-        Batches up to ``micro_max_rows`` rows take the driver-side
+        Batches up to ``microbuild.MAX_ROWS`` rows take the driver-side
         single-Spark-job fast path (index/microbuild.py — the Lucene
-        in-memory segment flush; same tables, same bytes, ~4x the
-        append throughput); bigger batches, or builds with options the
-        micro path doesn't carry, use the distributed builder. Set
-        ``micro=False`` to force the distributed path."""
+        in-memory segment flush; same tables, same bytes); bigger
+        batches, or builds with options the micro path doesn't carry,
+        use the distributed builder."""
         self._reclaim()
         man = self._load()
         name = f"gen_{man['next_id']:06d}"
@@ -193,16 +191,10 @@ class GenerationLog:
         if os.path.exists(gen_dir):  # unadopted orphan from a crash
             shutil.rmtree(gen_dir)
         built = None
-        if micro and set(build_kwargs) <= self._MICRO_KWARGS:
+        if set(build_kwargs) <= self._MICRO_KWARGS:
             from nlp4l_spark.index.microbuild import try_micro_build
 
-            built = try_micro_build(
-                df,
-                gen_dir,
-                analyzer,
-                max_rows=micro_max_rows,
-                **build_kwargs,
-            )
+            built = try_micro_build(df, gen_dir, analyzer, **build_kwargs)
             if built is None and os.path.exists(gen_dir):
                 shutil.rmtree(gen_dir)  # partial micro attempt: rebuild
         if built is None:

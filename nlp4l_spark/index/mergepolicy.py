@@ -10,15 +10,18 @@ amortized-linear. forceMerge(1) is the degenerate "one tier" case the
 reference exposes; this module adds the general policy.
 
 Rebuild shape: a *generation* here is a whole built index directory
-(one `append`/micro-batch each — the builder's flush unit). Query-time
-federation over generations is `MultiSearcher` (exact blended-stats
-BM25, rank+score identical to one big index — tests/test_multisearcher).
-`TieredMergePolicy.find_merges` decides which generations to compact;
+(one ``GenerationLog.ingest`` micro-batch each — the builder's flush
+unit). Query-time federation over generations is `MultiSearcher` (exact
+blended-stats BM25, rank+score identical to one big index —
+tests/test_multisearcher). `TieredMergePolicy.find_merges` decides which
+generations to compact, and `GenerationLog.maintain` runs the rounds;
 `compact` rebuilds one merged index FROM THE RETAINED FORWARD INDEXES
-(doc_terms_fwd), so compaction never re-tokenizes: it is one
-segment-encode pass + the standard (term, shard) segment merge — the
-same two stages, and the same economics, as Lucene's segment merge
-(decode postings, interleave, re-encode; no analysis).
+(doc_terms_fwd), so compaction never re-tokenizes: it runs the
+builder's own stages from the forward index on (``write_searchable``:
+one segment-encode pass + the standard (term, shard) segment merge) —
+the same economics as Lucene's segment merge (decode postings,
+interleave, re-encode; no analysis), through the same path a build
+takes.
 
 Deviation from Lucene, documented: Lucene scores candidate merge
 windows by skew/size/reclaim and searches over a sorted-by-size view;
@@ -44,13 +47,7 @@ import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from nlp4l_spark.index import codec
-from nlp4l_spark.index.builder import (
-    POS_POSTINGS_SCHEMA,
-    POSTINGS_SCHEMA,
-    SEGMENT_SCHEMA,
-    _segment_builder,
-    _segment_merger,
-)
+from nlp4l_spark.index.builder import POS_POSTINGS_SCHEMA, write_searchable
 from nlp4l_spark.index.catalog import IndexCatalog
 
 
@@ -137,7 +134,7 @@ def index_size_bytes(index_dir: str) -> int:
     return total
 
 
-def _rebase_pos_rows(base: int, docs_per_shard: int):
+def _rebase_pos_rows(base: int, docs_per_shard: int, deleted: set[int]):
     """mapInPandas fn over ONE generation's pos_postings: shift docIDs by
     the generation's docBase and recompute shard ownership, splitting the
     (rare) row whose rebased doc range crosses a shard boundary.
@@ -148,19 +145,11 @@ def _rebase_pos_rows(base: int, docs_per_shard: int):
     buffers are byte-identical and pass through untouched; only the
     docID buffer re-encodes (its first gap carries the absolute docID).
     Rows here are (term, shard, pid) segments — vocab-sized, not
-    corpus-sized — and the work per row is one varbyte decode/encode."""
-
+    corpus-sized — and the work per row is one varbyte decode/encode.
+    Rows touching a tombstoned (generation-local) docID in ``deleted``
+    take the decode path and drop that doc's postings — Lucene's
+    merge-expunges-deletions contract."""
     cols = [f.name for f in POS_POSTINGS_SCHEMA.fields]
-    return _rebase_pos_rows_masked(base, docs_per_shard, None, cols)
-
-
-def _rebase_pos_rows_masked(
-    base: int, docs_per_shard: int, deleted, cols=None
-):
-    """_rebase_pos_rows plus a live-docs mask: rows touching a
-    tombstoned (generation-local) docID take the decode path and drop
-    that doc's postings — Lucene's merge-expunges-deletions contract."""
-    cols = cols or [f.name for f in POS_POSTINGS_SCHEMA.fields]
     dels = (
         np.asarray(sorted(deleted), dtype=np.int64)
         if deleted
@@ -242,11 +231,13 @@ def compact(
     DocIDs are rebased by each generation's docBase (cumulative
     num_docs in list order — the MultiSearcher/MultiReader numbering),
     so `Searcher(compacted)` is rank-, score- AND docID-identical to
-    `MultiSearcher(index_dirs)` (tested). No re-tokenization: stored,
-    doc_terms_fwd and doc_lens are rebased unions; postings are rebuilt
-    from the forward index via the standard segment-encode +
-    (term, shard)-merge stages. Requires the generations to have been
-    built with materialize_forward=True (the default). Position shards
+    `MultiSearcher(index_dirs)` (tested). No re-tokenization: stored
+    and doc_terms_fwd are rebased unions, and the builder's own stages
+    (``builder.write_searchable``: doc_lens, segments, postings,
+    term_stats, field_stats) run over the merged forward index, so a
+    compacted index is table-identical to one build over the same docs
+    (tested). Every generation needs a committed doc_terms_fwd (every
+    build writes one). Position shards
     (pos_postings) and term_vectors carry over WITHOUT re-analysis when
     every input generation has them: positions are doc-relative, so the
     rebase touches only docID gaps (see _rebase_pos_rows); term_vectors
@@ -263,8 +254,7 @@ def compact(
     for c, d in zip(cats, index_dirs):
         if not c.is_committed("doc_terms_fwd"):
             raise ValueError(
-                f"compact needs a committed doc_terms_fwd in {d} "
-                "(build with materialize_forward=True)"
+                f"compact needs a committed doc_terms_fwd in {d}"
             )
     # live-docs per generation: compaction EXPUNGES tombstoned docs
     # (Lucene merges drop deletions and recompute stats — the
@@ -334,43 +324,9 @@ def compact(
         )
         fwd = f_ if fwd is None else fwd.unionByName(f_)
     out.write(fwd, "doc_terms_fwd", sort_by=["doc_id"])
-    fwd_c = out.read(spark, "doc_terms_fwd")
-    out.write(
-        fwd_c.select("doc_id", "dl"),
-        "doc_lens",
-        sort_by=["doc_id"],
-        counters={"num_docs": num_docs, "sum_dl": sum_dl},
-    )
-
-    segs = fwd_c.sortWithinPartitions("doc_id").mapInPandas(
-        _segment_builder(docs_per_shard), SEGMENT_SCHEMA
-    )
-    out.write(segs, "segments")
-
-    avgdl = sum_dl / num_docs if num_docs else 0.0
-    merged = (
-        out.read(spark, "segments")
-        .repartition(spark.sparkContext.defaultParallelism, "term", "shard")
-        .sortWithinPartitions("term", "shard", "min_doc")
-        .mapInPandas(_segment_merger(avgdl), POSTINGS_SCHEMA)
-    )
-    out.write(merged, "postings", sort_by=["term"])
-    postings = out.read(spark, "postings")
-    out.write(
-        postings.groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("tlen", F.length("term").cast("int")),
-        "term_stats",
-        sort_by=["term"],
-    )
-    uniq = out.row_count("term_stats")
-    out.write(
-        spark.createDataFrame(
-            [(text_col, num_docs, sum_dl, avgdl, uniq)],
-            "field string, num_docs long, sum_dl long, avgdl double, "
-            "uniq_terms long",
-        ),
-        "field_stats",
+    write_searchable(
+        spark, out, num_docs, sum_dl,
+        text_col=text_col, docs_per_shard=docs_per_shard,
     )
 
     if all(c.is_committed("pos_postings") for c in cats):
@@ -379,7 +335,7 @@ def compact(
             p = (
                 c.read(spark, "pos_postings")
                 .mapInPandas(
-                    _rebase_pos_rows_masked(b, docs_per_shard, t),
+                    _rebase_pos_rows(b, docs_per_shard, t),
                     POS_POSTINGS_SCHEMA,
                 )
             )
@@ -395,31 +351,3 @@ def compact(
             tv = t_ if tv is None else tv.unionByName(t_)
         out.write(tv, "term_vectors", sort_by=["doc_id"])
     return out
-
-
-def maintain(
-    spark: SparkSession,
-    index_dirs: list[str],
-    out_parent: str,
-    policy: TieredMergePolicy | None = None,
-    *,
-    docs_per_shard: int = 1 << 24,
-) -> list[str]:
-    """One maintenance round: measure generation sizes, ask the policy,
-    compact each selected group into a fresh generation under
-    out_parent, and return the new live generation list (surviving
-    dirs in their original order, then merged dirs). Idempotent per
-    round; callers own deleting the consumed input dirs after the
-    returned list is adopted (two-phase swap, like Lucene's commit
-    then-delete segment files)."""
-    policy = policy or TieredMergePolicy()
-    sizes = {d: index_size_bytes(d) for d in index_dirs}
-    merges = policy.find_merges(sizes)
-    merged_members = {d for g in merges for d in g}
-    result = [d for d in index_dirs if d not in merged_members]
-    for i, group in enumerate(merges):
-        ordered = [d for d in index_dirs if d in group]
-        out_dir = os.path.join(out_parent, f"merged_{i:03d}")
-        compact(spark, ordered, out_dir, docs_per_shard=docs_per_shard)
-        result.append(out_dir)
-    return result

@@ -12,8 +12,8 @@ table directly with pyarrow, bit-compatible with a distributed build of
 the same batch (same docID rank order, same codec bytes, same manifest
 layout — federation identity tests cover the mix).
 
-Scale note: this path is gated to batches ≤ ``max_rows`` (default 64k);
-anything larger falls back to the distributed builder. The cap is a
+Scale note: this path is gated to batches ≤ ``MAX_ROWS`` rows; anything
+larger falls back to the distributed builder. The cap is a
 driver-residency bound in the plans/caps.py sense — the micro-batch is
 small BY DESIGN (a streaming trigger interval's worth of turns), while
 generation compaction and full rebuilds stay distributed.
@@ -39,6 +39,10 @@ from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import bm25_impact
 from nlp4l_spark.index.builder import POSTINGS_SCHEMA, SEGMENT_SCHEMA
 from nlp4l_spark.index.catalog import MANIFEST, IndexCatalog
+
+# Rows one micro-batch may hold (the driver-residency cap); a bigger
+# batch falls back to the distributed builder.
+MAX_ROWS = 64_000
 
 _PA_BLOCK_MAX = pa.list_(
     pa.struct(
@@ -309,10 +313,9 @@ def try_micro_build(
     sort_desc: tuple[bool, ...] | None = None,
     docs_per_shard: int = 1 << 24,
     text_col: str = "text",
-    max_rows: int = 64_000,
 ) -> IndexCatalog | None:
     """Build a complete index generation on the driver, or return None
-    when the batch is too big (> ``max_rows``) or a sort key holds NULLs
+    when the batch is too big (> ``MAX_ROWS``) or a sort key holds NULLs
     — the caller then falls back to the distributed builder. One Spark
     job total: the limited Arrow collect."""
     analyzer = analyzer or STANDARD_ANALYZER
@@ -324,8 +327,8 @@ def try_micro_build(
     # the UDF on the collect (the A/B: 0.55 s vs 0.91 s per 8k batch;
     # the UDF variant pays Arrow python-worker round trips plus a ~4x
     # larger driver transfer for the exploded term arrays)
-    arrow = df.limit(max_rows + 1).toArrow()
-    if arrow.num_rows > max_rows:
+    arrow = df.limit(MAX_ROWS + 1).toArrow()
+    if arrow.num_rows > MAX_ROWS:
         return None  # not a micro-batch; distributed build
     for c in sort_cols:
         if arrow.column(c).null_count:

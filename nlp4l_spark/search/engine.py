@@ -193,7 +193,26 @@ class Searcher:
         self.cat = IndexCatalog(index_dir)
         self.analyzer = analyzer or STANDARD_ANALYZER
         self.postings_table = postings_table
-        row = self.cat.read_arrow(
+        self._opened: dict[str, str | None] | None = None
+        self._refresh()
+
+    def _refresh(self) -> None:
+        """Point-in-time view: compare the snapshot id of every table
+        behind the collection stats, tombstones and reader (one manifest
+        read each, no Spark job) with those they were loaded from, and
+        reload all three together when one changed — an index rewritten
+        in place (``expunge_deletes``, a ``build`` or ``prune_postings``
+        with ``resume=False``) or new tombstones. Tombstones and reader
+        reload lazily."""
+        cat = self.cat
+        snapshots = {
+            t: cat.manifest(t)["snapshot_id"] if cat.is_committed(t) else None
+            for t in ("field_stats", "tombstones", self.postings_table, "pos_postings")
+        }
+        if snapshots == self._opened:
+            return
+        self._opened = snapshots
+        row = cat.read_arrow(
             "field_stats", ["num_docs", "avgdl", "sum_dl"]
         ).to_pylist()[0]
         self.num_docs = int(row["num_docs"])
@@ -239,8 +258,8 @@ class Searcher:
     def _reader(self) -> IndexReader:
         """The driver-resident reader, opened on the first routed call
         (``method="auto"``) so searchers that never route never pay for
-        it, and reopened when a table it opened got a new snapshot."""
-        if self._reader_cache is None or not self._reader_cache.is_current():
+        it; ``_refresh`` drops it with the stats it was opened under."""
+        if self._reader_cache is None:
             self._reader_cache = IndexReader(
                 self.cat, self.postings_table, self.avgdl, self.deleted_ids
             )
@@ -486,6 +505,7 @@ class Searcher:
         size gate admits the query, else runs the Spark plan (WAND for
         OR, the conjunctive plan for AND); a named method ("wand",
         "maxscore", "dataframe") always runs its Spark plan."""
+        self._refresh()
         if operator == "and":
             return self._search_conjunctive(query, k, method)
         return self._search_batch(
@@ -1013,8 +1033,8 @@ class Searcher:
             ]
         else:
             raise ValueError(
-                "RM3 needs a forward index: build with materialize_forward"
-                "=True (default) or store_term_vectors=True"
+                "RM3 needs a forward index: doc_terms_fwd (every build "
+                "writes it) or term_vectors (store_term_vectors=True)"
             )
         rm1: dict[str, float] = {}
         for doc, pairs, dl in doc_terms:
@@ -3312,6 +3332,7 @@ class Searcher:
         ``wand`` plan; "wand", "maxscore" and "dataframe" name a Spark
         plan.
         """
+        self._refresh()
         return self._search_batch(
             queries, method, ["qid", "rank", "doc_id", "score"]
         )
@@ -3395,6 +3416,7 @@ class Searcher:
           from the opt-in term_vectors table; fine while per-term df is
           modest, but the join sides are df-sized — the reason the
           postings path exists."""
+        self._refresh()
         terms = self.analyzer.tokenize(phrase)
         if not terms:
             return _empty(self.spark, "doc_id long, score double")

@@ -16,11 +16,14 @@ What the reader holds, all read on the driver with pyarrow through
   pruned tier) and ``pos_postings``, read with a pushed ``term in (...)``
   filter that parquet row-group statistics prune on; the row-group term
   ranges and byte sizes come from the parquet footers at open;
-* the snapshot id of each of those tables at open. A table rewritten in
-  place (``append_to_index``, ``stream_into_index``) gets a new snapshot
-  id and loses the part files the datasets list, so the searcher reopens
-  its reader when ``is_current`` turns false;
 * the searcher's collection statistics and tombstones.
+
+The reader is a point-in-time view: ``Searcher`` checks the snapshot ids
+of the tables behind its stats, tombstones and reader at the entry of
+``search``, ``search_batch`` and ``search_phrase``, and reopens all three
+together when one changed. A table rewritten in place (``expunge_deletes``,
+or ``IndexBuilder.build`` / ``prune_postings`` with ``resume=False``)
+gets a new snapshot id and loses the part files the datasets list.
 
 Term statistics are not held: the searcher reads them per call with the
 same pushed filter over ``term_stats``, on every path.
@@ -33,7 +36,7 @@ same code, and WAND-routed OR scores are equal bit for bit.
 
 Size gate: a call is admitted only when the posting row groups its term
 filter selects, summed from the footers' byte sizes, stay under
-``MAX_POSTING_BYTES`` (in the style of microbuild's 64k-row cap).
+``MAX_POSTING_BYTES`` (in the style of microbuild's ``MAX_ROWS`` cap).
 """
 
 from __future__ import annotations
@@ -216,10 +219,6 @@ def phrase_matches(
     )
 
 
-def _snapshot_id(cat: IndexCatalog, name: str) -> str | None:
-    return cat.manifest(name).get("snapshot_id") if cat.is_committed(name) else None
-
-
 def _ranked(doc_ids: np.ndarray, scores: np.ndarray, k: int):
     """Indices of the top k under score DESC, doc_id ASC."""
     return np.lexsort((doc_ids, -scores))[:k]
@@ -274,26 +273,15 @@ class IndexReader:
         avgdl: float,
         deleted: frozenset[int],
     ):
-        self.cat = cat
         self.avgdl = avgdl
         self.dels = (
             np.fromiter(deleted, dtype=np.int64) if deleted else None
         )
-        self.snapshots = {
-            t: _snapshot_id(cat, t) for t in (postings_table, "pos_postings")
-        }
         self.postings = _PostingTable(cat.dataset(postings_table))
         self.pos_postings = (
             _PostingTable(cat.dataset("pos_postings"))
-            if self.snapshots["pos_postings"] is not None
+            if cat.is_committed("pos_postings")
             else None
-        )
-
-    def is_current(self) -> bool:
-        """Whether every table the reader opened still has the snapshot
-        it opened (one manifest read per table)."""
-        return all(
-            _snapshot_id(self.cat, t) == sid for t, sid in self.snapshots.items()
         )
 
     # ---- gate -------------------------------------------------------- #

@@ -1,10 +1,7 @@
 from nlp4l_spark.streaming.dedup import streaming_dedup_exact
-from nlp4l_spark.streaming.incremental import append_to_index, stream_into_index
 from nlp4l_spark.streaming.sessions import streaming_sessionize
 
 __all__ = [
-    "append_to_index",
-    "stream_into_index",
     "streaming_dedup_exact",
     "streaming_sessionize",
 ]

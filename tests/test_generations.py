@@ -203,23 +203,24 @@ def test_micro_build_matches_distributed_builder(spark, corpus, tmp_path):
     )
 
 
-def test_micro_build_falls_back_and_gates(spark, corpus, tmp_path):
+def test_micro_build_falls_back_and_gates(spark, corpus, tmp_path, monkeypatch):
     """Oversized batches and NULL sort keys fall back to the distributed
     builder (try_micro_build returns None, ingest still succeeds)."""
-    from nlp4l_spark.index.microbuild import try_micro_build
+    from nlp4l_spark.index import microbuild
 
     full, b1, _, _ = corpus
-    assert try_micro_build(b1, str(tmp_path / "x"), max_rows=10) is None
     withnull = b1.withColumn(
         "conv_id",
         F.when(F.col("turn_idx") == 0, F.lit(None)).otherwise(
             F.col("conv_id")
         ),
     )
-    assert try_micro_build(withnull, str(tmp_path / "y")) is None
-    # ingest falls back transparently for an oversized micro cap
+    assert microbuild.try_micro_build(withnull, str(tmp_path / "y")) is None
+    monkeypatch.setattr(microbuild, "MAX_ROWS", 10)
+    assert microbuild.try_micro_build(b1, str(tmp_path / "x")) is None
+    # ingest falls back transparently for a batch over the cap
     log = GenerationLog(str(tmp_path / "log"))
-    log.ingest(b1, micro_max_rows=10)
+    log.ingest(b1)
     n = b1.count()
     s = log.searcher(spark)
     assert s.search("w00001", k=5).count() > 0

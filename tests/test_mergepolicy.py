@@ -8,23 +8,30 @@ Semantics pinned here:
    MultiSearcher(gens) (the query-time federation it replaces) and a
    single index built over the whole corpus — the Lucene invariant that
    merging segments never changes search results.
-3. maintain() round-trips: surviving + merged dirs still cover the
-   corpus exactly.
+3. compact([g0, g1]) writes the same tables as one build over the same
+   docs: both run the builder's one forward-index -> searchable-tables
+   path (builder.write_searchable), the only Spark writer of postings,
+   term_stats and field_stats.
 """
 
 from __future__ import annotations
+
+import ast
+import os
+import pathlib
 
 import pytest
 
 from pyspark.sql import functions as F
 
+import nlp4l_spark
 from nlp4l_spark.data.transcripts import synth_transcripts
 from nlp4l_spark.index import build_index
+from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.index.mergepolicy import (
     TieredMergePolicy,
     compact,
     index_size_bytes,
-    maintain,
 )
 from nlp4l_spark.search import MultiSearcher, Searcher
 
@@ -133,32 +140,73 @@ def test_compact_identical_to_federation_and_single(spark, gens, tmp_path):
     assert got_w == [x[0] for x in _rows(single.search(QUERIES[0], k=10))]
 
 
+# build-only and compaction-only keys of the stored manifest: the index
+# sort a build declares, and the docID holes compaction reserves
+_STORED_ONLY = {"index_sort", "index_sort_desc", "expunged"}
+SHARED_TABLES = (
+    "stored", "doc_terms_fwd", "doc_lens", "postings", "term_stats",
+    "field_stats",
+)
+
+
+def test_compact_matches_single_build(spark, gens, tmp_path):
+    """compact(gens) and one build over the same docs run the same
+    forward-index -> searchable-tables stages, so every table they share
+    is row-identical: same schema, same rows, same manifest counters
+    (segments is per-(term, shard, pid) and legitimately differs with
+    partitioning; _lineage is the builder's own)."""
+    d_full, d = gens
+    out = str(tmp_path / "compacted")
+    comp = compact(spark, d, out)
+    single = IndexCatalog(d_full)
+    assert comp.manifest("stored")["counters"]["expunged"] == 0
+    for t in SHARED_TABLES:
+        a = spark.read.parquet(os.path.join(out, t))
+        b = spark.read.parquet(os.path.join(d_full, t))
+        assert a.schema == b.schema, t
+        key = [c for c in ("doc_id", "term", "shard", "field") if c in a.columns]
+        assert (
+            [tuple(r) for r in a.orderBy(*key).collect()]
+            == [tuple(r) for r in b.orderBy(*key).collect()]
+        ), t
+        ca, cb = (
+            {k: v for k, v in c.manifest(t)["counters"].items()
+             if k not in _STORED_ONLY}
+            for c in (comp, single)
+        )
+        assert ca == cb, t
+    assert not comp.is_committed("_lineage")
+
+
+def test_searchable_tables_have_one_spark_writer():
+    """The doc_lens -> field_stats stages exist once: index/builder.py
+    (write_searchable) is the only Spark ``.write`` of those tables in the
+    package, one call each. Microbuild's pyarrow ``_commit`` and pruning's
+    tier table are other writers by design."""
+    pkg = pathlib.Path(nlp4l_spark.__file__).parent
+    tables = {"doc_lens", "segments", "postings", "term_stats", "field_stats"}
+    writes = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "write"
+            ):
+                writes += [
+                    (path.relative_to(pkg).as_posix(), a.value)
+                    for a in node.args
+                    if isinstance(a, ast.Constant) and a.value in tables
+                ]
+    assert sorted(writes) == [("index/builder.py", t) for t in sorted(tables)]
+
+
 def test_compact_requires_forward_index(spark, tmp_path):
     df = synth_transcripts(spark, 60, num_partitions=2)
     d0 = str(tmp_path / "nofwd")
-    build_index(df, d0, materialize_forward=False)
+    build_index(df, d0).drop("doc_terms_fwd")
     with pytest.raises(ValueError, match="doc_terms_fwd"):
         compact(spark, [d0], str(tmp_path / "out"))
-
-
-def test_maintain_round(spark, gens, tmp_path):
-    _, d = gens
-    # force a merge: generations are far under the floor, so they all
-    # floor-equalize and the 1-per-tier budget demands compaction
-    policy = TieredMergePolicy(
-        segs_per_tier=1.0,
-        max_merge_at_once=2,
-        floor_segment_bytes=1 << 30,
-        max_merged_segment_bytes=1 << 40,
-    )
-    before = _rows(MultiSearcher(spark, d).search(QUERIES[0], k=10))
-    live = maintain(spark, d, str(tmp_path / "maint"), policy)
-    assert len(live) < len(d) + 1  # something was compacted
-    assert any(x.startswith(str(tmp_path / "maint")) for x in live)
-    # the new generation list still answers identically — NOTE: doc ids
-    # are renumbered by federation order, so compare scores only
-    after = _rows(MultiSearcher(spark, live).search(QUERIES[0], k=10))
-    assert [s for _, s in after] == [s for _, s in before]
 
 
 def test_compact_carries_positions_and_vectors(spark, tmp_path):

@@ -5,7 +5,7 @@ Every routed entry point — OR ``search``, ``operator="and"``,
 explicitly named Spark plan and the OracleIndex answer (doc ids exactly,
 scores within 1e-9; WAND-routed OR scores ``==``), on a plain index, with
 tombstones, on a pruned postings tier, on a microbuild-written
-generation and after an in-place append under a live searcher. The gate
+generation and after ``expunge_deletes`` under a live searcher. The gate
 constant set below a query's size must send ``auto`` to the Spark plan
 with identical results, and an admitted routed call must run no Spark
 job at all.
@@ -23,13 +23,12 @@ from nlp4l_spark.analysis.analyzer import TOKEN_PATTERN
 from nlp4l_spark.data import LONDON_BRIDGE_VERSES
 from nlp4l_spark.data.fixtures import transcripts_df
 from nlp4l_spark.data.transcripts import synth_queries, synth_transcripts
-from nlp4l_spark.index import GenerationLog, IndexBuilder, build_index
-from nlp4l_spark.index.deletes import delete_docs
+from nlp4l_spark.index import GenerationLog, IndexBuilder
+from nlp4l_spark.index.deletes import delete_docs, expunge_deletes
 from nlp4l_spark.index.pruning import prune_postings
 from nlp4l_spark.oracle import B, K1, OracleIndex
 from nlp4l_spark.search import Searcher
 from nlp4l_spark.search import reader as reader_mod
-from nlp4l_spark.streaming import append_to_index
 
 K = 10
 STOP = "the and of"
@@ -267,32 +266,39 @@ def test_microbuild_generation(spark, micro_dir):
     )
 
 
-def test_reader_follows_in_place_append(spark, tmp_path):
-    """``append_to_index`` rewrites ``postings`` and ``term_stats`` in
-    place under a live searcher: its next routed call reopens the reader
-    on the new snapshot instead of reading deleted part files, and still
-    answers as the Spark plan does."""
-    first, rest = LONDON_BRIDGE_VERSES[:6], LONDON_BRIDGE_VERSES[6:]
+def test_searcher_follows_expunge_deletes(spark, tmp_path):
+    """``expunge_deletes`` rewrites the index in place under a live
+    searcher: docs renumbered, stats recomputed, tombstones gone. The
+    searcher's next call reloads stats, tombstones and reader as one unit
+    (no Spark job) and then answers on every method exactly as a fresh
+    searcher and the OracleIndex over the surviving docs do."""
     path = str(tmp_path / "idx")
-    build_index(transcripts_df(spark, verses=first), path)
+    IndexBuilder(store_positions=True).build(transcripts_df(spark), path)
+    delete_docs(spark, path, [0, 1, 2])
     s = Searcher(spark, path)
     queries = ["build", "silver gold", "wood clay needles pins"]
-    for q in queries:
+    for q in queries:  # opens the reader on the tombstoned snapshot
         _check_or(s, q, K)
-    opened = s._reader_cache
-    append_to_index(
-        transcripts_df(spark, verses=rest, conv_id="conv-00000001"), path
-    )
-    for q in queries:
-        _check_or(s, q, K)
-        _check_and(s, q, K)
-    _check_batch(s, [(i, q, K) for i, q in enumerate(queries)])
-    assert s._reader_cache is not opened
-    oracle = OracleIndex.build(list(enumerate(LONDON_BRIDGE_VERSES)))
+    assert s.num_docs == 11 and s.deleted_ids == {0, 1, 2}
+    expunge_deletes(spark, path)
+    _, jobs = _jobs(spark, "reader-reopen", lambda: s.search(queries[0]).collect())
+    assert jobs == [], f"the reopening call ran Spark jobs {jobs}"
+    survivors = dict(enumerate(LONDON_BRIDGE_VERSES[3:]))
+    oracle = OracleIndex.build(list(survivors.items()))
     fresh = Searcher(spark, path)
     for q in queries:
-        _check_or(fresh, q, K, oracle.search(q, K))
-        _check_and(fresh, q, K, _oracle_and(oracle, q, K))
+        want = oracle.search(q, K)
+        assert want
+        assert _check_or(s, q, K, want, dataframe=True) == _check_or(fresh, q, K)
+        _check_and(s, q, K, _oracle_and(oracle, q, K))
+    _check_batch(
+        s, [(i, q, K) for i, q in enumerate(queries)],
+        lambda q, k: oracle.search(q, k),
+    )
+    for ph in ("fair lady", "wash away", "stone so strong"):
+        assert _check_phrase(s, ph, K, _oracle_phrase(oracle, survivors, ph, K))
+    assert s.num_docs == fresh.num_docs == len(survivors)
+    assert s.deleted_ids == frozenset()
 
 
 # --------------------------------------------------------------------- #
