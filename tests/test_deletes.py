@@ -5,6 +5,8 @@ untouched (identical plans/results)."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -40,14 +42,22 @@ def _tx(spark):
     )
 
 
-@pytest.fixture()
-def idx(spark, tmp_path):
-    d = str(tmp_path / "idx")
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("deletes") / "idx")
     IndexBuilder(
         sort_cols=("conv_id", "turn_idx"),
         store_term_vectors=True,
         store_positions=True,
     ).build(_tx(spark), d)
+    return d
+
+
+@pytest.fixture()
+def idx(built, tmp_path):
+    """A private copy of the module's index: the tests delete from it."""
+    d = str(tmp_path / "idx")
+    shutil.copytree(built, d)
     return d
 
 

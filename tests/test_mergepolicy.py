@@ -112,6 +112,14 @@ def gens(spark, tmp_path_factory):
     return d_full, d
 
 
+@pytest.fixture(scope="module")
+def compacted(spark, gens, tmp_path_factory):
+    """compact(gens), written once for the tests that read it."""
+    _, d = gens
+    out = str(tmp_path_factory.mktemp("mergepol_compacted") / "out")
+    return out, compact(spark, d, out)
+
+
 def _rows(df):
     return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
 
@@ -119,10 +127,9 @@ def _rows(df):
 QUERIES = ("w00001 w00454", "w00002", "w00010 w00020 w00030")
 
 
-def test_compact_identical_to_federation_and_single(spark, gens, tmp_path):
+def test_compact_identical_to_federation_and_single(spark, gens, compacted):
     d_full, d = gens
-    out = str(tmp_path / "compacted")
-    cat = compact(spark, d, out)
+    out, cat = compacted
     # collection stats are exact unions
     fs = cat.read(spark, "field_stats").collect()[0]
     single = Searcher(spark, d_full)
@@ -149,15 +156,14 @@ SHARED_TABLES = (
 )
 
 
-def test_compact_matches_single_build(spark, gens, tmp_path):
+def test_compact_matches_single_build(spark, gens, compacted):
     """compact(gens) and one build over the same docs run the same
     forward-index -> searchable-tables stages, so every table they share
     is row-identical: same schema, same rows, same manifest counters
     (segments is per-(term, shard, pid) and legitimately differs with
     partitioning; _lineage is the builder's own)."""
-    d_full, d = gens
-    out = str(tmp_path / "compacted")
-    comp = compact(spark, d, out)
+    d_full, _ = gens
+    out, comp = compacted
     single = IndexCatalog(d_full)
     assert comp.manifest("stored")["counters"]["expunged"] == 0
     for t in SHARED_TABLES:

@@ -19,6 +19,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def idx800(spark, tmp_path_factory):
+    """An 800-turn synthetic index, built once for the read-only plan
+    checks below."""
+    from nlp4l_spark.data.transcripts import synth_transcripts
+    from nlp4l_spark.index import build_index
+
+    idx = str(tmp_path_factory.mktemp("plans") / "idx")
+    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
+    return idx
+
+
 # Queries whose hot path must be 100% JVM (no row/Arrow Python eval).
 # (dedup_simhash deliberately left out: its fingerprints moved to an Arrow
 # pass — bit-identical to the 64-sum groupBy form — for ~3x; the pairs
@@ -316,14 +328,10 @@ def test_sq_indexed_probe_prunes_columns_and_pushes_rerank_ids(spark):
     )
 
 
-def test_fuzzy_length_window_pushed_to_term_dictionary(spark, tmp_path):
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
+def test_fuzzy_length_window_pushed_to_term_dictionary(spark, idx800):
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(s._fuzzy_expansion("w00454", max_edits=2))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     # the Levenshtein length bound must reach the parquet reader as a
@@ -506,18 +514,14 @@ def test_textrank_plan(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_wildcard_expands_via_dictionary(spark, tmp_path):
+def test_wildcard_expands_via_dictionary(spark, idx800):
     """WildcardQuery must rewrite against the vocab-sized term dictionary
     (literal prefix pushed as a startswith range on term_stats) and reach
     the postings reader as a pushed In(term) — never an rlike scan of the
     postings table."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(s.search_wildcard("w004?4", k=5))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("In(term" in ln for ln in pushed), pushed
@@ -543,17 +547,13 @@ def test_wildcard_expands_via_dictionary(spark, tmp_path):
         s.search_wildcard("*", k=3, max_expansions=10)
 
 
-def test_regexp_expands_via_dictionary(spark, tmp_path):
+def test_regexp_expands_via_dictionary(spark, idx800):
     """RegexpQuery must rewrite against the vocab-sized term dictionary
     (literal prefix pushed as a startswith range) and reach the postings
     reader as a pushed In(term) — never an rlike scan of the postings."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(s.search_regexp("w004.4", k=5))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("In(term" in ln for ln in pushed), pushed
@@ -564,17 +564,13 @@ def test_regexp_expands_via_dictionary(spark, tmp_path):
     assert rx == wc
 
 
-def test_function_score_plan(spark, tmp_path):
+def test_function_score_plan(spark, idx800):
     """FunctionScoreQuery: query terms must reach the postings reader as
     a pushed In(term); the stored-table boost scan must be column-pruned
     to (doc_id, ts) — never the full stored row."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(s.search_function_score("w00001 w00454", k=5))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("In(term" in ln for ln in pushed), pushed
@@ -600,17 +596,13 @@ def test_chat_validate_single_hash_shuffle(spark):
     assert "collect_list" not in plan
 
 
-def test_collapse_plan(spark, tmp_path):
+def test_collapse_plan(spark, idx800):
     """Field collapse: query terms pushed as In(term) to the postings
     reader; the stored group-key scan pruned to (doc_id, conv_id); the
     group-head window partitions by the group key (no global window)."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(s.search_collapse("w00001 w00454", k=5))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("In(term" in ln for ln in pushed), pushed
@@ -643,17 +635,13 @@ def test_rescore_window_is_docid_pruned(spark, tmp_path):
     assert any("In(doc_id" in ln for ln in pushed), pushed
 
 
-def test_tree_leaves_are_term_pruned(spark, tmp_path):
+def test_tree_leaves_are_term_pruned(spark, idx800):
     """Nested boolean trees: every term leaf must reach the postings
     reader as a pushed In(term) scan; the combination operators are
     joins over those pruned frames — no unfiltered postings scan."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(
         s.search_tree(
             {"and": [{"term": "w00001"}, {"or": [{"term": "w00454"}, {"term": "w00100"}]}]},
@@ -674,17 +662,13 @@ def test_shuffle_export_is_takeordered(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_browse_terms_seek_is_pushed(spark, tmp_path):
+def test_browse_terms_seek_is_pushed(spark, idx800):
     """Term-dictionary paging: the seekCeil bound must reach the
     term_stats parquet scan as a pushed GreaterThanOrEqual — the page
     read skips every file before the seek point via min/max stats."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     plan = _plan(s.browse_terms(seek="w0001", n=10))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert any("GreaterThanOrEqual(term" in ln for ln in pushed), pushed
@@ -719,17 +703,13 @@ def test_phrase_prefix_expansion_is_pushed(spark, tmp_path):
     assert s.search_phrase_prefix("w00001 w0", k=3).count() >= 0
 
 
-def test_similarity_family_term_pushdown(spark, tmp_path):
+def test_similarity_family_term_pushdown(spark, idx800):
     """The IB/DFI (and by shared plumbing the whole DataFrame-similarity
     family) postings scan must carry a pushed In(term) filter — work is
     ∝ query postings, never the corpus."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     for df in (s.search_ib("w00001 w00002"), s.search_dfi("w00001 w00002")):
         plan = _plan(df)
         pushed = [
@@ -863,17 +843,13 @@ def test_match_bool_prefix_pushdowns(spark, tmp_path):
     ), cpushed
 
 
-def test_pl2_dph_term_pushdown(spark, tmp_path):
+def test_pl2_dph_term_pushdown(spark, idx800):
     """PL2/DPH join the similarity family's contract: the postings scan
     carries a pushed In(term) filter and no Python eval nodes — work is
     ∝ query postings."""
-    from nlp4l_spark.data.transcripts import synth_transcripts
-    from nlp4l_spark.index import build_index
     from nlp4l_spark.search import Searcher
 
-    idx = str(tmp_path / "idx")
-    build_index(synth_transcripts(spark, 800, num_partitions=4), idx)
-    s = Searcher(spark, idx)
+    s = Searcher(spark, idx800)
     for df in (s.search_pl2("w00001 w00002"), s.search_dph("w00001 w00002")):
         plan = _plan(df)
         pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]

@@ -301,6 +301,30 @@ def test_searcher_follows_expunge_deletes(spark, tmp_path):
     assert s.deleted_ids == frozenset()
 
 
+def test_searcher_follows_new_tombstones(spark, idx, oracle, tmp_path):
+    """``delete_docs`` under a live searcher that already loaded its
+    tombstones and opened its reader: the next call sees the new
+    tombstones (no Spark job), with collection stats still frozen, and
+    answers as the oracle with the deleted ids filtered out."""
+    path = str(tmp_path / "idx")
+    shutil.copytree(idx, path)
+    s = Searcher(spark, path)
+    for q in OR_QUERIES[:3]:  # opens the reader with no tombstones
+        _check_or(s, q, K, oracle.search(q, K))
+    assert s.deleted_ids == frozenset()
+    num_docs, avgdl = s.num_docs, s.avgdl
+    delete_docs(spark, path, DELETED)
+    dead = frozenset(DELETED)
+    _, jobs = _jobs(spark, "tombstones-reload", lambda: s.search(OR_QUERIES[0]).collect())
+    assert jobs == [], f"the reloading call ran Spark jobs {jobs}"
+    assert s.deleted_ids == dead
+    assert (s.num_docs, s.avgdl) == (num_docs, avgdl)
+    for q in OR_QUERIES:
+        _check_or(s, q, K, _live(oracle.search(q, K + len(dead)), dead, K))
+    for q in AND_QUERIES[:3]:
+        _check_and(s, q, K, _oracle_and(oracle, q, K, dead))
+
+
 # --------------------------------------------------------------------- #
 def _routed_calls(s, phrase):
     """Every routed entry point, each as (name, thunk returning rows)."""
