@@ -81,8 +81,9 @@ BENCH_QUERIES = [
     "phrase_bm25_topk",
     "fuzzy_bm25_topk",
     "index_bm25_topk",
-    # pays the pos_postings stage on the index index_bm25_topk just
-    # built, then phrase-searches it with the no-join shard task
+    # rebuilds the index index_bm25_topk just built from its forward
+    # index on, with positions in the postings, then phrase-searches it
+    # with the no-join shard task
     "index_phrase_topk",
     "tfidf_weights",
     "dedup_exact",

@@ -549,17 +549,22 @@ class Analyzer:
 
         return _tv
 
-    def term_counts_schema(self) -> T.StructType:
-        return T.StructType(
-            [
-                T.StructField("terms", T.ArrayType(T.StringType())),
-                T.StructField("tfs", T.ArrayType(T.IntegerType())),
-                T.StructField("dl", T.IntegerType()),
-            ]
-        )
+    def term_counts_schema(self, positions: bool = False) -> T.StructType:
+        fields = [
+            T.StructField("terms", T.ArrayType(T.StringType())),
+            T.StructField("tfs", T.ArrayType(T.IntegerType())),
+            T.StructField("dl", T.IntegerType()),
+        ]
+        if positions:
+            fields.append(
+                T.StructField("positions", T.ArrayType(T.IntegerType()))
+            )
+        return T.StructType(fields)
 
-    def term_counts_udf(self):
-        """pandas UDF string -> struct(terms array, tfs array, dl int).
+    def term_counts_udf(self, positions: bool = False):
+        """pandas UDF string -> struct(terms array, tfs array, dl int),
+        plus the flat ``positions`` array when ``positions`` is set (see
+        ``term_positions_frame``).
 
         One Arrow pass produces the per-doc term-frequency map AND the doc
         length, so downstream ``explode(arrays_zip(terms, tfs))`` is narrow
@@ -567,12 +572,50 @@ class Analyzer:
         vectors for the same data, Terms.scala:118-138).
         """
         analyzer = self
+        frame = (
+            analyzer.term_positions_frame
+            if positions
+            else analyzer.term_counts_frame
+        )
 
-        @F.pandas_udf(self.term_counts_schema())
+        @F.pandas_udf(self.term_counts_schema(positions))
         def _counts(texts: pd.Series) -> pd.DataFrame:
-            return analyzer.term_counts_frame(texts)
+            return frame(texts)
 
         return _counts
+
+    def _doc_len(self, text, n_tokens: int) -> int:
+        """BM25 dl of a doc whose analyzed stream holds ``n_tokens``
+        tokens. discountOverlaps: dl counts the pre-injection stream, so
+        synonym, shingle and edge-gram tokens never count."""
+        if n_tokens and (self.synonyms or self.shingle_size or self.edge_ngrams):
+            return len(self._base_tokens(text))
+        return n_tokens
+
+    def term_positions_frame(self, texts) -> pd.DataFrame:
+        """``term_counts_frame`` plus each doc's positions, from ONE
+        ``token_stream`` pass: terms, tfs and dl equal
+        ``term_counts_frame``'s (``token_stream`` yields ``tokenize``'s
+        token sequence), and ``positions`` is flat and term-major — term
+        i's tfs[i] positions, ascending, follow term i-1's."""
+        terms_out: list[list[str]] = []
+        tfs_out: list[list[int]] = []
+        dls: list[int] = []
+        pos_out: list[list[int]] = []
+        for t in texts:
+            acc: dict[str, list[int]] = {}
+            for term, pos, _s, _e in self.token_stream(t):
+                acc.setdefault(term, []).append(pos)
+            tfs = [len(v) for v in acc.values()]
+            terms_out.append(list(acc))
+            tfs_out.append(tfs)
+            dls.append(self._doc_len(t, sum(tfs)))
+            # sorted: with shingles and edge grams one term can come from
+            # a shingle after it came from a later unigram
+            pos_out.append([p for v in acc.values() for p in sorted(v)])
+        return pd.DataFrame(
+            {"terms": terms_out, "tfs": tfs_out, "dl": dls, "positions": pos_out}
+        )
 
     def term_counts_frame(self, texts) -> pd.DataFrame:
         """The term_counts_udf body as a plain pandas function — shared
@@ -593,12 +636,7 @@ class Analyzer:
                 counts[x] = counts.get(x, 0) + 1
             terms_out.append(list(counts.keys()))
             tfs_out.append(list(counts.values()))
-            # discountOverlaps: dl counts the pre-injection stream
-            dls.append(
-                len(self._base_tokens(t))
-                if (self.synonyms or self.shingle_size or self.edge_ngrams)
-                else len(toks)
-            )
+            dls.append(self._doc_len(t, len(toks)))
         return pd.DataFrame({"terms": terms_out, "tfs": tfs_out, "dl": dls})
 
 

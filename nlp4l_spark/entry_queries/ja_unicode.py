@@ -360,7 +360,7 @@ def q_index_highlight(spark, sf_dir):
     term_vectors forward index — stored text never read, corpus never
     re-tokenized; stopword holes stay holes (exactly Lucene's
     offsets-from-postings highlight mode). The term_vectors stage is
-    resume-added to the cached index like pos_postings. Oracle:
+    resume-added to the cached index. Oracle:
     identical window semantics recomputed from raw-stream token
     positions with the analyzer's stop list applied."""
     from nlp4l_spark.index import IndexBuilder
@@ -708,18 +708,19 @@ def q_multi_index_bm25_topk(spark, sf_dir):
 
 def q_index_phrase_topk(spark, sf_dir):
     """The phrase SCALE path, driver-verified: positions ride inside the
-    posting shards (store_positions=True adds only the missing
-    pos_postings stage to the cached index via resume), the adjacency
-    check runs in a per-shard Arrow task — no corpus-sized join
-    (tests/test_plans.py guards the plan). Same oracle as the corpus
+    postings (a store_positions build over the cached index re-runs the
+    stages from the forward index on, with positions, keeping stored),
+    the adjacency check runs in a per-shard Arrow task — no corpus-sized
+    join (tests/test_plans.py guards the plan). Same oracle as the corpus
     path: the two are rank- and score-identical."""
     from nlp4l_spark.index import IndexBuilder
+    from nlp4l_spark.index.builder import has_positions
     from nlp4l_spark.index.catalog import IndexCatalog
     from nlp4l_spark.search import Searcher
 
     idx = _index_cache_dir(sf_dir)
     cat = IndexCatalog(idx)
-    if not cat.is_committed("pos_postings"):
+    if not has_positions(cat):
         IndexBuilder(sort_cols=("doc_id",), store_positions=True).build(
             _docs(spark, sf_dir), idx
         )

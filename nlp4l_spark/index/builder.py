@@ -17,14 +17,19 @@ Stages (each a snapshot-committed table; resume skips committed stages):
                  vectors analogue, written by the Arrow tokenize UDF; a
                  checkpoint between tokenize and segment building
                  (measured ~2x faster than fusing the two python stages)
-                 and the input compaction rebuilds from
+                 and the input compaction rebuilds from. With
+                 ``store_positions`` the same UDF pass also writes
+                 ``positions[]``: flat, term-major, term i's run of tfs[i]
   doc_lens       (doc_id, dl) — a projection of the forward index
   segments       per-input-partition, per-doc_id-shard encoded posting
                  segments — this IS the salted two-phase aggregation: the
                  per-posting explosion never crosses the network; only
                  compressed segments shuffle, keyed (term, shard)
   postings       merged, globally doc_id-sorted, varbyte posting lists with
-                 per-block (last_doc, max_impact) skip metadata
+                 per-block (last_doc, max_impact) skip metadata; with
+                 positions, a ``pos_enc`` column holds each posting's
+                 run of tf positions (codec.encode_positions), carried
+                 from the forward index by the same segment build/merge
   term_stats     (term, df, cf) — the term dictionary (FST analogue)
   field_stats    (field, num_docs, sum_dl, avgdl, uniq_terms)
   _lineage       per-stage / per-partition counters (turns tokenized,
@@ -108,6 +113,21 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
+def _with_positions(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the optional ``pos_enc`` column: each posting's
+    run of tf positions, gap-reset per posting (codec.encode_positions),
+    so rows of disjoint doc ranges concatenate."""
+    return T.StructType(
+        schema.fields + [T.StructField("pos_enc", T.BinaryType())]
+    )
+
+
+def has_positions(cat: IndexCatalog) -> bool:
+    """Whether the index's ``postings`` carry positions (the phrase
+    postings path) — the one predicate every reader of them uses."""
+    return cat.is_committed("postings") and "pos_enc" in cat.columns("postings")
+
+
 @dataclass
 class IndexBuilder:
     """Builds the inverted index for one text field of a transcripts table."""
@@ -128,13 +148,14 @@ class IndexBuilder:
     # table (doc_id, term, tf, positions, start_offsets, end_offsets) is
     # written alongside the postings.
     store_term_vectors: bool = False
-    # opt-in positions IN the posting shards (pos_postings table): the
-    # phrase scale path. search_phrase joins per-term position lists from
+    # opt-in positions IN the postings (their pos_enc column): the phrase
+    # scale path. search_phrase joins per-term position lists from
     # term_vectors — an n-way corpus-sized join; with positions riding in
-    # (term, shard) segments the adjacency check runs INSIDE the per-shard
-    # task (Searcher._phrase_postings), plan = pushed In(term) scan ->
-    # grouped Arrow task -> TakeOrdered. Lucene stores positions in the
-    # postings the same way (FieldType.termPositions).
+    # the (term, shard) posting rows the adjacency check runs INSIDE the
+    # per-shard task (Searcher._phrase_postings), plan = pushed In(term)
+    # scan -> grouped Arrow task -> TakeOrdered. Lucene stores positions
+    # in the postings the same way (FieldType.termPositions). Positions
+    # come from the one tokenize pass that writes doc_terms_fwd.
     store_positions: bool = False
     # Lucene keyword fields (StringField / ES `keyword` type): each named
     # stored column is ALSO indexed as untokenized terms namespaced
@@ -160,9 +181,20 @@ class IndexBuilder:
     ) -> IndexCatalog:
         spark = df.sparkSession
         cat = IndexCatalog(index_dir)
+        # a positions build that finds a forward index committed without
+        # positions re-runs doc_terms_fwd and every later stage
+        stale = (
+            self.store_positions
+            and cat.is_committed("doc_terms_fwd")
+            and "positions" not in cat.columns("doc_terms_fwd")
+        )
 
         def done(stage: str) -> bool:
-            return resume and cat.is_committed(stage)
+            return (
+                resume
+                and cat.is_committed(stage)
+                and (stage == "stored" or not stale)
+            )
 
         # -- stage 1: docIDs + stored fields --------------------------------
         if not done("stored"):
@@ -237,30 +269,6 @@ class IndexBuilder:
         if self.store_term_vectors:
             self._check_fail(fail_after_stage, "term_vectors")
 
-        # -- optional stage: positions in posting shards (phrase scale path)
-        # Written SEGMENTED (one row per (term, shard, pid), disjoint doc
-        # ranges) and term-sorted: the per-doc gap reset in the positions
-        # codec makes segment rows concatenable at query time, so no merge
-        # shuffle is needed at all — the phrase task just stacks the
-        # pushed-In(term) rows it receives per shard.
-        if self.store_positions and not done("pos_postings"):
-            with _clamped_splits(spark, cat, "stored"):
-                src = cat.read(spark, "stored").select(
-                    "doc_id", F.col(self.text_col).alias("_text")
-                )
-                # ONE python stage: tokenization happens inside the
-                # segment builder (a tokenize-UDF -> mapInPandas chain
-                # relays Arrow batches between two python workers in one
-                # task pipeline — measured ~2x slower on the main build,
-                # see stage 2)
-                segs_p = src.sortWithinPartitions("doc_id").mapInPandas(
-                    _pos_segment_builder(self.docs_per_shard, self.analyzer),
-                    POS_POSTINGS_SCHEMA,
-                )
-                cat.write(segs_p, "pos_postings", sort_by=["term"])
-        if self.store_positions:
-            self._check_fail(fail_after_stage, "pos_postings")
-
         # -- stage 8: lineage ---------------------------------------------------
         if not done("_lineage"):
             per_pid = (
@@ -285,47 +293,44 @@ class IndexBuilder:
         return cat
 
     def _tokenized(self, stored: DataFrame) -> DataFrame:
-        """(doc_id, terms[], tfs[], dl) via the Arrow tokenize UDF; with
-        ``keyword_fields`` the per-doc term list also carries the
-        namespaced keyword terms (tf=1, dl untouched — see the field
-        note), so keyword postings ride the SAME segment build/merge
-        path as text postings with zero extra passes."""
-        tc = self.analyzer.term_counts_udf()
+        """(doc_id, terms[], tfs[], dl[, positions[]]) via the Arrow
+        tokenize UDF; with ``keyword_fields`` the per-doc term list also
+        carries the namespaced keyword terms (tf=1 at position 0, dl
+        untouched — see the field note), so keyword postings ride the
+        SAME segment build/merge path as text postings with zero extra
+        passes."""
+        tc = self.analyzer.term_counts_udf(positions=self.store_positions)
         base = stored.select(
             "doc_id",
             *self.keyword_fields,
             tc(F.col(self.text_col)).alias("_tc"),
         )
-        if not self.keyword_fields:
-            return base.select(
-                "doc_id",
-                F.col("_tc.terms").alias("terms"),
-                F.col("_tc.tfs").alias("tfs"),
-                F.col("_tc.dl").alias("dl"),
+        terms, tfs = F.col("_tc.terms"), F.col("_tc.tfs")
+        positions = F.col("_tc.positions")
+        if self.keyword_fields:
+            kw = F.filter(
+                F.array(
+                    *[
+                        F.when(
+                            F.col(f).isNotNull(),
+                            F.concat(
+                                F.lit(f + ":"), F.lower(F.col(f).cast("string"))
+                            ),
+                        )
+                        for f in self.keyword_fields
+                    ]
+                ),
+                lambda x: x.isNotNull(),
             )
-        kw = F.filter(
-            F.array(
-                *[
-                    F.when(
-                        F.col(f).isNotNull(),
-                        F.concat(
-                            F.lit(f + ":"), F.lower(F.col(f).cast("string"))
-                        ),
-                    )
-                    for f in self.keyword_fields
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        )
-        return base.select(
-            "doc_id",
-            F.concat(F.col("_tc.terms"), kw).alias("terms"),
-            F.concat(
-                F.col("_tc.tfs"),
-                F.transform(kw, lambda _: F.lit(1).cast("int")),
-            ).alias("tfs"),
-            F.col("_tc.dl").alias("dl"),
-        )
+            terms = F.concat(terms, kw)
+            tfs = F.concat(tfs, F.transform(kw, lambda _: F.lit(1).cast("int")))
+            positions = F.concat(
+                positions, F.transform(kw, lambda _: F.lit(0).cast("int"))
+            )
+        cols = [terms.alias("terms"), tfs.alias("tfs"), F.col("_tc.dl").alias("dl")]
+        if self.store_positions:
+            cols.append(positions.alias("positions"))
+        return base.select("doc_id", *cols)
 
     @staticmethod
     def _check_fail(fail_after_stage: str | None, stage: str) -> None:
@@ -352,10 +357,11 @@ def write_searchable(
     (``num_docs``, ``sum_dl``): the builder aggregates them from the
     forward index, compaction sums its inputs' manifests minus the
     tombstoned lengths. ``done(stage)`` skips a committed stage on
-    resume; ``after(stage)`` runs once each stage is committed. Returns
-    the committed ``segments`` table, which the builder's ``_lineage``
-    stage reads too (each read infers the parquet schema with a Spark
-    job)."""
+    resume; ``after(stage)`` runs once each stage is committed. A
+    forward index with a ``positions`` column gives segments and
+    postings a ``pos_enc`` column. Returns the committed ``segments``
+    table, which the builder's ``_lineage`` stage reads too (each read
+    infers the parquet schema with a Spark job)."""
     avgdl = (sum_dl / num_docs) if num_docs else 0.0
     if not (done("doc_lens") and done("segments")):
         # one read for both stages: each read infers the parquet schema
@@ -379,14 +385,19 @@ def write_searchable(
     # doc_id-ranged, so packing stays doc-contiguous and delta gaps stay
     # small). At real scale the clamp is a no-op.
     if not done("segments"):
+        positions = "positions" in fwd.columns
         with _clamped_splits(spark, cat, "doc_terms_fwd"):
             segs = (
                 fwd.sortWithinPartitions("doc_id")
-                .mapInPandas(_segment_builder(docs_per_shard), SEGMENT_SCHEMA)
+                .mapInPandas(
+                    _segment_builder(docs_per_shard, positions),
+                    _with_positions(SEGMENT_SCHEMA) if positions else SEGMENT_SCHEMA,
+                )
             )
             cat.write(segs, "segments")
     after("segments")
     segs = cat.read(spark, "segments")
+    positions = "pos_enc" in segs.columns
 
     # segment merge -> postings. One hash shuffle keyed (term, shard)
     # moves only compressed segments; the merge itself is a run-scan over
@@ -400,7 +411,10 @@ def write_searchable(
         merged = (
             segs.repartition(spark.sparkContext.defaultParallelism, "term", "shard")
             .sortWithinPartitions("term", "shard", "min_doc")
-            .mapInPandas(_segment_merger(avgdl), POSTINGS_SCHEMA)
+            .mapInPandas(
+                _segment_merger(avgdl, positions),
+                _with_positions(POSTINGS_SCHEMA) if positions else POSTINGS_SCHEMA,
+            )
         )
         cat.write(merged, "postings", sort_by=["term"])
     after("postings")
@@ -465,8 +479,33 @@ def _clamped_splits(spark, cat: IndexCatalog, name: str):
 CHUNK_POSTINGS = 4_000_000  # flush threshold: bounds builder task memory
 
 
-def _segment_builder(docs_per_shard: int):
-    """mapInPandas fn: forward-index partition -> encoded posting segments.
+def _run_gather(lens: np.ndarray, order: np.ndarray) -> np.ndarray:
+    """Index that reorders a flat array of per-posting runs (posting i
+    owns ``lens[i]`` consecutive values) into posting order ``order``."""
+    starts = np.cumsum(lens) - lens
+    ol = lens[order]
+    return np.repeat(starts[order] - (np.cumsum(ol) - ol), ol) + np.arange(
+        int(ol.sum()), dtype=np.int64
+    )
+
+
+def _encode_position_runs(p, lens, s_l, e_l) -> list[bytes]:
+    """pos_enc of each output row holding postings [s, e): the
+    codec.encode_positions bytes of their runs (posting i owns ``lens[i]``
+    positions of flat ``p``), from ONE varbyte pass sliced per row."""
+    pstart = np.concatenate(([0], np.cumsum(lens)))
+    gaps = np.empty(p.size, dtype=np.uint64)
+    gaps[1:] = (p[1:] - p[:-1]).astype(np.uint64)
+    firsts = pstart[:-1][lens > 0]
+    gaps[firsts] = (p[firsts] + 1).astype(np.uint64)  # per-posting reset
+    buf, blen = codec.varbyte_encode_with_lengths(gaps)
+    cum = np.concatenate(([0], np.cumsum(blen)))
+    return [buf[cum[pstart[s]] : cum[pstart[e]]] for s, e in zip(s_l, e_l)]
+
+
+def _segment_builder(docs_per_shard: int, positions: bool = False):
+    """mapInPandas fn: forward-index partition -> encoded posting segments
+    (with ``positions``, each posting's positions ride along as pos_enc).
 
     Map-side combine done by hand: the (doc_id, term, tf) explosion stays
     inside this task; only (term, shard)-keyed compressed segments leave.
@@ -476,12 +515,14 @@ def _segment_builder(docs_per_shard: int):
     O(partition), which matters both at scale and on hosts where large
     anonymous allocations trigger compaction stalls."""
 
-    def _encode_chunk(pid, d, l, t, f):
+    def _encode_chunk(pid, d, l, t, f, p):
         shards = d // docs_per_shard
         # group by (term, shard), docs ascending inside each run; factorize
         # + lexsort keeps everything in C
         codes, uniq_terms = pd.factorize(t, sort=False)
         order = np.lexsort((d, shards, codes))
+        if p is not None:
+            p = p[_run_gather(f, order)]
         d, l, f = d[order], l[order], f[order]
         codes, shards = codes[order], shards[order]
         change = np.flatnonzero(
@@ -503,6 +544,11 @@ def _segment_builder(docs_per_shard: int):
         dl_cum = np.concatenate(([0], np.cumsum(dl_len)))
         cf_all = np.add.reduceat(f, starts)
         s_l, e_l = starts.tolist(), ends.tolist()
+        pos = (
+            {"pos_enc": _encode_position_runs(p, f, s_l, e_l)}
+            if p is not None
+            else {}
+        )
         return pd.DataFrame(
             {
                 "term": uniq_terms[codes[starts]],
@@ -521,19 +567,20 @@ def _segment_builder(docs_per_shard: int):
                 "dls_enc": [
                     dl_buf[dl_cum[s] : dl_cum[e]] for s, e in zip(s_l, e_l)
                 ],
+                **pos,
             }
         )
 
     COLS = (
         "term", "shard", "pid", "df", "cf", "min_doc", "max_doc",
         "doc_ids_enc", "tfs_enc", "dls_enc",
-    )
+    ) + (("pos_enc",) if positions else ())
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        doc_parts, dl_parts, term_parts, tf_parts = [], [], [], []
+        doc_parts, dl_parts, term_parts, tf_parts, pos_parts = [], [], [], [], []
         pending = 0
         emitted = False
 
@@ -542,9 +589,10 @@ def _segment_builder(docs_per_shard: int):
             l = np.concatenate(dl_parts)
             t = np.concatenate(term_parts)
             f = np.concatenate(tf_parts)
-            doc_parts.clear(); dl_parts.clear()
-            term_parts.clear(); tf_parts.clear()
-            return _encode_chunk(pid, d, l, t, f)
+            p = np.concatenate(pos_parts) if positions else None
+            for parts in (doc_parts, dl_parts, term_parts, tf_parts, pos_parts):
+                parts.clear()
+            return _encode_chunk(pid, d, l, t, f, p)
 
         for batch in batches:
             if batch.empty:
@@ -566,6 +614,16 @@ def _segment_builder(docs_per_shard: int):
                     [np.asarray(x, dtype=np.int64) for x in batch["tfs"] if len(x)]
                 )
             )
+            if positions:  # row-major, term-major: aligned with tf_parts
+                pos_parts.append(
+                    np.concatenate(
+                        [
+                            np.asarray(x, dtype=np.int64)
+                            for x in batch["positions"]
+                            if len(x)
+                        ]
+                    )
+                )
             pending += int(lens.sum())
             if pending >= CHUNK_POSTINGS:
                 emitted = True
@@ -579,108 +637,12 @@ def _segment_builder(docs_per_shard: int):
     return build
 
 
-POS_POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("shard", T.LongType()),
-        T.StructField("pid", T.IntegerType()),
-        T.StructField("df", T.LongType()),
-        T.StructField("min_doc", T.LongType()),
-        T.StructField("max_doc", T.LongType()),
-        T.StructField("doc_ids_enc", T.BinaryType()),
-        T.StructField("dls_enc", T.BinaryType()),
-        T.StructField("pos_lens_enc", T.BinaryType()),
-        T.StructField("pos_enc", T.BinaryType()),
-    ]
-)
-
-
-def _pos_segment_builder(docs_per_shard: int, analyzer):
-    """mapInPandas fn: (doc_id, _text) partition -> encoded
-    position-carrying posting segments, one row per (term, shard) of the
-    partition. Tokenization (token_stream: full-stream positions with
-    stopword holes, the Lucene StopFilter contract) runs INSIDE this one
-    python stage; dl = Σ per-term position counts = the analyzed token
-    count BM25 uses. Accumulation is flat python lists + one NumPy
-    conversion per partition — no per-row array churn."""
-
-    def build(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        # flat (doc, term) rows for the whole partition; rows arrive
-        # doc-sorted, so per-run doc ids stay ascending
-        docs: list[int] = []
-        terms: list[str] = []
-        plens: list[int] = []
-        flat_pos: list[int] = []
-        row_off: list[int] = []  # start offset of each row's positions
-        dls: list[int] = []
-        for pdf in batches:
-            for doc, text in zip(pdf["doc_id"], pdf["_text"]):
-                acc: dict[str, list[int]] = {}
-                for term, pos, _s, _e in analyzer.token_stream(text):
-                    acc.setdefault(term, []).append(pos)
-                dl = sum(len(v) for v in acc.values())
-                for tm, ps in acc.items():
-                    docs.append(int(doc))
-                    terms.append(tm)
-                    plens.append(len(ps))
-                    row_off.append(len(flat_pos))
-                    flat_pos.extend(ps)
-                    dls.append(dl)
-        if not docs:
-            return
-        d = np.asarray(docs, dtype=np.int64)
-        l = np.asarray(dls, dtype=np.int64)
-        pl = np.asarray(plens, dtype=np.int64)
-        off = np.asarray(row_off, dtype=np.int64)
-        fp = np.asarray(flat_pos, dtype=np.int64)
-        shards = d // docs_per_shard
-        codes, uniq_terms = pd.factorize(pd.Index(terms), sort=False)
-        order = np.lexsort((d, shards, codes))
-        d, l, pl, off = d[order], l[order], pl[order], off[order]
-        codes, shards = codes[order], shards[order]
-        change = np.flatnonzero((np.diff(codes) != 0) | (np.diff(shards) != 0))
-        starts = np.concatenate(([0], change + 1))
-        ends = np.concatenate((change + 1, [codes.size]))
-        # gather reordered positions in ONE fancy-index pass: for each
-        # (reordered) row, its pl values starting at off
-        gather = np.repeat(off, pl) + (
-            np.arange(int(pl.sum()), dtype=np.int64)
-            - np.repeat(np.concatenate(([0], np.cumsum(pl[:-1]))), pl)
-        )
-        fp_sorted = fp[gather]
-        pstarts = np.concatenate(([0], np.cumsum(pl)))
-        rows = []
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            run_d = d[s:e]
-            run_pl = pl[s:e]
-            flat = fp_sorted[pstarts[s] : pstarts[e]]
-            rows.append(
-                {
-                    "term": uniq_terms[codes[s]],
-                    "shard": int(shards[s]),
-                    "pid": pid,
-                    "df": e - s,
-                    "min_doc": int(run_d[0]),
-                    "max_doc": int(run_d[-1]),
-                    "doc_ids_enc": codec.encode_doc_ids(run_d),
-                    "dls_enc": codec.encode_tfs(l[s:e]),
-                    "pos_lens_enc": codec.encode_tfs(run_pl),
-                    "pos_enc": codec.encode_positions(flat, run_pl),
-                }
-            )
-        yield pd.DataFrame(rows)
-
-    return build
-
-
-def _segment_merger(avgdl: float):
+def _segment_merger(avgdl: float, positions: bool = False):
     """mapInPandas fn over a partition hash-keyed by (term, shard) and
     sorted by (term, shard, min_doc): merges each run of same-key segments
     into one globally doc_id-sorted posting row with exact per-block BM25
-    max impacts.
+    max impacts (with ``positions``, the postings' position runs move
+    with them into pos_enc).
 
     impact = bm25_impact(tf, dl, avgdl) (index/bm25.py) — score =
     idf * impact, so block upper bound = idf * max_impact is tight.
@@ -692,22 +654,19 @@ def _segment_merger(avgdl: float):
     across batches is the last (possibly incomplete) run's decoded
     arrays, so memory stays O(batch + one posting list)."""
 
-    COLS = (
-        "term", "shard", "df", "cf", "min_doc", "max_doc",
-        "doc_ids_enc", "tfs_enc", "dls_enc", "block_max",
-    )
-
     def _process(
         terms: np.ndarray,
         shards: np.ndarray,
         d: np.ndarray,
         f: np.ndarray,
         l: np.ndarray,
+        p: np.ndarray | None,
         row_df: np.ndarray,
     ) -> pd.DataFrame:
         """terms/shards per ROW (segments, same-key rows adjacent); d/f/l
-        flat decoded values; row_df = values per row. Emits one output row
-        per (term, shard) run."""
+        flat decoded values; p the flat position runs (f[i] per posting)
+        or None; row_df = values per row. Emits one output row per
+        (term, shard) run."""
         n_rows = terms.size
         # run boundaries over rows
         same = np.zeros(n_rows, dtype=bool)
@@ -718,6 +677,8 @@ def _segment_merger(avgdl: float):
         # flat value -> run id, then ONE lexsort orders every run by doc_id
         run_of_val = np.repeat(run_id_of_row, row_df)
         order = np.lexsort((d, run_of_val))
+        if p is not None:
+            p = p[_run_gather(f, order)]
         d, f, l = d[order], f[order], l[order]
         run_of_val = run_of_val[order]  # still non-decreasing
         vstarts = np.concatenate(
@@ -756,6 +717,11 @@ def _segment_merger(avgdl: float):
             flat[a:b] for a, b in zip(cum[:-1], cum[1:])
         ]
         s_l, e_l = vstarts.tolist(), vends.tolist()
+        pos = (
+            {"pos_enc": _encode_position_runs(p, f, s_l, e_l)}
+            if p is not None
+            else {}
+        )
         return pd.DataFrame(
             {
                 "term": terms[run_starts],
@@ -774,12 +740,13 @@ def _segment_merger(avgdl: float):
                     dl_buf[dl_cum[s] : dl_cum[e]] for s, e in zip(s_l, e_l)
                 ],
                 "block_max": block_lists,
+                **pos,
             }
         )
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # carry: decoded values of the last (term, shard) run of the batch
-        carry: tuple | None = None  # (term, shard, d, f, l)
+        carry: tuple | None = None  # (term, shard, d, f, l, p)
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -797,26 +764,37 @@ def _segment_merger(avgdl: float):
             c = np.cumsum(d_all)
             base = c[vstarts] - d_all[vstarts]
             d_all = c - np.repeat(base, row_df) - 1  # undo gap+1 encoding
+            # position runs reset per posting, so the joined buffers
+            # decode in one pass
+            p_all = (
+                codec.decode_positions(b"".join(pdf["pos_enc"]), f_all)
+                if positions
+                else None
+            )
             if carry is not None:
-                ct, cs, cd, cf_, cl = carry
+                ct, cs, cd, cf_, cl, cp = carry
                 terms = np.concatenate(([ct], terms))
                 shards = np.concatenate(([cs], shards))
                 row_df = np.concatenate(([cd.size], row_df))
                 d_all = np.concatenate((cd, d_all))
                 f_all = np.concatenate((cf_, f_all))
                 l_all = np.concatenate((cl, l_all))
+                if positions:
+                    p_all = np.concatenate((cp, p_all))
                 carry = None
             # hold back the trailing run (may continue in the next batch)
             last_key_rows = (terms == terms[-1]) & (shards == shards[-1])
             # rows are key-sorted, so the trailing same-key rows are a suffix
             n_tail = int(last_key_rows[::-1].cumprod().sum())
             tail_vals = int(row_df[-n_tail:].sum())
+            tail_pos = int(f_all[-tail_vals:].sum()) if positions else 0
             carry = (
                 terms[-1],
                 int(shards[-1]),
                 d_all[-tail_vals:],
                 f_all[-tail_vals:],
                 l_all[-tail_vals:],
+                p_all[p_all.size - tail_pos :] if positions else None,
             )
             if terms.size > n_tail:
                 yield _process(
@@ -825,16 +803,18 @@ def _segment_merger(avgdl: float):
                     d_all[:-tail_vals],
                     f_all[:-tail_vals],
                     l_all[:-tail_vals],
+                    p_all[: p_all.size - tail_pos] if positions else None,
                     row_df[:-n_tail],
                 )
         if carry is not None:
-            ct, cs, cd, cf_, cl = carry
+            ct, cs, cd, cf_, cl, cp = carry
             yield _process(
                 np.array([ct], dtype=object),
                 np.array([cs], dtype=np.int64),
                 cd,
                 cf_,
                 cl,
+                cp,
                 np.array([cd.size], dtype=np.int64),
             )
 

@@ -50,6 +50,11 @@ class IndexCatalog:
         with open(self.manifest_path(name), encoding="utf-8") as fh:
             return json.load(fh)
 
+    def columns(self, name: str) -> list[str]:
+        """Top-level column names of a committed table, from its
+        manifest's schema (no parquet read, no Spark job)."""
+        return [f["name"] for f in self.manifest(name)["schema"]["fields"]]
+
     # ---- IO ----
     def write(
         self,

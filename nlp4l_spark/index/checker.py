@@ -19,6 +19,8 @@ IWriter.scala:56-72); this validates OUR layout's invariants:
     boundary and stored max_impact equals the recomputed BM25 impact max
     (the WAND upper bound MUST dominate every true block score)
   - decoded per-posting dl agrees with the doc_lens table
+  - with positions: each posting's pos_enc run holds tf strictly
+    ascending positions
 
 Scale shape: every check is an aggregate (violation COUNTS cross the
 wire, never row lists); the deep pass is one mapInPandas scan of the
@@ -40,6 +42,7 @@ from pyspark.sql import types as T
 
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import bm25_impact
+from nlp4l_spark.index.builder import has_positions
 from nlp4l_spark.index.catalog import IndexCatalog
 
 _DEEP_SCHEMA = T.StructType(
@@ -252,93 +255,36 @@ def check_index(
             f"rows_with_pos_tf_mismatch={pos_bad}",
         )
 
-    if cat.is_committed("pos_postings"):
-        pp = cat.read(spark, "pos_postings")
-        pp_roll = (
-            pp.groupBy("term")
-            .agg(F.sum("df").alias("_df"))
-            .join(term_stats.select("term", "df"), "term", "full")
-            .filter(
-                (F.col("_df") != F.col("df"))
-                | F.col("_df").isNull()
-                | F.col("df").isNull()
-            )
-            .count()
+    if deep and has_positions(cat):
+
+        def pos_check(batches: Iterator[pd.DataFrame]):
+            for pdf in batches:
+                bads = []
+                for tf_enc, p_enc in zip(pdf["tfs_enc"], pdf["pos_enc"]):
+                    # an undecodable / inconsistent blob IS the violation
+                    # being hunted — count it, don't crash
+                    try:
+                        # every posting's run: tf strictly ascending positions
+                        tfs = codec.decode_tfs(tf_enc)
+                        pos = codec.decode_positions(p_enc, tfs)
+                        inner = np.ones(pos.size, dtype=bool)
+                        inner[np.cumsum(tfs) - tfs] = False  # run starts
+                        bad = pos.size != int(tfs.sum()) or bool(
+                            (np.diff(pos) <= 0)[inner[1:]].any()
+                        )
+                    except Exception:
+                        bad = True
+                    bads.append(int(bad))
+                yield pd.DataFrame({"bad": bads}, dtype="int64")
+
+        n_bad = int(
+            postings.select("tfs_enc", "pos_enc")
+            .mapInPandas(pos_check, "bad long")
+            .agg(F.sum("bad"))
+            .collect()[0][0]
+            or 0
         )
-        add("pos_postings_rollup", pp_roll == 0, f"mismatched_terms={pp_roll}")
-        if deep:
-            pos_schema = T.StructType(
-                [
-                    T.StructField("term", T.StringType()),
-                    T.StructField("cf_row", T.LongType()),
-                    T.StructField("bad", T.LongType()),
-                ]
-            )
-
-            def pos_check(batches: Iterator[pd.DataFrame]):
-                for pdf in batches:
-                    terms_o, cfs_o, bads_o = [], [], []
-                    for term, df, d_enc, pl_enc, p_enc in zip(
-                        pdf["term"], pdf["df"], pdf["doc_ids_enc"],
-                        pdf["pos_lens_enc"], pdf["pos_enc"],
-                    ):
-                        bad, cf_row = 0, 0
-                        # an undecodable / inconsistent blob IS the
-                        # violation being hunted — count it, don't crash
-                        try:
-                            dd = codec.decode_doc_ids(d_enc)
-                            lens = codec.decode_tfs(pl_enc)
-                            pos = codec.decode_positions(p_enc, lens)
-                            cf_row = int(lens.sum())
-                            if dd.size != int(df) or lens.size != dd.size:
-                                bad = 1
-                            elif dd.size > 1 and not (np.diff(dd) > 0).all():
-                                bad = 1
-                            elif cf_row != pos.size:
-                                bad = 1
-                            else:
-                                # per-doc runs strictly ascending
-                                ends = np.cumsum(lens)
-                                starts = ends - lens
-                                for s0, e0 in zip(starts, ends):
-                                    run = pos[s0:e0]
-                                    if run.size > 1 and not (
-                                        np.diff(run) > 0
-                                    ).all():
-                                        bad = 1
-                                        break
-                        except Exception:
-                            bad = 1
-                        terms_o.append(term)
-                        cfs_o.append(cf_row)
-                        bads_o.append(bad)
-                    yield pd.DataFrame(
-                        {"term": terms_o, "cf_row": cfs_o, "bad": bads_o}
-                    )
-
-            dec = pp.select(
-                "term", "df", "doc_ids_enc", "pos_lens_enc", "pos_enc"
-            ).mapInPandas(pos_check, pos_schema)
-            dec.cache()
-            n_bad = int(dec.agg(F.sum("bad")).collect()[0][0] or 0)
-            add("pos_postings_decode", n_bad == 0, f"bad_rows={n_bad}")
-            cf_bad = (
-                dec.groupBy("term")
-                .agg(F.sum("cf_row").alias("_cf"))
-                .join(term_stats.select("term", "cf"), "term", "full")
-                .filter(
-                    (F.col("_cf") != F.col("cf"))
-                    | F.col("_cf").isNull()
-                    | F.col("cf").isNull()
-                )
-                .count()
-            )
-            dec.unpersist()
-            add(
-                "pos_postings_cf",
-                cf_bad == 0,
-                f"mismatched_terms={cf_bad}",
-            )
+        add("positions_decode", n_bad == 0, f"bad_rows={n_bad}")
 
     if deep:
         decoded = postings.select(

@@ -102,7 +102,7 @@ def expunge_deletes(
     omitted, a default builder is used with the term_vectors/positions
     flags recovered from the existing tables. Returns the number of
     surviving docs."""
-    from nlp4l_spark.index.builder import IndexBuilder
+    from nlp4l_spark.index.builder import IndexBuilder, has_positions
 
     cat = IndexCatalog(index_dir)
     if not cat.is_committed("tombstones") or deleted_count(index_dir) == 0:
@@ -113,7 +113,7 @@ def expunge_deletes(
     if builder is None:
         builder = IndexBuilder(
             store_term_vectors=cat.is_committed("term_vectors"),
-            store_positions=cat.is_committed("pos_postings"),
+            store_positions=has_positions(cat),
         )
     tmp = index_dir.rstrip("/") + ".expunge"
     old = index_dir.rstrip("/") + ".expunged-old"

@@ -41,13 +41,9 @@ import math
 import os
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import SparkSession, functions as F
 
-from nlp4l_spark.index import codec
-from nlp4l_spark.index.builder import POS_POSTINGS_SCHEMA, write_searchable
+from nlp4l_spark.index.builder import write_searchable
 from nlp4l_spark.index.catalog import IndexCatalog
 
 
@@ -134,90 +130,6 @@ def index_size_bytes(index_dir: str) -> int:
     return total
 
 
-def _rebase_pos_rows(base: int, docs_per_shard: int, deleted: set[int]):
-    """mapInPandas fn over ONE generation's pos_postings: shift docIDs by
-    the generation's docBase and recompute shard ownership, splitting the
-    (rare) row whose rebased doc range crosses a shard boundary.
-
-    This is the Lucene merge economics for positions: no re-analysis —
-    only the docID gaps change. Fast path (almost every row): the rebased
-    range stays in one shard, so the per-doc-reset dls/pos_lens/pos
-    buffers are byte-identical and pass through untouched; only the
-    docID buffer re-encodes (its first gap carries the absolute docID).
-    Rows here are (term, shard, pid) segments — vocab-sized, not
-    corpus-sized — and the work per row is one varbyte decode/encode.
-    Rows touching a tombstoned (generation-local) docID in ``deleted``
-    take the decode path and drop that doc's postings — Lucene's
-    merge-expunges-deletions contract."""
-    cols = [f.name for f in POS_POSTINGS_SCHEMA.fields]
-    dels = (
-        np.asarray(sorted(deleted), dtype=np.int64)
-        if deleted
-        else None
-    )
-
-    def run(batches):
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in cols}
-
-            def emit(term, shard, pid, d, dls_enc, pl_enc, pos_enc):
-                out["term"].append(term)
-                out["shard"].append(int(shard))
-                out["pid"].append(pid)
-                out["df"].append(int(d.size))
-                out["min_doc"].append(int(d[0]))
-                out["max_doc"].append(int(d[-1]))
-                out["doc_ids_enc"].append(codec.encode_doc_ids(d))
-                out["dls_enc"].append(dls_enc)
-                out["pos_lens_enc"].append(pl_enc)
-                out["pos_enc"].append(pos_enc)
-
-            for r in pdf.itertuples(index=False):
-                d_local = codec.decode_doc_ids(r.doc_ids_enc)
-                live = (
-                    ~np.isin(d_local, dels)
-                    if dels is not None
-                    else None
-                )
-                d = d_local + base
-                if live is not None and not live.all():
-                    d = d[live]
-                    if d.size == 0:
-                        continue  # every doc in this row was deleted
-                elif live is not None:
-                    live = None  # no overlap: fast path still valid
-                s0, s1 = d[0] // docs_per_shard, d[-1] // docs_per_shard
-                if s0 == s1 and live is None:  # fast path: buffers unchanged
-                    emit(r.term, s0, r.pid, d,
-                         r.dls_enc, r.pos_lens_enc, r.pos_enc)
-                    continue
-                dls = codec.decode_tfs(r.dls_enc)
-                pl = codec.decode_tfs(r.pos_lens_enc)
-                flat = codec.decode_positions(r.pos_enc, pl)
-                if live is not None:  # drop deleted docs' position runs
-                    keep_pos = np.repeat(live, pl)
-                    flat = flat[keep_pos]
-                    dls, pl = dls[live], pl[live]
-                pstarts = np.zeros(pl.size + 1, dtype=np.int64)
-                np.cumsum(pl, out=pstarts[1:])
-                s = d // docs_per_shard
-                bnds = np.concatenate(
-                    ([0], 1 + np.flatnonzero(np.diff(s) != 0), [d.size])
-                )
-                for a, b in zip(bnds[:-1].tolist(), bnds[1:].tolist()):
-                    emit(
-                        r.term, s[a], r.pid, d[a:b],
-                        codec.encode_tfs(dls[a:b]),
-                        codec.encode_tfs(pl[a:b]),
-                        codec.encode_positions(
-                            flat[pstarts[a]:pstarts[b]], pl[a:b]
-                        ),
-                    )
-            yield pd.DataFrame(out)
-
-    return run
-
-
 def compact(
     spark: SparkSession,
     index_dirs: list[str],
@@ -237,12 +149,12 @@ def compact(
     term_stats, field_stats) run over the merged forward index, so a
     compacted index is table-identical to one build over the same docs
     (tested). Every generation needs a committed doc_terms_fwd (every
-    build writes one). Position shards
-    (pos_postings) and term_vectors carry over WITHOUT re-analysis when
-    every input generation has them: positions are doc-relative, so the
-    rebase touches only docID gaps (see _rebase_pos_rows); term_vectors
-    is a rebased union. If only some generations have an extra table it
-    is dropped (the compacted index stays honest about its surface).
+    build writes one). Positions and term_vectors carry over WITHOUT
+    re-analysis when every input generation has them: positions are
+    doc-relative and ride in the forward index, which the builder's
+    stages re-encode into the postings; term_vectors is a rebased union.
+    If only some generations have them they are dropped (the compacted
+    index stays honest about its surface).
 
     Deletes: compaction EXPUNGES tombstoned docs and recomputes stats —
     Lucene's merge semantics (deleted docs leave; num_docs/df/avgdl
@@ -317,9 +229,12 @@ def compact(
         counters={"num_docs": num_docs, "expunged": n_deleted},
     )
 
+    fwd_cols = ["doc_id", "terms", "tfs", "dl"]
+    if all("positions" in c.columns("doc_terms_fwd") for c in cats):
+        fwd_cols.append("positions")
     fwd = None
     for c, b, t in zip(cats, bases, tombs):
-        f_ = _live(c.read(spark, "doc_terms_fwd"), t).withColumn(
+        f_ = _live(c.read(spark, "doc_terms_fwd").select(*fwd_cols), t).withColumn(
             "doc_id", F.col("doc_id") + F.lit(b)
         )
         fwd = f_ if fwd is None else fwd.unionByName(f_)
@@ -328,19 +243,6 @@ def compact(
         spark, out, num_docs, sum_dl,
         text_col=text_col, docs_per_shard=docs_per_shard,
     )
-
-    if all(c.is_committed("pos_postings") for c in cats):
-        pos = None
-        for c, b, t in zip(cats, bases, tombs):
-            p = (
-                c.read(spark, "pos_postings")
-                .mapInPandas(
-                    _rebase_pos_rows(b, docs_per_shard, t),
-                    POS_POSTINGS_SCHEMA,
-                )
-            )
-            pos = p if pos is None else pos.unionByName(p)
-        out.write(pos, "pos_postings", sort_by=["term"])
 
     if all(c.is_committed("term_vectors") for c in cats):
         tv = None

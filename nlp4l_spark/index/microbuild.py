@@ -5,12 +5,16 @@ Spark job; on a micro-batch (thousands of turns) every one of those jobs
 is ~0.3 s of scheduler/commit floor and the build runs ~10x slower than
 its data volume justifies (VERDICT r3 task 6: 1.5k turns/s vs 14.8k
 batch). This module is the Lucene answer — an in-memory segment flush:
-collect the micro-batch with ONE job (Arrow), then run the exact same
-pandas/numpy stage functions (``_segment_builder`` / ``_segment_merger``
-/ ``Analyzer.term_counts_frame``) on the driver and write every catalog
-table directly with pyarrow, bit-compatible with a distributed build of
-the same batch (same docID rank order, same codec bytes, same manifest
-layout — federation identity tests cover the mix).
+collect the micro-batch with ONE job (Arrow), tokenize it on the driver
+with the tokenize UDF's own function (``Analyzer.term_counts_frame``),
+encode segments and postings in one pass (``_encode_micro``: for one
+doc-sorted partition, the bytes ``builder._segment_builder`` and
+``builder._segment_merger`` would write) and write every catalog table
+directly with pyarrow, bit-compatible with a distributed build of the
+same batch (same docID rank order, same codec bytes, same manifest
+layout — federation identity tests cover the mix). Positions are not
+written here: a ``store_positions`` ingest takes the distributed
+builder.
 
 Scale note: this path is gated to batches ≤ ``MAX_ROWS`` rows; anything
 larger falls back to the distributed builder. The cap is a

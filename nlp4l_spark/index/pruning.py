@@ -157,7 +157,10 @@ def prune_postings(
         return name
     fs = cat.read(spark, "field_stats").collect()[0]
     avgdl = float(fs["avgdl"])
-    full = cat.read(spark, "postings")
+    # a pruned tier has no positions: pos_enc is projected away
+    full = cat.read(spark, "postings").select(
+        "term", "shard", "df", "doc_ids_enc", "tfs_enc", "dls_enc"
+    )
     n_full = full.select(F.sum("df")).collect()[0][0] or 0
     cand = full.mapInPandas(_local_top(avgdl, keep_per_term), _CAND_SCHEMA)
     per_term = cand.groupBy("term").agg(

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nlp4l_spark.index.builder import IndexBuilder
+from nlp4l_spark.index.builder import IndexBuilder, has_positions
 from nlp4l_spark.index.catalog import IndexCatalog
 
 
@@ -57,6 +57,6 @@ def reindex(
     if builder is None:
         builder = IndexBuilder(
             store_term_vectors=cat.is_committed("term_vectors"),
-            store_positions=cat.is_committed("pos_postings"),
+            store_positions=has_positions(cat),
         )
     return builder.build(stored, dst_dir)

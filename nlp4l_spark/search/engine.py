@@ -63,10 +63,16 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import B, K1, bm25_impact, idf
+from nlp4l_spark.index.builder import has_positions
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search import reader as reader_mod
 from nlp4l_spark.search import wand as wand_mod
-from nlp4l_spark.search.reader import IndexReader, phrase_matches, shard_topk
+from nlp4l_spark.search.reader import (
+    PHRASE_COLUMNS,
+    IndexReader,
+    phrase_matches,
+    shard_topk,
+)
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -207,7 +213,7 @@ class Searcher:
         cat = self.cat
         snapshots = {
             t: cat.manifest(t)["snapshot_id"] if cat.is_committed(t) else None
-            for t in ("field_stats", "tombstones", self.postings_table, "pos_postings")
+            for t in ("field_stats", "tombstones", self.postings_table, "postings")
         }
         if snapshots == self._opened:
             return
@@ -697,12 +703,15 @@ class Searcher:
             .select("doc_id", F.lit(float(boost)).alias("score"))
         )
 
-    def _phrase_frame(self, terms: list[str], boost: float) -> DataFrame | None:
+    def _phrase_frame(
+        self, terms: list[str], offsets: list[int], boost: float
+    ) -> DataFrame | None:
         """Unlimited PhraseQuery BM25 frame from term_vectors (the
-        composable form of search_phrase's term_vectors path)."""
+        composable form of search_phrase's term_vectors path):
+        ``terms[i]`` sits at p + ``offsets[i]`` for a match at p."""
         if not self.cat.is_committed("term_vectors"):
             raise ValueError(
-                "phrase clauses need term_vectors "
+                "phrase search needs term_vectors "
                 "(IndexBuilder(store_term_vectors=True))"
             )
         dfs = self._term_stats(terms)
@@ -716,13 +725,15 @@ class Searcher:
             )
             joined = side if joined is None else joined.join(side, "doc_id")
 
+        # phrase starts: p with p + offsets[i] in _pi for all i
+        # (transform lambdas must be 1-arg: 2-arg means (element, index))
         def _shift(off: int):
             return lambda p: p - off
 
-        first = F.col("_p0")
+        first = F.transform(F.col("_p0"), _shift(offsets[0]))
         for i in range(1, len(terms)):
             first = F.array_intersect(
-                first, F.transform(F.col(f"_p{i}"), _shift(i))
+                first, F.transform(F.col(f"_p{i}"), _shift(offsets[i]))
             )
         cand = self._not_deleted(
             joined.select("doc_id", F.size(first).alias("tf")).filter(
@@ -744,7 +755,7 @@ class Searcher:
             if not toks:
                 return None
             if len(toks) > 1:  # "a.b" analyzes to a phrase, like Lucene
-                return self._phrase_frame(toks, b)
+                return self._phrase_frame(*self._phrase_terms(node["text"]), b)
             dfs = self._term_stats(toks)
             if toks[0] not in dfs:
                 return None
@@ -768,7 +779,7 @@ class Searcher:
                 # k-term "..."~N (session 13: the >2-term sloppy matcher
                 # — previously a documented fall-through to exact).
                 return self._sloppy_phrase_frame_multi(toks, slop, b)
-            return self._phrase_frame(toks, b)
+            return self._phrase_frame(*self._phrase_terms(node["text"]), b)
         if kind == "wild":
             import re as _re
 
@@ -3397,16 +3408,17 @@ class Searcher:
         self, phrase: str, k: int = 10, method: str = "auto"
     ) -> DataFrame:
         """Exact-phrase top-k over the INDEX. Lucene PhraseQuery BM25:
-        tf = phrase freq (consecutive positions — valid across stopword
-        holes because StopFilter preserves position increments),
-        idf = Σ per-term idf.
+        tf = phrase freq, idf = Σ per-term idf. Query terms keep their
+        token-stream positions, so the match is valid across stopword
+        holes: StopFilter preserves position increments on both sides
+        ("silver and gold" matches that text, not "silver gold").
 
         Two paths (identity-tested in tests/test_phrase.py):
 
-        * ``postings`` (the scale path, chosen by ``auto`` when the index
-          has a ``pos_postings`` table —
+        * ``postings`` (the scale path, chosen by ``auto`` when the
+          postings carry positions —
           ``IndexBuilder(store_positions=True)``): positions ride inside
-          (term, shard) posting segments, the adjacency check runs INSIDE
+          the (term, shard) posting rows, the adjacency check runs INSIDE
           a per-shard Arrow task. Plan = pushed-In(term) scan -> grouped
           task -> TakeOrdered; no corpus-sized join anywhere
           (plan-guarded in tests/test_plans.py). Under ``auto`` the
@@ -3417,69 +3429,46 @@ class Searcher:
           modest, but the join sides are df-sized — the reason the
           postings path exists."""
         self._refresh()
-        terms = self.analyzer.tokenize(phrase)
+        terms, offsets = self._phrase_terms(phrase)
         if not terms:
             return _empty(self.spark, "doc_id long, score double")
         routed = method == "auto"
         if routed:
-            method = (
-                "postings"
-                if self.cat.is_committed("pos_postings")
-                else "term_vectors"
-            )
+            method = "postings" if has_positions(self.cat) else "term_vectors"
         if method == "postings":
-            return self._phrase_postings(terms, k, routed)
-        if not self.cat.is_committed("term_vectors"):
-            raise ValueError(
-                "phrase search needs term_vectors "
-                "(IndexBuilder(store_term_vectors=True))"
-            )
-        tv = self.cat.read(self.spark, "term_vectors")
-        # per query term: (doc_id, positions), term-pruned scan
-        joined = None
-        for i, t in enumerate(terms):
-            side = (
-                tv.filter(F.col("term") == t)
-                .select("doc_id", F.col("positions").alias(f"_p{i}"))
-            )
-            joined = side if joined is None else joined.join(side, "doc_id")
-        # phrase positions: p in _p0 with p+i in _pi for all i
-        # (transform lambdas must be 1-arg: 2-arg means (element, index))
-        def _shift(off: int):
-            return lambda p: p - off
+            return self._phrase_postings(terms, offsets, k, routed)
+        frame = self._phrase_frame(terms, offsets, 1.0)
+        if frame is None:
+            return _empty(self.spark, "doc_id long, score double")
+        return _top(frame, k)
 
-        first = F.col("_p0")
-        for i in range(1, len(terms)):
-            first = F.array_intersect(
-                first, F.transform(F.col(f"_p{i}"), _shift(i))
-            )
-        cand = self._not_deleted(
-            joined.select("doc_id", F.size(first).alias("tf")).filter(
-                F.col("tf") > 0
-            )
-        )
-        dfs = self._term_stats(terms)
-        idf_sum = sum(idf(self.num_docs, dfs.get(t, 0)) for t in terms)
-        dl = self.cat.read(self.spark, "doc_lens")
-        return _top(
-            cand.join(dl, "doc_id").select(
-                "doc_id", _bm25(idf_sum, self.avgdl).alias("score")
-            ),
-            k,
+    def _phrase_terms(self, text: str) -> tuple[list[str], list[int]]:
+        """A phrase's analyzed terms and each one's position relative to
+        the phrase start, from the analyzer's token stream: a dropped
+        stopword keeps its place, as Lucene's query builder keeps the
+        position increment."""
+        stream = self.analyzer.token_stream(text)
+        if not stream:
+            return [], []
+        start = min(pos for _t, pos, _s, _e in stream)
+        return (
+            [t for t, _p, _s, _e in stream],
+            [pos - start for _t, pos, _s, _e in stream],
         )
 
     def _phrase_postings(
-        self, terms: list[str], k: int, routed: bool = False
+        self, terms: list[str], offsets: list[int], k: int, routed: bool = False
     ) -> DataFrame:
-        """Phrase scoring over position-carrying posting shards: per
-        (shard) task decodes each query term's (doc_ids, dls, positions)
-        segments (concatenable by construction), intersects candidate
-        docs, counts adjacent-position runs (p0, p0+1, ...) and emits the
-        shard-local BM25 top-k; the global merge is TakeOrderedAndProject.
-        Work ∝ query-term postings, never corpus size. A ``routed`` call
-        runs the same kernel (``reader.phrase_matches``) in the
-        driver-resident reader when its size gate admits the phrase."""
-        if not self.cat.is_committed("pos_postings"):
+        """Phrase scoring over the positions in the posting rows: per
+        (shard) task decodes each query term's (doc_ids, tfs, dls,
+        positions) rows (concatenable by construction), intersects
+        candidate docs, counts the starts p with every term at p + its
+        query offset and emits the shard-local BM25 top-k; the global
+        merge is TakeOrderedAndProject. Work ∝ query-term postings, never
+        corpus size. A ``routed`` call runs the same kernel
+        (``reader.phrase_matches``) in the driver-resident reader when
+        its size gate admits the phrase."""
+        if not has_positions(self.cat):
             raise ValueError(
                 "phrase postings path needs IndexBuilder(store_positions=True)"
             )
@@ -3489,10 +3478,12 @@ class Searcher:
         idf_sum = float(sum(idf(self.num_docs, dfs[t]) for t in terms))
         if routed and self._reader.admits(terms, positions=True):
             return self.spark.createDataFrame(
-                self._reader.search_phrase(terms, idf_sum, k)
+                self._reader.search_phrase(terms, offsets, idf_sum, k)
             )
-        pp = self.cat.read(self.spark, "pos_postings").filter(
-            F.col("term").isin(list(set(terms)))
+        pp = (
+            self.cat.read(self.spark, "postings")
+            .filter(F.col("term").isin(list(set(terms))))
+            .select("shard", *PHRASE_COLUMNS)
         )
         dels = (
             np.fromiter(self.deleted_ids, dtype=np.int64)
@@ -3501,7 +3492,7 @@ class Searcher:
         )
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return phrase_matches(pdf, terms, dels)
+            return phrase_matches(pdf, terms, offsets, dels)
 
         cand = pp.groupBy("shard").applyInPandas(
             run, "doc_id long, tf long, dl long"

@@ -13,9 +13,10 @@ What the reader holds, all read on the driver with pyarrow through
 ``IndexCatalog`` (same committed-snapshot check as ``read``):
 
 * pyarrow datasets over the scored posting table (``postings`` or a
-  pruned tier) and ``pos_postings``, read with a pushed ``term in (...)``
-  filter that parquet row-group statistics prune on; the row-group term
-  ranges and byte sizes come from the parquet footers at open;
+  pruned tier) and, for phrases, ``postings`` with its ``pos_enc``
+  column, read with a pushed ``term in (...)`` filter that parquet
+  row-group statistics prune on; the row-group term ranges and
+  per-column byte sizes come from the parquet footers at open;
 * the searcher's collection statistics and tombstones.
 
 The reader is a point-in-time view: ``Searcher`` checks the snapshot ids
@@ -34,9 +35,10 @@ Spark's ``applyInPandas`` runs them per (query, shard) group and the
 reader runs them over the whole frame, so both harnesses score with the
 same code, and WAND-routed OR scores are equal bit for bit.
 
-Size gate: a call is admitted only when the posting row groups its term
-filter selects, summed from the footers' byte sizes, stay under
-``MAX_POSTING_BYTES`` (in the style of microbuild's ``MAX_ROWS`` cap).
+Size gate: a call is admitted only when the column chunks it reads of
+the posting row groups its term filter selects, summed from the footers'
+byte sizes, stay under ``MAX_POSTING_BYTES`` (in the style of
+microbuild's ``MAX_ROWS`` cap): an OR call never counts ``pos_enc``.
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ import pyarrow.compute as pc
 
 from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import bm25_impact
+from nlp4l_spark.index.builder import has_positions
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search.wand import wand_topk
 
@@ -81,9 +84,8 @@ _SCORED_SCHEMA = pa.schema(
 )
 
 _OR_COLUMNS = ["term", "shard", "doc_ids_enc", "tfs_enc", "dls_enc", "block_max"]
-_PHRASE_COLUMNS = [
-    "term", "min_doc", "doc_ids_enc", "dls_enc", "pos_lens_enc", "pos_enc",
-]
+_AND_COLUMNS = ["term", "min_doc", "doc_ids_enc", "tfs_enc", "dls_enc"]
+PHRASE_COLUMNS = _AND_COLUMNS + ["pos_enc"]
 
 
 # --------------------------------------------------------------------- #
@@ -151,14 +153,19 @@ def shard_topk(
 
 
 def phrase_matches(
-    pdf: pd.DataFrame, terms: list[str], dels: np.ndarray | None = None
+    pdf: pd.DataFrame,
+    terms: list[str],
+    offsets: list[int],
+    dels: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Exact-phrase matches in position-carrying posting segments (term,
-    min_doc, doc_ids_enc, dls_enc, pos_lens_enc, pos_enc) -> (doc_id, tf,
-    dl) with tf = the phrase frequency. Each term's segments are stacked
-    in min_doc order (disjoint doc ranges by construction), candidate docs
-    are those holding every term, and a match is a run of positions
-    p, p+1, ... over ``terms`` in order."""
+    """Exact-phrase matches in position-carrying posting rows (term,
+    min_doc, doc_ids_enc, tfs_enc, dls_enc, pos_enc) -> (doc_id, tf, dl)
+    with tf = the phrase frequency. ``offsets[i]`` is ``terms[i]``'s
+    position in the query, so a stopword hole in the query asks for the
+    same hole in the doc. Each term's rows are stacked in min_doc order
+    (disjoint doc ranges by construction), candidate docs are those
+    holding every term, and a match is a start p with ``terms[i]`` at
+    p + offsets[i] for every i."""
     empty = pd.DataFrame(
         {"doc_id": pd.Series([], dtype="int64"),
          "tf": pd.Series([], dtype="int64"),
@@ -167,24 +174,22 @@ def phrase_matches(
     per_term: dict[str, list] = {}
     segs = pdf.sort_values("min_doc")
     for t, *encs in zip(
-        segs["term"], segs["doc_ids_enc"], segs["dls_enc"],
-        segs["pos_lens_enc"], segs["pos_enc"],
+        segs["term"], segs["doc_ids_enc"], segs["tfs_enc"],
+        segs["dls_enc"], segs["pos_enc"],
     ):
         per_term.setdefault(t, []).append(encs)
     if len(per_term) < len(set(terms)):
         return empty
     decoded: dict[str, tuple] = {}
     for t, rows in per_term.items():
-        d_encs, dl_encs, pl_encs, p_encs = zip(*rows)
+        d_encs, tf_encs, dl_encs, p_encs = zip(*rows)
         d = np.concatenate([codec.decode_doc_ids(x) for x in d_encs])
         dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
-        row_pls = [codec.decode_tfs(x) for x in pl_encs]
-        pl = np.concatenate(row_pls)
-        flat = np.concatenate(
-            [codec.decode_positions(x, rpl) for x, rpl in zip(p_encs, row_pls)]
-        )
-        pstarts = np.zeros(pl.size + 1, dtype=np.int64)
-        np.cumsum(pl, out=pstarts[1:])
+        # a posting's position run has length tf
+        tf = np.concatenate([codec.decode_tfs(x) for x in tf_encs])
+        flat = codec.decode_positions(b"".join(p_encs), tf)
+        pstarts = np.zeros(tf.size + 1, dtype=np.int64)
+        np.cumsum(tf, out=pstarts[1:])
         decoded[t] = (d, dl, flat, pstarts)
     cand = None
     for t in set(terms):
@@ -196,10 +201,10 @@ def phrase_matches(
     out_doc, out_tf, out_dl = [], [], []
     for doc in cand.tolist():
         inter = None
-        for i, t in enumerate(terms):
+        for t, off in zip(terms, offsets):
             d, _, flat, pstarts = decoded[t]
             j = int(np.searchsorted(d, doc))
-            ps = flat[pstarts[j] : pstarts[j + 1]] - i
+            ps = flat[pstarts[j] : pstarts[j + 1]] - off
             inter = ps if inter is None else np.intersect1d(
                 inter, ps, assume_unique=True
             )
@@ -227,31 +232,38 @@ def _ranked(doc_ids: np.ndarray, scores: np.ndarray, k: int):
 # --------------------------------------------------------------------- #
 class _PostingTable:
     """A posting table's dataset plus each row group's (min term, max
-    term, bytes) from the parquet footers — the gate's byte count."""
+    term, bytes per top-level column) from the parquet footers — the
+    gate's byte count."""
 
     def __init__(self, dataset):
         self.dataset = dataset
-        self.groups: list[tuple[str | None, str | None, int]] = []
+        self.groups: list[tuple[str | None, str | None, dict[str, int]]] = []
         for frag in dataset.get_fragments():
             frag.ensure_complete_metadata()
+            meta = frag.metadata
             for rg in frag.row_groups:
                 st = (rg.statistics or {}).get("term") or {}
-                self.groups.append(
-                    (st.get("min"), st.get("max"), rg.total_byte_size)
-                )
+                chunks = meta.row_group(rg.id)
+                sizes: dict[str, int] = {}
+                for j in range(chunks.num_columns):
+                    col = chunks.column(j)
+                    name = col.path_in_schema.split(".", 1)[0]
+                    sizes[name] = sizes.get(name, 0) + col.total_uncompressed_size
+                self.groups.append((st.get("min"), st.get("max"), sizes))
 
-    def selected_bytes(self, terms: list[str]) -> int:
-        """Bytes of the row groups whose term range holds a query term
-        (a group without statistics always counts)."""
+    def selected_bytes(
+        self, terms: list[str], columns: list[str] = _OR_COLUMNS
+    ) -> int:
+        """Bytes of ``columns`` in the row groups whose term range holds a
+        query term (a group without statistics always counts)."""
         ts = sorted(terms)
         total = 0
-        for lo, hi, size in self.groups:
-            if lo is None or hi is None:
-                total += size
-                continue
-            i = bisect_left(ts, lo)
-            if i < len(ts) and ts[i] <= hi:
-                total += size
+        for lo, hi, sizes in self.groups:
+            if lo is not None and hi is not None:
+                i = bisect_left(ts, lo)
+                if not (i < len(ts) and ts[i] <= hi):
+                    continue
+            total += sum(sizes.get(c, 0) for c in columns)
         return total
 
     def read(self, terms: list[str], columns: list[str]) -> pd.DataFrame:
@@ -278,21 +290,28 @@ class IndexReader:
             np.fromiter(deleted, dtype=np.int64) if deleted else None
         )
         self.postings = _PostingTable(cat.dataset(postings_table))
-        self.pos_postings = (
-            _PostingTable(cat.dataset("pos_postings"))
-            if cat.is_committed("pos_postings")
-            else None
-        )
+        # phrases read the full postings, whatever tier scores OR/AND
+        if not has_positions(cat):
+            self.positions = None
+        elif postings_table == "postings":
+            self.positions = self.postings
+        else:
+            self.positions = _PostingTable(cat.dataset("postings"))
 
     # ---- gate -------------------------------------------------------- #
     def admits(self, terms, positions: bool = False) -> bool:
-        """Whether one call over ``terms`` fits the driver: the posting
-        row groups it selects stay under ``MAX_POSTING_BYTES``.
-        ``positions`` gates the ``pos_postings`` read instead."""
-        table = self.pos_postings if positions else self.postings
+        """Whether one call over ``terms`` fits the driver: the column
+        chunks it reads of the posting row groups it selects stay under
+        ``MAX_POSTING_BYTES`` — the OR columns (AND reads fewer), or with
+        ``positions`` the phrase columns, ``pos_enc`` included."""
+        table, columns = (
+            (self.positions, PHRASE_COLUMNS)
+            if positions
+            else (self.postings, _OR_COLUMNS)
+        )
         if table is None:
             return False
-        return table.selected_bytes(list(terms)) <= MAX_POSTING_BYTES
+        return table.selected_bytes(list(terms), columns) <= MAX_POSTING_BYTES
 
     # ---- queries ----------------------------------------------------- #
     def search_batch(
@@ -338,10 +357,9 @@ class IndexReader:
     ) -> pa.Table:
         """AND top-k: docs holding every (term, idf) row's term, scored by
         the BM25 sum over those terms -> (doc_id, score, rank)."""
-        post = self.postings.read(
-            [t for t, _ in rows],
-            ["term", "min_doc", "doc_ids_enc", "tfs_enc", "dls_enc"],
-        ).sort_values(["term", "min_doc"])
+        post = self.postings.read([t for t, _ in rows], _AND_COLUMNS).sort_values(
+            ["term", "min_doc"]
+        )
         decoded = {}
         for t, g in post.groupby("term", sort=False):
             d = np.concatenate([codec.decode_doc_ids(x) for x in g["doc_ids_enc"]])
@@ -371,13 +389,13 @@ class IndexReader:
         )
 
     def search_phrase(
-        self, terms: list[str], idf_sum: float, k: int
+        self, terms: list[str], offsets: list[int], idf_sum: float, k: int
     ) -> pa.Table:
-        """Exact-phrase top-k over ``pos_postings`` -> (doc_id, score);
-        the phrase scores as one term of weight ``idf_sum`` and tf = the
-        phrase frequency."""
-        pdf = self.pos_postings.read(terms, _PHRASE_COLUMNS)
-        m = phrase_matches(pdf, terms, self.dels)
+        """Exact-phrase top-k over the positions in ``postings`` ->
+        (doc_id, score); the phrase scores as one term of weight
+        ``idf_sum`` and tf = the phrase frequency."""
+        pdf = self.positions.read(terms, PHRASE_COLUMNS)
+        m = phrase_matches(pdf, terms, offsets, self.dels)
         doc = m["doc_id"].to_numpy()
         score = idf_sum * bm25_impact(
             m["tf"].to_numpy(), m["dl"].to_numpy(), self.avgdl

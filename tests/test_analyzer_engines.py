@@ -295,6 +295,50 @@ def test_four_engines_agree_index_time_synonyms(spark):
     _assert_four_engines(spark, syn, texts)
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["standard", "synonyms", "shingles", "edge", "shingles+edge", "cjk", "porter"],
+)
+def test_term_positions_frame_matches_term_counts_frame(name):
+    """The positions build's one tokenize pass (``token_stream``) yields
+    the terms, tfs and dl of ``term_counts_frame``, plus each term's
+    tf ascending positions, term-major."""
+    from nlp4l_spark.analysis import LUCENE_ENGLISH_STOPWORDS as STOP
+    from nlp4l_spark.analysis.analyzer import Analyzer
+    from nlp4l_spark.analysis.stem import PorterAnalyzer
+    from nlp4l_spark.analysis.unicode import UNICODE_CJK_ANALYZER
+    from nlp4l_spark.data import LONDON_BRIDGE_VERSES
+
+    an = {
+        "standard": STANDARD_ANALYZER,
+        "synonyms": Analyzer(stopwords=STOP, synonyms=(("dup", "duplicate"),)),
+        "shingles": Analyzer(stopwords=STOP, shingle_size=2),
+        "edge": Analyzer(stopwords=STOP, edge_ngrams=(2, 4)),
+        "shingles+edge": Analyzer(shingle_size=2, edge_ngrams=(3, 5)),
+        "cjk": UNICODE_CJK_ANALYZER,
+        "porter": PorterAnalyzer(stopwords=STOP),
+    }[name]
+    texts = LONDON_BRIDGE_VERSES + [
+        "dup rows in the scan", "a b", "", None, "東京都に住む the 猫",
+        "quick quiet quick_brown quicker",
+    ]
+    counts = an.term_counts_frame(texts)
+    pos = an.term_positions_frame(texts)
+    assert pos[["terms", "tfs", "dl"]].to_dict("list") == counts.to_dict("list")
+    for text, terms, tfs, flat in zip(
+        texts, pos["terms"], pos["tfs"], pos["positions"]
+    ):
+        want: dict[str, list[int]] = {}
+        for t, p, _s, _e in an.token_stream(text):
+            want.setdefault(t, []).append(p)
+        runs, i = {}, 0
+        for t, tf in zip(terms, tfs):
+            runs[t] = flat[i : i + tf]
+            i += tf
+        assert i == len(flat)
+        assert runs == {t: sorted(v) for t, v in want.items()}
+
+
 def test_synonym_token_stream_and_norms(spark):
     """posinc-0 contract: injected tokens share position/offsets with
     their source; dl (term_counts) counts the PRE-injection stream
@@ -317,14 +361,14 @@ def test_synonym_token_stream_and_norms(spark):
     assert row["dl"] == 3  # injected tokens never count toward length
 
 
-def test_synonym_index_build_and_search(spark, tmp_path):
+def test_synonym_index_build_and_search(spark, tmp_path, phrase_paths_agree):
     """Index-time synonyms drop into the real build + BM25 + phrase
     path: searching the INJECTED variant finds source docs; the
     injected token shares its source's position, so phrases match
     through either variant (Lucene SynonymFilter posinc-0 semantics)."""
     from nlp4l_spark.analysis import LUCENE_ENGLISH_STOPWORDS
     from nlp4l_spark.analysis.analyzer import Analyzer
-    from nlp4l_spark.index import IndexBuilder
+    from nlp4l_spark.index import IndexBuilder, check_index
     from nlp4l_spark.search import Searcher
 
     syn = Analyzer(
@@ -358,3 +402,10 @@ def test_synonym_index_build_and_search(spark, tmp_path):
     # the injected token sits at the source position
     ph = s.search_phrase("duplicate rows", k=10, method="postings").collect()
     assert [r["doc_id"] for r in ph] == [0]
+    # the positions in the postings share the postings' dl, which counts
+    # the pre-injection stream like doc_lens: the reader and the Spark
+    # postings plan score every phrase exactly as the term_vectors path
+    for q in ("duplicate rows", "dup rows", "rows", "dup"):
+        phrase_paths_agree(s, q)
+    report = check_index(spark, idx).collect()
+    assert report and all(r["ok"] for r in report), report

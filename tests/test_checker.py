@@ -160,6 +160,8 @@ def test_term_vectors_checks(spark, tmp_path):
 
 
 def test_pos_postings_checks(spark, tmp_path):
+    """The positions in the postings are checked over ``postings``: each
+    posting's pos_enc run must hold tf strictly ascending positions."""
     from nlp4l_spark.data.transcripts import synth_transcripts
     from nlp4l_spark.index import IndexBuilder
 
@@ -168,23 +170,25 @@ def test_pos_postings_checks(spark, tmp_path):
         sort_cols=("conv_id", "turn_idx"), store_positions=True
     ).build(synth_transcripts(spark, 600, num_partitions=2), d)
     rep = _report(spark, d, deep=True)
-    for c in ("pos_postings_rollup", "pos_postings_decode", "pos_postings_cf"):
-        assert rep[c][0], (c, rep[c])
-    # corrupt a row's position blob (swap with another row's) -> the
-    # deep decode/cf checks fire, the df rollup stays green
+    assert rep["positions_decode"][0], rep["positions_decode"]
+    # corrupt a row's position blob (swap in another row's) -> the deep
+    # positions check fires, the df/cf rollups stay green
     cat = IndexCatalog(d)
-    pp = cat.read(spark, "pos_postings")
-    rows = pp.orderBy("term", "shard").limit(2).collect()
-    a, donor = rows[0], rows[1]["pos_lens_enc"]
-    broken = pp.withColumn(
-        "pos_lens_enc",
+    post = cat.read(spark, "postings")
+    rows = post.select("term", "shard", "cf", "pos_enc").orderBy(
+        "term", "shard"
+    ).collect()
+    a = rows[0]
+    donor = next(r["pos_enc"] for r in rows if r["cf"] != a["cf"])
+    broken = post.withColumn(
+        "pos_enc",
         F.when(
             (F.col("term") == a["term"]) & (F.col("shard") == a["shard"]),
             F.lit(bytearray(donor)),
-        ).otherwise(F.col("pos_lens_enc")),
+        ).otherwise(F.col("pos_enc")),
     )
     broken.cache().count()
-    cat.write(broken, "pos_postings", mode="overwrite")
+    cat.write(broken, "postings", mode="overwrite")
     rep = _report(spark, d, deep=True)
-    assert not (rep["pos_postings_decode"][0] and rep["pos_postings_cf"][0])
-    assert rep["pos_postings_rollup"][0]
+    assert not rep["positions_decode"][0]
+    assert rep["df_cf_rollup"][0]

@@ -75,7 +75,7 @@ if HAS_HYPOTHESIS:
     @st.composite
     def _position_runs(draw):
         """Per-doc ascending position runs (possibly empty), flat array +
-        lens — the exact shape pos_postings stores."""
+        lens — the exact shape a postings row's pos_enc stores."""
         n_docs = draw(st.integers(0, 12))
         lens, flat = [], []
         for _ in range(n_docs):
@@ -100,9 +100,9 @@ if HAS_HYPOTHESIS:
     @given(_position_runs(), _position_runs())
     @settings(max_examples=150, deadline=None)
     def test_positions_buffers_concat_property(a, b):
-        """Segment rows with disjoint doc ranges concatenate WITHOUT
-        re-encoding — the invariant the merge-free pos_postings layout
-        depends on (per-doc gap reset)."""
+        """Posting rows with disjoint doc ranges concatenate WITHOUT
+        re-encoding — the invariant the segment merger and the phrase
+        kernel's one-pass decode depend on (per-doc gap reset)."""
         fa, la = a
         fb, lb = b
         buf = codec.encode_positions(fa, la) + codec.encode_positions(fb, lb)

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 import os
+import types
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
@@ -57,6 +59,59 @@ def _norm(rows, cols):
 ORACLE_BACKED = None  # filled dynamically below
 
 
+# Queries that build or reuse an index/ANN layout under the shared temp
+# dir (build-if-missing), or build an index at all (a build clamps a
+# session-wide conf while it scans), must not race each other: they run
+# one at a time, in test order, on their own lane. The rest run LANES at
+# a time; a query is a handful of small Spark jobs, mostly latency.
+SERIAL_NAMES = {"_index_cache_dir", "_ann_cache_dir", "_ann_index", "IndexBuilder"}
+LANES = 4
+
+
+def _runs_serially(fn, seen=None) -> bool:
+    """True if ``fn`` or any module-level function it names (followed
+    transitively through its globals) names one of SERIAL_NAMES."""
+    seen = set() if seen is None else seen
+    if id(fn) in seen or not isinstance(fn, types.FunctionType):
+        return False
+    seen.add(id(fn))
+    codes, names = [fn.__code__], set()
+    while codes:
+        code = codes.pop()
+        names.update(code.co_names)
+        codes += [c for c in code.co_consts if isinstance(c, types.CodeType)]
+    if names & SERIAL_NAMES:
+        return True
+    return any(_runs_serially(fn.__globals__.get(n), seen) for n in names)
+
+
+@pytest.fixture(scope="module")
+def spark_results(request, spark, sf_dir, entry_mod):
+    """The selected parity queries' (columns, collected rows), computed
+    concurrently up front; each test waits only for its own query, and
+    a query's exception is re-raised in its own test."""
+    names = [
+        item.callspec.params["name"]
+        for item in request.session.items
+        if item.module is request.module
+        and item.originalname == "test_query_matches_oracle"
+    ]
+    qs = entry_mod.queries()
+
+    def collect(name):
+        sdf = qs[name](spark, sf_dir)
+        return sdf.columns, sdf.collect()
+
+    pool, lane = ThreadPoolExecutor(LANES), ThreadPoolExecutor(1)
+    futs = {
+        n: (lane if _runs_serially(qs[n]) else pool).submit(collect, n)
+        for n in names
+    }
+    yield futs
+    for p in (pool, lane):
+        p.shutdown(cancel_futures=True)
+
+
 def _oracle_names():
     import importlib.util
 
@@ -69,12 +124,9 @@ def _oracle_names():
 
 
 @pytest.mark.parametrize("name", _oracle_names())
-def test_query_matches_oracle(spark, sf_dir, entry_mod, ddb, name):
-    q = entry_mod.queries()[name]
+def test_query_matches_oracle(entry_mod, ddb, spark_results, name):
     sql = entry_mod.oracle_sql()[name]
-    sdf = q(spark, sf_dir)
-    scols = sdf.columns
-    srows = sdf.collect()
+    scols, srows = spark_results[name].result()
     ores = ddb.execute(sql)
     ocols = [d[0] for d in ores.description]
     orows = ores.fetchall()

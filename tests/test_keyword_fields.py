@@ -23,8 +23,10 @@ def idx_pair(spark, tmp_path_factory):
     plain = str(root / "plain")
     kw = str(root / "kw")
     IndexBuilder(sort_cols=("conv_id", "turn_idx")).build(df, plain)
+    # positions too: keyword terms take position 0, one run of tf=1
     IndexBuilder(
-        sort_cols=("conv_id", "turn_idx"), keyword_fields=("role", "tool")
+        sort_cols=("conv_id", "turn_idx"), keyword_fields=("role", "tool"),
+        store_positions=True,
     ).build(df, kw)
     return plain, kw
 
@@ -127,12 +129,14 @@ def test_facet_keyword_from_dictionary(spark, idx_pair):
 def test_check_index_passes_with_keyword_fields(spark, idx_pair):
     """All CheckIndex invariants hold on a keyword-field index — the
     dl crosscheck in particular, because keyword terms carry the doc's
-    text dl in their postings rather than perturbing it."""
+    text dl in their postings rather than perturbing it, and the
+    positions check: every posting's run holds tf positions, keyword
+    terms included."""
     from nlp4l_spark.index.checker import check_index
 
     _, kw = idx_pair
     res = {r["check"]: r["ok"] for r in check_index(spark, kw).collect()}
-    assert len(res) >= 13 and all(res.values()), res
+    assert len(res) >= 14 and res["positions_decode"] and all(res.values()), res
 
 
 def test_multisearcher_federated_facets(spark, tmp_path):

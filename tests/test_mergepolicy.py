@@ -163,7 +163,20 @@ def test_compact_matches_single_build(spark, gens, compacted):
     (segments is per-(term, shard, pid) and legitimately differs with
     partitioning; _lineage is the builder's own)."""
     d_full, _ = gens
-    out, comp = compacted
+    _assert_same_tables(spark, *compacted, d_full)
+
+
+def test_compact_matches_single_positions_build(spark, pos_gens, pos_compacted):
+    """The same identity for positions generations: the forward index
+    carries the positions, so the compacted postings equal one positions
+    build's, pos_enc bytes included."""
+    d_full, _ = pos_gens
+    out, comp = pos_compacted
+    assert "pos_enc" in comp.columns("postings")
+    _assert_same_tables(spark, out, comp, d_full)
+
+
+def _assert_same_tables(spark, out, comp, d_full):
     single = IndexCatalog(d_full)
     assert comp.manifest("stored")["counters"]["expunged"] == 0
     for t in SHARED_TABLES:
@@ -184,11 +197,13 @@ def test_compact_matches_single_build(spark, gens, compacted):
     assert not comp.is_committed("_lineage")
 
 
-def test_searchable_tables_have_one_spark_writer():
+def test_searchable_tables_have_one_spark_writer(pos_gens):
     """The doc_lens -> field_stats stages exist once: index/builder.py
     (write_searchable) is the only Spark ``.write`` of those tables in the
     package, one call each. Microbuild's pyarrow ``_commit`` and pruning's
-    tier table are other writers by design."""
+    tier table are other writers by design. ``postings`` is the one
+    posting table: positions ride in it, so a store_positions build
+    commits no other table."""
     pkg = pathlib.Path(nlp4l_spark.__file__).parent
     tables = {"doc_lens", "segments", "postings", "term_stats", "field_stats"}
     writes = []
@@ -202,9 +217,20 @@ def test_searchable_tables_have_one_spark_writer():
                 writes += [
                     (path.relative_to(pkg).as_posix(), a.value)
                     for a in node.args
-                    if isinstance(a, ast.Constant) and a.value in tables
+                    if isinstance(a, ast.Constant) and isinstance(a.value, str)
                 ]
-    assert sorted(writes) == [("index/builder.py", t) for t in sorted(tables)]
+    assert sorted(w for w in writes if w[1] in tables) == [
+        ("index/builder.py", t) for t in sorted(tables)
+    ]
+    assert {t for _, t in writes if "post" in t} == {"postings"}
+    # the positions + term-vector build of pos_gens
+    d_full, _ = pos_gens
+    cat = IndexCatalog(d_full)
+    committed = {t for t in os.listdir(d_full) if cat.is_committed(t)}
+    assert committed == {
+        "stored", "doc_terms_fwd", "doc_lens", "segments", "postings",
+        "term_stats", "field_stats", "_lineage", "term_vectors",
+    }
 
 
 def test_compact_requires_forward_index(spark, tmp_path):
@@ -215,70 +241,106 @@ def test_compact_requires_forward_index(spark, tmp_path):
         compact(spark, [d0], str(tmp_path / "out"))
 
 
-def test_compact_carries_positions_and_vectors(spark, tmp_path):
-    """pos_postings + term_vectors survive compaction without
-    re-analysis; a deliberately tiny docs_per_shard forces the
-    row-splitting slow path at rebased shard boundaries. The compacted
-    index answers phrase queries identically to a single build and
-    passes the full offline integrity check."""
-    from nlp4l_spark.index import IndexBuilder, check_index
+@pytest.fixture(scope="module")
+def pos_gens(spark, tmp_path_factory):
+    """Two prefix-split positions + term-vector generations and their
+    single-index twin, shared by the positions compaction tests."""
+    from nlp4l_spark.index import IndexBuilder
 
+    root = tmp_path_factory.mktemp("mergepol_pos")
     full = synth_transcripts(spark, 600, num_partitions=3)
     convs = sorted(
         r["conv_id"] for r in full.select("conv_id").distinct().collect()
     )
     mid = convs[len(convs) // 2]
     b = IndexBuilder(store_positions=True, store_term_vectors=True)
-    d_full = str(tmp_path / "full")
-    d0, d1 = str(tmp_path / "g0"), str(tmp_path / "g1")
+    d_full = str(root / "full")
+    d = [str(root / "g0"), str(root / "g1")]
     b.build(full, d_full)
-    b.build(full.filter(F.col("conv_id") < mid), d0)
-    b.build(full.filter(F.col("conv_id") >= mid), d1)
-    out = str(tmp_path / "out")
-    cat = compact(spark, [d0, d1], out, docs_per_shard=97)
-    assert cat.is_committed("pos_postings")
+    b.build(full.filter(F.col("conv_id") < mid), d[0])
+    b.build(full.filter(F.col("conv_id") >= mid), d[1])
+    return d_full, d
+
+
+@pytest.fixture(scope="module")
+def pos_compacted(spark, pos_gens, tmp_path_factory):
+    _, d = pos_gens
+    out = str(tmp_path_factory.mktemp("mergepol_pos_compacted") / "out")
+    return out, compact(spark, d, out)
+
+
+PHRASES = ("w00010 w00020", "w00001 w00454", "w00002 w00003")
+
+
+def _same_hits(got, want):
+    assert [d for d, _ in got] == [d for d, _ in want], (got, want)
+    assert all(abs(a - b) <= 1e-9 for (_, a), (_, b) in zip(got, want))
+
+
+def _phrase_paths(s, phrase):
+    """The phrase top-10 of the driver reader, which the Spark postings
+    plan and the term_vectors path must equal (doc ids exact, scores
+    within 1e-9)."""
+    auto, *others = [
+        [(r["doc_id"], r["score"]) for r in s.search_phrase(
+            phrase, k=10, method=m
+        ).collect()]
+        for m in ("auto", "postings", "term_vectors")
+    ]
+    for other in others:
+        _same_hits(other, auto)
+    return auto
+
+
+def test_compact_carries_positions_and_vectors(spark, pos_gens, pos_compacted):
+    """Positions (in the forward index, so in the rebuilt postings) and
+    term_vectors survive compaction without re-analysis. The compacted
+    index answers phrase queries identically to a single build on every
+    path and passes the full offline integrity check."""
+    from nlp4l_spark.index import check_index
+    from nlp4l_spark.index.builder import has_positions
+
+    d_full, _ = pos_gens
+    out, cat = pos_compacted
+    assert has_positions(cat)
     assert cat.is_committed("term_vectors")
     comp = Searcher(spark, out)
     single = Searcher(spark, d_full)
     hit = False
-    for q in ('"w00010 w00020"', '"w00001 w00454"', '"w00002 w00003"'):
-        phrase = q.strip('"')
-        got = _rows(comp.search_phrase(phrase, k=10))
-        want = _rows(single.search_phrase(phrase, k=10))
-        assert got == want, phrase
+    for phrase in PHRASES:
+        got = _phrase_paths(comp, phrase)
+        _same_hits(got, _phrase_paths(single, phrase))
         hit = hit or bool(got)
+    assert hit
     # term_vectors: rebased union matches the single build row-for-row
     tv_c = cat.read(spark, "term_vectors")
-    tv_s = Searcher(spark, d_full).cat.read(spark, "term_vectors")
+    tv_s = single.cat.read(spark, "term_vectors")
     assert sorted(map(tuple, tv_c.collect())) == sorted(
         map(tuple, tv_s.collect())
     )
-    # offline integrity: postings/pos_postings/term_vectors all agree
+    # offline integrity: postings (with positions)/term_vectors agree
     report = check_index(spark, out).collect()
     bad = [(r["check"], r["detail"]) for r in report if not r["ok"]]
     assert report and not bad, bad
 
 
-def test_compact_expunges_deletes(spark, tmp_path):
+def test_compact_expunges_deletes(spark, pos_gens, tmp_path, oracle_phrase):
     """Lucene merge semantics: tombstoned docs leave the compacted
     generation and stats recompute. Surviving docIDs keep their
     federation numbering (holes where deleted). The independent Python
     OracleIndex over the surviving (rebased_id, text) pairs is the
-    referee for both ranking AND absolute BM25 scores; check_index
-    validates postings/pos_postings/term_vectors consistency after the
-    masked carry-over."""
-    from nlp4l_spark.index import IndexBuilder, check_index, delete_docs
+    referee for both ranking AND absolute BM25 scores, phrases included;
+    a deliberately tiny docs_per_shard splits the rebased doc range into
+    many shards; check_index validates postings (with positions) and
+    term_vectors after the masked carry-over."""
+    import shutil
+
+    from nlp4l_spark.index import check_index, delete_docs
     from nlp4l_spark.oracle import OracleIndex
 
-    full = synth_transcripts(spark, 500, num_partitions=2)
-    convs = sorted(
-        r["conv_id"] for r in full.select("conv_id").distinct().collect()
-    )
-    mid = convs[len(convs) // 2]
-    b = IndexBuilder(store_positions=True, store_term_vectors=True)
     d0, d1 = str(tmp_path / "g0"), str(tmp_path / "g1")
-    b.build(full.filter(F.col("conv_id") < mid), d0)
-    b.build(full.filter(F.col("conv_id") >= mid), d1)
+    for src, dst in zip(pos_gens[1], (d0, d1)):
+        shutil.copytree(src, dst)
     multi = MultiSearcher(spark, [d0, d1])
     base1 = multi.doc_bases[1]
     # delete a top hit from each generation (global ids span both)
@@ -290,7 +352,7 @@ def test_compact_expunges_deletes(spark, tmp_path):
         else:
             delete_docs(spark, d1, [g - base1])
     out = str(tmp_path / "out")
-    cat = compact(spark, [d0, d1], out)
+    cat = compact(spark, [d0, d1], out, docs_per_shard=97)
     # surviving corpus with federation numbering, minus deletions
     pairs = []
     for d, bb in ((d0, 0), (d1, base1)):
@@ -314,13 +376,14 @@ def test_compact_expunges_deletes(spark, tmp_path):
         want = [(d, round(s, 6)) for d, s in oracle.search(q, 10)]
         assert got == want, (q, got, want)
         assert not ({g for g, _ in got} & dels_global)
-    # phrase path: pos mask agrees with the term_vectors mask (two
-    # independent carry-over implementations), deleted docs gone
-    for ph in ("w00010 w00020", "w00001 w00454"):
-        via_pos = _rows(comp.search_phrase(ph, k=10, method="postings"))
-        via_tv = _rows(comp.search_phrase(ph, k=10, method="term_vectors"))
-        assert via_pos == via_tv, ph
-        assert not ({g for g, _ in via_pos} & dels_global)
+    # phrase paths: reader, Spark plan and term_vectors equal the oracle
+    texts = dict(pairs)
+    cut = " ".join(pairs[5][1].split()[1:3])  # a phrase a survivor holds
+    for ph in PHRASES + (cut,):
+        got = _phrase_paths(comp, ph)
+        _same_hits(got, oracle_phrase(oracle, texts, ph, 10))
+        assert not ({g for g, _ in got} & dels_global)
+    assert got
     report = check_index(spark, out).collect()
     bad = [(r["check"], r["detail"]) for r in report if not r["ok"]]
     assert report and not bad, bad

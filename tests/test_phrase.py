@@ -91,9 +91,10 @@ def test_index_path_matches_corpus_path(spark, docs_df, indexed):
 
 
 def test_phrase_postings_plan_has_no_corpus_join(spark, indexed):
-    """The scale path's plan: pushed In(term) scan of pos_postings ->
-    per-shard Arrow task -> TakeOrderedAndProject. No join of any kind —
-    the old term_vectors path built an n-way doc_id join."""
+    """The scale path's plan: pushed In(term) scan of the postings (with
+    their pos_enc column) -> per-shard Arrow task ->
+    TakeOrderedAndProject. No join of any kind — the old term_vectors
+    path built an n-way doc_id join."""
     s = Searcher(spark, indexed)
     plan = (
         s.search_phrase("london bridge", k=10, method="postings")
@@ -103,9 +104,10 @@ def test_phrase_postings_plan_has_no_corpus_join(spark, indexed):
     )
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
     assert "TakeOrderedAndProject" in plan
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert any("term" in ln and "In(" in ln for ln in pushed), pushed
-    # auto dispatch prefers the postings path when the table exists
+    scans = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert any("term" in ln and "In(" in ln for ln in scans), scans
+    assert all("/postings" in ln and "pos_enc" in ln for ln in scans), scans
+    # auto dispatch prefers the postings path when they carry positions
     auto = [
         (r["doc_id"], round(r["score"], 6))
         for r in s.search_phrase("london bridge", k=10).collect()
@@ -128,6 +130,44 @@ def test_phrase_without_term_vectors_raises(spark, tmp_path, docs_df):
     IndexBuilder().build(df, d)
     with pytest.raises(ValueError, match="term_vectors"):
         Searcher(spark, d).search_phrase("london bridge")
+
+
+def test_phrase_across_stopword_hole(spark, tmp_path):
+    """A phrase holding a stopword keeps the stopword's position on the
+    query side too (Lucene's query builder keeps the position
+    increment): "silver and gold" matches verse 3, which holds that
+    exact text, on every phrase path with the same score, while "silver
+    gold" (no hole) matches nothing."""
+    from nlp4l_spark.data import LONDON_BRIDGE_VERSES
+    from nlp4l_spark.data.fixtures import transcripts_df
+    from nlp4l_spark.oracle import OracleIndex
+
+    d = str(tmp_path / "verses")
+    IndexBuilder(store_term_vectors=True, store_positions=True).build(
+        transcripts_df(spark), d
+    )
+    s = Searcher(spark, d)
+    ix = OracleIndex.build(list(enumerate(LONDON_BRIDGE_VERSES)))
+    tf = LONDON_BRIDGE_VERSES[3].lower().count("silver and gold")
+    idf_sum = ix.idf("silver") + ix.idf("gold")
+    want = idf_sum * tf * (K1 + 1) / (
+        tf + K1 * (1 - B + B * ix.doc_lens[3] / ix.avgdl)
+    )
+
+    def paths(q):
+        return {
+            "auto": s.search_phrase(q, k=10),
+            "postings": s.search_phrase(q, k=10, method="postings"),
+            "term_vectors": s.search_phrase(q, k=10, method="term_vectors"),
+            "query tree": s.search_lucene(f'"{q}"', k=10),
+        }
+
+    for name, df in paths("silver and gold").items():
+        rows = [(r["doc_id"], r["score"]) for r in df.collect()]
+        assert [doc for doc, _ in rows] == [3], (name, rows)
+        assert abs(rows[0][1] - want) <= 1e-9, (name, rows, want)
+    for name, df in paths("silver gold").items():
+        assert df.collect() == [], name
 
 
 # ---------------- k-term sloppy phrase (session 13) ------------------------ #

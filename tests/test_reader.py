@@ -14,19 +14,17 @@ job at all.
 from __future__ import annotations
 
 import heapq
-import re
 import shutil
 
 import pytest
 
-from nlp4l_spark.analysis.analyzer import TOKEN_PATTERN
 from nlp4l_spark.data import LONDON_BRIDGE_VERSES
 from nlp4l_spark.data.fixtures import transcripts_df
 from nlp4l_spark.data.transcripts import synth_queries, synth_transcripts
-from nlp4l_spark.index import GenerationLog, IndexBuilder
+from nlp4l_spark.index import GenerationLog, IndexBuilder, check_index
 from nlp4l_spark.index.deletes import delete_docs, expunge_deletes
 from nlp4l_spark.index.pruning import prune_postings
-from nlp4l_spark.oracle import B, K1, OracleIndex
+from nlp4l_spark.oracle import OracleIndex
 from nlp4l_spark.search import Searcher
 from nlp4l_spark.search import reader as reader_mod
 
@@ -110,30 +108,6 @@ def _oracle_and(ix: OracleIndex, q: str, k: int, dead=frozenset()):
     return heapq.nsmallest(k, scores.items(), key=lambda kv: (-kv[1], kv[0]))
 
 
-def _oracle_phrase(ix: OracleIndex, texts: dict, q: str, k: int,
-                   dead=frozenset()):
-    """Exact phrase over the full token stream (stopwords keep their
-    positions); score = Σ idf · BM25 tf-norm of the phrase frequency."""
-    terms = ix.analyzer.tokenize(q)
-    if not terms or any(t not in ix.postings for t in terms):
-        return []
-    idf_sum = sum(ix.idf(t) for t in terms)
-    n = len(terms)
-    tok = re.compile(TOKEN_PATTERN)
-    scores = {}
-    for d, _ in ix.postings[terms[0]]:
-        if d in dead:
-            continue
-        toks = tok.findall(texts[d].lower())
-        tf = sum(1 for i in range(len(toks) - n + 1) if toks[i : i + n] == terms)
-        if tf:
-            dl = ix.doc_lens[d]
-            scores[d] = idf_sum * tf * (K1 + 1.0) / (
-                tf + K1 * (1.0 - B + B * dl / ix.avgdl)
-            )
-    return heapq.nsmallest(k, scores.items(), key=lambda kv: (-kv[1], kv[0]))
-
-
 def _phrases(docs, n=6):
     """Two- and three-word phrases cut from stored texts."""
     out = []
@@ -181,13 +155,15 @@ def _check_batch(s, queries, want=None):
 def _check_phrase(s, q, k, want=None):
     auto = _rows(s.search_phrase(q, k=k))
     _same(auto, _rows(s.search_phrase(q, k=k, method="postings")))
+    if s.cat.is_committed("term_vectors"):
+        _same(auto, _rows(s.search_phrase(q, k=k, method="term_vectors")))
     if want is not None:
         _same(auto, want)
     return len(auto)
 
 
 # --------------------------------------------------------------------- #
-def test_auto_matches_spark_and_oracle(spark, idx, oracle):
+def test_auto_matches_spark_and_oracle(spark, idx, oracle, oracle_phrase):
     s = Searcher(spark, idx)
     for q in OR_QUERIES:
         _check_or(s, q, K, oracle.search(q, K), dataframe=True)
@@ -199,12 +175,12 @@ def test_auto_matches_spark_and_oracle(spark, idx, oracle):
     texts = dict(docs)
     hits = 0
     for q in _phrases(docs) + [STOP, UNKNOWN]:
-        hits += _check_phrase(s, q, K, _oracle_phrase(oracle, texts, q, K))
+        hits += _check_phrase(s, q, K, oracle_phrase(oracle, texts, q, K))
     assert hits > 0
     assert s._reader_cache is not None  # the routed calls took the reader
 
 
-def test_k_larger_than_hit_count(spark, idx, oracle):
+def test_k_larger_than_hit_count(spark, idx, oracle, oracle_phrase):
     s = Searcher(spark, idx)
     q = "needle00"
     hits = _check_or(s, q, 500, oracle.search(q, 500))
@@ -216,10 +192,10 @@ def test_k_larger_than_hit_count(spark, idx, oracle):
     )
     docs = _docs(spark, idx)
     ph = _phrases(docs)[0]
-    _check_phrase(s, ph, 500, _oracle_phrase(oracle, dict(docs), ph, 500))
+    _check_phrase(s, ph, 500, oracle_phrase(oracle, dict(docs), ph, 500))
 
 
-def test_tombstoned_docs(spark, deleted_idx, oracle):
+def test_tombstoned_docs(spark, deleted_idx, oracle, oracle_phrase):
     """Deletes keep collection stats frozen, so the oracle over every doc
     with the deleted ids filtered out is the reference."""
     s = Searcher(spark, deleted_idx)
@@ -235,7 +211,7 @@ def test_tombstoned_docs(spark, deleted_idx, oracle):
     )
     docs = _docs(spark, deleted_idx)
     for q in _phrases(docs):
-        _check_phrase(s, q, K, _oracle_phrase(oracle, dict(docs), q, K, dead))
+        _check_phrase(s, q, K, oracle_phrase(oracle, dict(docs), q, K, dead))
 
 
 def test_pruned_tier(spark, idx):
@@ -266,14 +242,16 @@ def test_microbuild_generation(spark, micro_dir):
     )
 
 
-def test_searcher_follows_expunge_deletes(spark, tmp_path):
+def test_searcher_follows_expunge_deletes(spark, tmp_path, oracle_phrase):
     """``expunge_deletes`` rewrites the index in place under a live
     searcher: docs renumbered, stats recomputed, tombstones gone. The
     searcher's next call reloads stats, tombstones and reader as one unit
     (no Spark job) and then answers on every method exactly as a fresh
     searcher and the OracleIndex over the surviving docs do."""
     path = str(tmp_path / "idx")
-    IndexBuilder(store_positions=True).build(transcripts_df(spark), path)
+    IndexBuilder(store_positions=True, store_term_vectors=True).build(
+        transcripts_df(spark), path
+    )
     delete_docs(spark, path, [0, 1, 2])
     s = Searcher(spark, path)
     queries = ["build", "silver gold", "wood clay needles pins"]
@@ -295,8 +273,11 @@ def test_searcher_follows_expunge_deletes(spark, tmp_path):
         s, [(i, q, K) for i, q in enumerate(queries)],
         lambda q, k: oracle.search(q, k),
     )
-    for ph in ("fair lady", "wash away", "stone so strong"):
-        assert _check_phrase(s, ph, K, _oracle_phrase(oracle, survivors, ph, K))
+    for ph in ("fair lady", "wash away", "stone so strong", "silver and gold"):
+        assert _check_phrase(s, ph, K, oracle_phrase(oracle, survivors, ph, K))
+    # check_index passes on the rewritten index
+    report = check_index(spark, path).collect()
+    assert report and all(r["ok"] for r in report), report
     assert s.num_docs == fresh.num_docs == len(survivors)
     assert s.deleted_ids == frozenset()
 
@@ -376,3 +357,25 @@ def test_gate_falls_back_to_spark(spark, idx, monkeypatch):
         if name in ("or", "and", "batch", "phrase"):
             assert jobs, f"{name!r} stayed on the driver past the gate"
         assert sorted(map(tuple, got)) == sorted(map(tuple, want)), name
+
+
+def test_gate_counts_only_the_columns_a_call_reads(spark, idx, monkeypatch):
+    """On a positions index the gate counts the column chunks a call
+    reads: an OR call leaves pos_enc out. With the cap at exactly the OR
+    bytes of a phrase's terms, the OR query over them stays on the driver
+    while the phrase, which reads pos_enc too, falls back to Spark."""
+    phrase = _phrases(_docs(spark, idx))[0]
+    s = Searcher(spark, idx)
+    terms, _ = s._phrase_terms(phrase)
+    r = s._reader
+    or_bytes = r.postings.selected_bytes(terms)
+    assert 0 < or_bytes < r.positions.selected_bytes(
+        terms, reader_mod.PHRASE_COLUMNS
+    )
+    monkeypatch.setattr(reader_mod, "MAX_POSTING_BYTES", or_bytes)
+    _, jobs = _jobs(spark, "gate-cols-or", lambda: s.search(phrase, k=K).collect())
+    assert jobs == []
+    _, jobs = _jobs(
+        spark, "gate-cols-phrase", lambda: s.search_phrase(phrase, k=K).collect()
+    )
+    assert jobs

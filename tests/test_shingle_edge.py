@@ -69,7 +69,7 @@ def test_edge_token_stream_posinc_zero():
     assert grams == [("ve", 0), ("vec", 0), ("vector", 0)]
 
 
-def test_shingle_index_search(spark, tmp_path):
+def test_shingle_index_search(spark, tmp_path, phrase_paths_agree):
     """An index built with the shingle analyzer holds the bigram terms;
     querying with the SAME analyzer matches through the shingle term
     (tokenize('quick brown') emits it), so phrase-frequency ranking
@@ -82,7 +82,10 @@ def test_shingle_index_search(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "orig long, text string")
     idx = str(tmp_path / "sh_idx")
-    IndexBuilder(analyzer=an, sort_cols=("orig",)).build(df, idx)
+    IndexBuilder(
+        analyzer=an, sort_cols=("orig",), store_positions=True,
+        store_term_vectors=True,
+    ).build(df, idx)
     terms = {
         r["term"] for r in IndexCatalog(idx).read(spark, "term_stats").collect()
     }
@@ -91,6 +94,12 @@ def test_shingle_index_search(spark, tmp_path):
     # doc 0 matches quick, brown AND quick_brown; doc 1 only the unigrams
     assert hits[0]["doc_id"] == 0 and len(hits) >= 2
     assert hits[0]["score"] > hits[1]["score"]
+    # shingles never count toward dl, in the positions as in doc_lens:
+    # every phrase path scores alike ("brown fox" matches through the
+    # shingle, which sits at its first word's position)
+    s = Searcher(spark, idx, analyzer=an)
+    for q in ("fox", "brown fox", "quick brown fox"):
+        phrase_paths_agree(s, q)
 
 
 def test_edge_index_search_as_you_type(spark, tmp_path):

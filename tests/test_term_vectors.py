@@ -82,10 +82,11 @@ def test_token_stream_empty(text):
 
 
 def test_pos_postings_table_decodes_to_exact_token_stream(spark, tmp_path):
-    """Whole-table check of the positions shards: decoding EVERY
-    (term, shard) segment must reproduce exactly the per-(doc, term)
-    position lists of the analyzer's token stream — builder grouping,
-    lexsort gather and codec round-trip all at once."""
+    """Whole-table check of the positions in the postings: decoding
+    EVERY (term, shard) row's pos_enc (one run of tf positions per
+    posting) must reproduce exactly the per-(doc, term) position lists
+    of the analyzer's token stream — tokenize UDF, segment build, merge
+    gather and codec round-trip all at once."""
     import numpy as np
 
     from nlp4l_spark.analysis import STANDARD_ANALYZER
@@ -110,10 +111,10 @@ def test_pos_postings_table_decodes_to_exact_token_stream(spark, tmp_path):
 
     got: dict[tuple, list[int]] = {}
     got_dl: dict[tuple, int] = {}
-    for row in cat.read(spark, "pos_postings").collect():
+    for row in cat.read(spark, "postings").collect():
         d = codec.decode_doc_ids(row["doc_ids_enc"])
         dl = codec.decode_tfs(row["dls_enc"])
-        pl = codec.decode_tfs(row["pos_lens_enc"])
+        pl = codec.decode_tfs(row["tfs_enc"])
         flat = codec.decode_positions(row["pos_enc"], pl)
         off = np.concatenate(([0], np.cumsum(pl)))
         assert row["df"] == d.size

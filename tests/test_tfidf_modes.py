@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import math
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -103,17 +104,22 @@ def test_distributed_tfidf_matches_scalar(spark, oracle5):
         [(i, t) for i, t in enumerate(FIVE_DOCS)], "doc_id long, text string"
     )
     corpus = Corpus(df)
-    for tf_mode in ("n", "l", "b", "w"):
-        for idf_mode in ("n", "t", "T", "p", "P"):
-            rows = tfidf.tf_idf_weights(
-                corpus, tf_mode=tf_mode, idf_mode=idf_mode
-            ).collect()
-            n = oracle5.num_docs
-            for r in rows:
-                tf = dict(oracle5.postings[r["term"]])[r["doc_id"]]
-                expected = tfidf.tf_value(tf, tf_mode) * tfidf.idf_value(
-                    oracle5.df(r["term"]), idf_mode, n
-                )
-                assert r["weight"] == pytest.approx(expected, abs=1e-12), (
-                    tf_mode, idf_mode, r["term"],
-                )
+    modes = [(t, i) for t in ("n", "l", "b", "w") for i in ("n", "t", "T", "p", "P")]
+    # the 20 collects are independent small jobs: run them 4 at a time
+    with ThreadPoolExecutor(4) as pool:
+        results = list(pool.map(
+            lambda m: tfidf.tf_idf_weights(
+                corpus, tf_mode=m[0], idf_mode=m[1]
+            ).collect(),
+            modes,
+        ))
+    for (tf_mode, idf_mode), rows in zip(modes, results):
+        n = oracle5.num_docs
+        for r in rows:
+            tf = dict(oracle5.postings[r["term"]])[r["doc_id"]]
+            expected = tfidf.tf_value(tf, tf_mode) * tfidf.idf_value(
+                oracle5.df(r["term"]), idf_mode, n
+            )
+            assert r["weight"] == pytest.approx(expected, abs=1e-12), (
+                tf_mode, idf_mode, r["term"],
+            )
