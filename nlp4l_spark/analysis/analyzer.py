@@ -620,7 +620,8 @@ class Analyzer:
     def term_counts_frame(self, texts) -> pd.DataFrame:
         """The term_counts_udf body as a plain pandas function — shared
         by the Arrow UDF and the driver-side micro-generation builder
-        (index/microbuild.py), so the two paths cannot diverge."""
+        (index/microbuild.py), so the two paths cannot diverge. With
+        positions both take ``term_positions_frame`` instead."""
         terms_out: list[list[str]] = []
         tfs_out: list[list[int]] = []
         dls: list[int] = []

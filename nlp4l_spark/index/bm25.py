@@ -5,8 +5,8 @@ Lucene BM25Similarity with its defaults (k1=1.2, b=0.75) — the ranking
 NLP4L's ISearcher uses. A term's contribution to a document's score is
 ``idf(num_docs, df) * bm25_impact(tf, dl, avgdl)``; idf is constant per
 term, so ``idf * max(impact)`` over a posting block is that block's exact
-upper bound (the block-max metadata IndexBuilder and microbuild write and
-WAND/MaxScore read).
+upper bound (the block-max metadata ``codec.encode_runs`` writes for every
+index writer and WAND/MaxScore read).
 
 ``bm25_impact`` uses plain arithmetic operators only, so one call site
 shape serves every engine: NumPy arrays (build-time block-max, the

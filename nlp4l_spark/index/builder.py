@@ -37,7 +37,8 @@ Stages (each a snapshot-committed table; resume skips committed stages):
 
 doc_lens through field_stats are ``write_searchable``: the one Spark path
 from a committed forward index to the searchable tables, which
-``mergepolicy.compact`` runs as well.
+``mergepolicy.compact`` runs as well; ``microbuild.write_searchable_arrow``
+is its driver twin. Every posting row is encoded by ``codec.encode_runs``.
 
 Scale notes (10^12 turns):
 * The only wide shuffles are the docID range partition and the
@@ -68,7 +69,6 @@ from pyspark.sql import types as T
 
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
 from nlp4l_spark.index import codec
-from nlp4l_spark.index.bm25 import bm25_impact
 from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.index.docids import assign_doc_ids
 
@@ -113,10 +113,56 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
-def _with_positions(schema: T.StructType) -> T.StructType:
-    """``schema`` plus the optional ``pos_enc`` column: each posting's
-    run of tf positions, gap-reset per posting (codec.encode_positions),
-    so rows of disjoint doc ranges concatenate."""
+DOC_LENS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("dl", T.IntegerType()),
+    ]
+)
+
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
+        T.StructField("tlen", T.IntegerType()),
+    ]
+)
+
+FIELD_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("field", T.StringType()),
+        T.StructField("num_docs", T.LongType()),
+        T.StructField("sum_dl", T.LongType()),
+        T.StructField("avgdl", T.DoubleType()),
+        T.StructField("uniq_terms", T.LongType()),
+    ]
+)
+
+# the build's _lineage stage (turns_tokenized is an int below 2^31 docs)
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("stage", T.StringType()),
+        T.StructField("partition_id", T.IntegerType()),
+        T.StructField("turns_tokenized", T.IntegerType()),
+        T.StructField("postings_emitted", T.LongType()),
+        T.StructField("bytes_compressed", T.LongType()),
+    ]
+)
+
+
+def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """``df``'s columns in ``schema``'s order and types."""
+    return df.select([F.col(f.name).cast(f.dataType) for f in schema])
+
+
+def with_positions(schema: T.StructType, positions: bool) -> T.StructType:
+    """``schema`` plus, with ``positions``, the optional ``pos_enc``
+    column: each posting's run of tf positions, gap-reset per posting
+    (codec.encode_positions), so rows of disjoint doc ranges
+    concatenate."""
+    if not positions:
+        return schema
     return T.StructType(
         schema.fields + [T.StructField("pos_enc", T.BinaryType())]
     )
@@ -361,7 +407,9 @@ def write_searchable(
     forward index with a ``positions`` column gives segments and
     postings a ``pos_enc`` column. Returns the committed ``segments``
     table, which the builder's ``_lineage`` stage reads too (each read
-    infers the parquet schema with a Spark job)."""
+    infers the parquet schema with a Spark job). The driver harness,
+    ``microbuild.write_searchable_arrow``, writes the same tables on
+    the driver under the same contract."""
     avgdl = (sum_dl / num_docs) if num_docs else 0.0
     if not (done("doc_lens") and done("segments")):
         # one read for both stages: each read infers the parquet schema
@@ -370,7 +418,7 @@ def write_searchable(
 
     if not done("doc_lens"):
         cat.write(
-            fwd.select("doc_id", "dl"),
+            _conform(fwd, DOC_LENS_SCHEMA),
             "doc_lens",
             sort_by=["doc_id"],
             counters={"num_docs": num_docs, "sum_dl": sum_dl},
@@ -391,7 +439,7 @@ def write_searchable(
                 fwd.sortWithinPartitions("doc_id")
                 .mapInPandas(
                     _segment_builder(docs_per_shard, positions),
-                    _with_positions(SEGMENT_SCHEMA) if positions else SEGMENT_SCHEMA,
+                    with_positions(SEGMENT_SCHEMA, positions),
                 )
             )
             cat.write(segs, "segments")
@@ -413,7 +461,7 @@ def write_searchable(
             .sortWithinPartitions("term", "shard", "min_doc")
             .mapInPandas(
                 _segment_merger(avgdl, positions),
-                _with_positions(POSTINGS_SCHEMA) if positions else POSTINGS_SCHEMA,
+                with_positions(POSTINGS_SCHEMA, positions),
             )
         )
         cat.write(merged, "postings", sort_by=["term"])
@@ -422,14 +470,18 @@ def write_searchable(
     # term dictionary
     if not done("term_stats"):
         cat.write(
-            cat.read(spark, "postings")
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            # materialized term length: fuzzy expansion pushes the exact
-            # Levenshtein length bound |len - |q|| <= max_edits down to
-            # the parquet scan instead of levenshtein()-scanning the
-            # whole dictionary (search/engine.py::search_fuzzy)
-            .withColumn("tlen", F.length("term").cast("int")),
+            _conform(
+                cat.read(spark, "postings")
+                .groupBy("term")
+                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+                # materialized term length: fuzzy expansion pushes the
+                # exact Levenshtein length bound |len - |q|| <= max_edits
+                # down to the parquet scan instead of levenshtein()-
+                # scanning the whole dictionary (search/engine.py::
+                # search_fuzzy)
+                .withColumn("tlen", F.length("term")),
+                TERM_STATS_SCHEMA,
+            ),
             "term_stats",
             sort_by=["term"],
         )
@@ -439,8 +491,7 @@ def write_searchable(
         uniq = cat.row_count("term_stats")  # parquet footers, no job
         cat.write(
             spark.createDataFrame(
-                [(text_col, num_docs, sum_dl, avgdl, uniq)],
-                "field string, num_docs long, sum_dl long, avgdl double, uniq_terms long",
+                [(text_col, num_docs, sum_dl, avgdl, uniq)], FIELD_STATS_SCHEMA
             ),
             "field_stats",
         )
@@ -479,30 +530,6 @@ def _clamped_splits(spark, cat: IndexCatalog, name: str):
 CHUNK_POSTINGS = 4_000_000  # flush threshold: bounds builder task memory
 
 
-def _run_gather(lens: np.ndarray, order: np.ndarray) -> np.ndarray:
-    """Index that reorders a flat array of per-posting runs (posting i
-    owns ``lens[i]`` consecutive values) into posting order ``order``."""
-    starts = np.cumsum(lens) - lens
-    ol = lens[order]
-    return np.repeat(starts[order] - (np.cumsum(ol) - ol), ol) + np.arange(
-        int(ol.sum()), dtype=np.int64
-    )
-
-
-def _encode_position_runs(p, lens, s_l, e_l) -> list[bytes]:
-    """pos_enc of each output row holding postings [s, e): the
-    codec.encode_positions bytes of their runs (posting i owns ``lens[i]``
-    positions of flat ``p``), from ONE varbyte pass sliced per row."""
-    pstart = np.concatenate(([0], np.cumsum(lens)))
-    gaps = np.empty(p.size, dtype=np.uint64)
-    gaps[1:] = (p[1:] - p[:-1]).astype(np.uint64)
-    firsts = pstart[:-1][lens > 0]
-    gaps[firsts] = (p[firsts] + 1).astype(np.uint64)  # per-posting reset
-    buf, blen = codec.varbyte_encode_with_lengths(gaps)
-    cum = np.concatenate(([0], np.cumsum(blen)))
-    return [buf[cum[pstart[s]] : cum[pstart[e]]] for s, e in zip(s_l, e_l)]
-
-
 def _segment_builder(docs_per_shard: int, positions: bool = False):
     """mapInPandas fn: forward-index partition -> encoded posting segments
     (with ``positions``, each posting's positions ride along as pos_enc).
@@ -522,7 +549,7 @@ def _segment_builder(docs_per_shard: int, positions: bool = False):
         codes, uniq_terms = pd.factorize(t, sort=False)
         order = np.lexsort((d, shards, codes))
         if p is not None:
-            p = p[_run_gather(f, order)]
+            p = p[codec.gather_runs(f, order)]
         d, l, f = d[order], l[order], f[order]
         codes, shards = codes[order], shards[order]
         change = np.flatnonzero(
@@ -530,51 +557,14 @@ def _segment_builder(docs_per_shard: int, positions: bool = False):
         )
         starts = np.concatenate(([0], change + 1))
         ends = np.concatenate((change + 1, [codes.size]))
-        # ONE varbyte pass over the whole partition, then per-run byte
-        # slicing — a per-run encode call is numpy-fixed-cost bound at
-        # ~vocab_size runs per partition (measured ~3x slower stage)
-        gaps = np.empty(d.size, dtype=np.uint64)
-        gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)
-        gaps[starts] = (d[starts] + 1).astype(np.uint64)  # run-start reset
-        doc_buf, doc_len = codec.varbyte_encode_with_lengths(gaps)
-        tf_buf, tf_len = codec.varbyte_encode_with_lengths(f.astype(np.uint64))
-        dl_buf, dl_len = codec.varbyte_encode_with_lengths(l.astype(np.uint64))
-        doc_cum = np.concatenate(([0], np.cumsum(doc_len)))
-        tf_cum = np.concatenate(([0], np.cumsum(tf_len)))
-        dl_cum = np.concatenate(([0], np.cumsum(dl_len)))
-        cf_all = np.add.reduceat(f, starts)
-        s_l, e_l = starts.tolist(), ends.tolist()
-        pos = (
-            {"pos_enc": _encode_position_runs(p, f, s_l, e_l)}
-            if p is not None
-            else {}
-        )
         return pd.DataFrame(
             {
                 "term": uniq_terms[codes[starts]],
                 "shard": shards[starts],
                 "pid": np.full(starts.size, pid, dtype=np.int32),
-                "df": ends - starts,
-                "cf": cf_all,
-                "min_doc": d[starts],
-                "max_doc": d[ends - 1],
-                "doc_ids_enc": [
-                    doc_buf[doc_cum[s] : doc_cum[e]] for s, e in zip(s_l, e_l)
-                ],
-                "tfs_enc": [
-                    tf_buf[tf_cum[s] : tf_cum[e]] for s, e in zip(s_l, e_l)
-                ],
-                "dls_enc": [
-                    dl_buf[dl_cum[s] : dl_cum[e]] for s, e in zip(s_l, e_l)
-                ],
-                **pos,
+                **codec.encode_runs(d, f, l, starts, ends, positions=p),
             }
         )
-
-    COLS = (
-        "term", "shard", "pid", "df", "cf", "min_doc", "max_doc",
-        "doc_ids_enc", "tfs_enc", "dls_enc",
-    ) + (("pos_enc",) if positions else ())
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -632,7 +622,9 @@ def _segment_builder(docs_per_shard: int, positions: bool = False):
         if doc_parts:
             yield flush()
         elif not emitted:
-            yield pd.DataFrame({k: [] for k in COLS})
+            yield pd.DataFrame(
+                {f.name: [] for f in with_positions(SEGMENT_SCHEMA, positions)}
+            )
 
     return build
 
@@ -648,8 +640,8 @@ def _segment_merger(avgdl: float, positions: bool = False):
     idf * impact, so block upper bound = idf * max_impact is tight.
 
     All numeric work is BULK per Arrow batch (one concat varbyte decode,
-    one lexsort ordering every run's postings at once, one varbyte
-    re-encode sliced per run) — a per-run decode/encode loop is
+    one lexsort ordering every run's postings at once, one
+    ``codec.encode_runs`` call) — a per-run decode/encode loop is
     numpy-fixed-cost bound at ~10^5 runs per partition. The only carry
     across batches is the last (possibly incomplete) run's decoded
     arrays, so memory stays O(batch + one posting list)."""
@@ -678,69 +670,20 @@ def _segment_merger(avgdl: float, positions: bool = False):
         run_of_val = np.repeat(run_id_of_row, row_df)
         order = np.lexsort((d, run_of_val))
         if p is not None:
-            p = p[_run_gather(f, order)]
+            p = p[codec.gather_runs(f, order)]
         d, f, l = d[order], f[order], l[order]
         run_of_val = run_of_val[order]  # still non-decreasing
         vstarts = np.concatenate(
             ([0], 1 + np.flatnonzero(np.diff(run_of_val) != 0))
         )
         vends = np.concatenate((vstarts[1:], [d.size]))
-        impact = bm25_impact(f, l, avgdl)
-        # bulk re-encode with per-run gap resets
-        gaps = np.empty(d.size, dtype=np.uint64)
-        gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)
-        gaps[vstarts] = (d[vstarts] + 1).astype(np.uint64)
-        doc_buf, doc_len = codec.varbyte_encode_with_lengths(gaps)
-        tf_buf, tf_len = codec.varbyte_encode_with_lengths(f.astype(np.uint64))
-        dl_buf, dl_len = codec.varbyte_encode_with_lengths(l.astype(np.uint64))
-        doc_cum = np.concatenate(([0], np.cumsum(doc_len)))
-        tf_cum = np.concatenate(([0], np.cumsum(tf_len)))
-        dl_cum = np.concatenate(([0], np.cumsum(dl_len)))
-        # per-block skip metadata: global block starts never cross runs
-        bsz = codec.BLOCK_SIZE
-        blk_starts = np.concatenate(
-            [np.arange(s, e, bsz) for s, e in zip(vstarts.tolist(), vends.tolist())]
-        )
-        blk_ends = np.concatenate((blk_starts[1:], [d.size]))
-        blk_max = np.maximum.reduceat(impact, blk_starts)
-        blk_last = d[blk_ends - 1]
-        blocks_per_run = (vends - vstarts + bsz - 1) // bsz
-        blk_run_cum = np.concatenate(([0], np.cumsum(blocks_per_run)))
-        # one flat dict build, then per-run slicing — the nested
-        # per-run/per-block loop was the stage's python hot spot
-        flat = [
-            {"last_doc": ld, "max_impact": mi}
-            for ld, mi in zip(blk_last.tolist(), blk_max.tolist())
-        ]
-        cum = blk_run_cum.tolist()
-        block_lists = [
-            flat[a:b] for a, b in zip(cum[:-1], cum[1:])
-        ]
-        s_l, e_l = vstarts.tolist(), vends.tolist()
-        pos = (
-            {"pos_enc": _encode_position_runs(p, f, s_l, e_l)}
-            if p is not None
-            else {}
-        )
         return pd.DataFrame(
             {
                 "term": terms[run_starts],
                 "shard": shards[run_starts],
-                "df": vends - vstarts,
-                "cf": np.add.reduceat(f, vstarts),
-                "min_doc": d[vstarts],
-                "max_doc": d[vends - 1],
-                "doc_ids_enc": [
-                    doc_buf[doc_cum[s] : doc_cum[e]] for s, e in zip(s_l, e_l)
-                ],
-                "tfs_enc": [
-                    tf_buf[tf_cum[s] : tf_cum[e]] for s, e in zip(s_l, e_l)
-                ],
-                "dls_enc": [
-                    dl_buf[dl_cum[s] : dl_cum[e]] for s, e in zip(s_l, e_l)
-                ],
-                "block_max": block_lists,
-                **pos,
+                **codec.encode_runs(
+                    d, f, l, vstarts, vends, positions=p, avgdl=avgdl
+                ),
             }
         )
 

@@ -23,6 +23,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
@@ -77,12 +78,50 @@ class IndexCatalog:
             writer = writer.partitionBy(*partition_by)
         t0 = time.time()
         writer.parquet(path)
+        return self._commit(name, t0, df.schema, partition_by, counters)
+
+    def write_arrow(
+        self,
+        table,
+        name: str,
+        *,
+        schema: StructType,
+        counters: dict | None = None,
+    ) -> dict:
+        """The driver twin of ``write``: one parquet file plus the same
+        manifest, with no Spark job. ``schema`` is the table's Spark
+        declaration; ``table`` is a pyarrow Table, or a dict of columns
+        that becomes one under the declaration's arrow form
+        (``to_arrow_schema``). Overwrites like ``write``: a prior table
+        dir is cleared, so a rebuild into a reused directory can't
+        accumulate part files."""
+        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if not isinstance(table, pa.Table):
+            table = pa.table(table, schema=to_arrow_schema(schema))
+        path = self.table_path(name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        t0 = time.time()
+        pq.write_table(
+            table,
+            os.path.join(path, f"part-00000-{uuid.uuid4().hex}.parquet"),
+            compression="snappy",
+        )
+        return self._commit(name, t0, schema, None, counters)
+
+    def _commit(self, name, t0, schema, partition_by, counters) -> dict:
+        """Write the table's manifest: its snapshot commit."""
         man = {
             "table": name,
             "snapshot_id": uuid.uuid4().hex,
             "write_secs": round(time.time() - t0, 3),
             "committed_at": time.time(),
-            "schema": df.schema.jsonValue(),
+            "schema": schema.jsonValue(),
             "partition_by": partition_by or [],
             "counters": counters or {},
         }

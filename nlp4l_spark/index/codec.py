@@ -1,5 +1,6 @@
-"""Posting-list codec: delta-gap + varbyte docID/TF blocks with block-max
-metadata.
+"""Posting-list codec: delta-gap + varbyte docID/TF/dl blocks with
+block-max metadata, and ``encode_runs``, the one encoder of a posting
+row that every index writer calls.
 
 Reference semantics: Lucene posting lists enumerated via TermDocs/Doc
 (/root/reference/app/org/nlp4l/lucene/Terms.scala:35-157). Lucene 7 stores
@@ -9,15 +10,17 @@ bounded postings) with a vectorized NumPy varbyte codec writing to Spark
 ``binary`` columns — per north_star (BASELINE.json:6): "delta-gap +
 varbyte-compressed docID/TF blocks ... with block-max metadata".
 
-Encoding:
-* doc_ids: strictly increasing int64 -> gaps (first gap = doc_id[0] + 1 so
-  every gap >= 1) -> LEB128-style varbyte, little-endian 7-bit groups, high
-  bit set = continuation.
-* tfs: raw values (>= 1) varbyte-encoded the same way.
-* block_max: one entry per BLOCK_SIZE postings: (last_doc, max_tf).
-  max_tf yields an admissible BM25 upper bound per block:
-  ub = idf * (k1+1) * max_tf / (max_tf + k1*(1-b))   [dl -> 0 bound]
-  which is what block-max WAND needs for safe pruning.
+Encoding of one posting row (one (term, shard) run of postings):
+* doc_ids_enc: strictly increasing int64 -> gaps (first gap = doc_id[0] + 1
+  so every gap >= 1) -> LEB128-style varbyte, little-endian 7-bit groups,
+  high bit set = continuation.
+* tfs_enc, dls_enc: raw tf (>= 1) and doc length per posting, varbyte.
+* pos_enc (optional): each posting's run of tf positions, gap-reset per
+  posting (``encode_positions``).
+* block_max: one entry per BLOCK_SIZE postings: (last_doc, max_impact),
+  max_impact the block's largest ``bm25_impact(tf, dl, avgdl)``
+  (index/bm25.py), so idf * max_impact is the block's exact BM25 upper
+  bound — what block-max WAND needs for safe pruning.
 
 Everything is vectorized NumPy — no per-posting Python loops — so it runs
 inside Arrow-batched applyInPandas at full speed.
@@ -26,6 +29,8 @@ inside Arrow-batched applyInPandas at full speed.
 from __future__ import annotations
 
 import numpy as np
+
+from nlp4l_spark.index.bm25 import bm25_impact
 
 BLOCK_SIZE = 128
 
@@ -64,24 +69,7 @@ def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
 
 def varbyte_encode(values: np.ndarray) -> bytes:
     """Vectorized LEB128 encode of a non-negative int64 array."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nbytes = _varbyte_lengths(v)
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    # position of first byte of each value
-    starts = np.zeros(v.size, dtype=np.int64)
-    np.cumsum(nbytes[:-1], out=starts[1:])
-    # byte index within each value: 0..nbytes-1
-    idx = np.arange(total, dtype=np.int64)
-    owner = np.repeat(np.arange(v.size, dtype=np.int64), nbytes)
-    within = idx - starts[owner]
-    chunk = (v[owner] >> (within.astype(np.uint64) * np.uint64(7))) & np.uint64(0x7F)
-    is_last = within == (nbytes[owner] - 1)
-    out[:] = chunk.astype(np.uint8)
-    out[~is_last] |= 0x80
-    return out.tobytes()
+    return varbyte_encode_with_lengths(values)[0]
 
 
 def varbyte_decode(buf: bytes) -> np.ndarray:
@@ -136,22 +124,6 @@ def decode_tfs(buf: bytes) -> np.ndarray:
     return varbyte_decode(buf).astype(np.int64)
 
 
-def block_max(doc_ids: np.ndarray, tfs: np.ndarray) -> list[dict]:
-    """Per-block (last_doc, max_tf) skip metadata, BLOCK_SIZE postings/block."""
-    d = np.asarray(doc_ids, dtype=np.int64)
-    t = np.asarray(tfs, dtype=np.int64)
-    out: list[dict] = []
-    for s in range(0, d.size, BLOCK_SIZE):
-        e = min(s + BLOCK_SIZE, d.size)
-        out.append({"last_doc": int(d[e - 1]), "max_tf": int(t[s:e].max())})
-    return out
-
-
-def encode_posting(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes, list[dict]]:
-    """Full posting encode: (doc_ids_enc, tfs_enc, block_max)."""
-    return encode_doc_ids(doc_ids), encode_tfs(tfs), block_max(doc_ids, tfs)
-
-
 def decode_posting(doc_ids_enc: bytes, tfs_enc: bytes) -> tuple[np.ndarray, np.ndarray]:
     return decode_doc_ids(doc_ids_enc), decode_tfs(tfs_enc)
 
@@ -193,6 +165,91 @@ def decode_positions(buf: bytes, lens: np.ndarray) -> np.ndarray:
     run_of = np.cumsum(run_of)
     base = np.concatenate(([0], out[starts[1:] - 1]))
     return out - base[run_of] - 1
+
+
+def gather_runs(lens: np.ndarray, order: np.ndarray) -> np.ndarray:
+    """Index that reorders a flat array of per-posting runs (posting i
+    owns ``lens[i]`` consecutive values) into posting order ``order``."""
+    starts = np.cumsum(lens) - lens
+    ol = lens[order]
+    return np.repeat(starts[order] - (np.cumsum(ol) - ol), ol) + np.arange(
+        int(ol.sum()), dtype=np.int64
+    )
+
+
+def _encode_sliced(values: np.ndarray, starts, ends) -> list[bytes]:
+    """The varbyte bytes of ``values[s:e]`` for each (s, e), from ONE
+    encode pass sliced per run."""
+    buf, nbytes = varbyte_encode_with_lengths(values)
+    cum = np.concatenate(([0], np.cumsum(nbytes))).tolist()
+    return [buf[cum[s] : cum[e]] for s, e in zip(starts, ends)]
+
+
+def encode_runs(
+    d: np.ndarray,
+    f: np.ndarray,
+    l: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    *,
+    positions: np.ndarray | None = None,
+    avgdl: float | None = None,
+) -> dict:
+    """The columns of the posting rows, one per run ``[starts[i], ends[i])``
+    of flat postings (doc ids ``d``, tfs ``f``, doc lengths ``l``) ordered
+    by run and, inside a run, by doc id; the runs tile the arrays.
+
+    Returns ``df``, ``cf``, ``min_doc``, ``max_doc``, ``doc_ids_enc`` (gaps
+    reset at each run start), ``tfs_enc`` and ``dls_enc``; plus
+    ``block_max`` when ``avgdl`` is given, and ``pos_enc`` when
+    ``positions`` (flat, ``f[i]`` per posting, in posting order) is given.
+    Each column is one varbyte pass sliced per run: a per-run encode call
+    is NumPy fixed-cost bound at ~10^5 runs per batch. The segment
+    builder, the segment merger, microbuild and the pruned tier all write
+    posting rows through this function."""
+    d = np.asarray(d, dtype=np.int64)
+    f = np.asarray(f, dtype=np.int64)
+    l = np.asarray(l, dtype=np.int64)
+    s_l, e_l = starts.tolist(), ends.tolist()
+    gaps = np.empty(d.size, dtype=np.uint64)
+    gaps[1:] = (d[1:] - d[:-1]).astype(np.uint64)
+    gaps[starts] = (d[starts] + 1).astype(np.uint64)  # run-start reset
+    cols = {
+        "df": ends - starts,
+        "cf": np.add.reduceat(f, starts) if starts.size else f[:0],
+        "min_doc": d[starts],
+        "max_doc": d[ends - 1],
+        "doc_ids_enc": _encode_sliced(gaps, s_l, e_l),
+        "tfs_enc": _encode_sliced(f, s_l, e_l),
+        "dls_enc": _encode_sliced(l, s_l, e_l),
+    }
+    if avgdl is not None:
+        # blocks of BLOCK_SIZE postings that never cross a run
+        per_run = (ends - starts + BLOCK_SIZE - 1) // BLOCK_SIZE
+        run_of = np.repeat(np.arange(starts.size), per_run)
+        first = np.cumsum(per_run) - per_run
+        blk_starts = starts[run_of] + BLOCK_SIZE * (
+            np.arange(run_of.size) - first[run_of]
+        )
+        blk_last = d[np.minimum(blk_starts + BLOCK_SIZE, ends[run_of]) - 1]
+        blk_max = np.maximum.reduceat(bm25_impact(f, l, avgdl), blk_starts)
+        flat = [
+            {"last_doc": ld, "max_impact": mi}
+            for ld, mi in zip(blk_last.tolist(), blk_max.tolist())
+        ]
+        cum = np.concatenate(([0], np.cumsum(per_run))).tolist()
+        cols["block_max"] = [flat[a:b] for a, b in zip(cum[:-1], cum[1:])]
+    if positions is not None:
+        p = np.asarray(positions, dtype=np.int64)
+        pstart = np.concatenate(([0], np.cumsum(f)))
+        pgaps = np.empty(p.size, dtype=np.uint64)
+        pgaps[1:] = (p[1:] - p[:-1]).astype(np.uint64)
+        firsts = pstart[:-1][f > 0]
+        pgaps[firsts] = (p[firsts] + 1).astype(np.uint64)  # per-posting reset
+        cols["pos_enc"] = _encode_sliced(
+            pgaps, pstart[starts].tolist(), pstart[ends].tolist()
+        )
+    return cols
 
 
 # --------------------------------------------------------------------- #

@@ -160,10 +160,9 @@ class GenerationLog:
     # ------------------------------------------------------------- ingest
 
     # micro fast path supports only these builder knobs; any other kwarg
-    # (term vectors, positions, keyword fields, ...) forces the
-    # distributed builder
+    # (term vectors, keyword fields, ...) forces the distributed builder
     _MICRO_KWARGS = frozenset(
-        {"sort_cols", "sort_desc", "docs_per_shard", "text_col"}
+        {"sort_cols", "sort_desc", "docs_per_shard", "text_col", "store_positions"}
     )
 
     def ingest(
@@ -181,9 +180,11 @@ class GenerationLog:
 
         Batches up to ``microbuild.MAX_ROWS`` rows take the driver-side
         single-Spark-job fast path (index/microbuild.py — the Lucene
-        in-memory segment flush; same tables, same bytes); bigger
-        batches, or builds with options the micro path doesn't carry,
-        use the distributed builder."""
+        in-memory segment flush, positions included; the same searchable
+        tables and bytes, without the distributed build's ``segments``
+        checkpoint); bigger batches, or builds with options the micro
+        path doesn't carry (term vectors, keyword fields, ...), use the
+        distributed builder."""
         self._reclaim()
         man = self._load()
         name = f"gen_{man['next_id']:06d}"

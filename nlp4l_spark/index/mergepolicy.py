@@ -41,6 +41,9 @@ import math
 import os
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+
 from pyspark.sql import SparkSession, functions as F
 
 from nlp4l_spark.index.builder import write_searchable
@@ -173,19 +176,12 @@ def compact(
     # forceMergeDeletes contract), while docBases stay the frozen
     # MultiSearcher numbering so surviving docIDs are unchanged (holes
     # where deleted — better than Lucene, which renumbers).
-    tombs: list[set[int]] = []
-    for c in cats:
-        if c.is_committed("tombstones"):
-            tombs.append(
-                {
-                    int(r[0])
-                    for r in c.read(spark, "tombstones")
-                    .select("doc_id")
-                    .collect()
-                }
-            )
-        else:
-            tombs.append(set())
+    tombs = [
+        set(c.read_arrow("tombstones", ["doc_id"])["doc_id"].to_pylist())
+        if c.is_committed("tombstones")
+        else set()
+        for c in cats
+    ]
     bases: list[int] = []
     base = 0
     sum_dl = 0
@@ -196,14 +192,11 @@ def compact(
         base += int(counters["num_docs"])
         sum_dl += int(counters["sum_dl"])
         n_deleted += len(t)
-        if t:  # subtract the tombstoned docs' lengths (pushed-In scan)
-            dropped = (
-                c.read(spark, "doc_lens")
-                .filter(F.col("doc_id").isin([int(x) for x in t]))
-                .agg(F.sum("dl"))
-                .collect()[0][0]
-            )
-            sum_dl -= int(dropped or 0)
+        if t:  # subtract the tombstoned docs' lengths (pushed doc_id filter)
+            dropped = c.read_arrow(
+                "doc_lens", ["dl"], filter=ds.field("doc_id").isin(sorted(t))
+            )["dl"]
+            sum_dl -= pc.sum(dropped).as_py() or 0
     num_docs = base - n_deleted
 
     def _live(df, t):

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from pyspark.sql import SparkSession, functions as F
 
@@ -92,50 +93,43 @@ def _local_top(avgdl: float, keep: int):
 
 def _global_prune(avgdl: float, keep: int):
     """mapInPandas over collect_list-assembled per-term rows: global
-    top-P across shards, re-encode per surviving (term, shard)."""
+    top-P across shards, re-encoded as one posting row per surviving
+    (term, shard)."""
 
     def run(batches):
         for pdf in batches:
             if pdf.empty:
                 continue
-            out: dict[str, list] = {f.name: [] for f in POSTINGS_SCHEMA.fields}
-            for term, segs in zip(pdf["term"].tolist(), pdf["segs"].tolist()):
-                d = np.concatenate([np.asarray(s["doc_ids"], dtype=np.int64) for s in segs])
-                tf = np.concatenate([np.asarray(s["tfs"], dtype=np.int64) for s in segs])
-                dl = np.concatenate([np.asarray(s["dls"], dtype=np.int64) for s in segs])
-                im = np.concatenate([np.asarray(s["impacts"], dtype=np.float64) for s in segs])
-                sh = np.concatenate(
-                    [np.full(len(s["doc_ids"]), s["shard"], dtype=np.int64) for s in segs]
+            terms = pdf["term"].to_numpy(dtype=object)
+            parts = []
+            for i, segs in enumerate(pdf["segs"].tolist()):
+                d, tf, dl, im = (
+                    np.concatenate([np.asarray(s[k]) for s in segs])
+                    for k in ("doc_ids", "tfs", "dls", "impacts")
+                )
+                sh = np.repeat(
+                    [s["shard"] for s in segs], [len(s["doc_ids"]) for s in segs]
                 )
                 if d.size > keep:
                     sel = np.lexsort((d, -im))[:keep]
                     d, tf, dl, sh = d[sel], tf[sel], dl[sel], sh[sel]
-                for shard in np.unique(sh):
-                    m = sh == shard
-                    ds, tfs, dls = d[m], tf[m], dl[m]
-                    o = np.argsort(ds)
-                    ds, tfs, dls = ds[o], tfs[o], dls[o]
-                    imp = bm25_impact(tfs.astype(np.float64), dls, avgdl)
-                    bm = []
-                    for s0 in range(0, ds.size, codec.BLOCK_SIZE):
-                        e0 = min(s0 + codec.BLOCK_SIZE, ds.size)
-                        bm.append(
-                            {
-                                "last_doc": int(ds[e0 - 1]),
-                                "max_impact": float(imp[s0:e0].max()),
-                            }
-                        )
-                    out["term"].append(term)
-                    out["shard"].append(int(shard))
-                    out["df"].append(int(ds.size))
-                    out["cf"].append(int(tfs.sum()))
-                    out["min_doc"].append(int(ds[0]))
-                    out["max_doc"].append(int(ds[-1]))
-                    out["doc_ids_enc"].append(codec.encode_doc_ids(ds))
-                    out["tfs_enc"].append(codec.encode_tfs(tfs))
-                    out["dls_enc"].append(codec.encode_tfs(dls))
-                    out["block_max"].append(bm)
-            yield pd.DataFrame(out)
+                parts.append((np.full(d.size, i), sh, d, tf, dl))
+            code, sh, d, tf, dl = (
+                np.concatenate(x).astype(np.int64) for x in zip(*parts)
+            )
+            # runs: (term, shard), docs ascending inside each
+            order = np.lexsort((d, sh, code))
+            code, sh, d, tf, dl = (x[order] for x in (code, sh, d, tf, dl))
+            change = 1 + np.flatnonzero((np.diff(code) != 0) | (np.diff(sh) != 0))
+            starts = np.concatenate(([0], change))
+            ends = np.concatenate((change, [d.size]))
+            yield pd.DataFrame(
+                {
+                    "term": terms[code[starts]],
+                    "shard": sh[starts],
+                    **codec.encode_runs(d, tf, dl, starts, ends, avgdl=avgdl),
+                }
+            )
 
     return run
 
@@ -155,13 +149,15 @@ def prune_postings(
     cat = IndexCatalog(index_dir)
     if resume and cat.is_committed(name):
         return name
-    fs = cat.read(spark, "field_stats").collect()[0]
-    avgdl = float(fs["avgdl"])
+    avgdl = float(cat.read_arrow("field_stats", ["avgdl"])["avgdl"][0].as_py())
+    # the tier keeps min(df, keep_per_term) postings of every term
+    df = cat.read_arrow("term_stats", ["df"])["df"]
+    n_full = pc.sum(df).as_py() or 0
+    n_kept = pc.sum(pc.min_element_wise(df, keep_per_term)).as_py() or 0
     # a pruned tier has no positions: pos_enc is projected away
     full = cat.read(spark, "postings").select(
         "term", "shard", "df", "doc_ids_enc", "tfs_enc", "dls_enc"
     )
-    n_full = full.select(F.sum("df")).collect()[0][0] or 0
     cand = full.mapInPandas(_local_top(avgdl, keep_per_term), _CAND_SCHEMA)
     per_term = cand.groupBy("term").agg(
         F.collect_list(
@@ -177,14 +173,8 @@ def prune_postings(
         sort_by=["term"],
         counters={
             "keep_per_term": keep_per_term,
-            "postings_full": int(n_full),
+            "postings_full": n_full,
+            "postings_kept": n_kept,
         },
     )
-    import json
-
-    n_kept = cat.read(spark, name).select(F.sum("df")).collect()[0][0] or 0
-    man = cat.manifest(name)
-    man["counters"]["postings_kept"] = int(n_kept)
-    with open(cat.manifest_path(name), "w", encoding="utf-8") as fh:
-        json.dump(man, fh)
     return name

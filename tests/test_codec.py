@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from nlp4l_spark.index import codec
+from nlp4l_spark.index.bm25 import bm25_impact
 
 
 CASES = [
@@ -26,6 +27,22 @@ def test_doc_id_roundtrip(doc_ids):
     np.testing.assert_array_equal(out, doc_ids)
 
 
+def _one_run(doc_ids, tfs, dls, avgdl):
+    """encode_runs over a single (term, shard) run."""
+    n = np.asarray(doc_ids).size
+    return codec.encode_runs(
+        doc_ids, tfs, dls, np.array([0]), np.array([n]), avgdl=avgdl
+    )
+
+
+def _bm25_block_maxima(tfs, dls, avgdl):
+    imp = bm25_impact(tfs, dls, avgdl)
+    return [
+        float(imp[s : s + codec.BLOCK_SIZE].max())
+        for s in range(0, imp.size, codec.BLOCK_SIZE)
+    ]
+
+
 def test_random_roundtrip_seeded():
     rng = np.random.RandomState(42)
     for _ in range(25):
@@ -33,12 +50,21 @@ def test_random_roundtrip_seeded():
         gaps = rng.randint(1, 2**20, size=n).astype(np.int64)
         doc_ids = np.cumsum(gaps) - 1
         tfs = rng.randint(1, 300, size=n).astype(np.int64)
-        d_enc, t_enc, bm = codec.encode_posting(doc_ids, tfs)
-        d, t = codec.decode_posting(d_enc, t_enc)
+        dls = tfs + rng.randint(0, 500, size=n)
+        avgdl = float(dls.mean())
+        row = _one_run(doc_ids, tfs, dls, avgdl)
+        d, t = codec.decode_posting(row["doc_ids_enc"][0], row["tfs_enc"][0])
         np.testing.assert_array_equal(d, doc_ids)
         np.testing.assert_array_equal(t, tfs)
+        np.testing.assert_array_equal(codec.decode_tfs(row["dls_enc"][0]), dls)
+        assert (row["df"][0], row["cf"][0]) == (n, tfs.sum())
+        assert (row["min_doc"][0], row["max_doc"][0]) == (doc_ids[0], doc_ids[-1])
+        bm = row["block_max"][0]
         assert len(bm) == (n + codec.BLOCK_SIZE - 1) // codec.BLOCK_SIZE
         assert bm[-1]["last_doc"] == int(doc_ids[-1])
+        assert [b["max_impact"] for b in bm] == _bm25_block_maxima(
+            tfs, dls, avgdl
+        )
 
 
 def test_varbyte_compression_is_compact():
@@ -57,9 +83,37 @@ def test_tf_one_runs():
 def test_block_max_values():
     doc_ids = np.arange(300, dtype=np.int64)
     tfs = np.concatenate([np.full(128, 3), np.full(128, 9), np.full(44, 1)])
-    bm = codec.block_max(doc_ids, tfs)
-    assert [b["max_tf"] for b in bm] == [3, 9, 1]
+    dls = np.arange(300, dtype=np.int64) % 17 + 9
+    bm = _one_run(doc_ids, tfs, dls, 12.5)["block_max"][0]
+    assert [b["max_impact"] for b in bm] == _bm25_block_maxima(tfs, dls, 12.5)
     assert [b["last_doc"] for b in bm] == [127, 255, 299]
+
+
+def test_encode_runs_rows_match_per_run_encoders():
+    """Several runs in one call: each row's bytes equal the per-run
+    encoders' (gaps and position runs reset at every run start), and
+    block maxima never cross a run."""
+    rng = np.random.RandomState(5)
+    sizes = [1, 128, 129, 300, 2]
+    runs = [np.sort(rng.choice(10**6, size=n, replace=False)) for n in sizes]
+    d = np.concatenate(runs)
+    f = rng.randint(1, 5, size=d.size)
+    l = f + rng.randint(0, 40, size=d.size)
+    p = np.concatenate([np.sort(rng.choice(64, size=k, replace=False)) for k in f])
+    ends = np.cumsum(sizes)
+    starts = ends - sizes
+    rows = codec.encode_runs(d, f, l, starts, ends, positions=p, avgdl=20.0)
+    pstart = np.concatenate(([0], np.cumsum(f)))
+    for i, (s, e) in enumerate(zip(starts, ends)):
+        assert rows["doc_ids_enc"][i] == codec.encode_doc_ids(d[s:e])
+        assert rows["tfs_enc"][i] == codec.encode_tfs(f[s:e])
+        assert rows["dls_enc"][i] == codec.encode_tfs(l[s:e])
+        assert rows["pos_enc"][i] == codec.encode_positions(
+            p[pstart[s] : pstart[e]], f[s:e]
+        )
+        assert [b["max_impact"] for b in rows["block_max"][i]] == (
+            _bm25_block_maxima(f[s:e], l[s:e], 20.0)
+        )
 
 
 # ---------------- positions codec (hypothesis property tests) ----------- #

@@ -176,9 +176,11 @@ def test_retention_sweep_drops_expired_generations(spark, corpus, tmp_path):
 def test_micro_build_matches_distributed_builder(spark, corpus, tmp_path):
     """The driver-side micro path (index/microbuild.py) must produce the
     SAME index as the distributed builder for the same batch: identical
-    schemas and rows for every partitioning-independent table (segments
-    is per-(term,shard,pid), so it legitimately differs with partition
-    count), and identical WAND results."""
+    schemas and rows for every searchable table (the micro path commits
+    no ``segments``, the distributed build's resume checkpoint), identical
+    WAND results, and check_index passes on the micro generation (the
+    distributed build is checked in test_checker)."""
+    from nlp4l_spark.index import check_index
     from nlp4l_spark.index.microbuild import try_micro_build
 
     full, b1, _, _ = corpus
@@ -197,10 +199,14 @@ def test_micro_build_matches_distributed_builder(spark, corpus, tmp_path):
             [tuple(r) for r in a.orderBy(*key).collect()]
             == [tuple(r) for r in b.orderBy(*key).collect()]
         ), t
+    assert not os.path.exists(os.path.join(micro_dir, "segments"))
     q = "w00001 w00002 needle03"
     assert _rows(Searcher(spark, micro_dir).search(q, k=10)) == _rows(
         Searcher(spark, dist_dir).search(q, k=10)
     )
+    report = check_index(spark, micro_dir).collect()
+    bad = [(r["check"], r["detail"]) for r in report if not r["ok"]]
+    assert report and not bad, bad
 
 
 def test_micro_build_falls_back_and_gates(spark, corpus, tmp_path, monkeypatch):

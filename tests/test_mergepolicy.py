@@ -11,7 +11,9 @@ Semantics pinned here:
 3. compact([g0, g1]) writes the same tables as one build over the same
    docs: both run the builder's one forward-index -> searchable-tables
    path (builder.write_searchable), the only Spark writer of postings,
-   term_stats and field_stats.
+   term_stats and field_stats. Its driver twin
+   (microbuild.write_searchable_arrow) writes the same tables, positions
+   included.
 """
 
 from __future__ import annotations
@@ -176,18 +178,25 @@ def test_compact_matches_single_positions_build(spark, pos_gens, pos_compacted):
     _assert_same_tables(spark, out, comp, d_full)
 
 
-def _assert_same_tables(spark, out, comp, d_full):
-    single = IndexCatalog(d_full)
-    assert comp.manifest("stored")["counters"]["expunged"] == 0
-    for t in SHARED_TABLES:
-        a = spark.read.parquet(os.path.join(out, t))
-        b = spark.read.parquet(os.path.join(d_full, t))
+def _assert_same_rows(spark, a_dir, b_dir, tables=SHARED_TABLES):
+    """Each table of ``tables`` has the same parquet schema and rows in
+    both index directories."""
+    for t in tables:
+        a = spark.read.parquet(os.path.join(a_dir, t))
+        b = spark.read.parquet(os.path.join(b_dir, t))
         assert a.schema == b.schema, t
         key = [c for c in ("doc_id", "term", "shard", "field") if c in a.columns]
         assert (
             [tuple(r) for r in a.orderBy(*key).collect()]
             == [tuple(r) for r in b.orderBy(*key).collect()]
         ), t
+
+
+def _assert_same_tables(spark, out, comp, d_full):
+    single = IndexCatalog(d_full)
+    assert comp.manifest("stored")["counters"]["expunged"] == 0
+    _assert_same_rows(spark, out, d_full)
+    for t in SHARED_TABLES:
         ca, cb = (
             {k: v for k, v in c.manifest(t)["counters"].items()
              if k not in _STORED_ONLY}
@@ -197,32 +206,86 @@ def _assert_same_tables(spark, out, comp, d_full):
     assert not comp.is_committed("_lineage")
 
 
-def test_searchable_tables_have_one_spark_writer(pos_gens):
-    """The doc_lens -> field_stats stages exist once: index/builder.py
-    (write_searchable) is the only Spark ``.write`` of those tables in the
-    package, one call each. Microbuild's pyarrow ``_commit`` and pruning's
-    tier table are other writers by design. ``postings`` is the one
-    posting table: positions ride in it, so a store_positions build
-    commits no other table."""
+class _Calls(ast.NodeVisitor):
+    """(module, innermost function, str argument) of every call of a
+    method named in ``attrs``; the function is ``None`` at module level."""
+
+    def __init__(self, module: str, attrs: set[str]):
+        self.module, self.attrs, self.fn, self.found = module, attrs, None, []
+
+    def visit_FunctionDef(self, node):
+        outer, self.fn = self.fn, node.name
+        self.generic_visit(node)
+        self.fn = outer
+
+    def visit_Call(self, node):
+        if isinstance(node.func, ast.Attribute) and node.func.attr in self.attrs:
+            self.found += [
+                (self.module, self.fn, a.value)
+                for a in node.args
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            ]
+        self.generic_visit(node)
+
+
+def _package_sources():
     pkg = pathlib.Path(nlp4l_spark.__file__).parent
-    tables = {"doc_lens", "segments", "postings", "term_stats", "field_stats"}
-    writes = []
     for path in sorted(pkg.rglob("*.py")):
-        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "write"
+        src = path.read_text(encoding="utf-8")
+        yield path.relative_to(pkg).as_posix(), src, ast.parse(src)
+
+
+@pytest.fixture(scope="module")
+def pos_micro(spark, pos_gens, tmp_path_factory):
+    """pos_gens' whole corpus (its full build's stored table without
+    doc_id) micro-built with positions: the driver harness's twin of
+    the full positions build."""
+    from nlp4l_spark.index.microbuild import try_micro_build
+
+    d_full, _ = pos_gens
+    out = str(tmp_path_factory.mktemp("mergepol_pos_micro") / "micro")
+    frame = IndexCatalog(d_full).read(spark, "stored").drop("doc_id")
+    assert try_micro_build(frame, out, store_positions=True) is not None
+    return out
+
+
+def test_searchable_tables_have_one_spark_writer(pos_gens, pos_micro):
+    """The doc_lens -> field_stats stages exist once per harness: the
+    Spark harness (builder.write_searchable) and the driver harness
+    (microbuild.write_searchable_arrow) are the only writers of those
+    tables in the package, one call each; pruning's tier table is
+    another writer by design. Posting rows are encoded only in codec.py
+    (the only caller of ``varbyte_encode_with_lengths``), and manifests
+    are written only by catalog.py. ``postings`` is the one posting
+    table: positions ride in it, so a store_positions build commits no
+    other table, and a micro generation commits no ``segments``."""
+    tables = {"doc_lens", "segments", "postings", "term_stats", "field_stats"}
+    writes, encodes = [], set()
+    for module, src, tree in _package_sources():
+        calls = _Calls(module, {"write", "write_arrow"})
+        calls.visit(tree)
+        writes += calls.found
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and "varbyte_encode_with_lengths" in (
+                getattr(node.func, "attr", None), getattr(node.func, "id", None)
             ):
-                writes += [
-                    (path.relative_to(pkg).as_posix(), a.value)
-                    for a in node.args
-                    if isinstance(a, ast.Constant) and isinstance(a.value, str)
-                ]
-    assert sorted(w for w in writes if w[1] in tables) == [
-        ("index/builder.py", t) for t in sorted(tables)
-    ]
-    assert {t for _, t in writes if "post" in t} == {"postings"}
+                encodes.add(module)
+        if module != "index/catalog.py":
+            assert "_MANIFEST.json" not in src, module
+            assert not any(
+                (isinstance(n, ast.Attribute) and n.attr == "manifest_path")
+                or (isinstance(n, ast.alias) and n.name == "MANIFEST")
+                for n in ast.walk(tree)
+            ), module
+    assert sorted(w for w in writes if w[2] in tables) == sorted(
+        [("index/builder.py", "write_searchable", t) for t in tables]
+        + [
+            ("index/microbuild.py", "write_searchable_arrow", t)
+            for t in tables - {"segments"}
+        ]
+    )
+    assert {t for *_, t in writes if "post" in t} == {"postings"}
+    assert encodes == {"index/codec.py"}
     # the positions + term-vector build of pos_gens
     d_full, _ = pos_gens
     cat = IndexCatalog(d_full)
@@ -231,6 +294,43 @@ def test_searchable_tables_have_one_spark_writer(pos_gens):
         "stored", "doc_terms_fwd", "doc_lens", "segments", "postings",
         "term_stats", "field_stats", "_lineage", "term_vectors",
     }
+    micro = IndexCatalog(pos_micro)
+    assert {t for t in os.listdir(pos_micro) if micro.is_committed(t)} == {
+        "stored", "doc_terms_fwd", "doc_lens", "postings", "term_stats",
+        "field_stats", "_lineage",
+    }
+
+
+def test_micro_build_matches_positions_build(spark, pos_gens, pos_micro):
+    """The driver harness writes positions as the Spark harness does: a
+    positions micro build of pos_gens' corpus has the same schemas and
+    rows as its full positions build (``doc_terms_fwd.positions`` and
+    ``postings.pos_enc`` bytes included), phrase search agrees on the
+    reader and the Spark postings plan, and check_index passes on
+    both."""
+    from nlp4l_spark.index import check_index
+    from nlp4l_spark.index.builder import has_positions
+
+    d_full, _ = pos_gens
+    assert has_positions(IndexCatalog(pos_micro))
+    _assert_same_rows(spark, pos_micro, d_full)
+    micro, single = Searcher(spark, pos_micro), Searcher(spark, d_full)
+    hit = False
+    for phrase in PHRASES:
+        for m in ("auto", "postings"):
+            got, want = (
+                [(r["doc_id"], r["score"]) for r in s.search_phrase(
+                    phrase, k=10, method=m
+                ).collect()]
+                for s in (micro, single)
+            )
+            _same_hits(got, want)
+            hit = hit or bool(got)
+    assert hit
+    for d in (pos_micro, d_full):
+        report = check_index(spark, d).collect()
+        bad = [(r["check"], r["detail"]) for r in report if not r["ok"]]
+        assert report and not bad, (d, bad)
 
 
 def test_compact_requires_forward_index(spark, tmp_path):
