@@ -31,8 +31,11 @@ import shutil
 from typing import Iterable
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from nlp4l_spark.index.catalog import IndexCatalog
+
+_TOMBSTONES = T.StructType([T.StructField("doc_id", T.LongType())])
 
 
 def deleted_count(index_dir: str) -> int:
@@ -48,17 +51,19 @@ def delete_docs(
     """Tombstone the given doc ids (idempotent union with any existing
     tombstones). Returns the total tombstoned count. The id set is
     driver-side — bounded by deletes-since-last-expunge, the same
-    information Lucene keeps in RAM as live-docs bitsets."""
+    information Lucene keeps in RAM as live-docs bitsets. Read and
+    written on the driver with pyarrow (one parquet file), so the call
+    runs no Spark job."""
     cat = IndexCatalog(index_dir)
     ids = {int(d) for d in doc_ids}
     if cat.is_committed("tombstones"):
-        ids |= {
-            int(r[0])
-            for r in cat.read(spark, "tombstones").select("doc_id").collect()
-        }
-    rows = [(i,) for i in sorted(ids)]
-    df = spark.createDataFrame(rows, "doc_id long").coalesce(1)
-    cat.write(df, "tombstones", counters={"n_deleted": len(ids)})
+        ids |= set(cat.read_arrow("tombstones", ["doc_id"])["doc_id"].to_pylist())
+    cat.write_arrow(
+        {"doc_id": sorted(ids)},
+        "tombstones",
+        schema=_TOMBSTONES,
+        counters={"n_deleted": len(ids)},
+    )
     return len(ids)
 
 

@@ -14,11 +14,14 @@ strategies, all returning identical results (tested):
   score upper bound, emits its local top-k; a global top-k merge finishes.
   This is the 10^12-doc path: work is proportional to the query's posting
   shards, never to the corpus.
-* ``driver`` — the same WAND kernel (``reader.shard_topk``; the phrase
-  path's ``reader.phrase_matches`` likewise) run in-process by the
-  driver-resident ``IndexReader`` (search/reader.py) over posting rows
-  read with pyarrow; the top-k comes back as a pyarrow table, i.e. a
-  ``LocalRelation`` that collects without a Spark job.
+* ``driver`` — the same WAND kernel (``reader.topk_rows``, which the
+  ``wand`` plan runs through its pandas adapter ``reader.shard_topk``;
+  the phrase path's ``reader.phrase_matches`` likewise) run in-process
+  by the driver-resident ``IndexReader`` (search/reader.py) over posting rows
+  read with pyarrow; the top-k comes back as a pyarrow table held by a
+  driver-side DataFrame (``_LocalFrame``), whose ``collect()`` reads the
+  table without a Spark job or a JVM call; other DataFrame calls build
+  the table's ``LocalRelation`` on first use.
 
 ``method="auto"`` (the default of ``search``, ``search_batch`` and
 ``search_phrase``) takes ``driver`` when the reader's size gate admits
@@ -48,7 +51,7 @@ from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
-from functools import lru_cache
+from functools import cached_property, lru_cache
 from typing import Iterable
 
 import numpy as np
@@ -56,8 +59,10 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, Row, SparkSession, Window, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.types import _create_row
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from nlp4l_spark.analysis import Analyzer, STANDARD_ANALYZER
@@ -154,11 +159,40 @@ def _arrow_schema(ddl: str):
     return to_arrow_schema(T._parse_datatype_string(ddl))
 
 
+class _LocalFrame(ClassicDataFrame):
+    """A result held on the driver as a pyarrow table. ``collect``
+    answers from the table, with the rows Spark's collect would return,
+    and crosses no py4j boundary. Every other call goes through the
+    ``LocalRelation`` that ``spark.createDataFrame(table)`` builds, on
+    first use, so plans built on the frame are the ones built on that
+    relation."""
+
+    def __new__(cls, spark: SparkSession, table: pa.Table):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table):
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self._table = table
+
+    @cached_property
+    def _jdf(self):
+        return self._session.createDataFrame(self._table)._jdf
+
+    def collect(self) -> list[Row]:
+        names = self._table.column_names
+        return [
+            _create_row(names, values)
+            for values in zip(*(c.to_pylist() for c in self._table.columns))
+        ]
+
+
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    """An empty result with the DDL ``schema``. Built from an empty
-    pyarrow table it is a ``LocalRelation``, so collecting it runs no
-    Spark job (``createDataFrame([], schema)`` runs one)."""
-    return spark.createDataFrame(_arrow_schema(schema).empty_table())
+    """An empty result with the DDL ``schema``, held on the driver
+    (``_LocalFrame``): collecting it runs no Spark job and no py4j call."""
+    return _LocalFrame(spark, _arrow_schema(schema).empty_table())
 
 
 def _top(frame: DataFrame, k: int) -> DataFrame:
@@ -526,9 +560,7 @@ class Searcher:
             return _empty(self.spark, "doc_id long, score double, rank int")
         rows = [(t, idf(self.num_docs, dfs[t])) for t in terms]
         if method == "auto" and self._reader.admits(terms):
-            return self.spark.createDataFrame(
-                self._reader.search_conjunctive(rows, k)
-            )
+            return _LocalFrame(self.spark, self._reader.search_conjunctive(rows, k))
         out = (
             self._term_scores(rows)
             .groupBy("doc_id")
@@ -3354,10 +3386,10 @@ class Searcher:
         method: str,
         columns: list[str],
     ) -> DataFrame:
-        """search_batch projected to ``columns``. A job-free result is
-        projected in pyarrow before it becomes a DataFrame: a Spark
-        ``select`` on top of it costs more in py4j round trips than the
-        query itself (about 14 ms against 10 ms on a 4-core VM)."""
+        """search_batch projected to ``columns``. A routed result is
+        projected in pyarrow before it becomes a driver-held frame
+        (``_LocalFrame``): a Spark ``select`` on top of it would build
+        the JVM plan that the frame's ``collect`` avoids."""
         queries = list(queries)
         per_q_terms: dict[int, list[str]] = {
             qid: sorted(set(self.analyzer.tokenize(q))) for qid, q, _ in queries
@@ -3374,11 +3406,11 @@ class Searcher:
         ]
         if not rows:
             empty = _arrow_schema("qid int, rank int, doc_id long, score double")
-            return self.spark.createDataFrame(empty.empty_table().select(columns))
+            return _LocalFrame(self.spark, empty.empty_table().select(columns))
         if method == "auto":
             if self._reader.admits(dfs):
-                return self.spark.createDataFrame(
-                    self._reader.search_batch(rows, ks).select(columns)
+                return _LocalFrame(
+                    self.spark, self._reader.search_batch(rows, ks).select(columns)
                 )
             method = "wand"
         qterms = F.broadcast(
@@ -3477,8 +3509,8 @@ class Searcher:
             return _empty(self.spark, "doc_id long, score double")
         idf_sum = float(sum(idf(self.num_docs, dfs[t]) for t in terms))
         if routed and self._reader.admits(terms, positions=True):
-            return self.spark.createDataFrame(
-                self._reader.search_phrase(terms, offsets, idf_sum, k)
+            return _LocalFrame(
+                self.spark, self._reader.search_phrase(terms, offsets, idf_sum, k)
             )
         pp = (
             self.cat.read(self.spark, "postings")
@@ -3822,13 +3854,14 @@ class MultiSearcher:
     Plan: global df is the sum of each member's pushed ``term_stats``
     read (no Spark job), and idf and avgdl come from the union. Each
     member then answers with its own driver-resident ``IndexReader``,
-    scoring under the union's avgdl: the same ``shard_topk`` WAND kernel
+    scoring under the union's avgdl: the same ``topk_rows`` WAND kernel
     as ``Searcher``, run on the query's (term, global idf) rows over that
     member's postings, with its own tombstones as live docs. Block maxima
     stored under a smaller member avgdl are scaled up by the ratio, so
     WAND skips only blocks that cannot reach the top-k. The K local
     top-k lists, offset by their docBase, are merged on (score DESC,
-    doc_id ASC) in NumPy and returned as a job-free ``LocalRelation``.
+    doc_id ASC) in NumPy and returned as a driver-held frame
+    (``_LocalFrame``) that collects without a Spark job or a JVM call.
     Every doc lives in exactly one member, so the union of the members'
     exact top-k holds the global top-k: the merge is exact.
 
@@ -3951,9 +3984,10 @@ class MultiSearcher:
                 scores.append(hits["score"].to_numpy())
         doc, score = np.concatenate(docs), np.concatenate(scores)
         top = np.lexsort((doc, -score))[:k]
-        return self.spark.createDataFrame(
+        return _LocalFrame(
+            self.spark,
             pa.table(
                 {"doc_id": doc[top], "score": score[top]},
                 schema=_arrow_schema("doc_id long, score double"),
-            )
+            ),
         )

@@ -29,11 +29,13 @@ gets a new snapshot id and loses the part files the datasets list.
 Term statistics are not held: the searcher reads them per call with the
 same pushed filter over ``term_stats``, on every path.
 
-The per-shard kernels (``shard_topk`` for OR, ``phrase_matches`` for
-exact phrases) are plain functions over a pandas frame of posting rows:
-Spark's ``applyInPandas`` runs them per (query, shard) group and the
-reader runs them over the whole frame, so both harnesses score with the
-same code, and WAND-routed OR scores are equal bit for bit.
+The per-shard kernels are plain functions over posting rows, so both
+harnesses score with the same code and WAND-routed OR scores are equal
+bit for bit. The OR kernel ``topk_rows`` takes the rows as tuples:
+Spark's ``applyInPandas`` calls it per (query, shard) group through its
+pandas adapter ``shard_topk``, and the reader calls it directly on the
+rows it joins from a pyarrow read, with no pandas on the way.
+``phrase_matches`` (exact phrases) takes a pandas frame in both.
 
 Size gate: a call is admitted only when the column chunks it reads of
 the posting row groups its term filter selects, summed from the footers'
@@ -44,6 +46,7 @@ microbuild's ``MAX_ROWS`` cap): an OR call never counts ``pos_enc``.
 from __future__ import annotations
 
 from bisect import bisect_left
+from operator import itemgetter
 
 import numpy as np
 import pandas as pd
@@ -84,25 +87,28 @@ _SCORED_SCHEMA = pa.schema(
 )
 
 _OR_COLUMNS = ["term", "shard", "doc_ids_enc", "tfs_enc", "dls_enc", "block_max"]
+# a posting row as the OR kernel takes it
+_TOPK_COLUMNS = ["qid", "shard", "term", "idf"] + _OR_COLUMNS[2:]
 _AND_COLUMNS = ["term", "min_doc", "doc_ids_enc", "tfs_enc", "dls_enc"]
 PHRASE_COLUMNS = _AND_COLUMNS + ["pos_enc"]
 
 
 # --------------------------------------------------------------------- #
-# Kernels over a pandas frame of posting rows (Spark and driver harness)
+# Kernels over posting rows (Spark and driver harness)
 # --------------------------------------------------------------------- #
-def shard_topk(
-    pdf: pd.DataFrame,
+def topk_rows(
+    rows,
     k: int,
     avgdl: float,
     dels: np.ndarray | None = None,
     topk_fn=wand_topk,
     bound_scale: float = 1.0,
-) -> pd.DataFrame:
-    """Per (qid, shard) group of posting rows (qid, term, idf, shard,
-    doc_ids_enc, tfs_enc, dls_enc, block_max): decode, drop tombstoned
-    docs, run ``topk_fn`` (``wand_topk`` or ``maxscore_topk``) -> the
-    group's local top-k as (qid, doc_id, score).
+) -> tuple[list[int], list[int], list[float]]:
+    """The OR kernel over posting rows (qid, shard, term, idf,
+    doc_ids_enc, tfs_enc, dls_enc, block_max): per (qid, shard) group,
+    decode, drop tombstoned docs, run ``topk_fn`` (``wand_topk`` or
+    ``maxscore_topk``) -> each group's local top-k as parallel (qid,
+    doc_id, score) lists.
 
     Terms enter the kernel in term order, so a doc's score sums its terms
     in one fixed order whichever harness grouped the rows. Deleted docs
@@ -115,12 +121,9 @@ def shard_topk(
     avgdl larger than the one the index was built with raises every
     impact by at most that ratio, so the scaled maxima stay upper
     bounds."""
-    pdf = pdf.sort_values(["qid", "shard", "term"], kind="stable")
     groups: dict[tuple[int, int], list] = {}
-    for qid, shard, w, d_enc, tf_enc, dl_enc, blocks in zip(
-        pdf["qid"].tolist(), pdf["shard"].tolist(), pdf["idf"].tolist(),
-        pdf["doc_ids_enc"].tolist(), pdf["tfs_enc"].tolist(),
-        pdf["dls_enc"].tolist(), pdf["block_max"].tolist(),
+    for qid, shard, _t, w, d_enc, tf_enc, dl_enc, blocks in sorted(
+        rows, key=itemgetter(0, 1, 2)
     ):
         d = codec.decode_doc_ids(d_enc)
         tf = codec.decode_tfs(tf_enc)
@@ -145,10 +148,31 @@ def shard_topk(
             out_qid.append(int(qid))
             out_doc.append(doc)
             out_score.append(sc)
+    return out_qid, out_doc, out_score
+
+
+def shard_topk(
+    pdf: pd.DataFrame,
+    k: int,
+    avgdl: float,
+    dels: np.ndarray | None = None,
+    topk_fn=wand_topk,
+    bound_scale: float = 1.0,
+) -> pd.DataFrame:
+    """``topk_rows`` over a pandas frame of posting rows, for the Spark
+    plan's ``applyInPandas`` -> (qid, doc_id, score)."""
+    qid, doc, score = topk_rows(
+        zip(*(pdf[c].tolist() for c in _TOPK_COLUMNS)),
+        k,
+        avgdl,
+        dels,
+        topk_fn=topk_fn,
+        bound_scale=bound_scale,
+    )
     return pd.DataFrame(
-        {"qid": pd.Series(out_qid, dtype="int64"),
-         "doc_id": pd.Series(out_doc, dtype="int64"),
-         "score": pd.Series(out_score, dtype="float64")}
+        {"qid": pd.Series(qid, dtype="int64"),
+         "doc_id": pd.Series(doc, dtype="int64"),
+         "score": pd.Series(score, dtype="float64")}
     )
 
 
@@ -266,17 +290,17 @@ class _PostingTable:
             total += sum(sizes.get(c, 0) for c in columns)
         return total
 
-    def read(self, terms: list[str], columns: list[str]) -> pd.DataFrame:
+    def read(self, terms: list[str], columns: list[str]) -> pa.Table:
         return self.dataset.to_table(
             columns=columns, filter=pc.field("term").isin(sorted(set(terms)))
-        ).to_pandas()
+        )
 
 
 class IndexReader:
     """The in-process reader one ``Searcher`` opens on its first routed
-    call. Pure pyarrow/NumPy: results come back as pyarrow Tables with
-    the Spark plans' schemas, which the searcher turns into job-free
-    ``LocalRelation`` DataFrames."""
+    call. pyarrow/NumPy (pandas only in the phrase kernel): results come
+    back as pyarrow Tables with the Spark plans' schemas, which the
+    searcher returns as driver-held DataFrames (``engine._LocalFrame``)."""
 
     def __init__(
         self,
@@ -326,17 +350,25 @@ class IndexReader:
         block maxima, stored under the reader's own, are scaled to
         stay upper bounds."""
         avgdl = self.avgdl if avgdl is None else avgdl
-        q = pd.DataFrame(rows, columns=["qid", "term", "idf"])
-        post = self.postings.read(q["term"].tolist(), _OR_COLUMNS)
-        hits = shard_topk(
-            q.merge(post, on="term"),
+        post = self.postings.read([t for _, t, _ in rows], _OR_COLUMNS)
+        by_term: dict[str, list] = {}
+        for t, *row in zip(*(post[c].to_pylist() for c in _OR_COLUMNS)):
+            by_term.setdefault(t, []).append(row)
+        # the (qid, term, idf) x posting-row join, in _TOPK_COLUMNS order
+        qid, doc, score = topk_rows(
+            (
+                (q, shard, t, w, *encs)
+                for q, t, w in rows
+                for shard, *encs in by_term.get(t, ())
+            ),
             max(ks.values()),
             avgdl,
             self.dels,
             bound_scale=avgdl / self.avgdl if avgdl > self.avgdl else 1.0,
         )
-        qid, doc = hits["qid"].to_numpy(), hits["doc_id"].to_numpy()
-        score = hits["score"].to_numpy()
+        qid = np.array(qid, dtype=np.int64)
+        doc = np.array(doc, dtype=np.int64)
+        score = np.array(score, dtype=np.float64)
         order = np.lexsort((doc, -score, qid))
         qid, doc, score = qid[order], doc[order], score[order]
         # rank within each qid's run of the (qid, -score, doc_id) order
@@ -357,14 +389,18 @@ class IndexReader:
     ) -> pa.Table:
         """AND top-k: docs holding every (term, idf) row's term, scored by
         the BM25 sum over those terms -> (doc_id, score, rank)."""
-        post = self.postings.read([t for t, _ in rows], _AND_COLUMNS).sort_values(
-            ["term", "min_doc"]
+        post = self.postings.read([t for t, _ in rows], _AND_COLUMNS).sort_by(
+            [("term", "ascending"), ("min_doc", "ascending")]
         )
+        runs: dict[str, list] = {}
+        for t, _min_doc, *encs in zip(*(post[c].to_pylist() for c in _AND_COLUMNS)):
+            runs.setdefault(t, []).append(encs)
         decoded = {}
-        for t, g in post.groupby("term", sort=False):
-            d = np.concatenate([codec.decode_doc_ids(x) for x in g["doc_ids_enc"]])
-            tf = np.concatenate([codec.decode_tfs(x) for x in g["tfs_enc"]])
-            dl = np.concatenate([codec.decode_tfs(x) for x in g["dls_enc"]])
+        for t, encs in runs.items():
+            d_encs, tf_encs, dl_encs = zip(*encs)
+            d = np.concatenate([codec.decode_doc_ids(x) for x in d_encs])
+            tf = np.concatenate([codec.decode_tfs(x) for x in tf_encs])
+            dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
             decoded[t] = (d, tf, dl)
         cand = None
         for t, _ in rows:
@@ -394,7 +430,7 @@ class IndexReader:
         """Exact-phrase top-k over the positions in ``postings`` ->
         (doc_id, score); the phrase scores as one term of weight
         ``idf_sum`` and tf = the phrase frequency."""
-        pdf = self.positions.read(terms, PHRASE_COLUMNS)
+        pdf = self.positions.read(terms, PHRASE_COLUMNS).to_pandas()
         m = phrase_matches(pdf, terms, offsets, self.dels)
         doc = m["doc_id"].to_numpy()
         score = idf_sum * bm25_impact(

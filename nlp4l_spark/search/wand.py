@@ -116,15 +116,17 @@ def maxscore_topk(
     """Block-max MaxScore (Turtle & Flood) top-k — same contract, same
     tie-break, and the same span-skip rule as wand_topk, so the two are
     result-identical at the default ``threshold=0.0``; only the pruning
-    strategy differs. With a NONZERO entry threshold the identity holds
-    only up to summation-order ulps: MaxScore accumulates a doc's score
-    essential-terms-first then non-essential, wand/brute sum in term
-    order, so when a doc's exact score EQUALS the threshold the strict
-    ``sc > threshold`` admission can flip on a 1-2 ulp difference
-    (fuzz-confirmed). A cross-shard floor handoff that feeds another
-    shard's floor in as ``threshold`` must therefore quantize both sides
-    (e.g. round to 6 dp, the harness convention) before comparing, or
-    accept ulp-level admission skew at exact-tie scores. Within each
+    strategy differs. MaxScore's pruning filters accumulate a doc's score
+    essential-terms-first then non-essential, while wand sums in term
+    order; the docs that survive the filters are re-summed in term order
+    before they enter the heap, so returned scores equal wand's bit for
+    bit. The filters themselves compare the essential-first sums, so
+    with a NONZERO entry threshold a doc whose exact score EQUALS the
+    threshold can still be dropped on a 1-2 ulp difference: a
+    cross-shard floor handoff that feeds another shard's floor in as
+    ``threshold`` must quantize both sides (e.g. round to 6 dp, the
+    harness convention) before comparing, or accept ulp-level admission
+    skew at exact-tie scores. Within each
     surviving span, terms are split at the current heap floor into a
     NON-ESSENTIAL prefix (ascending span upper bounds whose running sum
     cannot alone beat the floor — their postings are never enumerated)
@@ -184,7 +186,7 @@ def maxscore_topk(
         order = np.argsort(span_ub, kind="stable")
         cum = np.cumsum(span_ub[order])
         n_noness = int(np.searchsorted(cum, th, side="left"))
-        ess = order[n_noness:]
+        ess = np.sort(order[n_noness:])  # term order, as wand_topk sums
         noness = order[:n_noness]
         # candidates: docs appearing in any essential list in the span
         parts_d, parts_i = [], []
@@ -219,6 +221,12 @@ def maxscore_topk(
                     score = score + np.where(hit, impacts[i][pos_c], 0.0)
                     alive = score + remaining[j] >= th
                     cand, score = cand[alive], score[alive]
+                # the non-essential terms were added last: re-sum the
+                # survivors in term order, as wand_topk sums them
+                score = np.zeros(cand.size)
+                for d, imp in zip(docs, impacts):
+                    pos = np.minimum(np.searchsorted(d, cand), d.size - 1)
+                    score = score + np.where(d[pos] == cand, imp[pos], 0.0)
             for doc, sc in zip(cand.tolist(), score.tolist()):
                 if len(heap) < k:
                     if sc > threshold:

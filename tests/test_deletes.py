@@ -184,3 +184,38 @@ def test_no_tombstones_is_a_noop(spark, idx):
     )
     assert "idx/tombstones" not in plan  # no tombstone table scan
     assert "NOT doc_id" not in plan  # and no NOT-In(doc_id) filter node
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_delete_docs_runs_no_spark_job(spark, idx):
+    """Tombstones are read and written on the driver: two successive
+    deletes union, neither runs a Spark job, and the Spark readers of the
+    table (``_not_deleted``'s anti-join past 10k ids, ``expunge_deletes``)
+    see what the driver wrote."""
+    n, jobs = _jobs(spark, "delete-1", lambda: delete_docs(spark, idx, [1, 5]))
+    assert (n, jobs) == (2, [])
+    # 10k ids that name no doc push _not_deleted past its NOT-In filter
+    filler = list(range(100, 10_100))
+    n, jobs = _jobs(
+        spark, "delete-2", lambda: delete_docs(spark, idx, [5, 6] + filler)
+    )
+    assert (n, jobs) == (3 + len(filler), [])
+    assert deleted_count(idx) == n
+    s = Searcher(spark, idx)
+    assert s.deleted_ids == frozenset({1, 5, 6, *filler})
+    tomb = s.cat.read(spark, "tombstones")
+    assert tomb.schema.simpleString() == "struct<doc_id:bigint>"
+    q = "join merge vector scan needle spark"  # every doc holds a term
+    for method in ("dataframe", "wand", "auto"):
+        assert set(_scores(s.search(q, k=10, method=method))) == {0, 2, 3, 4}
+    assert expunge_deletes(spark, idx) == 4
+    assert Searcher(spark, idx).num_docs == 4

@@ -15,18 +15,24 @@ from __future__ import annotations
 
 import heapq
 import shutil
+from functools import partial
 
+import pandas as pd
 import pytest
+
+from pyspark.sql import functions as F
 
 from nlp4l_spark.data import LONDON_BRIDGE_VERSES
 from nlp4l_spark.data.fixtures import transcripts_df
 from nlp4l_spark.data.transcripts import synth_queries, synth_transcripts
 from nlp4l_spark.index import GenerationLog, IndexBuilder, check_index
+from nlp4l_spark.index.bm25 import idf
 from nlp4l_spark.index.deletes import delete_docs, expunge_deletes
 from nlp4l_spark.index.pruning import prune_postings
 from nlp4l_spark.oracle import OracleIndex
-from nlp4l_spark.search import Searcher
+from nlp4l_spark.search import MultiSearcher, Searcher
 from nlp4l_spark.search import reader as reader_mod
+from nlp4l_spark.search.wand import maxscore_topk, wand_topk
 
 K = 10
 STOP = "the and of"
@@ -39,6 +45,8 @@ OR_QUERIES = [q for _, q, _ in synth_queries(7)] + [
 AND_QUERIES = ["w00001 w00002", "w00003 w00010 w00017", "w00001 needle00",
                STOP, UNKNOWN, "w00001 zzqqxxnotaterm"]
 DELETED = [0, 3, 5, 8, 13, 21, 34, 55, 89, 144, 233, 377]
+# OR queries over a federation of the verses and the synthetic corpus
+FED_QUERIES = ["london bridge", "silver gold w00001", "w00001 w00454 needle00"]
 
 
 @pytest.fixture(scope="module")
@@ -58,6 +66,13 @@ def deleted_idx(spark, idx, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("reader_del") / "idx")
     shutil.copytree(idx, d)
     delete_docs(spark, d, DELETED)
+    return d
+
+
+@pytest.fixture(scope="module")
+def verses_idx(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("reader_verses") / "idx")
+    IndexBuilder(store_positions=True).build(transcripts_df(spark), d)
     return d
 
 
@@ -308,17 +323,18 @@ def test_searcher_follows_new_tombstones(spark, idx, oracle, tmp_path):
 
 # --------------------------------------------------------------------- #
 def _routed_calls(s, phrase):
-    """Every routed entry point, each as (name, thunk returning rows)."""
+    """Every routed entry point, each as (name, thunk returning its
+    result frame)."""
     batch = [(i, q, K) for i, q in enumerate(OR_QUERIES[:8])]
     return [
-        ("or", lambda: s.search("w00001 w00454 needle00", k=K).collect()),
-        ("or_stop", lambda: s.search(STOP, k=K).collect()),
-        ("or_unknown", lambda: s.search(UNKNOWN, k=K).collect()),
-        ("and", lambda: s.search("w00001 w00002", k=K, operator="and").collect()),
-        ("and_unknown", lambda: s.search(UNKNOWN, k=K, operator="and").collect()),
-        ("batch", lambda: s.search_batch(batch).collect()),
-        ("phrase", lambda: s.search_phrase(phrase, k=K).collect()),
-        ("phrase_unknown", lambda: s.search_phrase(UNKNOWN, k=K).collect()),
+        ("or", lambda: s.search("w00001 w00454 needle00", k=K)),
+        ("or_stop", lambda: s.search(STOP, k=K)),
+        ("or_unknown", lambda: s.search(UNKNOWN, k=K)),
+        ("and", lambda: s.search("w00001 w00002", k=K, operator="and")),
+        ("and_unknown", lambda: s.search(UNKNOWN, k=K, operator="and")),
+        ("batch", lambda: s.search_batch(batch)),
+        ("phrase", lambda: s.search_phrase(phrase, k=K)),
+        ("phrase_unknown", lambda: s.search_phrase(UNKNOWN, k=K)),
     ]
 
 
@@ -340,7 +356,7 @@ def test_routed_calls_run_no_spark_job(spark, idx, deleted_idx):
         s, jobs = _jobs(spark, f"reader-open-{n}", lambda: Searcher(spark, d))
         assert jobs == [], "Searcher construction ran a Spark job"
         for name, call in _routed_calls(s, phrase):
-            _, jobs = _jobs(spark, f"reader-{n}-{name}", call)
+            _, jobs = _jobs(spark, f"reader-{n}-{name}", lambda: call().collect())
             assert jobs == [], f"routed call {name!r} ran Spark jobs {jobs}"
 
 
@@ -349,11 +365,13 @@ def test_gate_falls_back_to_spark(spark, idx, monkeypatch):
     the query's size, ``auto`` runs the Spark plan (it now runs jobs) and
     answers exactly as the reader did."""
     phrase = _phrases(_docs(spark, idx))[0]
-    admitted = [call() for _, call in _routed_calls(Searcher(spark, idx), phrase)]
+    admitted = [
+        call().collect() for _, call in _routed_calls(Searcher(spark, idx), phrase)
+    ]
     monkeypatch.setattr(reader_mod, "MAX_POSTING_BYTES", 0)
     s = Searcher(spark, idx)
     for (name, call), want in zip(_routed_calls(s, phrase), admitted):
-        got, jobs = _jobs(spark, f"gate-{name}", call)
+        got, jobs = _jobs(spark, f"gate-{name}", lambda: call().collect())
         if name in ("or", "and", "batch", "phrase"):
             assert jobs, f"{name!r} stayed on the driver past the gate"
         assert sorted(map(tuple, got)) == sorted(map(tuple, want)), name
@@ -379,3 +397,118 @@ def test_gate_counts_only_the_columns_a_call_reads(spark, idx, monkeypatch):
         spark, "gate-cols-phrase", lambda: s.search_phrase(phrase, k=K).collect()
     )
     assert jobs
+
+
+# --------------------------------------------------------------------- #
+def test_routed_frames_collect_like_spark(spark, idx, verses_idx):
+    """A routed result is held on the driver: its ``collect()`` returns
+    the rows that the ``LocalRelation`` of its table collects (values,
+    field names and order, Python types) without building that relation
+    or running a Spark job."""
+    s = Searcher(spark, idx)
+    multi = MultiSearcher(spark, [verses_idx, idx])
+    calls = _routed_calls(s, _phrases(_docs(spark, idx))[0]) + [
+        ("multi", lambda: multi.search(FED_QUERIES[1], k=K)),
+        ("multi_unknown", lambda: multi.search(UNKNOWN, k=K)),
+    ]
+    for name, call in calls:
+        frame = call()
+        rows, jobs = _jobs(spark, f"frame-{name}", frame.collect)
+        assert jobs == [], f"{name!r} ran Spark jobs {jobs}"
+        assert "_jdf" not in vars(frame), f"{name!r} built its JVM plan"
+        relation = spark.createDataFrame(frame._table)
+        want = relation.collect()
+        assert rows == want, name
+        assert bool(rows) == ("unknown" not in name and "stop" not in name)
+        for got_row, want_row in zip(rows, want):
+            assert got_row.__fields__ == want_row.__fields__, name
+            assert list(map(type, got_row)) == list(map(type, want_row)), name
+        assert frame.schema == relation.schema, name
+        if name in ("or", "and", "batch"):
+            assert frame.schema["rank"].nullable is False, name
+
+
+def test_routed_frame_behaves_as_its_local_relation(spark, idx):
+    """Every call but ``collect`` runs on the frame's ``LocalRelation``,
+    built on first use: it answers as that relation does."""
+    s = Searcher(spark, idx)
+    other = s.search("w00001", k=50).select("doc_id", F.col("rank").alias("r1"))
+    ops = {
+        "filter": lambda f: f.filter(F.col("rank") <= 3).collect(),
+        "join": lambda f: f.join(other, "doc_id").orderBy("rank").collect(),
+        "union": lambda f: sorted(f.union(f).collect()),
+        "count": lambda f: f.count(),
+        "schema": lambda f: f.schema,
+        "toPandas": lambda f: f.toPandas(),
+    }
+    for name, op in ops.items():
+        frame = s.search("w00001 w00454 needle00", k=K)
+        got, want = op(frame), op(spark.createDataFrame(frame._table))
+        if name == "toPandas":
+            pd.testing.assert_frame_equal(got, want)
+        else:
+            assert got == want, name
+        assert "_jdf" in vars(frame), name
+
+
+def _exact(frame):
+    return sorted(map(tuple, frame.collect()))
+
+
+def test_list_kernel_and_pandas_adapter_bit_identical(
+    spark, idx, deleted_idx, verses_idx, monkeypatch
+):
+    """The reader runs ``topk_rows`` over rows it joins itself; the Spark
+    plans run it through ``shard_topk``, its pandas adapter. Under either
+    ``topk_fn`` the two harnesses return equal scores, bit for bit: on a
+    tombstoned index, on a pruned tier, and in a federation whose
+    low-avgdl member scales its block maxima (``bound_scale > 1``)."""
+    tier = prune_postings(spark, idx, keep_per_term=5)
+    searchers = [Searcher(spark, deleted_idx), Searcher(spark, idx, postings_table=tier)]
+    multi = MultiSearcher(spark, [verses_idx, deleted_idx])
+    (low,) = [i for i, m in enumerate(multi.searchers) if m.avgdl < multi.avgdl]
+    lo, hi = multi.doc_bases[low], multi.doc_bases[low] + multi.searchers[low].num_docs
+    assert multi.searchers[1].deleted_ids
+    batch = [(i, q, K) for i, q in enumerate(OR_QUERIES)]
+    for algo, topk_fn in (("wand", wand_topk), ("maxscore", maxscore_topk)):
+        # the driver's list kernel under the same topk_fn as the plan
+        monkeypatch.setattr(
+            reader_mod, "topk_rows", partial(reader_mod.topk_rows, topk_fn=topk_fn)
+        )
+        for s in searchers:
+            # the batch holds every OR query; one search() covers its shape
+            q = OR_QUERIES[-1]
+            assert _exact(s.search(q, k=K)) == _exact(
+                s.search(q, k=K, method=algo)
+            ), (algo, q)
+            assert _exact(s.search_batch(batch)) == _exact(
+                s.search_batch(batch, method=algo)
+            ), algo
+        low_hit = False
+        for q in FED_QUERIES:
+            want = _pandas_federation(multi, q, K, topk_fn)
+            assert _rows(multi.search(q, k=K)) == want, (algo, q)
+            low_hit |= any(lo <= d < hi for d, _ in want)
+        assert low_hit
+
+
+def _pandas_federation(multi, q, k, topk_fn):
+    """The federated top-k through the pandas adapter: each member's
+    posting rows merged with the query's global-idf rows in pandas, its
+    block maxima scaled to the union's avgdl, offset by its docBase."""
+    terms = sorted(set(multi.analyzer.tokenize(q)))
+    dfs = multi._global_dfs(terms)
+    qrows = pd.DataFrame(
+        [(0, t, idf(multi.num_docs, dfs[t])) for t in terms if t in dfs],
+        columns=["qid", "term", "idf"],
+    )
+    hits = []
+    for m, base in zip(multi.searchers, multi.doc_bases):
+        r = m._reader
+        post = r.postings.read(terms, reader_mod._OR_COLUMNS).to_pandas()
+        out = reader_mod.shard_topk(
+            qrows.merge(post, on="term"), k, multi.avgdl, r.dels, topk_fn,
+            max(multi.avgdl / r.avgdl, 1.0),
+        )
+        hits += [(d + base, sc) for d, sc in zip(out["doc_id"], out["score"])]
+    return sorted(hits, key=lambda h: (-h[1], h[0]))[:k]
