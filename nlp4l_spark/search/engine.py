@@ -14,11 +14,12 @@ strategies, all returning identical results (tested):
   score upper bound, emits its local top-k; a global top-k merge finishes.
   This is the 10^12-doc path: work is proportional to the query's posting
   shards, never to the corpus.
-* ``driver`` — the same WAND kernel (``reader.topk_rows``, which the
-  ``wand`` plan runs through its pandas adapter ``reader.shard_topk``;
-  the phrase path's ``reader.phrase_matches`` likewise) run in-process
-  by the driver-resident ``IndexReader`` (search/reader.py) over posting rows
-  read with pyarrow; the top-k comes back as a pyarrow table held by a
+* ``driver`` — the same row kernels (``reader.topk_rows`` for OR,
+  ``reader.conjunction_rows`` for AND and phrases), which the Spark
+  plans run per group through their one ``applyInPandas`` adapter
+  ``_pandas_kernel``, run in-process by the driver-resident
+  ``IndexReader`` (search/reader.py) over posting rows read with
+  pyarrow; the top-k comes back as a pyarrow table held by a
   driver-side DataFrame (``_LocalFrame``), whose ``collect()`` reads the
   table without a Spark job or a JVM call; other DataFrame calls build
   the table's ``LocalRelation`` on first use.
@@ -27,7 +28,7 @@ strategies, all returning identical results (tested):
 ``search_phrase``) takes ``driver`` when the reader's size gate admits
 the call — the posting row-group bytes its term filter selects stay
 under ``reader.MAX_POSTING_BYTES`` — and otherwise runs the Spark plan
-(``wand``; the conjunctive plan for ``operator="and"``; phrase
+(``wand``; the per-shard conjunction for ``operator="and"``; phrase
 ``postings``). A named method always runs its Spark plan. Term-dictionary
 lookups (``_term_stats``) are a pushed pyarrow read of ``term_stats`` on
 the driver, so no path pays a Spark job for them. ``MultiSearcher.search``
@@ -51,7 +52,7 @@ from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
-from functools import cached_property, lru_cache
+from functools import cached_property, lru_cache, partial
 from typing import Iterable
 
 import numpy as np
@@ -73,10 +74,14 @@ from nlp4l_spark.index.catalog import IndexCatalog
 from nlp4l_spark.search import reader as reader_mod
 from nlp4l_spark.search import wand as wand_mod
 from nlp4l_spark.search.reader import (
+    _AND_COLUMNS,
+    _BATCH_SCHEMA,
+    _RANKED_SCHEMA,
+    _TOPK_COLUMNS,
     PHRASE_COLUMNS,
     IndexReader,
-    phrase_matches,
-    shard_topk,
+    conjunction_rows,
+    topk_rows,
 )
 
 _DECODED_SCHEMA = T.StructType(
@@ -88,13 +93,7 @@ _DECODED_SCHEMA = T.StructType(
     ]
 )
 
-_TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("qid", T.IntegerType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
+_TOPK_SCHEMA = "qid int, doc_id long, score double"
 
 
 def damerau_levenshtein(a: str, b: str) -> int:
@@ -187,6 +186,22 @@ class _LocalFrame(ClassicDataFrame):
             _create_row(names, values)
             for values in zip(*(c.to_pylist() for c in self._table.columns))
         ]
+
+
+def _pandas_kernel(kernel, columns: list[str], schema: str):
+    """The one ``applyInPandas`` adapter: a group's ``columns`` go to
+    ``kernel`` as row tuples, and the parallel lists it returns come back
+    as a pandas frame of the DDL ``schema``'s fields. Every Spark plan
+    calls its row kernel (``reader.topk_rows``,
+    ``reader.conjunction_rows``) through it, so it scores as the
+    driver-resident reader does."""
+    arrow = _arrow_schema(schema)
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = kernel(zip(*(pdf[c].tolist() for c in columns)))
+        return pa.table(dict(zip(arrow.names, out)), schema=arrow).to_pandas()
+
+    return run
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
@@ -543,38 +558,74 @@ class Searcher:
 
         method: "auto" answers from the driver-resident reader when its
         size gate admits the query, else runs the Spark plan (WAND for
-        OR, the conjunctive plan for AND); a named method ("wand",
-        "maxscore", "dataframe") always runs its Spark plan."""
+        OR, the per-shard conjunction for AND); a named method ("wand",
+        "maxscore", "dataframe") always runs its Spark plan, which for
+        AND is the one per-shard conjunction."""
         self._refresh()
         if operator == "and":
             return self._search_conjunctive(query, k, method)
+        if operator != "or":
+            raise ValueError(f"unknown operator {operator!r}")
         return self._search_batch(
             [(0, query, k)], method, ["doc_id", "score", "rank"]
         )
 
     def _search_conjunctive(self, query: str, k: int, method: str) -> DataFrame:
+        """AND top-k by the conjunction kernel ``reader.conjunction_rows``:
+        in the driver-resident reader when ``method="auto"`` and its gate
+        admits the query, else per shard in the Spark plan. A doc lives
+        in exactly one shard, so the per-shard conjunction is exact and
+        both answer the same rows, bit for bit."""
+        if method not in ("auto", "wand", "maxscore", "dataframe"):
+            raise ValueError(f"unknown method {method!r}")
         terms = sorted(set(self.analyzer.tokenize(query)))
         dfs = self._term_stats(terms)
         if len(dfs) < len(terms) or not terms:
             # a MUST term missing from the index -> no results
-            return _empty(self.spark, "doc_id long, score double, rank int")
+            return _LocalFrame(self.spark, _RANKED_SCHEMA.empty_table())
         rows = [(t, idf(self.num_docs, dfs[t])) for t in terms]
         if method == "auto" and self._reader.admits(terms):
             return _LocalFrame(self.spark, self._reader.search_conjunctive(rows, k))
-        out = (
-            self._term_scores(rows)
-            .groupBy("doc_id")
-            .agg(
-                F.sum("_s").alias("score"),
-                F.countDistinct("term").alias("_nm"),
-            )
-            .filter(F.col("_nm") == len(terms))  # the MUST candidate set
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
         w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return out.withColumn("rank", F.row_number().over(w))
+        return self._conjunction_plan(
+            self.postings_table, _AND_COLUMNS, rows, k
+        ).withColumn("rank", F.row_number().over(w))
+
+    def _conjunction_plan(
+        self,
+        table: str,
+        columns: list[str],
+        qterms: list[tuple[str, float]],
+        k: int,
+        offsets: list[int] | None = None,
+    ) -> DataFrame:
+        """The Spark harness of ``reader.conjunction_rows``: a pushed
+        In(term) scan of ``table``'s ``columns``, one kernel task per
+        shard emitting its local top-k, and a TakeOrderedAndProject
+        merge. Work is proportional to the query terms' postings, never
+        to the corpus."""
+        dels = (
+            np.fromiter(self.deleted_ids, dtype=np.int64)
+            if self.deleted_ids
+            else None
+        )
+        kernel = partial(
+            conjunction_rows,
+            qterms=qterms,
+            k=k,
+            avgdl=self.avgdl,
+            dels=dels,
+            offsets=offsets,
+        )
+        schema = "doc_id long, score double"
+        cand = (
+            self.cat.read(self.spark, table)
+            .filter(F.col("term").isin(sorted({t for t, _ in qterms})))
+            .select("shard", *columns)
+            .groupBy("shard")
+            .applyInPandas(_pandas_kernel(kernel, columns, schema), schema)
+        )
+        return _top(cand, k)
 
     def search_block_join(
         self,
@@ -3390,6 +3441,8 @@ class Searcher:
         projected in pyarrow before it becomes a driver-held frame
         (``_LocalFrame``): a Spark ``select`` on top of it would build
         the JVM plan that the frame's ``collect`` avoids."""
+        if method not in ("auto", "wand", "maxscore", "dataframe"):
+            raise ValueError(f"unknown method {method!r}")
         queries = list(queries)
         per_q_terms: dict[int, list[str]] = {
             qid: sorted(set(self.analyzer.tokenize(q))) for qid, q, _ in queries
@@ -3405,8 +3458,7 @@ class Searcher:
             if t in dfs
         ]
         if not rows:
-            empty = _arrow_schema("qid int, rank int, doc_id long, score double")
-            return _LocalFrame(self.spark, empty.empty_table().select(columns))
+            return _LocalFrame(self.spark, _BATCH_SCHEMA.empty_table().select(columns))
         if method == "auto":
             if self._reader.admits(dfs):
                 return _LocalFrame(
@@ -3419,10 +3471,8 @@ class Searcher:
         postings = self._matching_postings(sorted({r[1] for r in rows}))
         if method == "dataframe":
             scored = self._score_dataframe(postings, qterms)
-        elif method in ("wand", "maxscore"):
-            scored = self._score_wand(postings, qterms, ks, algo=method)
         else:
-            raise ValueError(f"unknown method {method!r}")
+            scored = self._score_wand(postings, qterms, ks, algo=method)
 
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
         k_df = F.broadcast(
@@ -3460,6 +3510,8 @@ class Searcher:
           from the opt-in term_vectors table; fine while per-term df is
           modest, but the join sides are df-sized — the reason the
           postings path exists."""
+        if method not in ("auto", "postings", "term_vectors"):
+            raise ValueError(f"unknown method {method!r}")
         self._refresh()
         terms, offsets = self._phrase_terms(phrase)
         if not terms:
@@ -3491,15 +3543,13 @@ class Searcher:
     def _phrase_postings(
         self, terms: list[str], offsets: list[int], k: int, routed: bool = False
     ) -> DataFrame:
-        """Phrase scoring over the positions in the posting rows: per
-        (shard) task decodes each query term's (doc_ids, tfs, dls,
-        positions) rows (concatenable by construction), intersects
-        candidate docs, counts the starts p with every term at p + its
-        query offset and emits the shard-local BM25 top-k; the global
-        merge is TakeOrderedAndProject. Work ∝ query-term postings, never
-        corpus size. A ``routed`` call runs the same kernel
-        (``reader.phrase_matches``) in the driver-resident reader when
-        its size gate admits the phrase."""
+        """Phrase scoring over the positions in ``postings`` by the
+        conjunction kernel ``reader.conjunction_rows``: per shard it
+        intersects the docs holding every query term, counts the starts
+        p with every term at p + its query offset and emits the
+        shard-local BM25 top-k (``_conjunction_plan``). A ``routed`` call
+        runs the same kernel in the driver-resident reader when its size
+        gate admits the phrase."""
         if not has_positions(self.cat):
             raise ValueError(
                 "phrase postings path needs IndexBuilder(store_positions=True)"
@@ -3507,33 +3557,11 @@ class Searcher:
         dfs = self._term_stats(terms)
         if any(t not in dfs for t in terms):
             return _empty(self.spark, "doc_id long, score double")
-        idf_sum = float(sum(idf(self.num_docs, dfs[t]) for t in terms))
+        qterms = [(t, idf(self.num_docs, dfs[t])) for t in terms]
         if routed and self._reader.admits(terms, positions=True):
-            return _LocalFrame(
-                self.spark, self._reader.search_phrase(terms, offsets, idf_sum, k)
-            )
-        pp = (
-            self.cat.read(self.spark, "postings")
-            .filter(F.col("term").isin(list(set(terms))))
-            .select("shard", *PHRASE_COLUMNS)
-        )
-        dels = (
-            np.fromiter(self.deleted_ids, dtype=np.int64)
-            if self.deleted_ids
-            else None
-        )
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return phrase_matches(pdf, terms, offsets, dels)
-
-        cand = pp.groupBy("shard").applyInPandas(
-            run, "doc_id long, tf long, dl long"
-        )
-        return (
-            cand.select("doc_id", _bm25(idf_sum, self.avgdl).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+            hits = self._reader.search_conjunctive(qterms, k, offsets)
+            return _LocalFrame(self.spark, hits.select(["doc_id", "score"]))
+        return self._conjunction_plan("postings", PHRASE_COLUMNS, qterms, k, offsets)
 
     # ------------------------------------------------------------------ #
     def _decoded(self, postings: DataFrame) -> DataFrame:
@@ -3572,7 +3600,6 @@ class Searcher:
         ks: dict[int, int],
         algo: str = "wand",
     ) -> DataFrame:
-        avgdl = self.avgdl
         max_k = max(ks.values()) if ks else 10
         # both dynamic-pruning strategies share the shard/decode harness
         # and are result-identical (tests/test_maxscore.py); see
@@ -3585,17 +3612,19 @@ class Searcher:
             if self.deleted_ids
             else None
         )
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return shard_topk(pdf, max_k, avgdl, dels, topk_fn)
-
-        joined = postings.join(qterms, "term").select(
-            "qid", "term", "idf", "shard", "doc_ids_enc", "tfs_enc", "dls_enc",
-            "block_max",
+        kernel = partial(
+            topk_rows, k=max_k, avgdl=self.avgdl, dels=dels, topk_fn=topk_fn
         )
         # one WAND task per (query, doc-range shard); local top-k per task,
         # global merge is the tiny window in search_batch
-        return joined.groupBy("qid", "shard").applyInPandas(run, _TOPK_SCHEMA)
+        return (
+            postings.join(qterms, "term")
+            .select(*_TOPK_COLUMNS)
+            .groupBy("qid", "shard")
+            .applyInPandas(
+                _pandas_kernel(kernel, _TOPK_COLUMNS, _TOPK_SCHEMA), _TOPK_SCHEMA
+            )
+        )
 
 
 def _decode_postings(batches):

@@ -29,13 +29,14 @@ gets a new snapshot id and loses the part files the datasets list.
 Term statistics are not held: the searcher reads them per call with the
 same pushed filter over ``term_stats``, on every path.
 
-The per-shard kernels are plain functions over posting rows, so both
-harnesses score with the same code and WAND-routed OR scores are equal
-bit for bit. The OR kernel ``topk_rows`` takes the rows as tuples:
-Spark's ``applyInPandas`` calls it per (query, shard) group through its
-pandas adapter ``shard_topk``, and the reader calls it directly on the
-rows it joins from a pyarrow read, with no pandas on the way.
-``phrase_matches`` (exact phrases) takes a pandas frame in both.
+The per-shard kernels are plain functions over posting-row tuples, so
+both harnesses score with the same code and their scores are equal bit
+for bit: ``topk_rows`` (OR, by WAND or MaxScore) and
+``conjunction_rows`` (AND, and exact phrases on top of the same
+conjunction, as Lucene's ``ExactPhraseMatcher`` sits on its
+``ConjunctionDISI``). The reader calls them directly on the rows it reads
+with pyarrow, with no pandas on the way; the Spark plans call them per
+group through the one ``applyInPandas`` adapter in search/engine.py.
 
 Size gate: a call is admitted only when the column chunks it reads of
 the posting row groups its term filter selects, summed from the footers'
@@ -49,7 +50,6 @@ from bisect import bisect_left
 from operator import itemgetter
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -81,9 +81,6 @@ _RANKED_SCHEMA = pa.schema(
         pa.field("score", pa.float64()),
         pa.field("rank", pa.int32(), nullable=False),
     ]
-)
-_SCORED_SCHEMA = pa.schema(
-    [pa.field("doc_id", pa.int64()), pa.field("score", pa.float64())]
 )
 
 _OR_COLUMNS = ["term", "shard", "doc_ids_enc", "tfs_enc", "dls_enc", "block_max"]
@@ -151,106 +148,77 @@ def topk_rows(
     return out_qid, out_doc, out_score
 
 
-def shard_topk(
-    pdf: pd.DataFrame,
+def conjunction_rows(
+    rows,
+    qterms: list[tuple[str, float]],
     k: int,
     avgdl: float,
     dels: np.ndarray | None = None,
-    topk_fn=wand_topk,
-    bound_scale: float = 1.0,
-) -> pd.DataFrame:
-    """``topk_rows`` over a pandas frame of posting rows, for the Spark
-    plan's ``applyInPandas`` -> (qid, doc_id, score)."""
-    qid, doc, score = topk_rows(
-        zip(*(pdf[c].tolist() for c in _TOPK_COLUMNS)),
-        k,
-        avgdl,
-        dels,
-        topk_fn=topk_fn,
-        bound_scale=bound_scale,
-    )
-    return pd.DataFrame(
-        {"qid": pd.Series(qid, dtype="int64"),
-         "doc_id": pd.Series(doc, dtype="int64"),
-         "score": pd.Series(score, dtype="float64")}
-    )
+    offsets: list[int] | None = None,
+) -> tuple[list[int], list[float]]:
+    """The AND and phrase kernel over posting rows (term, min_doc,
+    doc_ids_enc, tfs_enc, dls_enc[, pos_enc]) -> the local top-k as
+    parallel (doc_id, score) lists, score DESC, doc_id ASC.
 
-
-def phrase_matches(
-    pdf: pd.DataFrame,
-    terms: list[str],
-    offsets: list[int],
-    dels: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Exact-phrase matches in position-carrying posting rows (term,
-    min_doc, doc_ids_enc, tfs_enc, dls_enc, pos_enc) -> (doc_id, tf, dl)
-    with tf = the phrase frequency. ``offsets[i]`` is ``terms[i]``'s
-    position in the query, so a stopword hole in the query asks for the
-    same hole in the doc. Each term's rows are stacked in min_doc order
-    (disjoint doc ranges by construction), candidate docs are those
-    holding every term, and a match is a start p with ``terms[i]`` at
-    p + offsets[i] for every i."""
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series([], dtype="int64"),
-         "tf": pd.Series([], dtype="int64"),
-         "dl": pd.Series([], dtype="int64")}
-    )
-    per_term: dict[str, list] = {}
-    segs = pdf.sort_values("min_doc")
-    for t, *encs in zip(
-        segs["term"], segs["doc_ids_enc"], segs["tfs_enc"],
-        segs["dls_enc"], segs["pos_enc"],
-    ):
-        per_term.setdefault(t, []).append(encs)
-    if len(per_term) < len(set(terms)):
-        return empty
+    ``qterms`` are the query's (term, idf) pairs. Each term's rows are
+    stacked in min_doc order (disjoint doc ranges by construction), and
+    the candidates are the live docs holding every term. Without
+    ``offsets`` (AND) a candidate scores the sum of ``idf *
+    bm25_impact(tf, dl)`` in ``qterms`` order. With ``offsets`` (a phrase,
+    ``qterms`` in query order with ``offsets[i]`` the i-th term's position
+    in the query, so a stopword hole in the query asks for the same hole
+    in the doc) a match is a start p with every term at p + its offset,
+    and a candidate scores ``idf_sum * bm25_impact(phrase_freq, dl)``."""
+    runs: dict[str, list] = {}
+    for t, _min_doc, *encs in sorted(rows, key=itemgetter(0, 1)):
+        runs.setdefault(t, []).append(encs)
+    if any(t not in runs for t, _ in qterms):
+        return [], []
     decoded: dict[str, tuple] = {}
-    for t, rows in per_term.items():
-        d_encs, tf_encs, dl_encs, p_encs = zip(*rows)
+    for t, encs in runs.items():
+        d_encs, tf_encs, dl_encs, *p_encs = zip(*encs)
         d = np.concatenate([codec.decode_doc_ids(x) for x in d_encs])
-        dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
-        # a posting's position run has length tf
         tf = np.concatenate([codec.decode_tfs(x) for x in tf_encs])
-        flat = codec.decode_positions(b"".join(p_encs), tf)
-        pstarts = np.zeros(tf.size + 1, dtype=np.int64)
-        np.cumsum(tf, out=pstarts[1:])
-        decoded[t] = (d, dl, flat, pstarts)
+        dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
+        decoded[t] = (d, tf, dl)
+        if p_encs:
+            # a posting's position run has length tf
+            pstarts = np.zeros(tf.size + 1, dtype=np.int64)
+            np.cumsum(tf, out=pstarts[1:])
+            flat = codec.decode_positions(b"".join(p_encs[0]), tf)
+            decoded[t] += (flat, pstarts)
     cand = None
-    for t in set(terms):
-        cand = decoded[t][0] if cand is None else np.intersect1d(
-            cand, decoded[t][0], assume_unique=True
-        )
+    for t in dict.fromkeys(t for t, _ in qterms):
+        d = decoded[t][0]
+        cand = d if cand is None else np.intersect1d(cand, d, assume_unique=True)
     if dels is not None and cand.size:
         cand = cand[~np.isin(cand, dels)]  # live-docs mask
-    out_doc, out_tf, out_dl = [], [], []
-    for doc in cand.tolist():
-        inter = None
-        for t, off in zip(terms, offsets):
-            d, _, flat, pstarts = decoded[t]
-            j = int(np.searchsorted(d, doc))
-            ps = flat[pstarts[j] : pstarts[j + 1]] - off
-            inter = ps if inter is None else np.intersect1d(
-                inter, ps, assume_unique=True
-            )
-            if inter.size == 0:
-                break
-        if inter.size:
-            d0, dl0 = decoded[terms[0]][:2]
-            out_doc.append(doc)
-            out_tf.append(int(inter.size))
-            out_dl.append(int(dl0[int(np.searchsorted(d0, doc))]))
-    if not out_doc:
-        return empty
-    return pd.DataFrame(
-        {"doc_id": pd.Series(out_doc, dtype="int64"),
-         "tf": pd.Series(out_tf, dtype="int64"),
-         "dl": pd.Series(out_dl, dtype="int64")}
-    )
-
-
-def _ranked(doc_ids: np.ndarray, scores: np.ndarray, k: int):
-    """Indices of the top k under score DESC, doc_id ASC."""
-    return np.lexsort((doc_ids, -scores))[:k]
+    if offsets is None:
+        score = np.zeros(cand.size)
+        for t, w in qterms:
+            d, tf, dl = decoded[t]
+            j = np.searchsorted(d, cand)
+            score += w * bm25_impact(tf[j], dl[j], avgdl)
+    else:
+        freq = np.zeros(cand.size, dtype=np.int64)
+        for i, doc in enumerate(cand.tolist()):
+            inter = None
+            for (t, _), off in zip(qterms, offsets):
+                d, _, _, flat, pstarts = decoded[t]
+                j = int(np.searchsorted(d, doc))
+                ps = flat[pstarts[j] : pstarts[j + 1]] - off
+                inter = ps if inter is None else np.intersect1d(
+                    inter, ps, assume_unique=True
+                )
+                if inter.size == 0:
+                    break
+            freq[i] = inter.size
+        cand, freq = cand[freq > 0], freq[freq > 0]
+        d, _, dl = decoded[qterms[0][0]][:3]
+        idf_sum = sum(w for _, w in qterms)
+        score = idf_sum * bm25_impact(freq, dl[np.searchsorted(d, cand)], avgdl)
+    top = np.lexsort((cand, -score))[:k]
+    return cand[top].tolist(), score[top].tolist()
 
 
 # --------------------------------------------------------------------- #
@@ -298,8 +266,7 @@ class _PostingTable:
 
 class IndexReader:
     """The in-process reader one ``Searcher`` opens on its first routed
-    call. pyarrow/NumPy (pandas only in the phrase kernel): results come
-    back as pyarrow Tables with the Spark plans' schemas, which the
+    call. pyarrow/NumPy, no pandas: results come back as pyarrow Tables with the Spark plans' schemas, which the
     searcher returns as driver-held DataFrames (``engine._LocalFrame``)."""
 
     def __init__(
@@ -385,58 +352,33 @@ class IndexReader:
         )
 
     def search_conjunctive(
-        self, rows: list[tuple[str, float]], k: int
+        self,
+        qterms: list[tuple[str, float]],
+        k: int,
+        offsets: list[int] | None = None,
     ) -> pa.Table:
-        """AND top-k: docs holding every (term, idf) row's term, scored by
-        the BM25 sum over those terms -> (doc_id, score, rank)."""
-        post = self.postings.read([t for t, _ in rows], _AND_COLUMNS).sort_by(
-            [("term", "ascending"), ("min_doc", "ascending")]
+        """AND top-k over the (term, idf) rows -> (doc_id, score, rank);
+        with ``offsets``, the exact-phrase top-k over the positions in
+        ``postings`` (``conjunction_rows`` has both contracts)."""
+        table, columns = (
+            (self.postings, _AND_COLUMNS)
+            if offsets is None
+            else (self.positions, PHRASE_COLUMNS)
         )
-        runs: dict[str, list] = {}
-        for t, _min_doc, *encs in zip(*(post[c].to_pylist() for c in _AND_COLUMNS)):
-            runs.setdefault(t, []).append(encs)
-        decoded = {}
-        for t, encs in runs.items():
-            d_encs, tf_encs, dl_encs = zip(*encs)
-            d = np.concatenate([codec.decode_doc_ids(x) for x in d_encs])
-            tf = np.concatenate([codec.decode_tfs(x) for x in tf_encs])
-            dl = np.concatenate([codec.decode_tfs(x) for x in dl_encs])
-            decoded[t] = (d, tf, dl)
-        cand = None
-        for t, _ in rows:
-            d = decoded[t][0] if t in decoded else np.empty(0, np.int64)
-            cand = d if cand is None else np.intersect1d(cand, d, assume_unique=True)
-        if self.dels is not None and cand.size:
-            cand = cand[~np.isin(cand, self.dels)]
-        score = np.zeros(cand.size)
-        for t, w in rows:
-            if cand.size:
-                d, tf, dl = decoded[t]
-                j = np.searchsorted(d, cand)
-                score += w * bm25_impact(tf[j], dl[j], self.avgdl)
-        top = _ranked(cand, score, k)
+        post = table.read([t for t, _ in qterms], columns)
+        doc, score = conjunction_rows(
+            zip(*(post[c].to_pylist() for c in columns)),
+            qterms,
+            k,
+            self.avgdl,
+            self.dels,
+            offsets,
+        )
         return pa.table(
             {
-                "doc_id": cand[top],
-                "score": score[top],
-                "rank": np.arange(1, top.size + 1, dtype=np.int32),
+                "doc_id": doc,
+                "score": score,
+                "rank": np.arange(1, len(doc) + 1, dtype=np.int32),
             },
             schema=_RANKED_SCHEMA,
-        )
-
-    def search_phrase(
-        self, terms: list[str], offsets: list[int], idf_sum: float, k: int
-    ) -> pa.Table:
-        """Exact-phrase top-k over the positions in ``postings`` ->
-        (doc_id, score); the phrase scores as one term of weight
-        ``idf_sum`` and tf = the phrase frequency."""
-        pdf = self.positions.read(terms, PHRASE_COLUMNS).to_pandas()
-        m = phrase_matches(pdf, terms, offsets, self.dels)
-        doc = m["doc_id"].to_numpy()
-        score = idf_sum * bm25_impact(
-            m["tf"].to_numpy(), m["dl"].to_numpy(), self.avgdl
-        )
-        top = _ranked(doc, score, k)
-        return pa.table(
-            {"doc_id": doc[top], "score": score[top]}, schema=_SCORED_SCHEMA
         )

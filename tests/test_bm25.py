@@ -2,7 +2,8 @@
 and bm25_impact in the package; the same call builds a Spark Column and
 evaluates NumPy arrays bit-identically; single-term queries score
 bit-identically on the dataframe, WAND and MaxScore paths; IndexBuilder
-and microbuild write block-max impacts with the shared function."""
+and microbuild write block-max impacts with the shared function; the
+driver reader and the Spark plans share their row kernels."""
 
 from __future__ import annotations
 
@@ -73,6 +74,40 @@ def test_bm25_formula_defined_once():
             ):
                 offenders.append(f"{rel}:{node.lineno} defines {node.name}")
     assert not offenders, offenders
+
+
+def test_one_kernel_per_harness():
+    """search/reader.py imports no pandas: the driver runs the row kernels
+    on pyarrow rows. Every ``applyInPandas`` in search/engine.py runs a
+    row kernel through the one adapter ``_pandas_kernel``."""
+    reader = ast.parse((PKG / "search/reader.py").read_text(encoding="utf-8"))
+    imported = [
+        alias.name
+        for node in ast.walk(reader)
+        if isinstance(node, ast.Import)
+        for alias in node.names
+    ] + [
+        node.module
+        for node in ast.walk(reader)
+        if isinstance(node, ast.ImportFrom) and node.module
+    ]
+    assert not [m for m in imported if m.split(".")[0] == "pandas"], imported
+    engine = ast.parse((PKG / "search/engine.py").read_text(encoding="utf-8"))
+    calls = [
+        node
+        for node in ast.walk(engine)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandas"
+    ]
+    assert calls
+    for node in calls:
+        fn = node.args[0] if node.args else None
+        assert (
+            isinstance(fn, ast.Call)
+            and isinstance(fn.func, ast.Name)
+            and fn.func.id == "_pandas_kernel"
+        ), f"search/engine.py:{node.lineno} bypasses _pandas_kernel"
 
 
 def test_impact_column_equals_numpy(spark):

@@ -2,8 +2,9 @@
 
 Every routed entry point — OR ``search``, ``operator="and"``,
 ``search_batch`` and ``search_phrase`` — must answer exactly what the
-explicitly named Spark plan and the OracleIndex answer (doc ids exactly,
-scores within 1e-9; WAND-routed OR scores ``==``), on a plain index, with
+explicitly named Spark plan (doc ids and scores ``==``: both run the same
+row kernel) and the OracleIndex (doc ids exactly, scores within 1e-9)
+answer, on a plain index, with
 tombstones, on a pruned postings tier, on a microbuild-written
 generation and after ``expunge_deletes`` under a live searcher. The gate
 constant set below a query's size must send ``auto`` to the Spark plan
@@ -31,7 +32,7 @@ from nlp4l_spark.index.deletes import delete_docs, expunge_deletes
 from nlp4l_spark.index.pruning import prune_postings
 from nlp4l_spark.oracle import OracleIndex
 from nlp4l_spark.search import MultiSearcher, Searcher
-from nlp4l_spark.search import reader as reader_mod
+from nlp4l_spark.search import engine, reader as reader_mod
 from nlp4l_spark.search.wand import maxscore_topk, wand_topk
 
 K = 10
@@ -146,7 +147,7 @@ def _check_or(s, q, k, want=None, dataframe=False):
 
 def _check_and(s, q, k, want=None):
     auto = _rows(s.search(q, k=k, operator="and"))
-    _same(auto, _rows(s.search(q, k=k, operator="and", method="wand")))
+    assert auto == _rows(s.search(q, k=k, operator="and", method="wand")), q
     if want is not None:
         _same(auto, want)
 
@@ -169,7 +170,7 @@ def _check_batch(s, queries, want=None):
 
 def _check_phrase(s, q, k, want=None):
     auto = _rows(s.search_phrase(q, k=k))
-    _same(auto, _rows(s.search_phrase(q, k=k, method="postings")))
+    assert auto == _rows(s.search_phrase(q, k=k, method="postings")), q
     if s.cat.is_committed("term_vectors"):
         _same(auto, _rows(s.search_phrase(q, k=k, method="term_vectors")))
     if want is not None:
@@ -350,7 +351,9 @@ def _jobs(spark, group, fn):
 
 def test_routed_calls_run_no_spark_job(spark, idx, deleted_idx):
     """The guard on the hot path: constructing a Searcher and answering
-    every admitted routed call (reader open included) runs zero jobs."""
+    every admitted routed call (reader open included) runs zero jobs. An
+    unknown operator or method raises ValueError, also on a query whose
+    terms are all unknown, and runs no job either."""
     phrase = _phrases(_docs(spark, idx))[0]
     for n, d in enumerate((idx, deleted_idx)):
         s, jobs = _jobs(spark, f"reader-open-{n}", lambda: Searcher(spark, d))
@@ -358,6 +361,21 @@ def test_routed_calls_run_no_spark_job(spark, idx, deleted_idx):
         for name, call in _routed_calls(s, phrase):
             _, jobs = _jobs(spark, f"reader-{n}-{name}", lambda: call().collect())
             assert jobs == [], f"routed call {name!r} ran Spark jobs {jobs}"
+    rejected = [
+        lambda: s.search("w00001 w00002", k=K, operator="AND"),
+        lambda: s.search("w00001 w00002", k=K, method="wnad"),
+        lambda: s.search(UNKNOWN, k=K, method="wnad"),
+        lambda: s.search("w00001 w00002", k=K, operator="and", method="posting"),
+        lambda: s.search(UNKNOWN, k=K, operator="and", method="posting"),
+        lambda: s.search_batch([(0, UNKNOWN, K)], method="wnad"),
+        lambda: s.search_phrase(phrase, k=K, method="posting"),
+        lambda: s.search_phrase(STOP, k=K, method="posting"),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    for i, call in enumerate(rejected):
+        with pytest.raises(ValueError, match="unknown"):
+            _jobs(spark, f"rejected-{i}", call)
+        assert not tracker.getJobIdsForGroup(f"rejected-{i}"), i
 
 
 def test_gate_falls_back_to_spark(spark, idx, monkeypatch):
@@ -424,7 +442,7 @@ def test_routed_frames_collect_like_spark(spark, idx, verses_idx):
             assert got_row.__fields__ == want_row.__fields__, name
             assert list(map(type, got_row)) == list(map(type, want_row)), name
         assert frame.schema == relation.schema, name
-        if name in ("or", "and", "batch"):
+        if "rank" in frame.columns:
             assert frame.schema["rank"].nullable is False, name
 
 
@@ -458,13 +476,24 @@ def _exact(frame):
 def test_list_kernel_and_pandas_adapter_bit_identical(
     spark, idx, deleted_idx, verses_idx, monkeypatch
 ):
-    """The reader runs ``topk_rows`` over rows it joins itself; the Spark
-    plans run it through ``shard_topk``, its pandas adapter. Under either
-    ``topk_fn`` the two harnesses return equal scores, bit for bit: on a
+    """The reader runs ``topk_rows`` and ``conjunction_rows`` over the
+    rows it reads itself; the Spark plans run them through
+    ``engine._pandas_kernel``, the one pandas adapter. Under either
+    ``topk_fn`` the two harnesses return equal OR scores, bit for bit: on a
     tombstoned index, on a pruned tier, and in a federation whose
-    low-avgdl member scales its block maxima (``bound_scale > 1``)."""
+    low-avgdl member scales its block maxima (``bound_scale > 1``). AND is
+    bit-identical on the tombstoned index and the pruned tier, and
+    phrases on the tombstoned index."""
     tier = prune_postings(spark, idx, keep_per_term=5)
     searchers = [Searcher(spark, deleted_idx), Searcher(spark, idx, postings_table=tier)]
+    # the 5-per-term tier keeps two docs holding both terms
+    q_and = "w00026 w00134"
+    for s in searchers:
+        want = _exact(s.search(q_and, k=K, operator="and", method="wand"))
+        assert want and _exact(s.search(q_and, k=K, operator="and")) == want
+    phrase = _phrases(_docs(spark, deleted_idx))[0]
+    want = _exact(searchers[0].search_phrase(phrase, k=K, method="postings"))
+    assert want and _exact(searchers[0].search_phrase(phrase, k=K)) == want
     multi = MultiSearcher(spark, [verses_idx, deleted_idx])
     (low,) = [i for i, m in enumerate(multi.searchers) if m.avgdl < multi.avgdl]
     lo, hi = multi.doc_bases[low], multi.doc_bases[low] + multi.searchers[low].num_docs
@@ -493,9 +522,10 @@ def test_list_kernel_and_pandas_adapter_bit_identical(
 
 
 def _pandas_federation(multi, q, k, topk_fn):
-    """The federated top-k through the pandas adapter: each member's
-    posting rows merged with the query's global-idf rows in pandas, its
-    block maxima scaled to the union's avgdl, offset by its docBase."""
+    """The federated top-k through the Spark plans' pandas adapter: each
+    member's posting rows merged with the query's global-idf rows in
+    pandas, its block maxima scaled to the union's avgdl, offset by its
+    docBase."""
     terms = sorted(set(multi.analyzer.tokenize(q)))
     dfs = multi._global_dfs(terms)
     qrows = pd.DataFrame(
@@ -506,9 +536,12 @@ def _pandas_federation(multi, q, k, topk_fn):
     for m, base in zip(multi.searchers, multi.doc_bases):
         r = m._reader
         post = r.postings.read(terms, reader_mod._OR_COLUMNS).to_pandas()
-        out = reader_mod.shard_topk(
-            qrows.merge(post, on="term"), k, multi.avgdl, r.dels, topk_fn,
-            max(multi.avgdl / r.avgdl, 1.0),
+        kernel = partial(
+            reader_mod.topk_rows, k=k, avgdl=multi.avgdl, dels=r.dels,
+            topk_fn=topk_fn, bound_scale=max(multi.avgdl / r.avgdl, 1.0),
         )
+        out = engine._pandas_kernel(
+            kernel, reader_mod._TOPK_COLUMNS, engine._TOPK_SCHEMA
+        )(qrows.merge(post, on="term"))
         hits += [(d + base, sc) for d, sc in zip(out["doc_id"], out["score"])]
     return sorted(hits, key=lambda h: (-h[1], h[0]))[:k]
