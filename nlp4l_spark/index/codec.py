@@ -124,10 +124,6 @@ def decode_tfs(buf: bytes) -> np.ndarray:
     return varbyte_decode(buf).astype(np.int64)
 
 
-def decode_posting(doc_ids_enc: bytes, tfs_enc: bytes) -> tuple[np.ndarray, np.ndarray]:
-    return decode_doc_ids(doc_ids_enc), decode_tfs(tfs_enc)
-
-
 def encode_positions(flat_positions: np.ndarray, lens: np.ndarray) -> bytes:
     """Per-doc position runs (lens[i] positions for doc i, ascending
     within each run), delta-gapped with a reset at every run start
@@ -251,141 +247,3 @@ def encode_runs(
         )
     return cols
 
-
-# --------------------------------------------------------------------- #
-# FOR128: Lucene-format bit-packed blocks (PackedInts / ForUtil shape)
-# --------------------------------------------------------------------- #
-def for128_encode(values: np.ndarray) -> bytes:
-    """Frame-of-Reference encode: BLOCK_SIZE-value frames, each packed at
-    the frame's max bit width — Lucene's postings format (ForUtil packs
-    128-int blocks at ceil(log2(max+1)) bits; we add a 4-byte count and
-    a 1-byte width header per frame instead of Lucene's implicit block
-    structure).
-
-    Layout: uint32 n_values, then per frame: uint8 width b,
-    ceil(frame_len*b/8) bytes of LSB-first packed bits.
-
-    NOT the wire default: the segment merger's bulk pass decodes the
-    CONCATENATION of thousands of per-row varbyte streams in one
-    vectorized call (varbyte is self-delimiting; see _segment_merger) —
-    FOR frames are padded per row, so that trick dies with them. FOR128
-    exists for the measured storage comparison (tests/test_codec.py:
-    ~2-3x smaller on small-gap postings, same-order decode speed) and as
-    the codec a multi-file Lucene-layout export would use."""
-    v = np.asarray(values, dtype=np.uint64)
-    parts = [np.uint32(v.size).tobytes()]
-    for s in range(0, v.size, BLOCK_SIZE):
-        frame = v[s : s + BLOCK_SIZE]
-        mx = int(frame.max()) if frame.size else 0
-        b = max(1, mx.bit_length())
-        bits = (
-            (frame[:, None] >> np.arange(b, dtype=np.uint64)) & np.uint64(1)
-        ).astype(np.uint8)
-        parts.append(np.uint8(b).tobytes())
-        parts.append(np.packbits(bits.reshape(-1), bitorder="little").tobytes())
-    return b"".join(parts)
-
-
-def for128_decode(buf: bytes) -> np.ndarray:
-    """Inverse of for128_encode -> uint64 array."""
-    if not buf:
-        return np.empty(0, dtype=np.uint64)
-    n = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
-    out = np.empty(n, dtype=np.uint64)
-    off, done = 4, 0
-    while done < n:
-        frame_len = min(BLOCK_SIZE, n - done)
-        b = buf[off]
-        off += 1
-        nbytes = (frame_len * b + 7) // 8
-        bits = np.unpackbits(
-            np.frombuffer(buf[off : off + nbytes], dtype=np.uint8),
-            count=frame_len * b,
-            bitorder="little",
-        )
-        powers = np.uint64(1) << np.arange(b, dtype=np.uint64)
-        out[done : done + frame_len] = (
-            bits.reshape(frame_len, b).astype(np.uint64) * powers
-        ).sum(axis=1, dtype=np.uint64)
-        off += nbytes
-        done += frame_len
-    return out
-
-
-# --------------------------------------------------------------------- #
-# Front-coded term dictionary (Lucene BlockTree prefix sharing)
-# --------------------------------------------------------------------- #
-TERM_BLOCK = 16
-
-
-def _uvarint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def front_code_terms(terms) -> bytes:
-    """Front-code a SORTED term list into TERM_BLOCK-term blocks —
-    Lucene's BlockTree term-dictionary prefix sharing (every block
-    leader is stored whole so a seekCeil can land on block boundaries;
-    followers store only (lcp, suffix) against their predecessor).
-
-    Layout: uint32 n_terms, then per term: uvarint lcp, uvarint
-    suffix_len, suffix utf-8 bytes (block leaders have lcp forced to 0).
-    Like FOR128 this is NOT the live layout (the term dictionary lives
-    in parquet, whose own dictionary+RLE encoding the reader prunes
-    with pushed ranges); it is the measured storage twin for a
-    Lucene-file-layout export — tests/test_codec.py shows ~2-4x
-    shrinkage on real sorted vocabularies."""
-    parts = [np.uint32(len(terms)).tobytes()]
-    prev = b""
-    for i, t in enumerate(terms):
-        tb = t.encode("utf-8")
-        if i % TERM_BLOCK == 0:
-            lcp = 0
-        else:
-            lcp = 0
-            m = min(len(prev), len(tb))
-            while lcp < m and prev[lcp] == tb[lcp]:
-                lcp += 1
-        suffix = tb[lcp:]
-        parts.append(_uvarint(lcp))
-        parts.append(_uvarint(len(suffix)))
-        parts.append(suffix)
-        prev = tb
-    return b"".join(parts)
-
-
-def front_decode_terms(buf: bytes) -> list[str]:
-    """Inverse of front_code_terms."""
-    if not buf:
-        return []
-    n = int(np.frombuffer(buf[:4], dtype=np.uint32)[0])
-    off = 4
-    out: list[str] = []
-    prev = b""
-
-    def uv(off):
-        val, shift = 0, 0
-        while True:
-            b = buf[off]
-            off += 1
-            val |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return val, off
-            shift += 7
-
-    for _ in range(n):
-        lcp, off = uv(off)
-        slen, off = uv(off)
-        tb = prev[:lcp] + buf[off : off + slen]
-        off += slen
-        out.append(tb.decode("utf-8"))
-        prev = tb
-    return out

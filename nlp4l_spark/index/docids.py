@@ -22,6 +22,8 @@ north_rule's two-cluster-size run requires.
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, functions as F
 
 _LOCAL_IDX_MASK = (1 << 33) - 1  # monotonically_increasing_id: low 33 bits
@@ -88,3 +90,18 @@ def assign_doc_ids(
     out._docid_cache = ranged  # type: ignore[attr-defined]
     out._total_rows = running  # row count, already known — saves an action
     return out
+
+
+def doc_bases(cats) -> list[int]:
+    """Lucene MultiReader numbering of the indexes behind ``cats`` (each
+    an ``IndexCatalog``), in list order: each index's docBase is the sum
+    of the preceding indexes' maxDoc, and the last of the K + 1 entries
+    is the federation's maxDoc. An index's maxDoc is the span of its
+    docIDs: its live docs plus the holes an expunging compaction left,
+    ``num_docs + expunged`` in the stored manifest (no scan). Tombstoned
+    docs that are not yet expunged still count in ``num_docs``."""
+    spans = (
+        int(c["num_docs"]) + int(c.get("expunged", 0))
+        for c in (cat.manifest("stored")["counters"] for cat in cats)
+    )
+    return list(accumulate(spans, initial=0))

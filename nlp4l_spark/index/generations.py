@@ -53,12 +53,14 @@ import shutil
 import tempfile
 import threading
 import weakref
+from bisect import bisect_right
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nlp4l_spark.analysis import Analyzer
 from nlp4l_spark.index.builder import build_index
+from nlp4l_spark.index.docids import doc_bases
 from nlp4l_spark.index.mergepolicy import (
     TieredMergePolicy,
     compact,
@@ -262,7 +264,10 @@ class GenerationLog:
 
     def delete(self, spark: SparkSession, global_doc_ids) -> int:
         """IndexWriter.deleteDocuments over the log: tombstone
-        federation-numbered docIDs in their owning generations. Visible
+        federation-numbered docIDs in their owning generations. The
+        numbering is MultiSearcher's (``docids.doc_bases``: each
+        generation's docBase sums the preceding generations' maxDoc, so
+        a compacted generation's holes keep their slots). Visible
         immediately through searcher() (per-reader liveDocs,
         tests/test_multisearcher.py); physically expunged — with stats
         recomputed — by the next maintain() round that compacts the
@@ -271,18 +276,12 @@ class GenerationLog:
         from nlp4l_spark.index.deletes import delete_docs
 
         dirs = self.live_dirs
-        bases: list[int] = []
-        b = 0
-        for d in dirs:
-            bases.append(b)
-            b += int(
-                IndexCatalog(d).manifest("doc_lens")["counters"]["num_docs"]
-            )
+        *bases, b = doc_bases([IndexCatalog(d) for d in dirs])
         per_gen: dict[int, list[int]] = {}
         for g in sorted(int(x) for x in global_doc_ids):
             if not 0 <= g < b:
                 raise ValueError(f"doc_id {g} outside federation range {b}")
-            i = max(j for j, bb in enumerate(bases) if bb <= g)
+            i = bisect_right(bases, g) - 1
             per_gen.setdefault(i, []).append(g - bases[i])
         n = 0
         for i, local_ids in per_gen.items():

@@ -48,6 +48,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from nlp4l_spark.index.builder import write_searchable
 from nlp4l_spark.index.catalog import IndexCatalog
+from nlp4l_spark.index.docids import doc_bases
 
 
 @dataclass(frozen=True)
@@ -143,15 +144,15 @@ def compact(
 ) -> IndexCatalog:
     """Merge K built index generations into ONE new index directory.
 
-    DocIDs are rebased by each generation's docBase (cumulative
-    num_docs in list order — the MultiSearcher/MultiReader numbering),
-    so `Searcher(compacted)` is rank-, score- AND docID-identical to
-    `MultiSearcher(index_dirs)` (tested). No re-tokenization: stored
-    and doc_terms_fwd are rebased unions, and the builder's own stages
-    (``builder.write_searchable``: doc_lens, segments, postings,
-    term_stats, field_stats) run over the merged forward index, so a
-    compacted index is table-identical to one build over the same docs
-    (tested). Every generation needs a committed doc_terms_fwd (every
+    DocIDs are rebased by each generation's docBase (``docids.doc_bases``:
+    the sum of the preceding generations' maxDoc, in list order — the
+    MultiSearcher/MultiReader numbering), so `Searcher(compacted)` is
+    rank-, score- AND docID-identical to `MultiSearcher(index_dirs)`
+    (tested). No re-tokenization: stored and doc_terms_fwd are rebased
+    unions, and the builder's own stages (``builder.write_searchable``:
+    doc_lens, segments, postings, term_stats, field_stats) run over the
+    merged forward index, so a compacted index is table-identical to one
+    build over the same docs (tested). Every generation needs a committed doc_terms_fwd (every
     build writes one). Positions and term_vectors carry over WITHOUT
     re-analysis when every input generation has them: positions are
     doc-relative and ride in the forward index, which the builder's
@@ -164,7 +165,11 @@ def compact(
     refresh), so post-compact scores match a MultiSearcher over
     expunge_deletes'd inputs, NOT the frozen-stats pre-expunge view.
     Surviving docIDs keep their federation numbering (holes where
-    deleted); no tombstones table is written to the output."""
+    deleted); no tombstones table is written to the output. The stored
+    manifest's ``expunged`` counts every hole in the output's docID
+    span (the inputs' maxDoc summed, minus the live docs), so holes
+    carry across nested compactions and the output's maxDoc is the
+    inputs' total."""
     cats = [IndexCatalog(d) for d in index_dirs]
     for c, d in zip(cats, index_dirs):
         if not c.is_committed("doc_terms_fwd"):
@@ -182,22 +187,18 @@ def compact(
         else set()
         for c in cats
     ]
-    bases: list[int] = []
-    base = 0
-    sum_dl = 0
-    n_deleted = 0
+    *bases, max_doc = doc_bases(cats)
+    num_docs = sum_dl = 0
     for c, t in zip(cats, tombs):
-        bases.append(base)
         counters = c.manifest("doc_lens")["counters"]
-        base += int(counters["num_docs"])
+        num_docs += int(counters["num_docs"])
         sum_dl += int(counters["sum_dl"])
-        n_deleted += len(t)
-        if t:  # subtract the tombstoned docs' lengths (pushed doc_id filter)
+        if t:  # subtract the tombstoned docs (pushed doc_id filter)
             dropped = c.read_arrow(
                 "doc_lens", ["dl"], filter=ds.field("doc_id").isin(sorted(t))
             )["dl"]
+            num_docs -= len(dropped)
             sum_dl -= pc.sum(dropped).as_py() or 0
-    num_docs = base - n_deleted
 
     def _live(df, t):
         if not t:
@@ -219,7 +220,7 @@ def compact(
         # "expunged" declares docID holes (deleted docs keep their slot
         # number reserved) — check_index bounds instead of requiring
         # density when it is present
-        counters={"num_docs": num_docs, "expunged": n_deleted},
+        counters={"num_docs": num_docs, "expunged": max_doc - num_docs},
     )
 
     fwd_cols = ["doc_id", "terms", "tfs", "dl"]

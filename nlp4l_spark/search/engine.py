@@ -32,8 +32,11 @@ under ``reader.MAX_POSTING_BYTES`` — and otherwise runs the Spark plan
 ``postings``). A named method always runs its Spark plan. Term-dictionary
 lookups (``_term_stats``) are a pushed pyarrow read of ``term_stats`` on
 the driver, so no path pays a Spark job for them. ``MultiSearcher.search``
-routes the same way: one ``IndexReader`` per member under global stats,
-gated on the bytes selected across all members.
+routes the same way, gated on the bytes selected across all members: each
+member runs ``topk_rows`` under the union's stats, in its ``IndexReader``
+or past the gate in its ``wand`` plan, and the local top-k lists, offset
+by docBases that sum the preceding members' maxDoc
+(``index.docids.doc_bases``), merge into rows equal on both routes.
 
 Query-side joins are all broadcast (queries are tiny); the postings scan is
 term-pruned via an ``isin`` filter that parquet row-group stats can skip on
@@ -52,7 +55,7 @@ from __future__ import annotations
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
-from functools import cached_property, lru_cache, partial
+from functools import cached_property, lru_cache, partial, reduce
 from typing import Iterable
 
 import numpy as np
@@ -71,6 +74,7 @@ from nlp4l_spark.index import codec
 from nlp4l_spark.index.bm25 import B, K1, bm25_impact, idf
 from nlp4l_spark.index.builder import has_positions
 from nlp4l_spark.index.catalog import IndexCatalog
+from nlp4l_spark.index.docids import doc_bases
 from nlp4l_spark.search import reader as reader_mod
 from nlp4l_spark.search import wand as wand_mod
 from nlp4l_spark.search.reader import (
@@ -586,10 +590,17 @@ class Searcher:
         rows = [(t, idf(self.num_docs, dfs[t])) for t in terms]
         if method == "auto" and self._reader.admits(terms):
             return _LocalFrame(self.spark, self._reader.search_conjunctive(rows, k))
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return self._conjunction_plan(
-            self.postings_table, _AND_COLUMNS, rows, k
-        ).withColumn("rank", F.row_number().over(w))
+        # number the k merged rows in one aggregate, sorted on
+        # (-score, doc_id): the result order, with no window to plan
+        merged = F.sort_array(
+            F.collect_list(F.struct(-F.col("score"), "doc_id", "score"))
+        )
+        return (
+            self._conjunction_plan(self.postings_table, _AND_COLUMNS, rows, k)
+            .agg(merged.alias("top"))
+            .select(F.posexplode("top"))
+            .select("col.doc_id", "col.score", (F.col("pos") + 1).alias("rank"))
+        )
 
     def _conjunction_plan(
         self,
@@ -3599,7 +3610,12 @@ class Searcher:
         qterms: DataFrame,
         ks: dict[int, int],
         algo: str = "wand",
+        avgdl: float | None = None,
     ) -> DataFrame:
+        """Each (qid, shard)'s local top-k as (qid, doc_id, score) rows:
+        ``topk_rows`` per group through ``_pandas_kernel``, scored under
+        ``avgdl`` (default the index's own; a federation passes the
+        union's)."""
         max_k = max(ks.values()) if ks else 10
         # both dynamic-pruning strategies share the shard/decode harness
         # and are result-identical (tests/test_maxscore.py); see
@@ -3613,7 +3629,12 @@ class Searcher:
             else None
         )
         kernel = partial(
-            topk_rows, k=max_k, avgdl=self.avgdl, dels=dels, topk_fn=topk_fn
+            topk_rows,
+            k=max_k,
+            avgdl=self.avgdl if avgdl is None else avgdl,
+            dels=dels,
+            topk_fn=topk_fn,
+            block_avgdl=self.avgdl,
         )
         # one WAND task per (query, doc-range shard); local top-k per task,
         # global merge is the tiny window in search_batch
@@ -3873,7 +3894,10 @@ class MultiSearcher:
     union's (N, df), norms from the union's avgdl, docIDs offset by the
     docBase of the preceding readers (reader order = constructor order,
     /root/reference's RawReader opens a DirectoryReader the same way;
-    MultiReader is its composition form).
+    MultiReader is its composition form). A reader's docBase is the sum
+    of the preceding readers' maxDoc (``docids.doc_bases``: live docs
+    plus the holes a compaction left), so a compacted generation's IDs
+    never collide with the next one's; N is the sum of the live counts.
 
     Invariant (tested): searching a MultiSearcher over a corpus split
     into K indexes is rank- AND score-identical to searching ONE index
@@ -3882,25 +3906,24 @@ class MultiSearcher:
 
     Plan: global df is the sum of each member's pushed ``term_stats``
     read (no Spark job), and idf and avgdl come from the union. Each
-    member then answers with its own driver-resident ``IndexReader``,
-    scoring under the union's avgdl: the same ``topk_rows`` WAND kernel
-    as ``Searcher``, run on the query's (term, global idf) rows over that
-    member's postings, with its own tombstones as live docs. Block maxima
-    stored under a smaller member avgdl are scaled up by the ratio, so
-    WAND skips only blocks that cannot reach the top-k. The K local
-    top-k lists, offset by their docBase, are merged on (score DESC,
-    doc_id ASC) in NumPy and returned as a driver-held frame
-    (``_LocalFrame``) that collects without a Spark job or a JVM call.
-    Every doc lives in exactly one member, so the union of the members'
-    exact top-k holds the global top-k: the merge is exact.
+    member then runs ``Searcher``'s OR kernel, ``topk_rows`` by WAND, on
+    the query's (term, global idf) rows over its postings under the
+    union's avgdl, with its own tombstones as live docs (the kernel
+    scales block maxima stored under a smaller member avgdl, so WAND
+    skips only blocks that cannot reach the top-k). The K local top-k
+    lists, offset by their docBase, are merged on (score DESC, doc_id
+    ASC). Every doc lives in exactly one member, so the union of the
+    members' exact top-k holds the global top-k: the merge is exact.
 
-    Gate and fallback: the driver path runs when the posting row-group
-    bytes the query selects, summed over all members, stay under
-    ``reader.MAX_POSTING_BYTES``. Otherwise the call runs the Spark plan,
-    also the oracle twin in the tests: per member the same pushed-In(term)
-    postings scan as Searcher's dataframe scoring, offset by docBase;
-    the union of K postings-sized frames joins the broadcast (term, idf)
-    rows, then one partial-agg + TakeOrdered."""
+    Harnesses: when the posting row-group bytes the query selects,
+    summed over all members, stay under ``reader.MAX_POSTING_BYTES``,
+    each member's driver-resident ``IndexReader`` runs the kernel and
+    the merge is NumPy's, returned as a driver-held frame
+    (``_LocalFrame``) that collects without a Spark job or a JVM call.
+    Otherwise each member's Spark plan (``Searcher._score_wand``) runs
+    it per (query, shard) group and ``_top`` merges the union. Both run
+    the same kernel over the same groups, so they return equal rows,
+    scores bit for bit."""
 
     def __init__(
         self,
@@ -3915,15 +3938,10 @@ class MultiSearcher:
         self.searchers = [
             Searcher(spark, d, analyzer=self.analyzer) for d in index_dirs
         ]
-        self.doc_bases: list[int] = []
-        base = 0
-        for s in self.searchers:
-            self.doc_bases.append(base)
-            base += s.num_docs
-        self.num_docs = base
+        self.doc_bases = doc_bases([s.cat for s in self.searchers])[:-1]
+        self.num_docs = sum(s.num_docs for s in self.searchers)
         self.sum_dl = sum(s.sum_dl for s in self.searchers)
         self.avgdl = self.sum_dl / self.num_docs if self.num_docs else 1.0
-
 
     def _global_dfs(self, terms: list[str]) -> dict[str, int]:
         dfs: dict[str, int] = {}
@@ -3954,61 +3972,46 @@ class MultiSearcher:
         """Global BM25 top-k. Returns (doc_id, score) with doc_id in the
         union's docBase-offset space (Lucene MultiReader numbering);
         ties break on that global docID ascending. Answered on the
-        driver when the size gate admits the query, else by the Spark
-        plan (class docstring)."""
+        driver when the size gate admits the query, else by the members'
+        Spark plans (class docstring)."""
         terms = sorted(set(self.analyzer.tokenize(query)))
         dfs = self._global_dfs(terms)
         rows = [
-            (t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs
+            (0, t, idf(self.num_docs, dfs[t])) for t in terms if t in dfs
         ]
         if not rows:
             return _empty(self.spark, "doc_id long, score double")
-        present = [r[0] for r in rows]
+        present = [t for _, t, _ in rows]
         readers = [s._reader for s in self.searchers]
         sizes = [r.postings.selected_bytes(present) for r in readers]
         if sum(sizes) <= reader_mod.MAX_POSTING_BYTES:
             return self._search_driver(readers, sizes, rows, k)
         qterms = F.broadcast(
-            self.spark.createDataFrame(rows, "term string, idf double")
+            self.spark.createDataFrame(rows, "qid int, term string, idf double")
         )
-        parts = []
-        for s, dbase in zip(self.searchers, self.doc_bases):
-            decoded = s._decoded(s._matching_postings(present))
-            parts.append(
-                decoded.select(
-                    (F.col("doc_id") + F.lit(dbase)).alias("doc_id"),
-                    "term",
-                    "tf",
-                    "dl",
-                )
-            )
-        un = parts[0]
-        for p in parts[1:]:
-            un = un.unionByName(p)
-        return (
-            un.join(qterms, "term")
-            .withColumn("_s", _bm25(F.col("idf"), self.avgdl))
-            .groupBy("doc_id")
-            .agg(F.sum("_s").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        parts = [
+            s._score_wand(
+                s._matching_postings(present), qterms, {0: k}, avgdl=self.avgdl
+            ).select((F.col("doc_id") + F.lit(dbase)).alias("doc_id"), "score")
+            for s, dbase in zip(self.searchers, self.doc_bases)
+        ]
+        return _top(reduce(DataFrame.unionByName, parts), k)
 
     def _search_driver(
         self,
         readers: list[IndexReader],
         sizes: list[int],
-        rows: list[tuple[str, float]],
+        rows: list[tuple[int, str, float]],
         k: int,
     ) -> DataFrame:
-        """Each member's WAND top-k under the global idf rows, offset by
-        its docBase, merged on (score DESC, doc_id ASC). A member whose
-        row groups hold none of the terms is skipped unread."""
-        qrows = [(0, t, w) for t, w in rows]
+        """Each member's WAND top-k under the global (qid, term, idf)
+        rows, offset by its docBase, merged on (score DESC, doc_id ASC).
+        A member whose row groups hold none of the terms is skipped
+        unread."""
         docs, scores = [np.empty(0, np.int64)], [np.empty(0)]
         for r, dbase, size in zip(readers, self.doc_bases, sizes):
             if size:
-                hits = r.search_batch(qrows, {0: k}, self.avgdl)
+                hits = r.search_batch(rows, {0: k}, self.avgdl)
                 docs.append(hits["doc_id"].to_numpy() + dbase)
                 scores.append(hits["score"].to_numpy())
         doc, score = np.concatenate(docs), np.concatenate(scores)

@@ -99,7 +99,7 @@ def topk_rows(
     avgdl: float,
     dels: np.ndarray | None = None,
     topk_fn=wand_topk,
-    bound_scale: float = 1.0,
+    block_avgdl: float | None = None,
 ) -> tuple[list[int], list[int], list[float]]:
     """The OR kernel over posting rows (qid, shard, term, idf,
     doc_ids_enc, tfs_enc, dls_enc, block_max): per (qid, shard) group,
@@ -114,10 +114,14 @@ def topk_rows(
     correctness does not — the trade Lucene makes consulting liveDocs
     inside its scorers).
 
-    ``bound_scale`` multiplies the stored block maxima: scoring under an
-    avgdl larger than the one the index was built with raises every
-    impact by at most that ratio, so the scaled maxima stay upper
-    bounds."""
+    ``block_avgdl`` is the avgdl the stored block maxima were computed
+    under (default ``avgdl``). Scoring under a larger avgdl, as a
+    federation does under the union's, raises every impact by at most
+    ``avgdl / block_avgdl``, so the maxima are scaled by that ratio to
+    stay upper bounds."""
+    bound_scale = (
+        avgdl / block_avgdl if block_avgdl and avgdl > block_avgdl else 1.0
+    )
     groups: dict[tuple[int, int], list] = {}
     for qid, shard, _t, w, d_enc, tf_enc, dl_enc, blocks in sorted(
         rows, key=itemgetter(0, 1, 2)
@@ -313,9 +317,8 @@ class IndexReader:
     ) -> pa.Table:
         """OR top-k per query by block-max WAND: (qid, term, idf) rows of
         present terms -> (qid, rank, doc_id, score). ``avgdl`` overrides
-        the reader's own (a federation scores under the union's); the
-        block maxima, stored under the reader's own, are scaled to
-        stay upper bounds."""
+        the reader's own, under which its block maxima were stored (a
+        federation scores under the union's)."""
         avgdl = self.avgdl if avgdl is None else avgdl
         post = self.postings.read([t for _, t, _ in rows], _OR_COLUMNS)
         by_term: dict[str, list] = {}
@@ -331,7 +334,7 @@ class IndexReader:
             max(ks.values()),
             avgdl,
             self.dels,
-            bound_scale=avgdl / self.avgdl if avgdl > self.avgdl else 1.0,
+            block_avgdl=self.avgdl,
         )
         qid = np.array(qid, dtype=np.int64)
         doc = np.array(doc, dtype=np.int64)

@@ -79,7 +79,9 @@ def test_bm25_formula_defined_once():
 def test_one_kernel_per_harness():
     """search/reader.py imports no pandas: the driver runs the row kernels
     on pyarrow rows. Every ``applyInPandas`` in search/engine.py runs a
-    row kernel through the one adapter ``_pandas_kernel``."""
+    row kernel through the one adapter ``_pandas_kernel``. MultiSearcher
+    builds no BM25 Column: its Spark plan is its members' WAND plan
+    (``Searcher._score_wand``)."""
     reader = ast.parse((PKG / "search/reader.py").read_text(encoding="utf-8"))
     imported = [
         alias.name
@@ -108,6 +110,15 @@ def test_one_kernel_per_harness():
             and isinstance(fn.func, ast.Name)
             and fn.func.id == "_pandas_kernel"
         ), f"search/engine.py:{node.lineno} bypasses _pandas_kernel"
+    (multi,) = [
+        node
+        for node in engine.body
+        if isinstance(node, ast.ClassDef) and node.name == "MultiSearcher"
+    ]
+    names = {n.id for n in ast.walk(multi) if isinstance(n, ast.Name)}
+    attrs = {n.attr for n in ast.walk(multi) if isinstance(n, ast.Attribute)}
+    assert not names & {"_bm25", "bm25_impact"}, names & {"_bm25", "bm25_impact"}
+    assert "_score_wand" in attrs
 
 
 def test_impact_column_equals_numpy(spark):

@@ -53,9 +53,10 @@ def test_random_roundtrip_seeded():
         dls = tfs + rng.randint(0, 500, size=n)
         avgdl = float(dls.mean())
         row = _one_run(doc_ids, tfs, dls, avgdl)
-        d, t = codec.decode_posting(row["doc_ids_enc"][0], row["tfs_enc"][0])
-        np.testing.assert_array_equal(d, doc_ids)
-        np.testing.assert_array_equal(t, tfs)
+        np.testing.assert_array_equal(
+            codec.decode_doc_ids(row["doc_ids_enc"][0]), doc_ids
+        )
+        np.testing.assert_array_equal(codec.decode_tfs(row["tfs_enc"][0]), tfs)
         np.testing.assert_array_equal(codec.decode_tfs(row["dls_enc"][0]), dls)
         assert (row["df"][0], row["cf"][0]) == (n, tfs.sum())
         assert (row["min_doc"][0], row["max_doc"][0]) == (doc_ids[0], doc_ids[-1])
@@ -174,76 +175,3 @@ if HAS_HYPOTHESIS:
             codec.decode_doc_ids(codec.encode_doc_ids(d)), d
         )
 
-
-def test_for128_roundtrip_and_compression():
-    """FOR128 (Lucene ForUtil shape): exact round-trip on every size
-    class, and the measured storage win vs varbyte on realistic
-    small-gap posting streams that motivates the comparison note in
-    codec.py (varbyte stays the wire default for its concat-decode
-    property — see _segment_merger)."""
-    import numpy as np
-
-    from nlp4l_spark.index.codec import (
-        for128_decode,
-        for128_encode,
-        varbyte_encode,
-    )
-
-    rng = np.random.RandomState(7)
-    cases = [
-        np.empty(0, dtype=np.uint64),
-        np.array([0], dtype=np.uint64),
-        np.array([1, 1, 1], dtype=np.uint64),
-        rng.randint(1, 8, size=127).astype(np.uint64),     # sub-frame
-        rng.randint(1, 8, size=128).astype(np.uint64),     # exact frame
-        rng.randint(1, 8, size=1000).astype(np.uint64),    # multi-frame
-        rng.randint(1, 1 << 40, size=300).astype(np.uint64),  # wide values
-        np.array([(1 << 63) + 5, 0, 1], dtype=np.uint64),  # 64-bit edge
-    ]
-    for v in cases:
-        got = for128_decode(for128_encode(v))
-        assert got.dtype == np.uint64 and list(got) == list(v)
-
-    # dense postings: gaps of 1-7 (3 bits/value packed vs >= 8 varbyte)
-    gaps = rng.randint(1, 8, size=100_000).astype(np.uint64)
-    vb = len(varbyte_encode(gaps))
-    fr = len(for128_encode(gaps))
-    assert fr < 0.55 * vb, (fr, vb)  # measured ~0.38x on this profile
-
-    # adversarial frame: ONE huge value forces the whole frame wide —
-    # the known FOR weakness PFOR patches; varbyte wins locally there
-    spike = np.ones(128, dtype=np.uint64)
-    spike[64] = 1 << 40
-    assert len(for128_encode(spike)) > len(varbyte_encode(spike))
-
-
-def test_front_coded_term_dictionary():
-    """Front-coding round-trips a REAL sorted index vocabulary exactly,
-    shrinks it vs raw concatenation, block leaders stay whole (a
-    seekCeil landing point every TERM_BLOCK terms), and decode order is
-    the input order."""
-    import random
-
-    from nlp4l_spark.index.codec import (
-        TERM_BLOCK,
-        front_code_terms,
-        front_decode_terms,
-    )
-
-    rng = random.Random(7)
-    vocab = sorted(
-        {f"w{rng.randrange(99999):05d}" for _ in range(5000)}
-        | {"merge", "merger", "merging", "join", "joined", "joins"}
-        | {f"needle{i:02d}" for i in range(40)}
-    )
-    enc = front_code_terms(vocab)
-    assert front_decode_terms(enc) == vocab
-    raw = sum(len(t.encode()) for t in vocab) + 4 * len(vocab)
-    assert len(enc) < raw / 2, (len(enc), raw)  # >=2x on shared prefixes
-    # unicode + empty-ish edge terms round-trip too
-    edge = sorted(["", "a", "ab", "漢字", "漢字解析", "ζ", "ζη"])
-    assert front_decode_terms(front_code_terms(edge)) == edge
-    # single-block and exact-block-multiple sizes
-    for n in (1, TERM_BLOCK, TERM_BLOCK * 3):
-        sub = vocab[:n]
-        assert front_decode_terms(front_code_terms(sub)) == sub

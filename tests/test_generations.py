@@ -88,6 +88,45 @@ def test_maintain_swaps_and_reclaims(spark, corpus, tmp_path):
     assert log.maintain(spark, FORCE_ALL) == []
 
 
+def test_crash_mid_compaction_keeps_the_log(spark, corpus, tmp_path, monkeypatch):
+    """A maintain() that dies inside compaction, after the merged
+    generation's doc_terms_fwd committed, adopts nothing: the log answers
+    as before. The next maintain() removes the orphan directory, rebuilds
+    in its slot and answers as an uninterrupted round does."""
+    from nlp4l_spark.index import check_index, mergepolicy
+
+    _, b1, b2, b3 = corpus
+    log = GenerationLog(str(tmp_path / "crash"))
+    for b in (b1, b2, b3):
+        log.ingest(b)
+    live = log.live_dirs
+    q = "w00001 w00454"
+    before = _rows(log.searcher(spark).search(q, k=10))
+
+    def crash(spark, out, *args, **kwargs):
+        assert out.is_committed("doc_terms_fwd")
+        raise RuntimeError("crash mid-compaction")
+
+    with monkeypatch.context() as m:
+        m.setattr(mergepolicy, "write_searchable", crash)
+        with pytest.raises(RuntimeError, match="mid-compaction"):
+            log.maintain(spark, FORCE_ALL)
+    orphan = os.path.join(log.root, "gen_000003")
+    assert os.path.isdir(os.path.join(orphan, "doc_terms_fwd"))
+    assert log.live_dirs == live
+    assert _rows(log.searcher(spark).search(q, k=10)) == before
+    junk = os.path.join(orphan, "junk")
+    open(junk, "w").close()
+    assert log.maintain(spark, FORCE_ALL) == [
+        ["gen_000000", "gen_000001", "gen_000002"]
+    ]
+    assert log.live_dirs == [orphan] and not os.path.exists(junk)
+    assert _rows(log.searcher(spark).search(q, k=10)) == before
+    report = check_index(spark, orphan).collect()
+    bad = [(r["check"], r["detail"]) for r in report if not r["ok"]]
+    assert report and not bad, bad
+
+
 def test_orphan_directory_is_invisible_and_reclaimed(spark, corpus, tmp_path):
     _, b1, b2, _ = corpus
     log = GenerationLog(str(tmp_path / "log3"))

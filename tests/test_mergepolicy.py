@@ -435,7 +435,7 @@ def test_compact_expunges_deletes(spark, pos_gens, tmp_path, oracle_phrase):
     term_vectors after the masked carry-over."""
     import shutil
 
-    from nlp4l_spark.index import check_index, delete_docs
+    from nlp4l_spark.index import delete_docs
     from nlp4l_spark.oracle import OracleIndex
 
     d0, d1 = str(tmp_path / "g0"), str(tmp_path / "g1")
@@ -484,9 +484,29 @@ def test_compact_expunges_deletes(spark, pos_gens, tmp_path, oracle_phrase):
         _same_hits(got, oracle_phrase(oracle, texts, ph, 10))
         assert not ({g for g, _ in got} & dels_global)
     assert got
-    report = check_index(spark, out).collect()
+    _assert_check_green(spark, out)
+    # nested: compacting the holed generation again keeps its docIDs,
+    # its holes (expunged counts them all), its results and a green check
+    out2 = str(tmp_path / "out2")
+    again = compact(spark, [out], out2)
+    assert again.manifest("stored")["counters"]["expunged"] == len(dels_global)
+    for q in ("w00001", "w00002 w00005"):
+        assert Searcher(spark, out2).search(q, k=10).collect() == (
+            comp.search(q, k=10).collect()
+        ), q
+    _assert_check_green(spark, out2)
+
+
+def _assert_check_green(spark, d):
+    from nlp4l_spark.index import check_index
+
+    report = check_index(spark, d).collect()
     bad = [(r["check"], r["detail"]) for r in report if not r["ok"]]
-    assert report and not bad, bad
+    assert report and not bad, (d, bad)
+
+
+def _stored_ids(d):
+    return IndexCatalog(d).read_arrow("stored", ["doc_id"])["doc_id"].to_pylist()
 
 
 def test_generation_log_delete_routes_and_expunges(spark, tmp_path):
@@ -513,18 +533,38 @@ def test_generation_log_delete_routes_and_expunges(spark, tmp_path):
     with pytest.raises(ValueError):
         log.delete(spark, [10**9])
     # maintain physically expunges: compacted generation has no tombstones
-    log.maintain(
-        spark,
-        TieredMergePolicy(
-            segs_per_tier=1.0,
-            floor_segment_bytes=1 << 30,
-            max_merged_segment_bytes=1 << 42,
-        ),
+    policy = TieredMergePolicy(
+        segs_per_tier=1.0,
+        floor_segment_bytes=1 << 30,
+        max_merged_segment_bytes=1 << 42,
     )
+    log.maintain(spark, policy)
     assert len(log.live_dirs) == 1
     assert deleted_count(log.live_dirs[0]) == 0
     final = [r["doc_id"] for r in log.searcher(spark).search("w00001", k=3).collect()]
     assert not (set(final) & set(top[:2]))
+    # a batch after the holed compaction: docBases sum the maxDoc, so
+    # the federated IDs stay distinct and a delete lands where it points
+    log.ingest(full.filter(F.col("conv_id") < c1))
+    fed = log.searcher(spark)
+    ids = [
+        base + i
+        for d, base in zip(log.live_dirs, fed.doc_bases)
+        for i in _stored_ids(d)
+    ]
+    assert len(ids) == len(set(ids))
+    holed, fresh = log.live_dirs
+    last = max(_stored_ids(holed))
+    assert log.delete(spark, [last]) == 1
+    assert IndexCatalog(holed).read_arrow("tombstones", ["doc_id"])[
+        "doc_id"
+    ].to_pylist() == [last]
+    assert deleted_count(fresh) == 0
+    # and the next round compacts the three into a generation that checks
+    log.ingest(full.filter(F.col("conv_id") >= c2))
+    log.maintain(spark, policy)
+    assert len(log.live_dirs) == 1
+    _assert_check_green(spark, log.live_dirs[0])
 
 
 def test_index_size_bytes(gens):

@@ -150,6 +150,7 @@ def _check_and(s, q, k, want=None):
     assert auto == _rows(s.search(q, k=k, operator="and", method="wand")), q
     if want is not None:
         _same(auto, want)
+    return auto
 
 
 def _check_batch(s, queries, want=None):
@@ -237,6 +238,8 @@ def test_pruned_tier(spark, idx):
         _check_or(s, q, K)
     for q in AND_QUERIES:
         _check_and(s, q, K)
+    # the 5-per-term tier keeps docs holding both terms
+    assert _check_and(s, "w00026 w00134", K)
     _check_batch(s, [(i, q, K) for i, q in enumerate(OR_QUERIES)])
     # the tier really answers: fewer candidates than the full index
     full = Searcher(spark, idx)
@@ -481,9 +484,9 @@ def test_list_kernel_and_pandas_adapter_bit_identical(
     ``engine._pandas_kernel``, the one pandas adapter. Under either
     ``topk_fn`` the two harnesses return equal OR scores, bit for bit: on a
     tombstoned index, on a pruned tier, and in a federation whose
-    low-avgdl member scales its block maxima (``bound_scale > 1``). AND is
-    bit-identical on the tombstoned index and the pruned tier, and
-    phrases on the tombstoned index."""
+    low-avgdl member scales its block maxima (the union's avgdl above
+    its ``block_avgdl``). AND is bit-identical on the tombstoned index
+    and the pruned tier, and phrases on the tombstoned index."""
     tier = prune_postings(spark, idx, keep_per_term=5)
     searchers = [Searcher(spark, deleted_idx), Searcher(spark, idx, postings_table=tier)]
     # the 5-per-term tier keeps two docs holding both terms
@@ -538,7 +541,7 @@ def _pandas_federation(multi, q, k, topk_fn):
         post = r.postings.read(terms, reader_mod._OR_COLUMNS).to_pandas()
         kernel = partial(
             reader_mod.topk_rows, k=k, avgdl=multi.avgdl, dels=r.dels,
-            topk_fn=topk_fn, bound_scale=max(multi.avgdl / r.avgdl, 1.0),
+            topk_fn=topk_fn, block_avgdl=r.avgdl,
         )
         out = engine._pandas_kernel(
             kernel, reader_mod._TOPK_COLUMNS, engine._TOPK_SCHEMA
